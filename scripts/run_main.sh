@@ -2,12 +2,10 @@
 # Run a graft main (Bench/Verify/ScaleUp/Prof) via plain java — avoids
 # the single sbt lock so tests and long benches can run concurrently.
 # Usage: scripts/run_main.sh graft.Bench [args...]
-# Env: SPARK_DRIVER_MEM (default 24g — THE heap convention, decided
-#      r14: the GCLocker flag below fixed the sf10 OOM class at cause,
-#      so the r13 48g "headroom" override is retired; 24g keeps every
-#      recorded bench comparable with the r8+ history. Benches must
-#      not override this), plus whatever the main reads
-#      (SPARK_GRAFT_SF_DIR, _ITERS, ...).
+# Every main runs at local[nproc] (graft.GraftSession). Env:
+# SPARK_DRIVER_MEM (default: half of MemTotal, clamped to 2-8 g — the
+# rule build.sbt, the tests and the benchmark share), plus whatever the
+# main reads (SPARK_GRAFT_SF_DIR, _ITERS, ...).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 CP="target/scala-2.13/classes:/opt/spark/jars/*"
@@ -19,17 +17,14 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-# GCLockerRetryAllocationCount (default 2!): the one-JVM sf10 suite
-# died three rounds running with "environmental" heap OOMs that were
-# actually SPURIOUS — r13's 48g attempt finally caught the smoking gun
-# in the gc log: "Retried waiting for GCLocker too often allocating
-# 5 WORDS" → OutOfMemoryError. 32 executor threads in JNI critical
-# regions (parquet native decompression) starve the GC lock; after 2
-# failed retries HotSpot throws heap-space OOM no matter how empty the
-# heap is (JDK-8192647 class). Raising the retry count to 64 removes
-# the spurious throw; genuinely-full heaps still OOM normally.
-exec java -Xmx"${SPARK_DRIVER_MEM:-24g}" $ADD_OPENS \
-  -XX:ReservedCodeCacheSize="${SPARK_GRAFT_CODECACHE:-1g}" \
+HEAP="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}"
+# GCLockerRetryAllocationCount (default 2!): executor threads in JNI
+# critical regions (parquet native decompression) can starve the GC
+# lock; after 2 failed retries HotSpot throws a spurious heap-space OOM
+# no matter how empty the heap is (JDK-8192647 class). Raising the
+# retry count to 64 removes the spurious throw; genuinely-full heaps
+# still OOM normally.
+exec java -Xmx"$HEAP" $ADD_OPENS \
+  -XX:ReservedCodeCacheSize=1g \
   -XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=64 \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$CP" "$@"

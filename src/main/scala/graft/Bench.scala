@@ -2,8 +2,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query and total
-  * wall-clock seconds.
+  * SPARK_GRAFT_SF_DIR at `local[nproc]` and prints ONE JSON line with
+  * per-query and total wall-clock seconds.
   *
   * Methodology:
   *  - Results go to the `noop` sink, not `.count()` — count() lets
@@ -32,12 +32,12 @@ import org.apache.spark.sql.SparkSession
   *    a cache artifact.
   */
 object Bench {
-  /** The 11 deliberately-exhaustive audit/truth probes (the r11 list,
-    * SCALE.md §Round 11): brute-force ANN truth sides, exact-kernel
-    * audit tools, and output-bound pair queries — Θ(corpus × probes)
-    * or Θ(Σ cluster²) BY DEFINITION, kept in the suite as recall/truth
-    * oracles for the sublinear production substitutes. They cost ~47%
-    * of sf10 wall-clock (r14), so decade runs may skip them
+  /** The 11 deliberately-exhaustive audit/truth probes (SCALE.md):
+    * brute-force ANN truth sides, exact-kernel audit tools, and
+    * output-bound pair queries — Θ(corpus × probes) or Θ(Σ cluster²)
+    * BY DEFINITION, kept in the suite as recall/truth oracles for the
+    * sublinear production substitutes. They cost about half of sf10
+    * wall-clock, so decade runs may skip them
     * (SPARK_GRAFT_SKIP_PROBES=1) without losing the audit signal —
     * every line records the production/probe split either way, and
     * the history `skip_probes` flag keeps lines comparable. */
@@ -47,12 +47,10 @@ object Bench {
     "sd01_semantic_dedup", "dd06_dup_clusters", "bj01_band_join",
     "dd13_best_of_cluster", "sm04_leakage_safe_split")
 
-  /** HOST-MODE CALIBRATION (VERDICT r15 #2): the host is measurably
-    * bimodal (NOTES_r9; NOTES_r15 refined it — CPU-dense kernels drift
-    * 1.6–2× in the slow ambient mode while scan/shuffle drifts only
-    * 1.1–1.2×, with no competing process and nominal clocks), and three
-    * rounds have now spent triage hours deciding by hand whether a
-    * suite total moved because of code or because of the host. This
+  /** HOST-MODE CALIBRATION: the host can be bimodal (CPU-dense kernels
+    * drift 1.6–2× in a slow ambient mode while scan/shuffle drifts only
+    * 1.1–1.2×, with no competing process and nominal clocks), so a
+    * suite total alone cannot say whether code or host moved. This
     * runs two fixed DATA-INDEPENDENT probes before any recorded pass —
     * one compute-dense (md5 + base-conv over a range: string alloc +
     * hash loop, the kernel class that drifts hardest), one
@@ -62,19 +60,17 @@ object Bench {
     * (bench/calib_history.jsonl, append-only). Classification is
     * self-calibrating: the best-known line defines fast mode, so the
     * stamp needs no a-priori constants and tightens as fast-mode
-    * sessions append. Rule of thumb from the r15 retakes: cpu_vs_best
-    * ≳ 1.35 is the slow ambient mode; don't chase per-query
-    * regressions on such a line. (This comment describes the system;
+    * sessions append. Rule of thumb: cpu_vs_best ≳ 1.35 is the slow
+    * ambient mode; don't chase per-query regressions on such a line.
+    * (This comment describes the system;
     * `calibrate` below times the kernels, `calibMode` labels the
     * reading.)
     *
     * Host-mode label for a calibration reading. `cpuR` = this line's
     * cpu_s vs the config's best-ever; `spread` = the config's history
-    * max/min cpu_s INCLUDING this line. Thresholds from the r15 triage
-    * rule: compute-dense kernels drift >=1.35x in the slow ambient
-    * mode (observed 1.6-2x at the converged retakes), <=1.2x is
-    * within fast-mode noise. The cold-start rule (added r16 after the
-    * session-first read stamped a slow line "fast"): until the history
+    * max/min cpu_s INCLUDING this line. Compute-dense kernels drift
+    * >=1.35x in the slow ambient mode (observed 1.6-2x), <=1.2x is
+    * within fast-mode noise. Cold start: until the history
     * at this local[N] has actually spanned both modes (spread >=
     * 1.35), being near best-ever only proves consistency with every
     * prior line — which may ALL be slow — so the label is
@@ -112,41 +108,19 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Runtime.getRuntime.availableProcessors()
     val warmup = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0"
     val skipProbes = sys.env.getOrElse("SPARK_GRAFT_SKIP_PROBES", "0") == "1"
-    // SPARK_GRAFT_CONCURRENT=N (N>=2) → timed passes submit all queries
-    // to an N-thread pool, one FAIR scheduler pool per query, and the
-    // recorded value is the BATCH WALL-CLOCK (VERDICT r15 #3: ~0.4 s of
-    // per-query job setup × 190 queries is half the sequential sf0.1
-    // total — the scheduler floor amortizes when submission overlaps).
-    // Sequential mode (driver default) is untouched; concurrent lines
-    // carry "concurrent":N so tooling never mixes the two populations.
-    val concurrent = sys.env.get("SPARK_GRAFT_CONCURRENT")
-      .map(_.trim.toInt).filter(_ >= 2)
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    val spark = concurrent.fold(builder0)(_ =>
-      // FAIR across per-query pools; pools materialize on demand with
-      // weight 1 / minShare 0, so no allocation file is needed. Only
-      // set in concurrent mode — sequential lines stay bit-comparable
-      // with the r8+ history.
-      builder0.config("spark.scheduler.mode", "FAIR"))
-      // A full-suite decade run keeps one JVM alive for hours across
-      // ~550 query executions, and broadcast/shuffle state is only
-      // reclaimed when the DRIVER GCs the referencing objects — with a
-      // large quiet heap that can lag by many queries. The default
-      // 30min periodic-GC cadence let execution memory starve late in
-      // the r11 sf10 run (nn11 pass2 OOM'd in a sorter after 2.7 h and
-      // ~460 executions, having passed warmup and pass1 at identical
-      // sizes). 5min keeps the ContextCleaner fed without touching any
-      // timed region (the GC runs on the cleaner's own thread).
-      .config("spark.cleaner.periodicGC.interval", "5min")
-      .getOrCreate()
+    // A full-suite decade run keeps one JVM alive for hours across
+    // ~550 query executions, and broadcast/shuffle state is only
+    // reclaimed when the DRIVER GCs the referencing objects — with a
+    // large quiet heap that can lag by many queries. The default 30min
+    // periodic-GC cadence let execution memory starve late in an sf10
+    // run (an OOM in a sorter after 2.7 h and ~460 executions). 5min
+    // keeps the ContextCleaner fed without touching any timed region
+    // (the GC runs on the cleaner's own thread).
+    val spark = GraftSession.create(GraftSession.localBuilder(cpus)
+      .config("spark.cleaner.periodicGC.interval", "5min"))
     spark.sparkContext.setLogLevel("WARN")
 
     // Host-mode stamp, taken BEFORE warmup so it reads the same ambient
@@ -185,10 +159,7 @@ object Bench {
         // max/min cpu_s. Until the history has SEEN both host modes at
         // this local[N] (spread >= the 1.35x slow threshold), "near
         // best-ever" is not evidence of fast mode — the best-ever line
-        // may itself be a slow-mode reading. The r16 session-first read
-        // demonstrated the failure: cpu 4.15 s vs a best of 3.54 s
-        // (both slow; fast is ~2.4-2.7 s extrapolating the 1.6-2x
-        // kernel drift) stamped "fast" at 1.17x. So:
+        // may itself be a slow-mode reading.
         val cpuWorst = priorWorst("cpu_s").fold(cpuS)(math.max(_, cpuS))
         val spread = cpuWorst / cpuBest
         val mode = Bench.calibMode(cpuR, spread, uncalibrated)
@@ -254,11 +225,9 @@ object Bench {
       System.err.println(f"[bench] $tag $name ${secs}%.1f s${if (ok) "" else " FAILED"}")
     // Any pass that throws tees the exception CLASS + full stack to a
     // file under bench/logs/, named in the live log and (for timed
-    // passes) referenced from the history line. The r14 mm04 transient
-    // lost its exception class because a manually-launched run's
-    // stderr went to an uncaptured console (VERDICT r14 #4); failures
-    // are rare enough that the next 1-in-10 one must be diagnosable
-    // from the record alone.
+    // passes) referenced from the history line: a rare transient must
+    // be diagnosable from the record alone, even when the run's stderr
+    // went to an uncaptured console.
     val runStamp = java.time.Instant.now().toString.replaceAll("[:.]", "-")
     def logFailure(tag: String, name: String, e: Throwable): String = {
       val path = java.nio.file.Paths.get(s"bench/logs/${runStamp}_${name}_$tag.log")
@@ -289,16 +258,13 @@ object Bench {
     // are counted and named in the JSON so the bench can't silently
     // understate while masking breakage
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "2").toInt.max(1)
-    // PER-QUERY TASK/STAGE/JOB COUNTS (r17, VERDICT r16 #2): at sf0.1
-    // the suite is scheduler-floor-bound and the driver's 8-vs-32-core
-    // wall-clock probe reads ≈1 everywhere ("suspect_cpus_ignored") —
-    // task counts are the parallelism evidence wall-clock can't give:
-    // a query whose stages carry 32/8 tasks at local[32]/local[8] IS
-    // data-parallel and merely floor-bound, while a query stuck at 1
-    // task per stage would be genuinely serial. Counters ride a
-    // listener; deltas are snapshotted OUTSIDE the timed region (the
-    // bus drains before t0 and after secs is taken), sequential mode
-    // only (concurrent passes interleave events and can't attribute).
+    // PER-QUERY TASK/STAGE/JOB COUNTS: task counts are the parallelism
+    // evidence wall-clock can't give at a scheduler-floor-bound sf — a
+    // query whose stages carry N tasks at local[N] IS data-parallel and
+    // merely floor-bound, while a query stuck at 1 task per stage is
+    // genuinely serial. Counters ride a listener; deltas are
+    // snapshotted OUTSIDE the timed region (the bus drains before t0
+    // and after secs is taken).
     val taskCounter = new java.util.concurrent.atomic.AtomicLong(0)
     val stageCounter = new java.util.concurrent.atomic.AtomicLong(0)
     val jobCounter = new java.util.concurrent.atomic.AtomicLong(0)
@@ -322,36 +288,28 @@ object Bench {
     // name -> (exception class, stack-log path) of the FIRST failing
     // pass, for the history line
     val failedDetail = scala.collection.mutable.LinkedHashMap.empty[String, (String, String)]
-    // One timed execution of one query. Failure bookkeeping is
-    // synchronized because concurrent mode calls this from pool threads.
+    // One timed execution of one query. The counter snapshots bracket
+    // the timed window but execute outside it (drain-then-read before
+    // t0, after secs), so they never change the timed seconds.
     def timedOne(it: Int, name: String,
                  fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : (String, (Double, Boolean)) = {
-      // counter snapshots bracket the timed window but execute outside
-      // it (drain-then-read before t0, after secs) — the timed seconds
-      // are byte-identical to the r8+ methodology
-      val track = concurrent.isEmpty
-      val (tk0, st0, jb0) =
-        if (track) {
-          org.apache.spark.sql.graftbridge.GraftSqlBridge.drainListenerBus(spark)
-          (taskCounter.get(), stageCounter.get(), jobCounter.get())
-        } else (0L, 0L, 0L)
+      org.apache.spark.sql.graftbridge.GraftSqlBridge.drainListenerBus(spark)
+      val (tk0, st0, jb0) = (taskCounter.get(), stageCounter.get(), jobCounter.get())
       val t0 = System.nanoTime()
       val ok =
         try { run(fn, sfDir); true }
         catch { case e: Throwable =>
           val log = logFailure(s"pass$it", name, e)
-          failed.synchronized {
-            failed += name
-            if (!failedDetail.contains(name))
-              failedDetail(name) = (e.getClass.getName, log)
-          }
+          failed += name
+          if (!failedDetail.contains(name))
+            failedDetail(name) = (e.getClass.getName, log)
           System.err.println(
             s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage} (stack: $log)")
           false
         }
       val secs = (System.nanoTime() - t0) / 1e9
-      if (track && ok) {
+      if (ok) {
         org.apache.spark.sql.graftbridge.GraftSqlBridge.drainListenerBus(spark)
         counts(name) = (taskCounter.get() - tk0,
           stageCounter.get() - st0, jobCounter.get() - jb0)
@@ -359,36 +317,8 @@ object Bench {
       progress(s"pass$it", name, secs, ok)
       name -> (secs, ok)
     }
-    // wall-clock of each whole pass — in concurrent mode THIS is the
-    // headline number (per-query times are contended and only sum to
-    // CPU-ish attribution, not elapsed time)
-    val passWalls = scala.collection.mutable.ArrayBuffer.empty[Double]
     val passes = (1 to iters).map { it =>
-      val w0 = System.nanoTime()
-      val pass = concurrent match {
-        case None =>
-          queries.map { case (name, fn) => timedOne(it, name, fn) }
-        case Some(n) =>
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
-          try {
-            import scala.concurrent.{Await, ExecutionContext, Future}
-            import scala.concurrent.duration.Duration
-            implicit val ec: ExecutionContext =
-              ExecutionContext.fromExecutorService(pool)
-            val futs = queries.map { case (name, fn) =>
-              Future {
-                // one FAIR pool per query: equal weight, so a heavy
-                // probe can't starve the scheduler-floor queries whose
-                // setup time this mode exists to amortize
-                spark.sparkContext.setLocalProperty(
-                  "spark.scheduler.pool", s"bench_$name")
-                timedOne(it, name, fn)
-              }
-            }
-            Await.result(Future.sequence(futs), Duration.Inf)
-          } finally pool.shutdown()
-      }
-      passWalls += (System.nanoTime() - w0) / 1e9
+      val pass = queries.map { case (name, fn) => timedOne(it, name, fn) }
       spark.catalog.clearCache()
       graft.vector.ProductQuantizer.releaseCentroids()
       pass
@@ -402,21 +332,14 @@ object Bench {
       val okTimes = times.collect { case (t, true) => t }
       name -> (if (okTimes.nonEmpty) okTimes.min else times.map(_._1).min)
     }
-    // sequential: total = sum of per-query minimums (the r1+ headline).
-    // concurrent: total = min batch wall-clock — the number the mode
-    // exists to measure; the per-query sum would double-count overlap.
-    val total =
-      if (concurrent.isDefined) passWalls.min else results.map(_._2).sum
-    // production/probe split (VERDICT r14 #3): the 11 truth probes are
-    // Θ(output) by definition and cost ~half of sf10 wall-clock; every
-    // line carries both components so decade tables can track the
-    // production paths' scaling without losing the audit signal. In
-    // concurrent mode both sides come from the contended per-query
-    // sums (subtracting a contended sum from a wall total would go
-    // negative — observed r16).
+    val total = results.map(_._2).sum
+    // production/probe split: the 11 truth probes are Θ(output) by
+    // definition and cost ~half of sf10 wall-clock; every line carries
+    // both components so decade tables can track the production paths'
+    // scaling without losing the audit signal.
     val probeTotal = results.collect {
       case (n, t) if probeQueries.contains(n) => t }.sum
-    val prodTotal = results.map(_._2).sum - probeTotal
+    val prodTotal = total - probeTotal
     def r3(v: Double): String = f"$v%.3f"
     // Per-family subtotals (family = leading alpha prefix of the query
     // name): the unit at which cross-round drift is attributable —
@@ -435,8 +358,7 @@ object Bench {
     // skip-probes runs are partial within the nn/dd/fz/sd/bj/sm
     // families — their subtotals would trip the bands spuriously, same
     // rationale as the `only` exclusion above
-    if (only.isEmpty && !skipProbes && concurrent.isEmpty &&
-        java.nio.file.Files.exists(budgetsPath)) {
+    if (only.isEmpty && !skipProbes && java.nio.file.Files.exists(budgetsPath)) {
       val lines = scala.jdk.CollectionConverters
         .ListHasAsScala(java.nio.file.Files.readAllLines(budgetsPath)).asScala
       val budgetSf = lines.collectFirst {
@@ -459,17 +381,16 @@ object Bench {
         }
       }
     }
-    // The printed line must survive a tail-capture of the run log
-    // (round 1's full 85-query map exceeded it and failed to parse), so
-    // it carries the slowest 30 queries; the complete per-query map +
+    // The printed line must survive a tail-capture of the run log (a
+    // full per-query map once exceeded it and failed to parse), so it
+    // carries the slowest 30 queries; the complete per-query map +
     // family subtotals go to target/bench_full.json AND are appended to
-    // the committed bench/history.jsonl — the cross-round per-query
-    // history the round artifacts alone don't preserve.
+    // the committed bench/history.jsonl, the per-query history.
     val top = results.sortBy(-_._2).take(30)
       .map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
     val all = results.map { case (k, v) => "\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
-    // scaling evidence (sequential mode): per-query task counts for the
+    // scaling evidence: per-query task counts for the
     // printed line's top-30 set, full tasks/stages/jobs maps in
     // bench_full.json/history. ADDITIVE — no existing key changes.
     val topKeys = results.sortBy(-_._2).take(30).map(_._1).toSet
@@ -489,12 +410,10 @@ object Bench {
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val stamp = java.time.Instant.now().toString
     // Subset runs (SPARK_GRAFT_BENCH_ONLY) are recorded WITH their
-    // selector: a partial total in history.jsonl was previously
-    // distinguishable from a full run only by n_queries, which
-    // contaminated cross-round drift analysis; "only" makes the subset
-    // explicit and filterable. "iters" records the min-of-N discipline
-    // the number was taken under (the host is measurably bimodal —
-    // NOTES_r9; single-pass and min-of-2 totals are not comparable).
+    // selector, so a partial total is explicit and filterable in
+    // history.jsonl. "iters" records the min-of-N discipline the number
+    // was taken under (single-pass and min-of-2 totals are not
+    // comparable on a bimodal host).
     val onlyJson = only.map(_.map("\"" + _ + "\"").mkString(",\"only\":[", ",", "]")).getOrElse("")
     // Read-only-corpus gate: the fingerprint recomputed AFTER the timed
     // passes must equal the start-of-run one — the sf corpora are shared
@@ -510,14 +429,10 @@ object Bench {
       s""","corpus":{"id":"$corpusId","files":$corpusFiles,"bytes":$corpusBytes,"dirty":$corpusDirty}"""
     val splitJson =
       s""","total_production":${r3(prodTotal)},"total_probe":${r3(probeTotal)},"skip_probes":$skipProbes"""
-    // concurrent lines are a separate population: flagged with the pool
-    // width so cross-round tooling never compares them to sequential
-    // totals (per-query values on such a line are contended)
-    val concurrentJson = concurrent.map(n => s""","concurrent":$n""").getOrElse("")
     val failedDetailJson = failedDetail.map { case (n, (cls, log)) =>
       s""""$n":{"class":"$cls","log":"$log"}""" }.mkString(",\"failed_detail\":{", ",", "}")
     val fullLine =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","ts":"$stamp","iters":$iters$onlyJson$splitJson$concurrentJson$calibJson,"n_queries":${results.size},"n_failed":${failed.size},"failed":$failedJson$failedDetailJson,"families":$famJson,"queries":$all$countsFullJson$corpusJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","ts":"$stamp","iters":$iters$onlyJson$splitJson$calibJson,"n_queries":${results.size},"n_failed":${failed.size},"failed":$failedJson$failedDetailJson,"families":$famJson,"queries":$all$countsFullJson$corpusJson,"sf":"$sfDir"}"""
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("target/bench_full.json"), fullLine)
     try {
@@ -529,12 +444,11 @@ object Bench {
     } catch { case e: Throwable =>
       System.err.println(s"[bench] history append failed: ${e.getMessage}")
     }
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","iters":$iters$onlyJson$splitJson$concurrentJson,"n_queries":${results.size},"n_failed":${failed.size},"failed":$failedJson,"queries":$top$tasksTopJson,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","iters":$iters$onlyJson$splitJson,"n_queries":${results.size},"n_failed":${failed.size},"failed":$failedJson,"queries":$top$tasksTopJson,"sf":"$sfDir"}""")
     spark.stop()
     if (corpusDirty) sys.exit(1)
-    // Exit nonzero past a failure threshold (ADVICE r15, medium): the
-    // r14-style SIGTERM cascade failed 183 queries yet exited 0, so
-    // every pipeline above it reported success. Threshold (not >0)
+    // Exit nonzero past a failure threshold, so a cascade (every query
+    // failing after a SIGTERM) never reports success. Threshold (not >0)
     // matches decade_table.py's MAX_ACCEPTED_FAILURES=3 — rare 1-in-10
     // codec transients shouldn't abort a 3 h decade pipeline, a
     // cascade must.

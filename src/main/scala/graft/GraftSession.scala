@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The library's front door: a SparkSession pre-configured the way
-  * every graft operator expects, so adopting the engine is one call
-  * rather than a checklist.
+/** The library's front door and the one place a session is configured:
+  * every main and the test suites get their session here, so adopting
+  * the engine is one call rather than a checklist.
   *
   *  - native expressions registered for SQL ([[GraftExtensions]]:
   *    vec_dot, minhashes, shingle_hashes, simhash64,
@@ -19,9 +19,11 @@ import org.apache.spark.sql.SparkSession
   *
   * `configure` composes with an existing builder for cluster
   * deployments (master/memory/shuffle-partitions stay the caller's
-  * choice there); `local(cpus)` is the single-JVM form the tests,
-  * Verify, and Bench mains use, with shuffle parallelism matched to
-  * the core count rather than the 200-partition default.
+  * choice there). `local(cpus)` is the single-JVM form: master
+  * `local[cpus]`, shuffle parallelism matched to the core count rather
+  * than the 200-partition default, UI off. `cpus` defaults to the
+  * host's core count. A main that needs one setting of its own adds it
+  * to `localBuilder` and starts the session with `create`.
   */
 object GraftSession {
 
@@ -30,16 +32,21 @@ object GraftSession {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 
-  def local(cpus: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val s = configure(SparkSession.builder()
+  def localBuilder(cpus: Int = Runtime.getRuntime.availableProcessors()): SparkSession.Builder =
+    configure(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    // getOrCreate may hand back a pre-existing session, whose builder
-    // configs were ignored — (re-)apply the runtime-settable pieces so
-    // the contract holds either way (function registration is
-    // overwrite-idempotent)
+
+  def local(cpus: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
+    create(localBuilder(cpus))
+
+  /** `getOrCreate` on a [[configure]]d builder. It may hand back a
+    * pre-existing session, whose builder configs were ignored, so the
+    * runtime-settable pieces are (re-)applied and the contract holds
+    * either way (function registration is overwrite-idempotent). */
+  def create(b: SparkSession.Builder): SparkSession = {
+    val s = b.getOrCreate()
     GraftExtensions.install(s)
     s.conf.set("spark.sql.session.timeZone", "UTC")
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

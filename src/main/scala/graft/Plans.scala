@@ -3,11 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Plan auditor: prints the formatted physical plan of each named query
-  * and greps it for the physical properties the 100 TB design depends
-  * on (scan-level filter pushdown, pruned read schemas, broadcast dim
-  * joins, true top-k, codegen coverage). Run:
-  *   sbt "runMain graft.Plans [sfDir]"
+/** Plan auditor: greps the formatted physical plan of each pinned query
+  * for the physical properties the 100 TB design depends on (scan-level
+  * filter pushdown, pruned read schemas, broadcast dim joins, true
+  * top-k, codegen coverage). Run:
+  *   sbt "runMain graft.Plans [sfDir] [--shuffles]"
+  * `--shuffles` also prints every registered query's shuffle count.
+  * Plan text itself comes from `graft.Prof explain/explainAll`.
   */
 object Plans {
   /** `shuffles`: when set, the formatted plan must contain EXACTLY this
@@ -37,15 +39,15 @@ object Plans {
     Check("t02_recent_weeks", Seq("TakeOrderedAndProject")),
     // anti join planned as broadcast or shuffled hash/merge — just require the join type
     Check("d03_antijoin_new_keys", Seq("LeftAnti")),
-    // ingest dedup (the reference's signature operator): the r14
+    // ingest dedup (the reference's signature operator): the
     // skew-immune kernel is a min/max(struct) PARTIAL AGGREGATE —
     // SortAggregate, because min/max over a struct is a declarative
     // aggregate with an immutable buffer (no mutable-primitive layout
     // for HashAggregate, not a TypedImperativeAggregate for
     // ObjectHashAggregate); the partial phase before the exchange is
     // what collapses a hot key per input partition. A Window here is
-    // the pre-r14 hot-key-in-one-task shape and must fail CI, not a
-    // round (VERDICT r14 #1); the orderable carry path never joins;
+    // the hot-key-in-one-task shape and must fail CI; the orderable
+    // carry path never joins;
     // exactly 2 shuffles (key agg + presentation sort).
     Check("d01_dedup_first_wins", Seq("SortAggregate"),
       wantNone = Seq("Window", "Join"), shuffles = Some(2)),
@@ -74,10 +76,10 @@ object Plans {
     Check("vc01_vocab_topk", Seq("Generate", "HashAggregate", "TakeOrderedAndProject")),
     // simhash fingerprints compute in the scan-side project (the custom
     // expression appears in the plan; no token explode remains) —
-    // pinned on dd09 since dd05's r10 demotion to TextDedupSpec
+    // pinned on dd09 (dd05 is covered by TextDedupSpec)
     Check("dd09_simhash_portable", Seq("simhash64")),
     // minhash signatures build from row-local shingle hashes — pinned
-    // on dd08 (same minHashCandidates path) since dd04's r10 demotion
+    // on dd08 (same minHashCandidates path as dd04)
     Check("dd08_minhash_recall", Seq("shingle_hashes", "minhashes")),
     // quantization fuses into the scan: one aggregate-free projection,
     // no hash aggregation anywhere in the plan (the only exchange is
@@ -171,8 +173,8 @@ object Plans {
       wantNone = Seq("Window")),
     // pagerank: the damping base is a lazy 1-row broadcast-scalar frame
     // (never a plan-build-time count()); rank flow per round is plain
-    // hash aggregation. r16: the per-round joins are pinned
-    // SHUFFLE_HASH — the pre-r16 plan let size estimates broadcast the
+    // hash aggregation. The per-round joins are pinned
+    // SHUFFLE_HASH — without the hint, size estimates broadcast the
     // |V|-sized rank/contrib frames every round (a shape that cannot
     // survive a billion-node graph) and sort-merge the edge stream
     // (re-SORTING |e| per round above the reused exchange); hashed
@@ -201,7 +203,7 @@ object Plans {
     // unicode normalization is a scan-side codegen projection
     Check("f08_unicode_normalize", Seq("unicode_normalize", "Scan parquet"),
       wantNone = Seq("Join", "HashAggregate")),
-    // BPE training (r16 driver-paced loop): each step's argmax is a
+    // BPE training (driver-paced loop): each step's argmax is a
     // TakeOrdered(1) COLLECT during query build (the CC convergence-
     // probe pattern), inlined as literals into the next rewrite — so
     // the returned merge table is a LocalTableScan of already-computed
@@ -211,9 +213,9 @@ object Plans {
     Check("bt01_bpe_train", Seq("LocalTableScan"),
       wantNone = Seq("Window", "BroadcastNestedLoopJoin", "CartesianProduct")),
     // BPE encode rides the trained merge table over the corpus scan;
-    // the vocab never windows, and the r16 literal rewrite removed the
-    // per-step BNLJ subtrees. Shuffle count re-pinned: 11 → 6 (vocab
-    // agg + spread reuse + encoder join + final agg/sort).
+    // the vocab never windows, and the literal rewrite leaves no
+    // per-step BNLJ subtrees. 6 shuffles (vocab agg + spread reuse +
+    // encoder join + final agg/sort).
     Check("bt02_bpe_encode", Seq("HashAggregate"),
       wantNone = Seq("Window", "CartesianProduct", "BroadcastNestedLoopJoin"),
       shuffles = Some(6)),
@@ -255,7 +257,7 @@ object Plans {
     // silently degrade to the nested-loop theta form
     Check("ov02_interval_overlap_events", Seq("Join", "Generate"),
       wantNone = Seq("BroadcastNestedLoopJoin", "CartesianProduct")),
-    // ---- round 12: pin the remaining unpinned heavy hitters ----
+    // ---- heavy hitters ----
     // best-of-cluster: the per-cluster representative is a rank window
     // PARTITIONED BY cluster_id (bounded work per cluster, never a
     // global sort); edges/members arrive via equi-joins only
@@ -269,16 +271,15 @@ object Plans {
     Check("sm04_leakage_safe_split", Seq("HashAggregate"),
       wantNone = Seq("BroadcastNestedLoopJoin", "CartesianProduct", "Window"),
       shuffles = Some(3)),
-    // profile (r16 shape): the numeric/distinct aggregates fan through
+    // profile: the numeric/distinct aggregates fan through
     // Expand into HASH aggregation, the four string min/max ride a
     // separate sort-free ungrouped aggregate, and the two 1-row frames
     // meet in a broadcast nested-loop cross — N-column profiling must
     // never become N scans (3 shuffles = distinct phase + final agg +
     // string agg) and the Expand side must never regress to
     // SortAggregate (one string buffer in that frame forces a full
-    // sort of the 7×-expanded table on both sides of the exchange —
-    // the r16 finding that motivated the split: 3.2 s → 1.8 s sf0.1,
-    // 6.2 s → 2.6 s sf1)
+    // sort of the 7×-expanded table on both sides of the exchange;
+    // the split measured 3.2 s → 1.8 s sf0.1, 6.2 s → 2.6 s sf1)
     Check("dp01_profile",
       Seq("Expand", "HashAggregate", "BroadcastNestedLoopJoin"),
       wantNone = Seq("SortMergeJoin"), shuffles = Some(3)),
@@ -358,7 +359,7 @@ object Plans {
       wantNone = Seq("Window")),
     // inverted index: explode feeds partial aggregation; the df-band
     // stats join is term-keyed — no window, no nested loop
-    // Shuffle count pinned (r13): 4 — the shared corpus base dedupes
+    // Shuffle count pinned: 4 — the shared corpus base dedupes
     // via ReusedExchange across the df-band and postings passes
     Check("ix01_inverted_index", Seq("Generate", "HashAggregate"),
       wantNone = Seq("Window", "BroadcastNestedLoopJoin"),
@@ -455,13 +456,13 @@ object Plans {
     Check("km01_kmeans",
       Seq("BroadcastNestedLoopJoin", "BroadcastExchange"),
       wantNone = Seq("SortMergeJoin", "CartesianProduct")),
-    // PQ-ADC (streaming-heap scoring, r10): codebook rides are KEYED
+    // PQ-ADC (streaming-heap scoring): codebook rides are KEYED
     // broadcast hash joins (sub_id for the Lloyd/argmin stages);
     // scoring is the bruteForceTopK shape — corpus code-arrays stream
     // through ONE BroadcastNestedLoopJoin against the dense per-query
     // LUT arrays with the adist element_at chain in its output
     // projection, into the partial min-heap (ObjectHashAggregate).
-    // The pre-r10 (sub_id, code)-keyed scoring join is BANNED: with
+    // A (sub_id, code)-keyed scoring join is BANNED: with
     // m×k distinct keys it emitted corpus×queries×m rows into a
     // corpus×queries-group aggregate + rank-window sort (the sf10
     // "failed to allocate page" storms; nn08 680 s / nn11 999 s at
@@ -472,7 +473,7 @@ object Plans {
         "ObjectHashAggregate"),
       wantNone = Seq("CartesianProduct", "windowspecdefinition(q_id",
         "SortMergeJoin")),
-    // the other ADC consumers ride the same r10 streaming-heap chain;
+    // the other ADC consumers ride the same streaming-heap chain;
     // each keeps the heap aggregate and the LUT-stream BNLJ, and bans
     // the unguarded-cartesian regression. Differences from nn08 are
     // deliberate: nn09's truth-compare joins result sets (SMJ legal),
@@ -493,16 +494,15 @@ object Plans {
     // portable IVF: probe-cell candidates rank through group-limited
     // windows only (losing the limit pushdown materializes the full
     // rank — the sf10 page-storm shape). The coarse-quantizer training
-    // chain left this plan in r17 (driver-paced Lloyd rounds collect
-    // the codebook; it enters as LocalTableScan), taking its
-    // ObjectHashAggregate heap with it.
+    // chain is not in this plan: driver-paced Lloyd rounds collect the
+    // codebook, which enters as LocalTableScan.
     Check("nn10_ivf_portable",
       Seq("WindowGroupLimit", "LocalTableScan"),
       wantNone = Seq("CartesianProduct")),
     // brute-force truth probes: corpus×queries BNLJ is their
     // DEFINITION, but the top-k must stay the map-side heap — a rank
     // window over the pair space is the memory blowup that killed the
-    // pre-r10 LSH at sf10
+    // windowed LSH at sf10
     Check("nn01_cosine_topk",
       Seq("BroadcastNestedLoopJoin", "ObjectHashAggregate"),
       wantNone = Seq("Window", "SortMergeJoin")),
@@ -519,7 +519,7 @@ object Plans {
     Check("x06_portable_hll_state", Seq("md5", "HashAggregate"),
       wantNone = Seq("Join", "Window", "Generate"),
       shuffles = Some(2)),
-    // grouped sketch bounds (r16: the x02/x03 oracle re-registration).
+    // grouped sketch bounds (oracle-checked x02/x03).
     // x02: exact-distinct expand and the HLL frame stay SEPARATE and
     // meet in a broadcast join — fusing them into one groupBy allocates
     // the ~13 KB HLL buffers per (group × distinct-key) hash entry
@@ -537,7 +537,7 @@ object Plans {
     Check("x03_approx_quartiles",
       Seq("ObjectHashAggregate", "BroadcastHashJoin"),
       wantNone = Seq("SortMergeJoin", "Window"), shuffles = Some(3)),
-    // dp02 accuracy gate (r17 two-scan shape): the exact numeric frame
+    // dp02 accuracy gate (two-scan shape): the exact numeric frame
     // (hash-aggregated Expand) crossJoins ONE ungrouped string+HLL
     // frame (sort-free SortAggregate — the six approx_count_distinct
     // ride the string min/max scan instead of a third orders pass),
@@ -557,7 +557,7 @@ object Plans {
     // explode may ever attach to the fingerprint kernel
     Check("x14_rolling_hash", Seq("Scan"),
       wantNone = Seq("Join", "Window", "Generate")),
-    // streaming LSH (r10 redesign, both the compiled and the portable
+    // streaming LSH (both the compiled and the portable
     // path): query bands BROADCAST into the band equi-join
     // (BroadcastHashJoin), each pair survives only from its FIRST
     // agreeing band — the row-local array_position(XOR-band test) in
@@ -565,7 +565,7 @@ object Plans {
     // ("Keys [2]: [query_id" is the banned dedup shuffle's signature) —
     // and per-query top-k is the map-side heap (ObjectHashAggregate),
     // never a rank window over the scored stream. The banned shapes are
-    // the two that died at sf10 pre-r10 (disk-full dedup shuffle; the
+    // the two that die at sf10 (disk-full dedup shuffle; the
     // rank-window spill sort).
     Check("nn05_lsh_recall",
       Seq("BroadcastHashJoin", "ObjectHashAggregate", "array_position"),
@@ -576,7 +576,7 @@ object Plans {
       wantNone = Seq("windowspecdefinition(query_id",
         "Keys [2]: [query_id", "CartesianProduct")),
     // the fixed-serving-batch LSH probe (nn13) must keep the exact
-    // r10 streaming shape nn05 pins — its whole point is measuring
+    // streaming shape nn05 pins — its whole point is measuring
     // that shape against a growing corpus at constant batch size
     Check("nn13_lsh_fixed_batch",
       Seq("BroadcastHashJoin", "ObjectHashAggregate", "array_position"),
@@ -595,7 +595,7 @@ object Plans {
     * unpartitioned Window (WindowExec's "Moving all data to a single
     * partition" warning). Every entry is a window over a frame that is
     * SMALL BY CONSTRUCTION — post-aggregation (weekly/vocab-sized) or
-    * post-limit (k-row codebook init) — audited r6–r9 as harmless.
+    * post-limit (k-row codebook init) — each audited as harmless.
     * The warning noise itself can't be silenced without changing query
     * semantics (a synthetic partition key would still move all rows to
     * one partition, just quietly), so the STRUCTURAL guard is this pin:
@@ -604,10 +604,9 @@ object Plans {
     * anywhere in the registry — a real one can no longer hide in the
     * audited noise. */
   val auditedUnpartitionedWindows: Set[String] = Set(
-    // (km01/nn08–nn12/vq02 left this set in r17: their k-row codebook
-    // init windows now execute inside the driver-paced Lloyd collect
-    // jobs at build time — still k-row, still audited-harmless — and
-    // no longer appear in the registered queries' final plans)
+    // (km01/nn08–nn12/vq02 are absent: their k-row codebook init
+    // windows execute inside the driver-paced Lloyd collect jobs at
+    // build time and never appear in the final plans)
     "cb01_token_budget",       // cumulative tokens over the 21-bucket quality frame
     "gn01_gini_concentration", // cumulative share over the vocab-sized agg
     "sh01_global_shuffle",     // bucket-offset prefix sum over the 256-row
@@ -676,14 +675,9 @@ object Plans {
     }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val sfDir = args.find(!_.startsWith("--")).getOrElse("/root/testdata/sf0.001")
+    // 4 cores, as in PlanSpec: shuffle pins are counted at this width
+    val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val fails = failures(spark, sfDir)
     val failed = fails.size
@@ -698,21 +692,6 @@ object Plans {
           .explainString(ExplainMode.fromString("formatted")))
         catch { case _: Throwable => -1 }
         println(s"SHUFFLES $name $n")
-      }
-    }
-    // ad-hoc plan inspection while seeding pins for a NEW query (the
-    // checks above only dump pinned queries): --explain name1,name2
-    args.sliding(2).collectFirst { case Array("--explain", names) => names }
-      .foreach(_.split(',').map(_.trim).filter(_.nonEmpty).foreach { name =>
-        println(s"\n===== $name =====")
-        println(SparkEntry.queries(name)(spark, sfDir).queryExecution
-          .explainString(ExplainMode.fromString("formatted")))
-      })
-    if (args.contains("--dump")) {
-      checks.foreach { c =>
-        println(s"\n===== ${c.query} =====")
-        println(SparkEntry.queries(c.query)(spark, sfDir).queryExecution
-          .explainString(ExplainMode.fromString("formatted")))
       }
     }
     println(s"PLAN_CHECKS_FAILED=$failed")

@@ -1,22 +1,18 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
-/** Ad-hoc profiling harness: `runMain graft.Prof <queryName> [n]` runs a
-  * registered query n times warm (noop sink) against SPARK_GRAFT_SF_DIR
-  * and prints per-iteration seconds; `runMain graft.Prof explain <name>`
-  * prints the formatted physical plan. Developer tool, not a driver
-  * contract. */
+/** Ad-hoc profiling harness at `local[nproc]`, against SPARK_GRAFT_SF_DIR.
+  *  - `Prof <queryName> [n]` runs a registered query n times (noop sink,
+  *    cache cleared before each) and prints per-iteration seconds.
+  *  - `Prof explain <name>` prints the formatted physical plan.
+  *  - `Prof explainAll <outDir> <suffix> <name>...` writes one formatted
+  *    plan per query to `<outDir>/<name><suffix>.txt` (the untracked
+  *    `plans/` dumps).
+  * Developer tool, not a driver contract. */
 object Prof {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     def noop(df: DataFrame): Unit =
@@ -26,8 +22,6 @@ object Prof {
       case "explain" :: name :: Nil =>
         println(SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode))
-      // batch plan dump for the plans/<round>/ audit files: one JVM,
-      // one formatted plan per file, suffix chosen by the caller
       case "explainAll" :: outDir :: suffix :: names if names.nonEmpty =>
         java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
         names.foreach { n =>
@@ -46,7 +40,8 @@ object Prof {
           noop(fn(spark, sfDir))
           println(f"[prof] $name iter $i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
         }
-      case Nil => sys.error("usage: Prof <queryName> [n] | Prof explain <name>")
+      case Nil => sys.error(
+        "usage: Prof <queryName> [n] | explain <name> | explainAll <outDir> <suffix> <name>...")
     }
     spark.stop()
   }

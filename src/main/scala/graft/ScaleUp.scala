@@ -97,14 +97,7 @@ object ScaleUp {
       s"unknown mode ${mode.get}: expected stretch-time or stretch-all")
     val stretchTime = mode.contains("stretch-time")
     val stretchAll = mode.contains("stretch-all")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     run(spark, srcDir, destDir, factor, stretchTime, stretchAll)
     println(s"""{"scaleup":"done","src":"$srcDir","dest":"$destDir","factor":$factor,"stretchTime":$stretchTime,"stretchAll":$stretchAll}""")

@@ -72,19 +72,12 @@ object SkewProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val hotPct = args.lift(1).map(_.toInt).getOrElse(20)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // .max(1) matches Bench's clamp: ITERS=0 would make every timed
     // loop a no-op (rows=0, best=MaxValue) and the shape-equivalence
     // requires would pass vacuously on 0==0 (ADVICE r15)
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "2").toInt.max(1)
     val ratio = sys.env.getOrElse("SPARK_GRAFT_SKEW_RATIO", "2.0").toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
 
     val failures = run(spark, sfDir, hotPct, iters, ratio)

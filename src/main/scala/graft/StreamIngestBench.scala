@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
 /** Streaming-ingest throughput ladder (VERDICT r15 #7): batch ingest
   * has a two-decade rows/sec ladder in bench/ingest_history.jsonl;
   * the STREAMING ingest paths (`StreamingIngest.firstWinsIngestStream`
@@ -22,13 +19,12 @@ import org.apache.spark.sql.functions._
   *    listing, per-batch planning, state read/merge/commit
   *    (_SUCCESS-gated generations for latest-wins), and the parquet
   *    sink — the number a capacity plan actually needs.
-  *  - Like IngestBench, results append to bench/ingest_history.jsonl
-  *    (metric name distinguishes the populations) and never to
+  *  - Results append to bench/ingest_history.jsonl and never to
   *    history.jsonl (query-suite tooling must not see ingest lines).
   *
   * Usage: `runMain graft.StreamIngestBench [sfDir ...]` (default:
-  * sf0.01 → sf0.1, one decade on input rows). Env: SPARK_GRAFT_ITERS
-  * (default 2, min-of-N per point), SPARK_GRAFT_CPUS.
+  * sf0.01 → sf0.1, one decade on input rows), at `local[nproc]`.
+  * Env: SPARK_GRAFT_ITERS (default 2, min-of-N per point).
   */
 object StreamIngestBench {
   def main(args: Array[String]): Unit = {
@@ -37,15 +33,9 @@ object StreamIngestBench {
     val missing = dirs.filterNot(d => java.nio.file.Files.isDirectory(
       java.nio.file.Paths.get(d)))
     require(missing.isEmpty, s"missing input dir(s): ${missing.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = Runtime.getRuntime.availableProcessors()
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "2").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     def wipe(p: java.nio.file.Path): Unit = if (java.nio.file.Files.exists(p)) {

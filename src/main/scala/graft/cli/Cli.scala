@@ -1,5 +1,6 @@
 package graft.cli
 
+import graft.GraftSession
 import graft.warehouse.{HhsPipeline, QualityPipeline, Schemas}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
@@ -18,14 +19,13 @@ import org.apache.spark.sql.types.StructType
   */
 object Cli {
 
+  /** `local[nproc]` unless SPARK_GRAFT_MASTER names a cluster master,
+    * the loaders' one deployment setting. */
   private[cli] def session(appName: String): SparkSession =
-    SparkSession.builder()
-      .appName(appName)
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    GraftSession.create(sys.env.get("SPARK_GRAFT_MASTER")
+      .fold(GraftSession.localBuilder())(m =>
+        GraftSession.configure(SparkSession.builder().master(m)))
+      .appName(appName))
 
   /** Current warehouse table, or an empty frame with the canonical schema
     * on first load (the reference assumes pre-created tables; a missing

@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
 class GraftSessionSpec extends SparkSpec {
 
   test("local() delivers the configured contract even over a reused session") {
@@ -17,5 +20,28 @@ class GraftSessionSpec extends SparkSpec {
     // converts without a dedicated reader flag at the call site
     assert(Tables.events(s, sfDir).select("ts").schema.head.dataType
       .typeName == "timestamp")
+  }
+
+  test("base session settings are set only in GraftSession") {
+    // A second hand-built session drifts from the first (core count,
+    // timezone, nanos reading, SQL functions). Reads such as
+    // `conf.get(...)` and mentions in comments stay legal; setting a
+    // base key anywhere but GraftSession.scala fails here. The one
+    // exception is Cli's SPARK_GRAFT_MASTER branch.
+    val setting = ("""\.master\(|(?:\.config|conf\.set)\(\s*"(?:""" +
+      """spark\.sql\.session\.timeZone|spark\.sql\.legacy\.parquet\.nanosAsLong|""" +
+      """spark\.sql\.shuffle\.partitions)"""").r
+    val allowed = Map("GraftSession.scala" -> Int.MaxValue, "Cli.scala" -> 1)
+    val walk = Files.walk(Paths.get("src/main/scala"))
+    val mains = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    val offenders = (Paths.get("src/test/scala/graft/SparkSpec.scala") :: mains)
+      .flatMap { (p: Path) =>
+        val n = setting.findAllIn(Files.readString(p)).size
+        if (n > allowed.getOrElse(p.getFileName.toString, 0)) Some(s"$p ($n)") else None
+      }
+    assert(mains.exists(_.endsWith("GraftSession.scala")), "scan found no sources")
+    assert(offenders.isEmpty,
+      s"session settings outside GraftSession: ${offenders.mkString(", ")}")
   }
 }

@@ -3,9 +3,9 @@
 # the single sbt lock so tests and long benches can run concurrently.
 # Usage: scripts/run_main.sh graft.Bench [args...]
 # Every main runs at local[nproc] (graft.GraftSession). Env:
-# SPARK_DRIVER_MEM (default: half of MemTotal, clamped to 2-8 g — the
-# rule build.sbt, the tests and the benchmark share), plus whatever the
-# main reads (SPARK_GRAFT_SF_DIR, _ITERS, ...).
+# SPARK_DRIVER_MEM (default: scripts/host_heap.sh, half of MemTotal
+# clamped to 2-8 g), plus whatever the main reads (SPARK_GRAFT_SF_DIR,
+# _ITERS, ...; graft.Bench also SPARK_GRAFT_CPUS).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 CP="target/scala-2.13/classes:/opt/spark/jars/*"
@@ -17,7 +17,7 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-HEAP="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}"
+HEAP="${SPARK_DRIVER_MEM:-$(scripts/host_heap.sh)}"
 # GCLockerRetryAllocationCount (default 2!): executor threads in JNI
 # critical regions (parquet native decompression) can starve the GC
 # lock; after 2 failed retries HotSpot throws a spurious heap-space OOM

@@ -2,8 +2,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR at `local[nproc]` and prints ONE JSON line with
-  * per-query and total wall-clock seconds.
+  * SPARK_GRAFT_SF_DIR at `local[SPARK_GRAFT_CPUS]` (default nproc) and
+  * prints ONE JSON line with per-query and total wall-clock seconds.
+  * Both variables are the contract's inputs: a caller compares core
+  * counts by running the same build at two SPARK_GRAFT_CPUS values.
   *
   * Methodology:
   *  - Results go to the `noop` sink, not `.count()` — count() lets
@@ -108,7 +110,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = Runtime.getRuntime.availableProcessors()
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS")
+      .fold(Runtime.getRuntime.availableProcessors())(_.toInt)
     val warmup = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0"
     val skipProbes = sys.env.getOrElse("SPARK_GRAFT_SKIP_PROBES", "0") == "1"
     // A full-suite decade run keeps one JVM alive for hours across

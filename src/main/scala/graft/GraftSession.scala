@@ -42,14 +42,12 @@ object GraftSession {
     create(localBuilder(cpus))
 
   /** `getOrCreate` on a [[configure]]d builder. It may hand back a
-    * pre-existing session, whose builder configs were ignored, so the
-    * runtime-settable pieces are (re-)applied and the contract holds
-    * either way (function registration is overwrite-idempotent). */
+    * pre-existing session: that applies the builder's runtime SQL
+    * configs (UTC, nanos) but not its extensions, so the functions are
+    * installed here (registration is overwrite-idempotent). */
   def create(b: SparkSession.Builder): SparkSession = {
     val s = b.getOrCreate()
     GraftExtensions.install(s)
-    s.conf.set("spark.sql.session.timeZone", "UTC")
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     s
   }
 }

@@ -20,7 +20,9 @@ import org.apache.spark.sql.types.StructType
 object Cli {
 
   /** `local[nproc]` unless SPARK_GRAFT_MASTER names a cluster master,
-    * the loaders' one deployment setting. */
+    * the loaders' one deployment setting. A cluster session keeps
+    * Spark's default shuffle partitions; operators set
+    * `spark.sql.shuffle.partitions` with `spark-submit --conf`. */
   private[cli] def session(appName: String): SparkSession =
     GraftSession.create(sys.env.get("SPARK_GRAFT_MASTER")
       .fold(GraftSession.localBuilder())(m =>

@@ -255,7 +255,7 @@ object Bench {
         progress("warmup", name, (System.nanoTime() - t0) / 1e9, ok)
       }
       spark.catalog.clearCache()
-      graft.vector.ProductQuantizer.releaseCentroids()
+      org.apache.spark.sql.graftbridge.GraftSqlBridge.releaseShared()
     }
     // a failing query must NOT vanish into a near-zero time: failures
     // are counted and named in the JSON so the bench can't silently
@@ -323,7 +323,7 @@ object Bench {
     val passes = (1 to iters).map { it =>
       val pass = queries.map { case (name, fn) => timedOne(it, name, fn) }
       spark.catalog.clearCache()
-      graft.vector.ProductQuantizer.releaseCentroids()
+      org.apache.spark.sql.graftbridge.GraftSqlBridge.releaseShared()
       pass
     }
     // min across SUCCESSFUL iterations only: failures typically abort

@@ -645,7 +645,7 @@ object Plans {
     }
     SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       spark.catalog.clearCache()
-      graft.vector.ProductQuantizer.releaseCentroids()
+      org.apache.spark.sql.graftbridge.GraftSqlBridge.releaseShared()
       val hasGlobal =
         try {
           val opt = fn(spark, sfDir).queryExecution.optimizedPlan
@@ -687,7 +687,7 @@ object Plans {
       // Exchange count of every registered query's formatted plan
       SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
         spark.catalog.clearCache()
-        graft.vector.ProductQuantizer.releaseCentroids()
+        org.apache.spark.sql.graftbridge.GraftSqlBridge.releaseShared()
         val n = try shuffleCount(fn(spark, sfDir).queryExecution
           .explainString(ExplainMode.fromString("formatted")))
         catch { case _: Throwable => -1 }

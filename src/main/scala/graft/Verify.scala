@@ -34,7 +34,7 @@ object Verify {
       scala.concurrent.Future.sequence(futures),
       scala.concurrent.duration.Duration.Inf)
     pool.shutdown()
-    graft.vector.ProductQuantizer.releaseCentroids()
+    org.apache.spark.sql.graftbridge.GraftSqlBridge.releaseShared()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -1,9 +1,8 @@
 package graft.cli
 
 import graft.GraftSession
-import graft.warehouse.{HhsPipeline, QualityPipeline, Schemas}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import graft.warehouse.{HhsPipeline, QualityPipeline, Warehouse}
+import org.apache.spark.sql.SparkSession
 
 /** Operational entry points mirroring the reference's CLI surface
   * (README.md:21-33: `python load_hhs.py <csv>` /
@@ -12,10 +11,9 @@ import org.apache.spark.sql.types.StructType
   * disk so the end-to-end workflow — read current warehouse state,
   * ingest a CSV, append new rows, emit reject CSVs — runs from a shell.
   *
-  * Warehouse layout (relative to --warehouse, default ./warehouse):
-  *   hospitals/ hospital_locations/ hospital_bed_information/
-  *   hospital_quality_information/
-  * Rejects go under --rejects (default ./rejects)/{hhs,quality}.
+  * The warehouse root is --warehouse (default ./warehouse, any Hadoop-FS
+  * URI), rejects go under --rejects (default ./rejects); the layout under
+  * both is [[graft.warehouse.Warehouse]]'s.
   */
 object Cli {
 
@@ -29,58 +27,46 @@ object Cli {
         GraftSession.configure(SparkSession.builder().master(m)))
       .appName(appName))
 
-  /** Current warehouse table, or an empty frame with the canonical schema
-    * on first load (the reference assumes pre-created tables; a missing
-    * directory here is the "fresh warehouse" state). */
-  private[cli] def readOrEmpty(spark: SparkSession, path: String,
-                               schema: StructType): DataFrame =
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(path)))
-      spark.read.schema(schema).parquet(path)
-    else
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
-  /** Flag parsing for `--warehouse <dir> --rejects <dir>` suffixes.
-    * Unknown flags and stray arguments are hard errors: a typo like
-    * `--warehose /x` must not silently load into the default directory. */
-  private[cli] def dirs(rest: Seq[String]): (String, String) = {
-    val known = Set("--warehouse", "--rejects")
+  /** `--flag value` pairs, each flag one of `known`. Unknown flags and
+    * stray arguments are hard errors: a typo like `--warehose /x` must not
+    * silently load into the default directory. */
+  private[cli] def flags(rest: Seq[String], known: Seq[String]): Map[String, String] = {
     val pairs = rest.grouped(2).toSeq
     pairs.foreach {
       // a "value" that is itself a flag means the real value was
       // forgotten (`--warehouse --rejects`): without this check it would
       // parse as warehouse dir literally "--rejects" — the silent
       // data-placement misparse hard-error flags exist to prevent
-      case Seq(k, v) if known(k) && v.startsWith("--") => sys.error(
+      case Seq(k, v) if known.contains(k) && v.startsWith("--") => sys.error(
         s"flag '$k' is missing a value (got '$v')")
-      case Seq(k, _) if known(k) => ()
+      case Seq(k, _) if known.contains(k) => ()
       case Seq(k, _) => sys.error(
-        s"unknown flag '$k' (expected ${known.mkString(" or ")})")
+        s"unknown flag '$k' (expected one of ${known.mkString(", ")})")
       case Seq(odd) => sys.error(s"stray trailing argument '$odd'")
       case _ => ()
     }
-    val m = pairs.collect { case Seq(k, v) => k -> v }.toMap
+    pairs.collect { case Seq(k, v) => k -> v }.toMap
+  }
+
+  /** The loaders' `--warehouse <dir> --rejects <dir>` suffix. */
+  private[cli] def dirs(rest: Seq[String]): (String, String) = {
+    val m = flags(rest, Seq("--warehouse", "--rejects"))
     (m.getOrElse("--warehouse", "warehouse"), m.getOrElse("--rejects", "rejects"))
   }
 
   def runHhs(spark: SparkSession, csvPath: String,
              warehouseDir: String, rejectDir: String): HhsPipeline.Result = {
-    val existingHospitals = readOrEmpty(
-      spark, s"$warehouseDir/hospitals", Schemas.hospitals)
-    val existingBeds = readOrEmpty(
-      spark, s"$warehouseDir/hospital_bed_information",
-      Schemas.hospitalBedInformation)
-    val r = HhsPipeline.load(spark, csvPath, existingHospitals, existingBeds)
+    val r = HhsPipeline.load(spark, csvPath,
+      Warehouse.read(spark, warehouseDir, Warehouse.Hospitals),
+      Warehouse.read(spark, warehouseDir, Warehouse.BedInformation))
     HhsPipeline.write(r, warehouseDir, rejectDir)
     r
   }
 
   def runQuality(spark: SparkSession, dataDate: String, csvPath: String,
                  warehouseDir: String, rejectDir: String): QualityPipeline.Result = {
-    val existing = readOrEmpty(
-      spark, s"$warehouseDir/hospital_quality_information",
-      Schemas.hospitalQualityInformation)
-    val r = QualityPipeline.load(spark, csvPath, dataDate, existing)
+    val r = QualityPipeline.load(spark, csvPath, dataDate,
+      Warehouse.read(spark, warehouseDir, Warehouse.QualityInformation))
     QualityPipeline.write(r, warehouseDir, rejectDir)
     r
   }

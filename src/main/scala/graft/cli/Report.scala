@@ -1,6 +1,6 @@
 package graft.cli
 
-import graft.warehouse.{Reports, Schemas}
+import graft.warehouse.{Reports, Warehouse}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -62,36 +62,29 @@ object Report {
   def render(spark: SparkSession, warehouseDir: String,
              week: Option[String] = None, dataDate: Option[String] = None,
              ownership: Option[String] = None, maxRows: Int = 100): String = {
-    val hospitals = Cli.readOrEmpty(
-      spark, s"$warehouseDir/hospitals", Schemas.hospitals)
-    val locations = Cli.readOrEmpty(
-      spark, s"$warehouseDir/hospital_locations", Schemas.hospitalLocations)
-    val bedInfo = Cli.readOrEmpty(
-      spark, s"$warehouseDir/hospital_bed_information",
-      Schemas.hospitalBedInformation)
-    val quality = Cli.readOrEmpty(
-      spark, s"$warehouseDir/hospital_quality_information",
-      Schemas.hospitalQualityInformation)
+    val hospitals = Warehouse.read(spark, warehouseDir, Warehouse.Hospitals)
+    val locations = Warehouse.read(spark, warehouseDir, Warehouse.Locations)
+    val bedInfo = Warehouse.read(spark, warehouseDir, Warehouse.BedInformation)
+    val quality = Warehouse.read(spark, warehouseDir, Warehouse.QualityInformation)
 
-    // selectbox defaults: single-row scalar aggregates, not data pulls
-    val wk = week.getOrElse {
-      val r = bedInfo.agg(max("collection_week")).head()
-      require(!r.isNullAt(0), s"$warehouseDir has no bed information: " +
-        "load HHS data first or pass --week explicitly")
-      r.get(0).toString
+    // selectbox defaults: single-row scalar aggregates, not data pulls;
+    // nothing to default from fails fast with a load hint
+    def orHint(v: Option[String], missing: String, load: String, flag: String): String = {
+      require(v.isDefined, s"$warehouseDir has no $missing: " +
+        s"load $load first or pass $flag explicitly")
+      v.get
     }
-    val dd = dataDate.getOrElse {
-      val r = quality.agg(max("data_date")).head()
-      require(!r.isNullAt(0), s"$warehouseDir has no quality information: " +
-        "load quality data first or pass --data-date explicitly")
-      r.get(0).toString
-    }
-    val own = ownership.getOrElse {
+    def latest(df: DataFrame, c: String) = Option(df.agg(max(c)).head().get(0)).map(_.toString)
+    val wk = week.getOrElse(orHint(latest(bedInfo, "collection_week"),
+      "bed information", "HHS data", "--week"))
+    val dd = dataDate.getOrElse(orHint(latest(quality, "data_date"),
+      "quality information", "quality data", "--data-date"))
+    val own = ownership.getOrElse(orHint(
       quality.filter(col("data_date") === lit(dd))
         .groupBy("hospital_ownership").agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("hospital_ownership")).limit(1)
-        .head().getString(0)
-    }
+        .head(1).headOption.map(_.getString(0)),
+      s"quality information for $dd", "quality data for that date", "--ownership"))
 
     val sections = Seq(
       s"Records loaded for week $wk (Reporting.py:29-33)" ->
@@ -118,25 +111,12 @@ object Report {
     }.mkString(s"graft report — warehouse: $warehouseDir\n\n", "\n\n", "\n")
   }
 
-  private def flags(rest: Seq[String]): Map[String, String] = {
-    val known = Set("--warehouse", "--week", "--data-date", "--ownership")
-    val pairs = rest.grouped(2).toSeq
-    pairs.foreach {
-      case Seq(k, v) if known(k) && v.startsWith("--") =>
-        sys.error(s"flag '$k' is missing a value (got '$v')")
-      case Seq(k, _) if known(k) => ()
-      case Seq(k, _) => sys.error(
-        s"unknown flag '$k' (expected ${known.mkString(", ")})")
-      case Seq(odd) => sys.error(s"stray trailing argument '$odd'")
-      case _ => ()
-    }
-    pairs.collect { case Seq(k, v) => k -> v }.toMap
-  }
+  private[cli] val flagNames = Seq("--warehouse", "--week", "--data-date", "--ownership")
 
   /** `runMain graft.cli.Report [--warehouse dir] [--week yyyy-MM-dd]
     * [--data-date yyyy-MM-dd] [--ownership name]` */
   def main(args: Array[String]): Unit = {
-    val m = flags(args.toIndexedSeq)
+    val m = Cli.flags(args.toIndexedSeq, flagNames)
     val spark = Cli.session("graft-report")
     try println(render(spark, m.getOrElse("--warehouse", "warehouse"),
       m.get("--week"), m.get("--data-date"), m.get("--ownership")))

@@ -2,9 +2,11 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.Row
+import graft.etl.Validation
+import graft.warehouse.{HhsPipeline, Schemas, Warehouse}
+import org.apache.hadoop.fs.Path
 
 /** Typed event row for stateful streaming. */
 final case class UserEvent(user_id: Long, value: Double)
@@ -155,7 +157,7 @@ object StreamingIngest {
     * receives each micro-batch's finished stats (write to parquet,
     * push to a topic, …). */
   def repetitionStatsStream(docs: DataFrame)
-                           (sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
+                           (sink: DataFrame => Unit): StreamingQuery =
     docs.writeStream.trigger(Trigger.AvailableNow())
       .foreachBatch((b: DataFrame, _: Long) =>
         sink(graft.text.Repetition.repetitionStats(b)))
@@ -172,7 +174,7 @@ object StreamingIngest {
     * than re-estimating df inside the stream.) */
   def boilerplateStripStream(docs: DataFrame, blocklist: DataFrame,
                              segTokens: Int)
-                            (sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
+                            (sink: DataFrame => Unit): StreamingQuery =
     docs.writeStream.trigger(Trigger.AvailableNow())
       .foreachBatch((b: DataFrame, _: Long) =>
         sink(graft.text.TextDedup.boilerplateStripAgainst(b, blocklist, segTokens)))
@@ -194,8 +196,7 @@ object StreamingIngest {
     * reference's loader implements, load_hhs.py:75). */
   def firstWinsIngestStream(stream: DataFrame, keys: Seq[String],
                             orderCol: String, outDir: String,
-                            checkpointDir: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+                            checkpointDir: Option[String] = None): StreamingQuery =
     stream.writeStream.trigger(Trigger.AvailableNow())
       // Durable checkpoint by default (like the HHS streams above): an
       // interrupted run resumes from the last committed batch instead
@@ -205,14 +206,9 @@ object StreamingIngest {
       .option("checkpointLocation",
               checkpointDir.getOrElse(s"$outDir/_checkpoints/first_wins"))
       .foreachBatch { (b: DataFrame, _: Long) =>
-        val sp = b.sparkSession
-        val existing =
-          if (java.nio.file.Files.exists(java.nio.file.Paths.get(outDir)))
-            sp.read.schema(b.schema).parquet(outDir)
-          else sp.createDataFrame(sp.sparkContext.emptyRDD[Row], b.schema)
         graft.etl.Dedup.antiJoinExisting(
             graft.etl.Dedup.firstOccurrenceWins(b, keys, orderCol),
-            existing, keys)
+            Warehouse.readOrEmpty(b.sparkSession, outDir, b.schema), keys)
           .write.mode("append").parquet(outDir)
       }.start()
 
@@ -223,7 +219,7 @@ object StreamingIngest {
     * kernel carries (the r14 min/max(struct) aggregate today). Unlike
     * first-wins, a later batch can SUPERSEDE stored rows, so an
     * append-only sink can't express it; state lives in the
-    * generational table protocol ([[maintainCdcState]]'s): per batch,
+    * generational state protocol (`commitGenerations`): per batch,
     * current state ∪ new rows → latestWins → gen-<batchId> commit,
     * _SUCCESS-gated, replay-idempotent (a replayed batch rebuilds the
     * same generation from the same <batchId-exclusive state). Read the
@@ -234,19 +230,11 @@ object StreamingIngest {
   def latestWinsIngestStream(stream: DataFrame, keys: Seq[String],
                              orderCol: String, tieCol: String,
                              stateDir: String,
-                             checkpointDir: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream.trigger(Trigger.AvailableNow())
-      .option("checkpointLocation",
-              checkpointDir.getOrElse(s"$stateDir/_checkpoints/latest_wins"))
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        val sp = b.sparkSession
-        val merged = currentAggState(sp, stateDir, maxExclusive = Some(batchId))
-          .map(_.unionByName(b)).getOrElse(b)
-        graft.etl.Dedup.latestWins(merged, keys, orderCol, tieCol)
-          .write.mode("overwrite").parquet(s"$stateDir/gen-$batchId")
-        pruneGenerations(sp, stateDir, keepAtOrAbove = batchId - 1)
-      }.start()
+                             checkpointDir: Option[String] = None): StreamingQuery =
+    commitGenerations(stream, stateDir,
+        Some(checkpointDir.getOrElse(s"$stateDir/_checkpoints/latest_wins"))) { (cur, b) =>
+      graft.etl.Dedup.latestWins(cur.fold(b)(_.unionByName(b)), keys, orderCol, tieCol)
+    }
 
   /** STREAMING END-TO-END HHS INGEST: the whole batch warehouse load
     * ([[graft.warehouse.HhsPipeline.load]]) as one live pipeline —
@@ -266,28 +254,20 @@ object StreamingIngest {
     *    without touching the warehouse. Streaming "first" is arrival
     *    order — equal to the batch file-order rule whenever files
     *    arrive in listing order (the file source's contract here).
-    *  - per micro-batch (foreachBatch), the remaining BATCH stages
-    *    run against current warehouse state: first-per-hospital_pk,
-    *    anti-join vs existing keys (covers pre-existing warehouse rows
-    *    and dups beyond the watermark horizon), three table appends.
-    *    Batches are sequential, so batch N's appends are batch N+1's
-    *    existing side.
+    *  - per micro-batch (foreachBatch), the batch table split
+    *    [[graft.warehouse.HhsPipeline.newRows]] runs against current
+    *    warehouse state: first-wins per key, anti-join vs existing keys
+    *    (covers pre-existing warehouse rows and dups beyond the
+    *    watermark horizon), three table appends. The per-week first-wins
+    *    is a no-op on the watermark-deduped batch. Batches are
+    *    sequential, so batch N's appends are batch N+1's existing side.
     * At scale the state store holds only keys within the watermark,
     * and every per-batch stage is the batch operator itself — the
     * proof obligation (stream == batch on the same files) is pinned
     * by StreamingSpec against a fixture warehouse. */
   def hhsIngestStream(spark: SparkSession, srcDir: String, warehouseDir: String,
                       rejectDir: String, watermark: String = "30 days",
-                      maxFilesPerTrigger: Int = 1)
-      : (org.apache.spark.sql.streaming.StreamingQuery,
-         org.apache.spark.sql.streaming.StreamingQuery) = {
-    import graft.warehouse.{HhsPipeline, Schemas}
-    import graft.etl.{Dedup, Validation}
-    def readOrEmpty(sp: SparkSession, path: String, schema: StructType): DataFrame =
-      if (java.nio.file.Files.exists(java.nio.file.Paths.get(path)))
-        sp.read.schema(schema).parquet(path)
-      else sp.createDataFrame(sp.sparkContext.emptyRDD[Row], schema)
-
+                      maxFilesPerTrigger: Int = 1): (StreamingQuery, StreamingQuery) = {
     val raw = spark.readStream
       .option("header", "true").schema(Schemas.hhsRawCsv)
       .option("maxFilesPerTrigger", maxFilesPerTrigger).csv(srcDir)
@@ -302,37 +282,16 @@ object StreamingIngest {
     val validQ = deduped.writeStream.trigger(Trigger.AvailableNow())
       .option("checkpointLocation", s"$warehouseDir/_checkpoints/hhs_valid")
       .foreachBatch { (b: DataFrame, _: Long) =>
-        val sp = b.sparkSession
-        val existingHospitals = readOrEmpty(
-          sp, s"$warehouseDir/hospitals", Schemas.hospitals)
-        val existingBeds = readOrEmpty(
-          sp, s"$warehouseDir/hospital_bed_information",
-          Schemas.hospitalBedInformation)
-        val withOrder = b.withColumn("__file_order", monotonically_increasing_id())
-        val firstPerHospital = Dedup.firstOccurrenceWins(
-          withOrder, Seq("hospital_pk"), "__file_order")
-        val newHospitalRows = Dedup.antiJoinExisting(
-          firstPerHospital, existingHospitals, Seq("hospital_pk"))
-        newHospitalRows.select(col("hospital_pk"), col("hospital_name"))
-          .write.mode("append").parquet(s"$warehouseDir/hospitals")
-        newHospitalRows.select(
-          col("hospital_pk").as("hospital_fk"),
-          col("state"), col("address"), col("city"), col("zip"),
-          col("fips_code"), col("geocoded_hospital_address"))
-          .write.mode("append").parquet(s"$warehouseDir/hospital_locations")
-        Dedup.antiJoinExisting(
-          b.select((col("hospital_pk").as("hospital_fk") +:
-            col("collection_week") +:
-            Schemas.hhsMetricColumns.map(col)).toIndexedSeq: _*),
-          existingBeds, Seq("hospital_fk", "collection_week"))
-          .write.mode("append").partitionBy("collection_week")
-          .parquet(s"$warehouseDir/hospital_bed_information")
+        HhsPipeline.append(HhsPipeline.newRows(
+          b.withColumn("__file_order", monotonically_increasing_id()),
+          Warehouse.read(b.sparkSession, warehouseDir, Warehouse.Hospitals),
+          Warehouse.read(b.sparkSession, warehouseDir, Warehouse.BedInformation)), warehouseDir)
       }.start()
 
     val rejectQ = rejects.writeStream.trigger(Trigger.AvailableNow())
       .option("checkpointLocation", s"$warehouseDir/_checkpoints/hhs_rejects")
       .option("header", "true")
-      .option("path", s"$rejectDir/hhs")
+      .option("path", Warehouse.rejectPath(rejectDir, "hhs"))
       .outputMode(OutputMode.Append()).format("csv").start()
     (validQ, rejectQ)
   }
@@ -358,17 +317,11 @@ object StreamingIngest {
     * with a checkpointed source and a transactional table format —
     * this operator is the engine-side state math done right.) */
   def maintainAggState(stream: DataFrame, keys: Seq[String], valueCol: String,
-                       stateDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        import graft.etl.IncrementalAgg
-        val sp = b.sparkSession
-        val delta = IncrementalAgg.state(b, keys, valueCol)
-        val merged = currentAggState(sp, stateDir, maxExclusive = Some(batchId))
-          .map(cur => IncrementalAgg.merge(cur, delta, keys)).getOrElse(delta)
-        merged.write.mode("overwrite").parquet(s"$stateDir/gen-$batchId")
-        pruneGenerations(sp, stateDir, keepAtOrAbove = batchId - 1)
-      }.start()
+                       stateDir: String): StreamingQuery =
+    commitGenerations(stream, stateDir) { (cur, b) =>
+      val delta = graft.etl.IncrementalAgg.state(b, keys, valueCol)
+      cur.fold(delta)(graft.etl.IncrementalAgg.merge(_, delta, keys))
+    }
 
   /** Streaming HEAVY-HITTER SKETCH maintenance: per micro-batch build
     * a CountMin blob over `keyCol` (LongType keys — hash upstream)
@@ -383,13 +336,9 @@ object StreamingIngest {
     * of corpus size, so the driver-side head()+add is constant work —
     * the same class of driver scalar as the CC convergence probe. */
   def maintainSketchState(stream: DataFrame, keyCol: String, depth: Int,
-                          width: Int, stateDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    pinBlobGeometry(stream.sparkSession, stateDir, s"cms:depth=$depth,width=$width")
-    maintainBlobState(stream, stateDir,
-      graft.sketch.CountMin.cm_agg(col(keyCol), depth, width),
-      graft.sketch.CountMin.addBlobs)
-  }
+                          width: Int, stateDir: String): StreamingQuery =
+    maintainBlobState(stream, stateDir, s"cms:depth=$depth,width=$width",
+      graft.sketch.CountMin.cm_agg(col(keyCol), depth, width), graft.sketch.CountMin.addBlobs)
 
   /** Streaming BLOOM-FILTER maintenance: the membership sibling of
     * [[maintainSketchState]] — per-batch Bloom blobs OR into the
@@ -401,13 +350,9 @@ object StreamingIngest {
     * the filter; scan-side `might_contain` pruning then never
     * re-reads filter history. */
   def maintainBloomState(stream: DataFrame, keyCol: String, numBits: Int,
-                         k: Int, stateDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    pinBlobGeometry(stream.sparkSession, stateDir, s"bloom:numBits=$numBits,k=$k")
-    maintainBlobState(stream, stateDir,
-      graft.sketch.Bloom.bloom_agg(col(keyCol), numBits, k),
-      graft.sketch.Bloom.orBlobs)
-  }
+                         k: Int, stateDir: String): StreamingQuery =
+    maintainBlobState(stream, stateDir, s"bloom:numBits=$numBits,k=$k",
+      graft.sketch.Bloom.bloom_agg(col(keyCol), numBits, k), graft.sketch.Bloom.orBlobs)
 
   /** Pin a blob-state directory to ONE sketch geometry. Blob merges
     * (addBlobs/orBlobs) can only check byte LENGTH, which is necessary
@@ -419,7 +364,7 @@ object StreamingIngest {
     * state dir fails FAST at start(), before any batch merges. */
   private def pinBlobGeometry(spark: SparkSession, stateDir: String,
                               descriptor: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$stateDir/_blob_geometry")
+    val p = new Path(s"$stateDir/_blob_geometry")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) {
       val in = fs.open(p)
@@ -435,28 +380,24 @@ object StreamingIngest {
     }
   }
 
-  /** Shared blob-state loop: per batch, evaluate `buildAgg` over the
-    * batch (one fixed-size blob) and fold it into the standing blob
-    * with `merge` — same generation-per-batch-id protocol as
-    * [[maintainAggState]]. The blob is corpus-size-independent, so
-    * the driver-side head()+merge is constant work (the CC
-    * convergence-probe class of driver scalar). */
-  private def maintainBlobState(stream: DataFrame, stateDir: String,
+  /** Shared blob-state loop: pin `stateDir` to `geometry`, then per
+    * batch evaluate `buildAgg` over the batch (one fixed-size blob) and
+    * fold it into the standing blob with `merge` — same
+    * generation-per-batch-id protocol as [[maintainAggState]]. The blob
+    * is corpus-size-independent, so the driver-side head()+merge is
+    * constant work (the CC convergence-probe class of driver scalar). */
+  private def maintainBlobState(stream: DataFrame, stateDir: String, geometry: String,
                                 buildAgg: org.apache.spark.sql.Column,
                                 merge: (Array[Byte], Array[Byte]) => Array[Byte])
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        val sp = b.sparkSession
-        val delta = b.agg(buildAgg.as("blob")).head().getAs[Array[Byte]]("blob")
-        val merged = currentAggState(sp, stateDir, maxExclusive = Some(batchId))
-          .map(cur => merge(cur.head().getAs[Array[Byte]]("blob"), delta))
-          .getOrElse(delta)
-        import sp.implicits._
-        Seq(merged).toDF("blob").coalesce(1)
-          .write.mode("overwrite").parquet(s"$stateDir/gen-$batchId")
-        pruneGenerations(sp, stateDir, keepAtOrAbove = batchId - 1)
-      }.start()
+      : StreamingQuery = {
+    pinBlobGeometry(stream.sparkSession, stateDir, geometry)
+    commitGenerations(stream, stateDir) { (cur, b) =>
+      val delta = b.agg(buildAgg.as("blob")).head().getAs[Array[Byte]]("blob")
+      val merged = cur.fold(delta)(c => merge(c.head().getAs[Array[Byte]]("blob"), delta))
+      import b.sparkSession.implicits._
+      Seq(merged).toDF("blob").coalesce(1)
+    }
+  }
 
   /** Streaming CDC MATERIALIZATION: each micro-batch of I/U/D change
     * rows merges into the generational state table via
@@ -470,18 +411,31 @@ object StreamingIngest {
     * Read the live table with [[currentCdcState]] (filters
     * tombstones). */
   def maintainCdcState(stream: DataFrame, keys: Seq[String], seqCol: String,
-                       opCol: String, stateDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream.trigger(Trigger.AvailableNow())
+                       opCol: String, stateDir: String): StreamingQuery =
+    commitGenerations(stream, stateDir) { (cur, b) =>
+      graft.etl.Upsert.applyCdc(cur.fold(b)(_.unionByName(b)), keys, seqCol, opCol,
+        keepTombstones = true)
+    }
+
+  /** The generation commit every state maintainer shares: per batch,
+    * `fold` the highest committed generation below the batch id (so a
+    * replay rebuilds the same state) with the batch, overwrite
+    * `gen-<batchId>`, then prune generations older than the previous one. */
+  private def commitGenerations(stream: DataFrame, stateDir: String,
+                                checkpointDir: Option[String] = None)
+                               (fold: (Option[DataFrame], DataFrame) => DataFrame)
+      : StreamingQuery = {
+    val w = stream.writeStream.trigger(Trigger.AvailableNow())
+    checkpointDir.fold(w)(w.option("checkpointLocation", _))
       .foreachBatch { (b: DataFrame, batchId: Long) =>
-        import graft.etl.Upsert
         val sp = b.sparkSession
-        val merged = currentAggState(sp, stateDir, maxExclusive = Some(batchId))
-          .map(_.unionByName(b)).getOrElse(b)
-        Upsert.applyCdc(merged, keys, seqCol, opCol, keepTombstones = true)
+        fold(currentAggState(sp, stateDir, maxExclusive = Some(batchId)), b)
           .write.mode("overwrite").parquet(s"$stateDir/gen-$batchId")
-        pruneGenerations(sp, stateDir, keepAtOrAbove = batchId - 1)
+        val fs = new Path(stateDir).getFileSystem(sp.sparkContext.hadoopConfiguration)
+        committedGens(sp, stateDir).filter(_ < batchId - 1)
+          .foreach(g => fs.delete(new Path(s"$stateDir/gen-$g"), true))
       }.start()
+  }
 
   /** The live CDC table: latest committed generation minus tombstones. */
   def currentCdcState(spark: SparkSession, stateDir: String,
@@ -498,24 +452,16 @@ object StreamingIngest {
       .map(g => spark.read.parquet(s"$stateDir/gen-$g"))
 
   private def committedGens(spark: SparkSession, stateDir: String): Seq[Long] = {
-    val dir = new org.apache.hadoop.fs.Path(stateDir)
+    val dir = new Path(stateDir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) Seq.empty
     else fs.listStatus(dir).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen-"))
       .map(_.getPath.getName.stripPrefix("gen-").toLong)
       .filter(g => fs.exists(
-        new org.apache.hadoop.fs.Path(s"$stateDir/gen-$g/_SUCCESS")))
+        new Path(s"$stateDir/gen-$g/_SUCCESS")))
   }
 
-  private def pruneGenerations(spark: SparkSession, stateDir: String,
-                               keepAtOrAbove: Long): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    committedGens(spark, stateDir).filter(_ < keepAtOrAbove).foreach { g =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$stateDir/gen-$g"), true)
-    }
-  }
 
   /** Run a streaming frame to completion against currently-available
     * input via the memory sink; returns the materialized result. Batch

@@ -45,13 +45,6 @@ import org.apache.spark.sql.functions._
   */
 object ProductQuantizer {
 
-  /** Unpersist the codebook frame [[adcTopK]] cached (one m×k-row
-    * frame per call — the r8 leak, closed). Delegates to the central
-    * shared-plan registry, which also covers BPE merge vocabularies
-    * and LSH signature frames. */
-  def releaseCentroids(): Unit =
-    org.apache.spark.sql.graftbridge.GraftSqlBridge.releaseShared()
-
   /** `slice` silently ignores trailing dimensions when `dims` under-
     * states the true vector length, so codes/errors would be computed
     * on truncated vectors with no error anywhere. Guard: the length
@@ -229,10 +222,8 @@ object ProductQuantizer {
     * in the corpus scores its OWN codes at exactly its `encode` error
     * sum. 100 TB: codes are m small ints per vector (the 4-byte→
     * sub-byte compression PQ exists for); the LUT frame is
-    * queries×(m×k) longs and broadcast. The codebook frame is
-    * persisted via the shared-plan registry (codes and LUT both
-    * consume it; one m×k-row frame per call — Bench/Verify drop it
-    * via [[releaseCentroids]]). */
+    * queries×(m×k) longs and broadcast. The codebook is a local
+    * relation both codes and LUT read; nothing is persisted. */
   def adcTopK(corpus: DataFrame, queries: DataFrame, dims: Int, m: Int,
               k: Int, iters: Int, topK: Int,
               idCol: String = "vec_id", vecCol: String = "embedding",

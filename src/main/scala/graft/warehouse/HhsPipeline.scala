@@ -55,23 +55,25 @@ object HhsPipeline {
     * DataFrames on first load). */
   def load(spark: SparkSession, csvPath: String,
            existingHospitals: DataFrame, existingBedInfo: DataFrame): Result = {
-    val cleaned = clean(readRaw(spark, csvPath))
-    val (valid, rejects) = Validation.split(cleaned, validationRules)
+    val (valid, rejects) = Validation.split(clean(readRaw(spark, csvPath)), validationRules)
+    val (hospitals, locations, bedInfo) = newRows(valid, existingHospitals, existingBedInfo)
+    Result(hospitals, locations, bedInfo, rejects.drop("__file_order"))
+  }
 
-    // Hospitals + Locations: key = hospital_pk, first occurrence in file
-    // wins (load_hhs.py:75,89), then drop keys already in the warehouse.
-    val firstPerHospital = Dedup.firstOccurrenceWins(valid, Seq("hospital_pk"), "__file_order")
+  /** (hospitals, locations, bed information) rows to append: first
+    * occurrence by `__file_order` wins per key, minus keys already in the
+    * warehouse. Keys: hospital_pk (load_hhs.py:75,89), (hospital_fk,
+    * collection_week) (load_hhs.py:103). */
+  def newRows(valid: DataFrame, existingHospitals: DataFrame,
+              existingBedInfo: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     val newHospitalRows = Dedup.antiJoinExisting(
-      firstPerHospital, existingHospitals, Seq("hospital_pk"))
-
+      Dedup.firstOccurrenceWins(valid, Seq("hospital_pk"), "__file_order"),
+      existingHospitals, Seq("hospital_pk"))
     val hospitals = newHospitalRows.select(col("hospital_pk"), col("hospital_name"))
     val locations = newHospitalRows.select(
       col("hospital_pk").as("hospital_fk"),
       col("state"), col("address"), col("city"), col("zip"),
       col("fips_code"), col("geocoded_hospital_address"))
-
-    // BedInformation: composite key (hospital_fk, collection_week)
-    // (load_hhs.py:103).
     val firstPerWeek = Dedup.firstOccurrenceWins(
       valid, Seq("hospital_pk", "collection_week"), "__file_order")
     val bedInfo = Dedup.antiJoinExisting(
@@ -79,19 +81,19 @@ object HhsPipeline {
         (col("hospital_pk").as("hospital_fk") +: col("collection_week") +:
           Schemas.hhsMetricColumns.map(col)).toIndexedSeq: _*),
       existingBedInfo, Seq("hospital_fk", "collection_week"))
-
-    Result(hospitals, locations, bedInfo, rejects.drop("__file_order"))
+    (hospitals, locations, bedInfo)
   }
 
-  /** Parquet sinks: bed info partitioned by collection_week so every
-    * date-filtered report gets partition pruning (SURVEY §4). Job-atomic
-    * per directory — the Spark analogue of the reference's whole-load
-    * transaction (load_hhs.py:148). */
   def write(r: Result, warehouseDir: String, rejectDir: String): Unit = {
-    r.hospitals.write.mode("append").parquet(s"$warehouseDir/hospitals")
-    r.locations.write.mode("append").parquet(s"$warehouseDir/hospital_locations")
-    r.bedInfo.write.mode("append").partitionBy("collection_week")
-      .parquet(s"$warehouseDir/hospital_bed_information")
-    r.rejects.write.mode("overwrite").option("header", "true").csv(s"$rejectDir/hhs")
+    append((r.hospitals, r.locations, r.bedInfo), warehouseDir)
+    Warehouse.writeRejects(r.rejects, rejectDir, "hhs")
+  }
+
+  /** Append [[newRows]]'s three frames, in that order. */
+  def append(rows: (DataFrame, DataFrame, DataFrame), warehouseDir: String): Unit = {
+    val (hospitals, locations, bedInfo) = rows
+    Warehouse.append(hospitals, warehouseDir, Warehouse.Hospitals)
+    Warehouse.append(locations, warehouseDir, Warehouse.Locations)
+    Warehouse.append(bedInfo, warehouseDir, Warehouse.BedInformation)
   }
 }

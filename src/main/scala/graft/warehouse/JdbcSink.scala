@@ -78,13 +78,13 @@ object JdbcSink {
   /** Write a full HHS load result to a JDBC warehouse — the straight
     * analogue of load_hhs.py's three INSERT loops in one call. */
   def writeHhs(r: HhsPipeline.Result, url: String, batchsize: Int = 1000): Unit = {
-    append(r.hospitals, url, "hospitals", batchsize)
-    append(r.locations, url, "hospital_locations", batchsize)
-    append(r.bedInfo, url, "hospital_bed_information", batchsize)
+    append(r.hospitals, url, Warehouse.Hospitals.name, batchsize)
+    append(r.locations, url, Warehouse.Locations.name, batchsize)
+    append(r.bedInfo, url, Warehouse.BedInformation.name, batchsize)
   }
 
   /** Quality-load analogue of load_quality.py:129-136. */
   def writeQuality(r: QualityPipeline.Result, url: String,
                    batchsize: Int = 1000): Unit =
-    append(r.quality, url, "hospital_quality_information", batchsize)
+    append(r.quality, url, Warehouse.QualityInformation.name, batchsize)
 }

@@ -67,8 +67,7 @@ object QualityPipeline {
   }
 
   def write(r: Result, warehouseDir: String, rejectDir: String): Unit = {
-    r.quality.write.mode("append").partitionBy("data_date")
-      .parquet(s"$warehouseDir/hospital_quality_information")
-    r.rejects.write.mode("overwrite").option("header", "true").csv(s"$rejectDir/quality")
+    Warehouse.append(r.quality, warehouseDir, Warehouse.QualityInformation)
+    Warehouse.writeRejects(r.rejects, rejectDir, "quality")
   }
 }

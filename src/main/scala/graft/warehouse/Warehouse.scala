@@ -1,0 +1,55 @@
+package graft.warehouse
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
+
+/** The on-disk warehouse: the reference's four tables
+  * (design_table_schema.ipynb cells 0-3) as parquet directories under one
+  * root, which may be a local path or any Hadoop-FS URI, plus the reject
+  * sink. Every reader and writer of a warehouse directory goes through
+  * here. */
+object Warehouse {
+
+  /** A table's directory, schema and partition column (date-filtered
+    * reports prune on it). */
+  final case class Table(name: String, schema: StructType, partitionBy: Option[String] = None)
+
+  val Hospitals: Table = Table("hospitals", Schemas.hospitals)
+  val Locations: Table = Table("hospital_locations", Schemas.hospitalLocations)
+  val BedInformation: Table = Table("hospital_bed_information",
+    Schemas.hospitalBedInformation, Some("collection_week"))
+  val QualityInformation: Table = Table("hospital_quality_information",
+    Schemas.hospitalQualityInformation, Some("data_date"))
+
+  def path(dir: String, table: Table): String = s"$dir/${table.name}"
+
+  /** The current table, or an empty frame with its schema on first load. */
+  def read(spark: SparkSession, dir: String, table: Table): DataFrame =
+    readOrEmpty(spark, path(dir, table), table.schema)
+
+  /** Job-atomic per directory — the Spark analogue of the reference's
+    * whole-load transaction (load_hhs.py:148). */
+  def append(df: DataFrame, dir: String, table: Table): Unit = {
+    val w = df.write.mode("append")
+    table.partitionBy.fold(w)(w.partitionBy(_)).parquet(path(dir, table))
+  }
+
+  /** `<rejectDir>/hhs` or `<rejectDir>/quality`. */
+  def rejectPath(rejectDir: String, source: String): String = s"$rejectDir/$source"
+
+  /** A load's rejects as header CSV, replacing the previous load's. */
+  def writeRejects(df: DataFrame, rejectDir: String, source: String): Unit =
+    df.write.mode("overwrite").option("header", "true")
+      .csv(rejectPath(rejectDir, source))
+
+  /** Parquet at `path`, or an empty frame with `schema` before the first
+    * write. Existence goes through Hadoop `FileSystem`, the path
+    * resolution Spark's reader and writer use, so URIs work. */
+  def readOrEmpty(spark: SparkSession, path: String, schema: StructType): DataFrame = {
+    val p = new Path(path)
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      spark.read.schema(schema).parquet(path)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+  }
+}

@@ -43,4 +43,21 @@ class CliSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("oops"))
   }
+
+  test("flags: Report's flag set goes through the same parser") {
+    assert(Cli.flags(Seq("--week", "2023-01-06", "--warehouse", "/w"), Report.flagNames) ==
+      Map("--week" -> "2023-01-06", "--warehouse" -> "/w"))
+    val unknown = intercept[RuntimeException] {
+      Cli.flags(Seq("--rejects", "/r"), Report.flagNames)
+    }
+    assert(unknown.getMessage.contains("--rejects"))
+    val missing = intercept[RuntimeException] {
+      Cli.flags(Seq("--data-date", "--ownership", "x"), Report.flagNames)
+    }
+    assert(missing.getMessage.contains("missing a value"))
+    val stray = intercept[RuntimeException] {
+      Cli.flags(Seq("--ownership", "Government", "oops"), Report.flagNames)
+    }
+    assert(stray.getMessage.contains("oops"))
+  }
 }

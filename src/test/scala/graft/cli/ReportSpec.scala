@@ -88,5 +88,11 @@ class ReportSpec extends SparkSpec {
       Report.render(spark, s"$dir/nowhere")
     }
     assert(e.getMessage.contains("load HHS data first"))
+    // a data date with no quality rows leaves the ownership default empty
+    loaded
+    val e2 = intercept[IllegalArgumentException] {
+      Report.render(spark, warehouseDir, dataDate = Some("1999-01-01"))
+    }
+    assert(e2.getMessage.contains("load quality data for that date first"))
   }
 }

@@ -138,5 +138,16 @@ class PipelineSpec extends SparkSpec {
     Cli.runHhs(spark, csv, wh, rej)
     assert(spark.read.parquet(s"$wh/hospitals").count() == 1)
     assert(spark.read.parquet(s"$wh/hospital_bed_information").count() == 1)
+
+    // the same workflow with the warehouse given as a URI: the second
+    // load must still find the tables it dedups against
+    val uriWh = "file://" + Paths.get(s"$dir/cli_warehouse_uri").toAbsolutePath
+    Cli.runHhs(spark, csv, uriWh, rej)
+    Cli.runQuality(spark, "2023-07-01", qcsv, uriWh, rej)
+    Cli.runHhs(spark, csv, uriWh, rej)
+    assert(spark.read.parquet(s"$uriWh/hospitals").count() == 1)
+    assert(spark.read.parquet(s"$uriWh/hospital_bed_information").count() == 1)
+    assert(graft.cli.Report.render(spark, uriWh)
+      .contains("Records loaded for week 2023-01-06"))
   }
 }

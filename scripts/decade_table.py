@@ -15,10 +15,12 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import exponents as ex
 
 
-# A line with more than this many failed queries is an ABORTED run
-# (SIGTERM cascade, dead session), not a measurement with a blemish;
-# Bench records a FAILING time when every pass of a query failed, and
-# those bogus times must never reach the totals.
+# With --allow-failed, a line with more than this many failed queries
+# is an ABORTED run (SIGTERM cascade, dead session), not a measurement
+# with a blemish. Lines at or under the cap are accepted with a warning
+# per failed query, and main() excludes those queries from the
+# common-set totals: their recorded time may be a failing-pass time.
+# Equal to graft.Bench.maxAcceptedFailures (BenchContractSpec).
 MAX_ACCEPTED_FAILURES = 3
 
 # The 11 deliberately-exhaustive audit/truth probes (the r11 list,
@@ -33,46 +35,17 @@ PROBES = {
 }
 
 
-def latest_allow_failed(basename):
-    """Like exponents.latest but accepts lines with
-    0 < n_failed <= MAX_ACCEPTED_FAILURES, WARNING loudly per failed
-    query. Fully-aborted lines (e.g. the recorded sf10 SIGTERM cascade
-    with n_failed 183) are skipped like subset lines. Needed to
-    reproduce the r11 sf10 table, whose line carries nn11's pass-2
-    environmental OOM (standalone re-run clean — see SCALE.md §round
-    11). The failed queries themselves are EXCLUDED from the
-    common-set totals by main(): their recorded time may be the min
-    over successful passes (fine) or a failing-pass time (bogus), and
-    the history line doesn't distinguish. Subset (`only`) and
-    corpus-dirty lines are still refused."""
-    import json
-    hit = None
-    for line in open(ex.HISTORY):
-        d = json.loads(line)
-        if os.path.basename(d.get("sf", "").rstrip("/")) != basename:
-            continue
-        if d.get("only") or d.get("concurrent"):
-            continue
-        if len(d.get("failed") or []) > MAX_ACCEPTED_FAILURES:
-            print(f"# skipping aborted line {d.get('ts')} "
-                  f"({len(d['failed'])} failures)", file=sys.stderr)
-            continue
-        hit = d
-    if hit is None:
-        sys.exit(f"no full-suite history entry with sf basename {basename!r}")
-    for q in hit.get("failed") or []:
-        print(f"# WARNING {basename} {hit['ts']}: {q} failed in >=1 pass; "
-              "excluded from the common-set totals", file=sys.stderr)
-    return hit
-
-
 def main():
     allow_failed = "--allow-failed" in sys.argv
     if allow_failed:
         sys.argv.remove("--allow-failed")
     names = sys.argv[1:4]
-    pick = latest_allow_failed if allow_failed else ex.latest
-    entries = [pick(bn) for bn in names]
+    cap = MAX_ACCEPTED_FAILURES if allow_failed else 0
+    entries = [ex.latest(bn, cap) for bn in names]
+    for bn, d in zip(names, entries):
+        for q in d.get("failed") or []:
+            print(f"# WARNING {bn} {d['ts']}: {q} failed in >=1 pass; "
+                  "excluded from the common-set totals", file=sys.stderr)
     for side, d in zip(names, entries):
         c = d.get("corpus") or {}
         if c.get("dirty"):

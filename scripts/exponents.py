@@ -23,36 +23,40 @@ HISTORY = os.path.join(os.path.dirname(os.path.abspath(__file__)),
 EPS = 1e-3  # clamp for log-ratio: floor-bound queries, zero-rounded times
 
 
-def latest(basename):
+def skip_reason(d, max_failed=0):
+    """Why history line `d` is not a decade measurement, or None if it
+    is one. The one eligibility rule for every table script."""
+    # Aborted/partial runs are recorded for the audit trail but are
+    # not measurements: a run with more than `max_failed` failures
+    # (e.g. the 2026-08-14 sf1 line where a harness SIGTERM stopped the
+    # SparkContext mid-pass and every later query failed fast) or a
+    # SPARK_GRAFT_ONLY subset would silently poison the exponent table.
+    # Concurrent-mode lines are a separate population: their value is
+    # batch wall-clock and per-query times are contended.
+    if (d.get("n_failed", 0) > max_failed or d.get("only")
+            or d.get("concurrent")):
+        return (f"n_failed={d.get('n_failed')} only={d.get('only')} "
+                f"concurrent={d.get('concurrent')}")
+    # Decade legs run at local[32] (pipeline convention); the sf0.1
+    # BAND runs at local[4] and also appends full-suite lines, so
+    # latest-wins would mix configs in one exponent row. Lines without
+    # "cpus" predate the key and stay eligible (those decade legs were
+    # all 32-cpu by the same convention).
+    if "cpus" in d and d["cpus"] != 32:
+        return f"cpus={d['cpus']} (decade legs are local[32])"
+    return None
+
+
+def latest(basename, max_failed=0):
+    """The latest eligible history line whose sf basename is `basename`."""
     hit = None
     for line in open(HISTORY):
         d = json.loads(line)
         if os.path.basename(d.get("sf", "").rstrip("/")) != basename:
             continue
-        # Aborted/partial runs are recorded for the audit trail but are
-        # not measurements: a run with failures (e.g. the 2026-08-14 sf1
-        # line where a harness SIGTERM stopped the SparkContext mid-pass
-        # and every later query failed fast) or a SPARK_GRAFT_BENCH_ONLY
-        # subset would silently poison the exponent table.
-        if d.get("n_failed", 0) > 0 or d.get("only") or d.get("concurrent"):
-            # concurrent-mode lines (r16) are a separate population:
-            # their value is batch wall-clock and per-query times are
-            # contended — never comparable with sequential totals.
-            print(f"# skipping {d.get('ts')} ({basename}): "
-                  f"n_failed={d.get('n_failed')} only={d.get('only')} "
-                  f"concurrent={d.get('concurrent')}",
-                  file=sys.stderr)
-            continue
-        # Decade legs run at local[32] (pipeline convention); the sf0.1
-        # BAND runs at local[4] and also appends full-suite lines, so
-        # latest-wins would mix configs in one exponent row (caught
-        # r16: a local[4] band line became the sf0.1 decade point
-        # against local[32] sf1/sf10). Lines carry "cpus" since r16;
-        # older lines lack it and stay eligible (pre-r16 decade legs
-        # were all 32-cpu by the same convention).
-        if "cpus" in d and d["cpus"] != 32:
-            print(f"# skipping {d.get('ts')} ({basename}): "
-                  f"cpus={d['cpus']} (decade legs are local[32])",
+        why = skip_reason(d, max_failed)
+        if why:
+            print(f"# skipping {d.get('ts')} ({basename}): {why}",
                   file=sys.stderr)
             continue
         hit = d

@@ -1,11 +1,14 @@
 #!/bin/bash
-# Run a graft main (Bench/Verify/ScaleUp/Prof) via plain java — avoids
-# the single sbt lock so tests and long benches can run concurrently.
+# Run a graft main (Bench/Verify/Prof/SkewProbe/StreamIngestBench/
+# ScaleUp/cli loaders) via plain java — avoids the single sbt lock so
+# tests and long benches can run concurrently.
 # Usage: scripts/run_main.sh graft.Bench [args...]
 # Every main runs at local[nproc] (graft.GraftSession). Env:
 # SPARK_DRIVER_MEM (default: scripts/host_heap.sh, half of MemTotal
-# clamped to 2-8 g), plus whatever the main reads (SPARK_GRAFT_SF_DIR,
-# _ITERS, ...; graft.Bench also SPARK_GRAFT_CPUS).
+# clamped to 2-8 g), plus whatever the main reads: the harness mains
+# share graft.Runner's SPARK_GRAFT_ITERS (min-of-N, default 2) and
+# SPARK_GRAFT_ONLY (query-name prefixes, Bench and Verify);
+# SPARK_GRAFT_SF_DIR for Bench/Prof; graft.Bench also SPARK_GRAFT_CPUS.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 CP="target/scala-2.13/classes:/opt/spark/jars/*"

@@ -8,10 +8,8 @@ import org.apache.spark.sql.SparkSession
   * counts by running the same build at two SPARK_GRAFT_CPUS values.
   *
   * Methodology:
-  *  - Results go to the `noop` sink, not `.count()` — count() lets
-  *    Catalyst prune projection expressions, so expression-heavy queries
-  *    (scoring, hashing, similarity) would report scan time instead of
-  *    compute time. noop materializes every output column.
+  *  - Results go to the `noop` sink ([[Runner.noop]]), which
+  *    materializes every output column.
   *  - A warmup pass at the SAME scale factor runs each query once so the
   *    timed numbers measure the engine, not Janino codegen + JIT
   *    compilation of each query's generated code (one-time costs that
@@ -23,7 +21,8 @@ import org.apache.spark.sql.SparkSession
   *    cells) register them with the CacheManager, and an identical
   *    logical plan in the timed pass would silently reuse them — the
   *    timed pass must recompute every stage.
-  *  - Queries run in sorted-name order for run-to-run comparability.
+  *  - Queries run in sorted-name order for run-to-run comparability;
+  *    SPARK_GRAFT_ONLY selects a subset ([[Runner.selected]]).
   *  - The timed pass runs SPARK_GRAFT_ITERS times (default 2) with the
   *    cache cleared between iterations, and each query reports its
   *    MINIMUM. Single-shot timings are hostage to one GC pause or a
@@ -85,17 +84,14 @@ object Bench {
     else if (cpuR <= 1.2) { if (spread >= 1.35) "fast" else "near-best-unconfirmed" }
     else "mid"
 
+  /** Exit nonzero past this many failed queries, so a cascade (every
+    * query failing after a SIGTERM) never reports success, while a rare
+    * transient does not abort a long decade pipeline. Mirrored by
+    * `scripts/decade_table.py::MAX_ACCEPTED_FAILURES` (BenchContractSpec). */
+  val maxAcceptedFailures = 3
+
   def calibrate(spark: SparkSession): (Double, Double) = {
     import org.apache.spark.sql.functions._
-    def timeMin(mk: => Unit): Double = {
-      var best = Double.MaxValue
-      for (_ <- 1 to 3) {
-        val t0 = System.nanoTime()
-        mk
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-      }
-      best
-    }
     def cpuJob(n: Long): Unit = spark.range(0, n, 1, 32)
       .select(sum(conv(substring(md5(col("id").cast("string")), 1, 15), 16, 10)
         .cast("decimal(38,0)")).as("s"))
@@ -105,7 +101,8 @@ object Bench {
       .agg(count(lit(1)).as("c"))
       .agg(sum(col("c")), count(lit(1))).head()
     cpuJob(1000000L); shuffleJob(1000000L) // codegen/JIT warmup, untimed
-    (timeMin(cpuJob(8000000L)), timeMin(shuffleJob(30000000L)))
+    (Runner.minOf(3)(())(cpuJob(8000000L))._1,
+      Runner.minOf(3)(())(shuffleJob(30000000L))._1)
   }
 
   def main(args: Array[String]): Unit = {
@@ -166,33 +163,13 @@ object Bench {
         val cpuWorst = priorWorst("cpu_s").fold(cpuS)(math.max(_, cpuS))
         val spread = cpuWorst / cpuBest
         val mode = Bench.calibMode(cpuR, spread, uncalibrated)
-        val line = f"""{"cpu_s":$cpuS%.3f,"shuffle_s":$shufS%.3f,"cpus":$cpus,"ts":"${java.time.Instant.now()}"}"""
-        try {
-          java.nio.file.Files.createDirectories(histPath.getParent)
-          java.nio.file.Files.writeString(histPath, line + "\n",
-            java.nio.file.StandardOpenOption.CREATE,
-            java.nio.file.StandardOpenOption.APPEND)
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] calib history append failed: ${e.getMessage}")
-        }
+        Runner.appendLine(histPath.toString,
+          f"""{"cpu_s":$cpuS%.3f,"shuffle_s":$shufS%.3f,"cpus":$cpus,"ts":"${java.time.Instant.now()}"}""")
         System.err.println(
           f"[bench] calib cpu=$cpuS%.2fs (${cpuR}%.2fx best) shuffle=$shufS%.2fs (${shufR}%.2fx best) mode=$mode")
-        f""","cpus":$cpus,"calib":{"cpu_s":$cpuS%.3f,"shuffle_s":$shufS%.3f,"cpu_vs_best":$cpuR%.2f,"shuffle_vs_best":$shufR%.2f,"mode":"$mode"}"""
+        f""","calib":{"cpu_s":$cpuS%.3f,"shuffle_s":$shufS%.3f,"cpu_vs_best":$cpuR%.2f,"shuffle_vs_best":$shufR%.2f,"mode":"$mode"}"""
       }
 
-    def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-            dir: String): Unit =
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
-
-    // SPARK_GRAFT_BENCH_ONLY=nn08,mm,ix01 → bench only matching-prefix
-    // queries (same convention as Verify's SPARK_GRAFT_ONLY). Driver
-    // leaves it unset and benches everything; subset runs are for
-    // targeted scale decades (e.g. heavy families at sf10, where a
-    // full 188-query pass would take hours). Budget checks are skipped
-    // for subset runs — a partially-selected family's subtotal would
-    // trip its band spuriously.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     // Corpus fingerprint (relative path + size of every file under
     // sfDir, sorted, md5'd): scale corpora are rebuilt artifacts shared
     // across rounds, and two history lines are only comparable if they
@@ -216,8 +193,7 @@ object Bench {
         files.size.toLong, files.map(_._2).sum)
     }
     val (corpusId, corpusFiles, corpusBytes) = corpusFingerprint(sfDir)
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
+    val queries = Runner.selected
       .filter { case (name, _) => !(skipProbes && probeQueries.contains(name)) }
     // Per-query progress lines to stderr in EVERY pass (incl. warmup):
     // a query that hangs or dies at a big SF must be identifiable from
@@ -248,19 +224,15 @@ object Bench {
     }
     if (warmup) {
       queries.foreach { case (name, fn) =>
-        val t0 = System.nanoTime()
-        val ok = try { run(fn, sfDir); true } catch {
-          case e: Throwable => logFailure("warmup", name, e); false
+        val (secs, ok) = Runner.timed {
+          try { Runner.noop(fn(spark, sfDir)); true } catch {
+            case e: Throwable => logFailure("warmup", name, e); false
+          }
         }
-        progress("warmup", name, (System.nanoTime() - t0) / 1e9, ok)
+        progress("warmup", name, secs, ok)
       }
-      spark.catalog.clearCache()
-      org.apache.spark.sql.graftbridge.GraftSqlBridge.releaseShared()
+      Runner.reset(spark)
     }
-    // a failing query must NOT vanish into a near-zero time: failures
-    // are counted and named in the JSON so the bench can't silently
-    // understate while masking breakage
-    val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "2").toInt.max(1)
     // PER-QUERY TASK/STAGE/JOB COUNTS: task counts are the parallelism
     // evidence wall-clock can't give at a scheduler-floor-bound sf — a
     // query whose stages carry N tasks at local[N] IS data-parallel and
@@ -287,6 +259,9 @@ object Bench {
     // (plans are deterministic per SF/cpus; AQE variation across passes
     // is noise-level, and any pass answers the serial-vs-floor question)
     val counts = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long, Long)]
+    // a failing query must NOT vanish into a near-zero time: failures
+    // are counted and named in the JSON so the bench can't silently
+    // understate while masking breakage
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     // name -> (exception class, stack-log path) of the FIRST failing
     // pass, for the history line
@@ -299,9 +274,8 @@ object Bench {
         : (String, (Double, Boolean)) = {
       org.apache.spark.sql.graftbridge.GraftSqlBridge.drainListenerBus(spark)
       val (tk0, st0, jb0) = (taskCounter.get(), stageCounter.get(), jobCounter.get())
-      val t0 = System.nanoTime()
-      val ok =
-        try { run(fn, sfDir); true }
+      val (secs, ok) = Runner.timed {
+        try { Runner.noop(fn(spark, sfDir)); true }
         catch { case e: Throwable =>
           val log = logFailure(s"pass$it", name, e)
           failed += name
@@ -311,7 +285,7 @@ object Bench {
             s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage} (stack: $log)")
           false
         }
-      val secs = (System.nanoTime() - t0) / 1e9
+      }
       if (ok) {
         org.apache.spark.sql.graftbridge.GraftSqlBridge.drainListenerBus(spark)
         counts(name) = (taskCounter.get() - tk0,
@@ -320,10 +294,9 @@ object Bench {
       progress(s"pass$it", name, secs, ok)
       name -> (secs, ok)
     }
-    val passes = (1 to iters).map { it =>
+    val passes = (1 to Runner.iters).map { it =>
       val pass = queries.map { case (name, fn) => timedOne(it, name, fn) }
-      spark.catalog.clearCache()
-      org.apache.spark.sql.graftbridge.GraftSqlBridge.releaseShared()
+      Runner.reset(spark)
       pass
     }
     // min across SUCCESSFUL iterations only: failures typically abort
@@ -358,10 +331,10 @@ object Bench {
     // ambient ±30% single-run variance), or when a family is new.
     // Budgets are recorded at one SF and only checked at that SF.
     val budgetsPath = java.nio.file.Paths.get("bench/family_budgets.tsv")
-    // skip-probes runs are partial within the nn/dd/fz/sd/bj/sm
-    // families — their subtotals would trip the bands spuriously, same
-    // rationale as the `only` exclusion above
-    if (only.isEmpty && !skipProbes && java.nio.file.Files.exists(budgetsPath)) {
+    // Subset runs (SPARK_GRAFT_ONLY, for targeted scale decades) and
+    // skip-probes runs are partial within their families, whose
+    // subtotals would trip the bands spuriously.
+    if (Runner.only.isEmpty && !skipProbes && java.nio.file.Files.exists(budgetsPath)) {
       val lines = scala.jdk.CollectionConverters
         .ListHasAsScala(java.nio.file.Files.readAllLines(budgetsPath)).asScala
       val budgetSf = lines.collectFirst {
@@ -412,12 +385,13 @@ object Bench {
       .mkString("{", ",", "}")
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val stamp = java.time.Instant.now().toString
-    // Subset runs (SPARK_GRAFT_BENCH_ONLY) are recorded WITH their
+    // Subset runs (SPARK_GRAFT_ONLY) are recorded WITH their
     // selector, so a partial total is explicit and filterable in
     // history.jsonl. "iters" records the min-of-N discipline the number
     // was taken under (single-pass and min-of-2 totals are not
-    // comparable on a bimodal host).
-    val onlyJson = only.map(_.map("\"" + _ + "\"").mkString(",\"only\":[", ",", "]")).getOrElse("")
+    // comparable on a bimodal host). "cpus" is on every line: lines
+    // from different local[N] configs are different populations.
+    val onlyJson = Runner.only.map(_.map("\"" + _ + "\"").mkString(",\"only\":[", ",", "]")).getOrElse("")
     // Read-only-corpus gate: the fingerprint recomputed AFTER the timed
     // passes must equal the start-of-run one — the sf corpora are shared
     // across rounds, and a query that writes through into the corpus dir
@@ -435,30 +409,16 @@ object Bench {
     val failedDetailJson = failedDetail.map { case (n, (cls, log)) =>
       s""""$n":{"class":"$cls","log":"$log"}""" }.mkString(",\"failed_detail\":{", ",", "}")
     val fullLine =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","ts":"$stamp","iters":$iters$onlyJson$splitJson$calibJson,"n_queries":${results.size},"n_failed":${failed.size},"failed":$failedJson$failedDetailJson,"families":$famJson,"queries":$all$countsFullJson$corpusJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","ts":"$stamp","iters":${Runner.iters}$onlyJson$splitJson,"cpus":$cpus$calibJson,"n_queries":${results.size},"n_failed":${failed.size},"failed":$failedJson$failedDetailJson,"families":$famJson,"queries":$all$countsFullJson$corpusJson,"sf":"$sfDir"}"""
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("target/bench_full.json"), fullLine)
-    try {
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get("bench"))
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("bench/history.jsonl"), fullLine + "\n",
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] history append failed: ${e.getMessage}")
-    }
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","iters":$iters$onlyJson$splitJson,"n_queries":${results.size},"n_failed":${failed.size},"failed":$failedJson,"queries":$top$tasksTopJson,"sf":"$sfDir"}""")
+    Runner.appendLine("bench/history.jsonl", fullLine)
+    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","iters":${Runner.iters}$onlyJson$splitJson,"n_queries":${results.size},"n_failed":${failed.size},"failed":$failedJson,"queries":$top$tasksTopJson,"sf":"$sfDir"}""")
     spark.stop()
     if (corpusDirty) sys.exit(1)
-    // Exit nonzero past a failure threshold, so a cascade (every query
-    // failing after a SIGTERM) never reports success. Threshold (not >0)
-    // matches decade_table.py's MAX_ACCEPTED_FAILURES=3 — rare 1-in-10
-    // codec transients shouldn't abort a 3 h decade pipeline, a
-    // cascade must.
-    val maxFailed = sys.env.getOrElse("SPARK_GRAFT_MAX_FAILED", "3").toInt
-    if (failed.size > maxFailed) {
+    if (failed.size > maxAcceptedFailures) {
       System.err.println(
-        s"[bench] ${failed.size} queries failed (> $maxFailed allowed) - exiting nonzero")
+        s"[bench] ${failed.size} queries failed (> $maxAcceptedFailures allowed) - exiting nonzero")
       sys.exit(2)
     }
   }

@@ -644,8 +644,7 @@ object Plans {
         nested.exists(physGlobal)
     }
     SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      spark.catalog.clearCache()
-      org.apache.spark.sql.graftbridge.GraftSqlBridge.releaseShared()
+      Runner.reset(spark)
       val hasGlobal =
         try {
           val opt = fn(spark, sfDir).queryExecution.optimizedPlan
@@ -686,8 +685,7 @@ object Plans {
       // measurement mode for seeding `shuffles` pins: print the shuffle
       // Exchange count of every registered query's formatted plan
       SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        spark.catalog.clearCache()
-        org.apache.spark.sql.graftbridge.GraftSqlBridge.releaseShared()
+        Runner.reset(spark)
         val n = try shuffleCount(fn(spark, sfDir).queryExecution
           .explainString(ExplainMode.fromString("formatted")))
         catch { case _: Throwable => -1 }

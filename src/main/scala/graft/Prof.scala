@@ -1,9 +1,8 @@
 package graft
-import org.apache.spark.sql.DataFrame
 
 /** Ad-hoc profiling harness at `local[nproc]`, against SPARK_GRAFT_SF_DIR.
   *  - `Prof <queryName> [n]` runs a registered query n times (noop sink,
-  *    cache cleared before each) and prints per-iteration seconds.
+  *    cache reset before each) and prints per-iteration seconds.
   *  - `Prof explain <name>` prints the formatted physical plan.
   *  - `Prof explainAll <outDir> <suffix> <name>...` writes one formatted
   *    plan per query to `<outDir>/<name><suffix>.txt` (the untracked
@@ -14,9 +13,6 @@ object Prof {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
-
-    def noop(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
 
     args.toList match {
       case "explain" :: name :: Nil =>
@@ -35,10 +31,9 @@ object Prof {
         val n = rest.headOption.map(_.toInt).getOrElse(3)
         val fn = SparkEntry.queries(name)
         (1 to n).foreach { i =>
-          spark.catalog.clearCache() // drop internal persists: recompute honestly
-          val t0 = System.nanoTime()
-          noop(fn(spark, sfDir))
-          println(f"[prof] $name iter $i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+          Runner.reset(spark)
+          val (secs, _) = Runner.timed(Runner.noop(fn(spark, sfDir)))
+          println(f"[prof] $name iter $i: $secs%.2f s")
         }
       case Nil => sys.error(
         "usage: Prof <queryName> [n] | explain <name> | explainAll <outDir> <suffix> <name>...")

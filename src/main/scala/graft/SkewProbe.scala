@@ -5,82 +5,71 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.text.{TextDedup, TextFunctions}
 
-/** SKEW PROBE (round 13, VERDICT #4; ingest section + exit criteria
-  * round 14; CI-grade small-fixture entry round 15): measures the
-  * dedup kernels on a DELIBERATELY skewed corpus — one document's
-  * text copied into `hotFrac` (default 20%) of the corpus, which
-  * concentrates one hot fingerprint (exact dedup), one hot segment
-  * set (segment dedup) and one hot LSH bucket PER BAND (MinHash star
-  * pairing) — and, since r14, one hot ingest key (a single user_id
-  * carrying 20% of the events table, full row width riding) for the
-  * `etl.Dedup` first/latest-wins kernels. The sk02/sk04 salting
-  * pattern covers aggregation skew; this probe targets the dedup
-  * family's former weak shape — rank/min WINDOWS partitioned by a
-  * content key, which put the whole hot group in one task that no AQE
-  * rule can split.
+/** Skew probe: measures the dedup, ANN and triangle kernels on a
+  * DELIBERATELY skewed corpus. One document's text is copied into
+  * `hotPct` (default 20%) of the corpus, which concentrates one hot
+  * fingerprint (exact dedup), one hot segment set (segment dedup) and
+  * one hot LSH bucket PER BAND (MinHash star pairing); one user_id
+  * carries `hotPct` of the events table, full row width riding, for
+  * the `etl.Dedup` first/latest-wins kernels. The sk02/sk04 salting
+  * pattern covers aggregation skew; this probe targets the shape that
+  * no AQE rule can split — a rank/min WINDOW partitioned by a content
+  * key, which puts the whole hot group in one task.
   *
-  * For each kernel it times the old WINDOW shape (reconstructed here,
-  * verbatim — provenance per section below) against the AGGREGATE
-  * shape now in [[TextDedup]] / [[graft.etl.Dedup]] (groupBy
-  * partial-agg, carrying the row in a min/max struct or joining
-  * back — map-side combine collapses the hot key per input partition;
-  * any residual join skew is AQE-splittable). Row counts are asserted
-  * equal, so the probe doubles as an equivalence check at probe scale
-  * (the real gates are d01/d02/d05/dd02/pd01's oracles and
+  * For each dedup kernel it times that WINDOW shape (reconstructed
+  * here verbatim; provenance per section below) against the AGGREGATE
+  * shape in [[TextDedup]] / [[graft.etl.Dedup]] (groupBy partial-agg,
+  * carrying the row in a min/max struct or joining back — map-side
+  * combine collapses the hot key per input partition; any residual
+  * join skew is AQE-splittable). Row counts must be equal, so the
+  * probe doubles as an equivalence check at probe scale (the real
+  * gates are d01/d02/d05/dd02/pd01's oracles and
   * TextDedupSpec/DedupSpec).
   *
-  * ANN side (VERDICT r12 #4 names "dd/nn"): the nn query kernels have
-  * no content-keyed shuffle or window AT ALL — `IvfIndex.topK` and
-  * `SimilaritySearch.lshTopK` broadcast the (small-by-contract) query
-  * side and stream the corpus scan straight into per-query `TopKAgg`
-  * heaps, so a hot cell/bucket cannot concentrate in one task; it can
-  * only grow the CANDIDATE count, work that lands evenly on whichever
-  * input partitions hold the hot vectors. Sections 4–5 measure that
-  * claim: a corpus with `hotFrac` of its embeddings collapsed into a
-  * tiny ball (one hot IVF cell; one hot LSH bucket per band) is timed
-  * against the uniform corpus, with the candidate counts printed
-  * beside the seconds — skew-immunity here means time tracks
-  * candidates (work-bound), not a task cliff. Salting is deliberately
-  * NOT applied: there is no per-key shuffle partition to salt.
+  * The nn kernels have no content-keyed shuffle or window at all:
+  * `IvfIndex.topK` and `SimilaritySearch.lshTopK` broadcast the
+  * (small-by-contract) query side and stream the corpus scan into
+  * per-query `TopKAgg` heaps, so a hot cell/bucket cannot concentrate
+  * in one task; it only grows the CANDIDATE count, on whichever input
+  * partitions hold the hot vectors. Sections 4–5 check that: a corpus
+  * with `hotPct` of its embeddings collapsed into a tiny ball (one hot
+  * IVF cell; one hot LSH bucket per band) is timed against the uniform
+  * corpus, candidate counts printed beside the seconds — time must
+  * track candidates (work-bound), not a task cliff. Salting is
+  * deliberately NOT applied: there is no per-key shuffle partition to
+  * salt. Section 6 applies the same criterion to the triangle wedge
+  * join with one hub node.
   *
-  * EXIT CRITERIA (r14, VERDICT #7; threshold configurable r15): the
-  * probe is pass/fail, not just a printout. It exits nonzero when
-  * (a) any aggregate shape runs >RATIO× its window shape — the agg
-  * rewrite's local-scale overhead band is +25–35% (NOTES_r13), so the
-  * default 2× means the rewrite regressed — or (b) any ANN kernel's
-  * hot/uniform time ratio exceeds RATIO× its hot/uniform candidate
-  * ratio — time no longer tracking work is the task-cliff signature.
-  * A future skew regression fails a script, not a judge.
+  * Exit criteria — the probe is pass/fail, not just a printout. It
+  * fails when (a) any aggregate shape runs >RATIO× its window shape
+  * (the rewrite's local-scale overhead is +25–35%, so the default 2×
+  * means the rewrite regressed), or (b) any ANN or triangle kernel's
+  * hot/uniform time ratio exceeds RATIO× its hot/uniform work ratio —
+  * time no longer tracking work is the task-cliff signature.
   *
-  * MEASUREMENT DISCIPLINE (ADVICE r14): both criteria gate on
-  * min-of-ITERS wall-clock against a fixed band, so the signal is
-  * noise-sensitive. Authoritative runs need a quiet host (no
-  * concurrent benches/tests) and ITERS>=2; on shared or CI hardware
-  * widen the band via SPARK_GRAFT_SKEW_RATIO (the `ratio` parameter)
-  * instead of accepting flaky failures — SkewProbeSpec runs this
-  * probe inside `sbt test` at sf0.001 with ratio=4 for exactly that
-  * reason (the shape equivalence asserts stay exact; only the timing
-  * band widens).
+  * Both criteria gate min-of-ITERS wall-clock against a fixed band, so
+  * they are noise-sensitive: authoritative runs need a quiet host and
+  * ITERS>=2; on shared or CI hardware widen the band with
+  * SPARK_GRAFT_SKEW_RATIO (the `ratio` parameter) rather than accept
+  * flaky failures. SkewProbeSpec runs this probe inside `sbt test` at
+  * sf0.001 with ratio=4 for that reason (the shape-equivalence
+  * requires stay exact; only the timing band widens).
   *
   * Usage: `runMain graft.SkewProbe [sfDir] [hotPct]` — prints one JSON
   * line per (kernel, shape) with min-of-SPARK_GRAFT_ITERS seconds,
   * then PASS/FAIL lines for the criteria above.
-  * Env: SPARK_GRAFT_ITERS (default 2), SPARK_GRAFT_SKEW_RATIO
-  * (default 2.0).
+  * Env: SPARK_GRAFT_ITERS (default 2, see [[Runner.iters]]),
+  * SPARK_GRAFT_SKEW_RATIO (default 2.0).
   */
 object SkewProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val hotPct = args.lift(1).map(_.toInt).getOrElse(20)
-    // .max(1) matches Bench's clamp: ITERS=0 would make every timed
-    // loop a no-op (rows=0, best=MaxValue) and the shape-equivalence
-    // requires would pass vacuously on 0==0 (ADVICE r15)
-    val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "2").toInt.max(1)
     val ratio = sys.env.getOrElse("SPARK_GRAFT_SKEW_RATIO", "2.0").toDouble
     val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
 
-    val failures = run(spark, sfDir, hotPct, iters, ratio)
+    val failures = run(spark, sfDir, hotPct, Runner.iters, ratio)
 
     spark.stop()
     if (failures.nonEmpty) {
@@ -91,18 +80,17 @@ object SkewProbe {
   }
 
   /** The whole probe as a callable: builds the skewed corpora under a
-    * temp dir (cleaned up on exit), times every (kernel, shape) pair,
+    * temp dir (deleted on exit), times every (kernel, shape) pair,
     * asserts shape equivalence (row counts MUST match — throws if
     * not), and returns the list of exit-criteria failures (empty =
-    * pass). `sbt test` runs this at sf0.001 / iters=1 / ratio=4 via
-    * SkewProbeSpec so a skew-shape regression fails CI (VERDICT r14
-    * #1–2); the main above runs it at sf0.1 / ratio=2 for
-    * authoritative quiet-host measurements. */
+    * pass). SkewProbeSpec runs it at sf0.001 / ratio=4 so a skew-shape
+    * regression fails CI; the main above runs it at sf0.1 / ratio=2
+    * for authoritative quiet-host measurements. */
   def run(spark: SparkSession, sfDir: String, hotPct: Int = 20,
           iters: Int = 2, ratio: Double = 2.0): Seq[String] = {
     // "half the queries are hot" (vec_id % 50 below) only holds for
     // hotPct in [1, 50] — beyond 50 both residue classes are hot and
-    // the mixed-stress labels lie (ADVICE r13)
+    // the mixed-stress labels lie
     require(hotPct >= 1 && hotPct <= 50,
       s"hotPct must be in [1, 50], got $hotPct")
     require(ratio >= 1.0, s"ratio must be >= 1, got $ratio")
@@ -128,14 +116,7 @@ object SkewProbe {
     val failures = scala.collection.mutable.ListBuffer.empty[String]
 
     def time(name: String, shape: String, detail: String = "")(mk: => DataFrame): Long = {
-      var best = Double.MaxValue
-      var rows = 0L
-      for (_ <- 1 to iters) {
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        rows = mk.count()
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-      }
+      val (best, rows) = Runner.minOf(iters)(Runner.reset(spark))(mk.count())
       secs((name, shape)) = best
       val d = if (detail.isEmpty) "" else s""","detail":"$detail""""
       println(f"""{"probe":"$name","shape":"$shape","sec":$best%.3f,"rows":$rows$d,"hotPct":$hotPct,"sf":"$sfDir"}""")
@@ -191,7 +172,7 @@ object SkewProbe {
     // ---- 1. exact dedup: hot fingerprint ----
     // Window shape = TextDedup.exactDedup verbatim as of commit
     // d094bb3 (the last pre-rewrite revision; replaced by the
-    // agg+semi-join shape in edbd999, r13).
+    // agg+semi-join shape in edbd999).
     val w1 = Window.partitionBy(TextFunctions.fingerprint(col("text")))
       .orderBy(col("doc_id"))
     val r1w = time("exact_dedup", "window") {
@@ -209,7 +190,7 @@ object SkewProbe {
     // builds internally (reconstructed: tokens → strided slices).
     // Window form = TextDedup.segmentDedup's rank stage verbatim as of
     // commit d094bb3 (the last pre-rewrite revision; replaced in
-    // edbd999, r13); the segmentation prefix mirrors the CURRENT
+    // edbd999); the segmentation prefix mirrors the CURRENT
     // library intermediate, so both shapes time the same input.
     def segs = corpus
       .select(col("doc_id"), TextFunctions.tokens(col("text")).as("__toks"))
@@ -233,7 +214,7 @@ object SkewProbe {
 
     // ---- 3. star pairing: hot bucket in every band ----
     // Window form = TextDedup.minHashCandidates' per-bucket min stage
-    // verbatim as of commit d094bb3 (pre-edbd999, r13: min(id) OVER
+    // verbatim as of commit d094bb3 (pre-edbd999: min(id) OVER
     // (PARTITION BY band) — replaced by groupBy min + equi-join back).
     val banded = TextDedup.withMinHashSig(corpus, k = 3, nHashes = 32)
       .withColumn("band", explode(array((0 until 8).map(bId =>
@@ -301,7 +282,7 @@ object SkewProbe {
       val hotShare = cellHist.getLong(0).toDouble / cellHist.getLong(1)
       val ivfCands = { // probed (query, cell) pairs × cell members, minus
         // self-matches (topK filters query_id =!= neighbor_id after the
-        // cell join) — the exact scored-row count (ADVICE r13)
+        // cell join) — the exact scored-row count
         val probed = graft.vector.IvfIndex.probedCells(idx, queries, nProbe = 4)
         probed.join(idx.cells.select(col("cell_id"), col("vec_id").as("neighbor_id")),
             Seq("cell_id"))
@@ -329,9 +310,9 @@ object SkewProbe {
       }
     }
 
-    // ---- 6. triangle wedge join: hot apex hub (VERDICT r16 #6) ----
+    // ---- 6. triangle wedge join: hot apex hub ----
     // tc01's wedge self-join + closing-edge probe are pinned
-    // SHUFFLE_HASH (r16): both sides edge-scale, hash-build per
+    // SHUFFLE_HASH: both sides edge-scale, hash-build per
     // partition. The pin is 100 TB-safe only if no apex key is
     // pathologically hot — degree-ordered orientation is the
     // STRUCTURAL guarantee (a hub's out-neighbors are only the few
@@ -362,8 +343,8 @@ object SkewProbe {
       val raw = spark.read.parquet(s"$skewDir/edges_$flavor.parquet")
       val canon = graft.graph.Triangles.canonical(raw, "a", "b")
       // wedge work Σ C(outdeg, 2), counted with the library's own
-      // orientation (ADVICE r13: the work number must be the kernel's
-      // truth, not a re-derivation)
+      // orientation (the work number must be the kernel's truth, not a
+      // re-derivation)
       val w = graft.graph.Triangles.orientedEdges(canon)
         .groupBy("src").agg(count(lit(1)).as("d"))
         .agg(sum(expr("d * (d - 1) div 2"))).head().getLong(0)
@@ -393,17 +374,6 @@ object SkewProbe {
     }
 
     failures.toSeq
-    } finally {
-      // probe corpora are throwaway — never leave temp parquet behind
-      // (same hygiene as the gn_edge fixture, ADVICE r13); the walk
-      // stream itself must close too, or every probe run — including
-      // each `sbt test` via SkewProbeSpec — leaks a directory handle
-      // (ADVICE r15)
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(skewPath)
-      val paths = try walk.iterator().asScala.toSeq.sortBy(-_.getNameCount)
-        finally walk.close()
-      paths.foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
+    } finally Runner.deleteTree(skewPath) // probe corpora are throwaway
   }
 }

@@ -1,12 +1,9 @@
 package graft
 
-/** Streaming-ingest throughput ladder (VERDICT r15 #7): batch ingest
-  * has a two-decade rows/sec ladder in bench/ingest_history.jsonl;
-  * the STREAMING ingest paths (`StreamingIngest.firstWinsIngestStream`
-  * / `latestWinsIngestStream`) have exact stream==batch parity specs
-  * but no recorded throughput. This measures the end-to-end
-  * micro-batch rate: the events table of each given sfDir is streamed
-  * file-by-file (`maxFilesPerTrigger=1`, so the run exercises the real
+/** Streaming-ingest throughput ladder: the end-to-end micro-batch
+  * rate of `StreamingIngest.firstWinsIngestStream` and
+  * `latestWinsIngestStream`. The events table of each given sfDir is
+  * streamed file-by-file (`maxFilesPerTrigger=1`, so the run exercises the real
   * multi-batch state-merge path, not one giant batch) through BOTH
   * kernels with `Trigger.AvailableNow`, and rows/sec = input rows /
   * wall-clock to stream completion.
@@ -24,7 +21,8 @@ package graft
   *
   * Usage: `runMain graft.StreamIngestBench [sfDir ...]` (default:
   * sf0.01 → sf0.1, one decade on input rows), at `local[nproc]`.
-  * Env: SPARK_GRAFT_ITERS (default 2, min-of-N per point).
+  * Env: SPARK_GRAFT_ITERS (default 2, min-of-N per point, see
+  * [[Runner.iters]]).
   */
 object StreamIngestBench {
   def main(args: Array[String]): Unit = {
@@ -34,17 +32,8 @@ object StreamIngestBench {
       java.nio.file.Paths.get(d)))
     require(missing.isEmpty, s"missing input dir(s): ${missing.mkString(", ")}")
     val cpus = Runtime.getRuntime.availableProcessors()
-    val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "2").toInt.max(1)
     val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
-
-    def wipe(p: java.nio.file.Path): Unit = if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      val w = java.nio.file.Files.walk(p)
-      val paths = try w.iterator().asScala.toSeq.sortBy(-_.getNameCount)
-        finally w.close()
-      paths.foreach(java.nio.file.Files.deleteIfExists(_))
-    }
 
     val points = dirs.map { sfDir =>
       // stage the events table into an 8-file directory OUTSIDE the
@@ -55,38 +44,36 @@ object StreamIngestBench {
       // maxFilesPerTrigger=1 → 8 real micro-batches per run.
       val work = java.nio.file.Paths.get("target/stream_ingest_bench")
       val stage = work.resolve("src").toString
-      wipe(work)
+      Runner.deleteTree(work)
       Tables.events(spark, sfDir).repartition(8)
         .write.mode("overwrite").parquet(stage)
       val schema = spark.read.parquet(stage).schema
       val inputRows = spark.read.parquet(stage).count()
 
+      val stream = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(stage)
+
+      // out_rows counts the last run's output
       def timeKernel(kernel: String): (Double, Long) = {
-        var best = Double.MaxValue
-        var outRows = 0L
-        for (_ <- 1 to iters) {
-          wipe(work.resolve(kernel))
-          wipe(work.resolve("_checkpoints"))
-          val out = work.resolve(kernel).toString
-          val stream = spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(stage)
-          val t0 = System.nanoTime()
-          val q = kernel match {
+        val out = work.resolve(kernel)
+        val (best, _) = Runner.minOf(Runner.iters) {
+          Runner.deleteTree(out)
+          Runner.deleteTree(work.resolve("_checkpoints"))
+        } {
+          (kernel match {
             case "first_wins" =>
               graft.streaming.StreamingIngest.firstWinsIngestStream(
-                stream, Seq("user_id"), "event_id", out)
+                stream, Seq("user_id"), "event_id", out.toString)
             case "latest_wins" =>
               graft.streaming.StreamingIngest.latestWinsIngestStream(
-                stream, Seq("user_id"), "ts", "event_id", out)
-          }
-          q.awaitTermination()
-          best = math.min(best, (System.nanoTime() - t0) / 1e9)
-          outRows = kernel match {
-            case "first_wins" => spark.read.parquet(out).count()
-            case "latest_wins" =>
-              graft.streaming.StreamingIngest.currentAggState(spark, out)
-                .map(_.count()).getOrElse(0L)
-          }
+                stream, Seq("user_id"), "ts", "event_id", out.toString)
+          }).awaitTermination()
+        }
+        val outRows = kernel match {
+          case "first_wins" => spark.read.parquet(out.toString).count()
+          case "latest_wins" =>
+            graft.streaming.StreamingIngest.currentAggState(spark, out.toString)
+              .map(_.count()).getOrElse(0L)
         }
         (best, outRows)
       }
@@ -96,20 +83,12 @@ object StreamIngestBench {
         // cpus in the line: rows/s from different local[N] configs are
         // different populations (the calib-stamp lesson) — a reader
         // comparing ladder points must be able to see the config.
-        val line = f"""{"metric":"stream_ingest_rows_per_sec","kernel":"$kernel","value":${inputRows / secs}%.0f,"input_rows":$inputRows,"out_rows":$outRows,"sec":$secs%.2f,"iters":$iters,"cpus":$cpus,"ts":"${java.time.Instant.now()}","src":"$sfDir"}"""
+        val line = f"""{"metric":"stream_ingest_rows_per_sec","kernel":"$kernel","value":${inputRows / secs}%.0f,"input_rows":$inputRows,"out_rows":$outRows,"sec":$secs%.2f,"iters":${Runner.iters},"cpus":$cpus,"ts":"${java.time.Instant.now()}","src":"$sfDir"}"""
         println(line)
-        try {
-          java.nio.file.Files.createDirectories(java.nio.file.Paths.get("bench"))
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get("bench/ingest_history.jsonl"), line + "\n",
-            java.nio.file.StandardOpenOption.CREATE,
-            java.nio.file.StandardOpenOption.APPEND)
-        } catch { case e: Throwable =>
-          System.err.println(s"[stream-bench] history append failed: ${e.getMessage}")
-        }
+        Runner.appendLine("bench/ingest_history.jsonl", line)
         kernel -> secs
       }
-      wipe(work)
+      Runner.deleteTree(work)
       (sfDir, inputRows, results.toMap)
     }
     // decade exponents between consecutive points, per kernel

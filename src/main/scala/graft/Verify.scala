@@ -15,13 +15,9 @@ object Verify {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
-    // SPARK_GRAFT_ONLY=tx01,tx02 → dump only matching-prefix queries
-    // (iteration aid; driver leaves it unset and dumps everything)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val selected = SparkEntry.queries.toSeq.filter { case (name, _) =>
-      only.forall(_.exists(name.startsWith)) }
-    val futures = selected.map { case (name, fn) =>
+    // SPARK_GRAFT_ONLY=tx01,tx02 dumps a subset (iteration aid; unset
+    // dumps every query)
+    val futures = Runner.selected.map { case (name, fn) =>
       scala.concurrent.Future {
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
@@ -34,7 +30,7 @@ object Verify {
       scala.concurrent.Future.sequence(futures),
       scala.concurrent.duration.Duration.Inf)
     pool.shutdown()
-    org.apache.spark.sql.graftbridge.GraftSqlBridge.releaseShared()
+    Runner.reset(spark)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

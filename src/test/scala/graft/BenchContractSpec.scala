@@ -41,5 +41,8 @@ class BenchContractSpec extends AnyFunSuite {
     assert(py == Bench.probeQueries,
       s"probe lists drifted: python-only=${py.diff(Bench.probeQueries)} " +
         s"scala-only=${Bench.probeQueries.diff(py)}")
+    val pyMaxFailed = "MAX_ACCEPTED_FAILURES = (\\d+)".r.findFirstMatchIn(src).map(_.group(1).toInt)
+    assert(pyMaxFailed.contains(Bench.maxAcceptedFailures),
+      s"failure caps drifted: python=$pyMaxFailed scala=${Bench.maxAcceptedFailures}")
   }
 }

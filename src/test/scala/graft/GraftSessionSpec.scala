@@ -1,9 +1,8 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.Paths
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import scala.jdk.CollectionConverters._
 
 class GraftSessionSpec extends SparkSpec {
 
@@ -48,14 +47,11 @@ class GraftSessionSpec extends SparkSpec {
       """spark\.sql\.session\.timeZone|spark\.sql\.legacy\.parquet\.nanosAsLong|""" +
       """spark\.sql\.shuffle\.partitions)"""").r
     val allowed = Map("GraftSession.scala" -> Int.MaxValue, "Cli.scala" -> 1)
-    val walk = Files.walk(Paths.get("src/main/scala"))
-    val mains = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
-    val offenders = (Paths.get("src/test/scala/graft/SparkSpec.scala") :: mains)
-      .flatMap { (p: Path) =>
-        val n = setting.findAllIn(Files.readString(p)).size
-        if (n > allowed.getOrElse(p.getFileName.toString, 0)) Some(s"$p ($n)") else None
-      }
+    val mains = SourceScan.mainSources
+    val offenders = SourceScan.overLimit(setting,
+      Paths.get("src/test/scala/graft/SparkSpec.scala") :: mains) { p =>
+      allowed.getOrElse(p.getFileName.toString, 0)
+    }
     assert(mains.exists(_.endsWith("GraftSession.scala")), "scan found no sources")
     assert(offenders.isEmpty,
       s"session settings outside GraftSession: ${offenders.mkString(", ")}")

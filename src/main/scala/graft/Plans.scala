@@ -595,7 +595,7 @@ object Plans {
     * unpartitioned Window (WindowExec's "Moving all data to a single
     * partition" warning). Every entry is a window over a frame that is
     * SMALL BY CONSTRUCTION — post-aggregation (weekly/vocab-sized) or
-    * post-limit (k-row codebook init) — each audited as harmless.
+    * a fixed bucket-count frame — each audited as harmless.
     * The warning noise itself can't be silenced without changing query
     * semantics (a synthetic partition key would still move all rows to
     * one partition, just quietly), so the STRUCTURAL guard is this pin:
@@ -604,9 +604,6 @@ object Plans {
     * anywhere in the registry — a real one can no longer hide in the
     * audited noise. */
   val auditedUnpartitionedWindows: Set[String] = Set(
-    // (km01/nn08–nn12/vq02 are absent: their k-row codebook init
-    // windows execute inside the driver-paced Lloyd collect jobs at
-    // build time and never appear in the final plans)
     "cb01_token_budget",       // cumulative tokens over the 21-bucket quality frame
     "gn01_gini_concentration", // cumulative share over the vocab-sized agg
     "sh01_global_shuffle",     // bucket-offset prefix sum over the 256-row

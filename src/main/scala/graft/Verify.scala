@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -7,18 +8,28 @@ object Verify {
     val Array(sfDir, outDir) = args
     val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    // Queries dump in parallel (Spark schedules concurrent jobs fine;
-    // temp-view names are disjoint per query, so catalog writes don't
-    // race). Default 4 threads ~3x wall-clock on the 80-query suite.
-    val par = sys.env.getOrElse("SPARK_GRAFT_VERIFY_PAR", "4").toInt
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
     // SPARK_GRAFT_ONLY=tx01,tx02 dumps a subset (iteration aid; unset
     // dumps every query)
-    val futures = Runner.selected.map { case (name, fn) =>
+    dump(spark, sfDir, outDir, Runner.selected)
+    spark.stop()
+  }
+
+  /** Writes each query's result to `$outDir/<name>` and the oracles of
+    * exactly these queries to `$outDir/oracle_sql.json`. A query that
+    * throws is reported on stderr and leaves no `$outDir/<name>`, so a
+    * dump from an earlier run can never be compared in its place.
+    * Queries dump on 4 threads (Spark schedules concurrent jobs fine;
+    * temp-view names are disjoint per query, so catalog writes don't
+    * race). */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+           queries: Seq[(String, (SparkSession, String) => DataFrame)]): Unit = {
+    Files.createDirectories(Paths.get(outDir))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutor(pool)
+    val futures = queries.map { case (name, fn) =>
       scala.concurrent.Future {
+        Runner.deleteTree(Paths.get(s"$outDir/$name"))
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         catch { case e: Throwable =>
@@ -26,10 +37,10 @@ object Verify {
         }
       }
     }
-    scala.concurrent.Await.result(
+    try scala.concurrent.Await.result(
       scala.concurrent.Future.sequence(futures),
       scala.concurrent.duration.Duration.Inf)
-    pool.shutdown()
+    finally pool.shutdown()
     Runner.reset(spark)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -43,9 +54,9 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val names = queries.map(_._1).toSet
+    val json = SparkEntry.oracleSql.filter { case (k, _) => names(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

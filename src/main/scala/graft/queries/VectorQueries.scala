@@ -394,9 +394,9 @@ object VectorQueries {
     * is the k lowest-id vectors, argmin ties break by cell id, and
     * centroid updates are exact floor-division means — so the FULL
     * per-vector assignment (all 500 rows, with distances) is a total
-    * deterministic function of the input that DuckDB replays by
-    * unrolling the same 3 iterations as chained CTEs (the bt01/pr01
-    * pattern). `IvfIndex.build` wraps Spark ML KMeans (float, seeded,
+    * deterministic function of the input that DuckDB replays with the
+    * shared Lloyd replay [[pqChain]] at m = 1 (3 rounds unrolled as
+    * chained CTEs). `IvfIndex.build` wraps Spark ML KMeans (float, seeded,
     * order-sensitive reductions — unverifiable cross-engine); km01 is
     * the variant that PROVES the distributed assign/update math.
     *
@@ -407,39 +407,8 @@ object VectorQueries {
   val km01KMeans = QueryDef("km01_kmeans",
     (s, d) => graft.vector.QuantizedKMeans.run(
       Tables.embeddings(s, d), k = 8, iters = 3).orderBy("vec_id"),
-    Some {
-      val iter = (i: Int) =>
-        s"""a$i AS (SELECT vec_id, v, cell_id FROM (
-           |    SELECT vec_id, v, cell_id,
-           |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell_id) AS rk
-           |    FROM (SELECT q.vec_id, q.v, c.cell_id,
-           |        CAST(list_sum(list_transform(range(1, len(q.v) + 1),
-           |          j -> (q.v[j] - c.c[j]) * (q.v[j] - c.c[j]))) AS BIGINT) AS d2
-           |      FROM q CROSS JOIN c${i - 1} c) z) y
-           |  WHERE rk = 1),
-           |s$i AS (SELECT cell_id, i, CAST(SUM(v[i]) AS BIGINT) AS s, COUNT(*) AS n
-           |  FROM (SELECT cell_id, v, unnest(range(1, len(v) + 1)) AS i FROM a$i) z
-           |  GROUP BY cell_id, i),
-           |c$i AS (SELECT cell_id,
-           |    list((s - (((s % n) + n) % n)) // n ORDER BY i) AS c
-           |  FROM s$i GROUP BY cell_id)""".stripMargin
-      s"""WITH q AS (SELECT vec_id,
-         |    list_transform(embedding,
-         |      x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS v
-         |  FROM embeddings),
-         |c0 AS (SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS BIGINT)
-         |      AS cell_id, v AS c
-         |  FROM (SELECT * FROM q ORDER BY vec_id LIMIT 8)),
-         |${(1 to 3).map(iter).mkString(",\n")}
-         |SELECT vec_id, cell_id, d2 FROM (
-         |  SELECT vec_id, cell_id, d2,
-         |    ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell_id) AS rk
-         |  FROM (SELECT q.vec_id, c.cell_id,
-         |      CAST(list_sum(list_transform(range(1, len(q.v) + 1),
-         |        j -> (q.v[j] - c.c[j]) * (q.v[j] - c.c[j]))) AS BIGINT) AS d2
-         |    FROM q CROSS JOIN c3 c) z) y
-         |WHERE rk = 1 ORDER BY vec_id""".stripMargin
-    })
+    Some(s"""WITH ${pqChain(0, m = 1, k = 8, iters = 3)}
+            |SELECT vec_id, cell_id, d2 FROM f0 ORDER BY vec_id""".stripMargin))
 
   /** PRODUCT QUANTIZATION (the FAISS IVF-PQ compression step; see
     * graft.vector.ProductQuantizer): 64 dims → 4 subspaces × 4-entry
@@ -448,14 +417,13 @@ object VectorQueries {
     * error term is integer-exact and deterministic. Output: per vector
     * its 4 code ids + the exact total squared quantization error (the
     * decomposed per-subspace argmin distances summed). The oracle
-    * replays all 4 independent subspace chains (slice → quantize →
-    * init → 2 updates → final argmin) as chained CTEs and joins them —
-    * the km01 replay, ×4.
+    * replays all 4 subspace chains (slice → quantize → init →
+    * 2 updates → final argmin, [[pqChain]]) and joins them.
     *
-    * 100 TB: subspaces are independent branches of one plan, each with
-    * km01's shapes (broadcast codebooks, row-local argmin,
-    * (cell,dim)-keyed updates); production trains on a capped sample
-    * and runs one full-corpus encode pass. */
+    * 100 TB: all 4 subspaces train and encode in one long-format pass
+    * keyed by sub_id (broadcast codebooks, row-local argmin,
+    * (sub, cell, dim)-keyed updates); production trains on a capped
+    * sample and runs one full-corpus encode pass. */
   val vq02ProductQuant = QueryDef("vq02_product_quant",
     (s, d) => {
       val long = graft.vector.ProductQuantizer.encode(
@@ -469,7 +437,7 @@ object VectorQueries {
         .orderBy("vec_id")
     },
     Some(
-      s"""WITH ${(0 until 4).map(pqSubChain).mkString(",\n")}
+      s"""WITH ${(0 until 4).map(pqChain(_, m = 4, k = 4, iters = 2)).mkString(",\n")}
          |SELECT vec_id, f0.cell_id AS c0, f1.cell_id AS c1,
          |  f2.cell_id AS c2, f3.cell_id AS c3,
          |  f0.d2 + f1.d2 + f2.d2 + f3.d2 AS err
@@ -506,16 +474,8 @@ object VectorQueries {
     * summed adist → ranked cut). trainMod = 1 reproduces nn08's text
     * exactly; trainMod > 1 is the sampled-training twin (nn12). */
   private def adcTopKOracle(trainMod: Long): String = {
-    val luts = (0 until 4).map { s =>
-      s"""l$s AS (SELECT q.vec_id AS q_id, c.cell_id,
-         |    CAST(list_sum(list_transform(range(1, len(q.v) + 1),
-         |      j -> (q.v[j] - c.c[j]) * (q.v[j] - c.c[j]))) AS BIGINT) AS d2
-         |  FROM q$s q CROSS JOIN c${s}_2 c WHERE q.vec_id % 100 = 0),
-         |j$s AS (SELECT l.q_id, f.vec_id, l.d2
-         |  FROM f$s f JOIN l$s l ON f.cell_id = l.cell_id)""".stripMargin
-    }
     s"""WITH ${(0 until 4).map(pqChain(_, m = 4, k = 4, iters = 2, trainMod)).mkString(",\n")},
-       |${luts.mkString(",\n")},
+       |${adcLuts(m = 4, iters = 2)},
        |u AS (SELECT * FROM j0 UNION ALL SELECT * FROM j1
        |      UNION ALL SELECT * FROM j2 UNION ALL SELECT * FROM j3),
        |a AS (SELECT q_id, vec_id, CAST(SUM(d2) AS BIGINT) AS adist
@@ -596,16 +556,8 @@ object VectorQueries {
         .orderBy("q_id")
     },
     Some {
-      val luts = (0 until 4).map { s =>
-        s"""l$s AS (SELECT q.vec_id AS q_id, c.cell_id,
-           |    CAST(list_sum(list_transform(range(1, len(q.v) + 1),
-           |      j -> (q.v[j] - c.c[j]) * (q.v[j] - c.c[j]))) AS BIGINT) AS d2
-           |  FROM q$s q CROSS JOIN c${s}_2 c WHERE q.vec_id % 100 = 0),
-           |j$s AS (SELECT l.q_id, f.vec_id, l.d2
-           |  FROM f$s f JOIN l$s l ON f.cell_id = l.cell_id)""".stripMargin
-      }
-      s"""WITH ${(0 until 4).map(pqSubChain).mkString(",\n")},
-         |${luts.mkString(",\n")},
+      s"""WITH ${(0 until 4).map(pqChain(_, m = 4, k = 4, iters = 2)).mkString(",\n")},
+         |${adcLuts(m = 4, iters = 2)},
          |u AS (SELECT * FROM j0 UNION ALL SELECT * FROM j1
          |      UNION ALL SELECT * FROM j2 UNION ALL SELECT * FROM j3),
          |adc_all AS (SELECT q_id, vec_id, CAST(SUM(d2) AS BIGINT) AS adist
@@ -680,51 +632,21 @@ object VectorQueries {
       val dist = (a: String, b: String) =>
         s"""CAST(list_sum(list_transform(range(1, len($a) + 1),
            |        j -> ($a[j] - $b[j]) * ($a[j] - $b[j]))) AS BIGINT)""".stripMargin
-      val its = (1 to 2).map { i =>
-        s"""a_$i AS (SELECT vec_id, v, cell_id FROM (
-           |    SELECT vec_id, v, cell_id,
-           |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell_id) AS rk
-           |    FROM (SELECT q.vec_id, q.v, c.cell_id,
-           |        ${dist("q.v", "c.c")} AS d2
-           |      FROM qf q CROSS JOIN c_${i - 1} c) z) y
-           |  WHERE rk = 1),
-           |s_$i AS (SELECT cell_id, i, CAST(SUM(v[i]) AS BIGINT) AS sm,
-           |    COUNT(*) AS n
-           |  FROM (SELECT cell_id, v, unnest(range(1, len(v) + 1)) AS i
-           |        FROM a_$i) z
-           |  GROUP BY cell_id, i),
-           |c_$i AS (SELECT cell_id,
-           |    list((sm - (((sm % n) + n) % n)) // n ORDER BY i) AS c
-           |  FROM s_$i GROUP BY cell_id)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH qf AS MATERIALIZED (SELECT vec_id,
-         |    list_transform(embedding,
-         |      x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS v
-         |  FROM embeddings),
-         |c_0 AS (SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1
-         |      AS BIGINT) AS cell_id, v AS c
-         |  FROM (SELECT * FROM qf ORDER BY vec_id LIMIT 16)),
-         |$its,
-         |cells AS MATERIALIZED (SELECT vec_id, cell_id FROM (
-         |  SELECT vec_id, cell_id,
-         |    ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell_id) AS rk
-         |  FROM (SELECT q.vec_id, c.cell_id, ${dist("q.v", "c.c")} AS d2
-         |    FROM qf q CROSS JOIN c_2 c) z) y
-         |  WHERE rk = 1),
+      s"""WITH ${pqChain(0, m = 1, k = 16, iters = 2)},
          |probes AS (SELECT q_id, cell_id FROM (
          |  SELECT q_id, cell_id,
          |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY d2, cell_id) AS rk
          |  FROM (SELECT q.vec_id AS q_id, c.cell_id, ${dist("q.v", "c.c")} AS d2
-         |    FROM qf q CROSS JOIN c_2 c WHERE q.vec_id % 100 = 0) z) y
+         |    FROM q0 q CROSS JOIN c0_2 c WHERE q.vec_id % 100 = 0) z) y
          |  WHERE rk <= 4),
          |cand AS (SELECT p.q_id, s.vec_id FROM probes p
-         |  JOIN cells s ON p.cell_id = s.cell_id)
+         |  JOIN f0 s ON p.cell_id = s.cell_id)
          |SELECT q_id, vec_id, d2, rank FROM (
          |  SELECT q_id, vec_id, d2,
          |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY d2, vec_id) AS rank
          |  FROM (SELECT c.q_id, c.vec_id, ${dist("a.v", "b.v")} AS d2
-         |    FROM cand c JOIN qf a ON a.vec_id = c.q_id
-         |    JOIN qf b ON b.vec_id = c.vec_id) z) y
+         |    FROM cand c JOIN q0 a ON a.vec_id = c.q_id
+         |    JOIN q0 b ON b.vec_id = c.vec_id) z) y
          |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin
     })
 
@@ -807,18 +729,10 @@ object VectorQueries {
     },
     Some {
       val m = 8
-      val luts = (0 until m).map { s =>
-        s"""l$s AS (SELECT q.vec_id AS q_id, c.cell_id,
-           |    CAST(list_sum(list_transform(range(1, len(q.v) + 1),
-           |      j -> (q.v[j] - c.c[j]) * (q.v[j] - c.c[j]))) AS BIGINT) AS d2
-           |  FROM q$s q CROSS JOIN c${s}_1 c WHERE q.vec_id % 100 = 0),
-           |j$s AS (SELECT l.q_id, f.vec_id, l.d2
-           |  FROM f$s f JOIN l$s l ON f.cell_id = l.cell_id)""".stripMargin
-      }
       val unions = (0 until m).map(s => s"SELECT * FROM j$s")
         .mkString(" UNION ALL ")
       s"""WITH ${(0 until m).map(pqChain(_, m = m, k = 64, iters = 1)).mkString(",\n")},
-         |${luts.mkString(",\n")},
+         |${adcLuts(m, iters = 1)},
          |u AS ($unions),
          |adc_all AS (SELECT q_id, vec_id, CAST(SUM(d2) AS BIGINT) AS adist
          |      FROM u GROUP BY q_id, vec_id),
@@ -857,31 +771,26 @@ object VectorQueries {
          |GROUP BY ex.q_id ORDER BY ex.q_id""".stripMargin
     })
 
-  /** Shared oracle CTE chain for vq02/nn08/nn11: subspace `s`'s
-    * slice → quantize → lowest-id init → `iters` Lloyd updates → final
-    * argmin assignment (`f$s`). Parameterized over (m, k, iters) so the
-    * toy (m=4, k=4) and production-shaped (m=8, k=64) replays share one
-    * generator. AS MATERIALIZED on the multi-referenced frames (the
-    * bt01 lesson — DuckDB 1.0 inlines CTE references). */
-  private def pqSubChain(s: Int): String = pqChain(s, m = 4, k = 4, iters = 2)
-
-  /** One subspace's full PQ replay as chained CTEs. `trainMod > 1`
-    * replays the DETERMINISTIC sampled-training recipe (init and Lloyd
-    * rounds see only vec_id ≡ 0 mod trainMod; the final encode argmin
-    * still covers every vector) — the SQL twin of
-    * [[graft.vector.ProductQuantizer]]'s trainMod parameter. At
-    * trainMod = 1 the emitted text is byte-identical to the unsampled
-    * chain, so the vq02/nn08/nn09/nn11 oracles are untouched. */
+  /** The one SQL Lloyd replay, shared by every k-means/PQ oracle
+    * (km01, vq02, nn08–nn12): subspace `s` of `m` — the whole vector
+    * when m = 1 — quantized (`q$s`), its k lowest-id vectors as cells
+    * 0..k−1 (`c${s}_0`), `iters` Lloyd updates (`c${s}_$i`) and the
+    * final argmin assignment (vec_id, cell_id, d2) (`f$s`). AS
+    * MATERIALIZED on the multi-referenced frames (DuckDB inlines CTE
+    * references otherwise). `trainMod > 1` replays the deterministic
+    * sampled-training recipe (init and Lloyd rounds see only
+    * vec_id ≡ 0 mod trainMod; the final argmin still covers every
+    * vector) — the SQL twin of [[graft.vector.ProductQuantizer]]'s
+    * trainMod parameter. */
   private def pqChain(s: Int, m: Int, k: Int, iters: Int,
                       trainMod: Long = 1): String = {
     val len = 64 / m
-    val lo = s * len + 1
-    val hi = (s + 1) * len
+    val vec = if (m == 1) "embedding" else s"embedding[${s * len + 1}:${(s + 1) * len}]"
     val trainWhere = if (trainMod > 1) s"WHERE vec_id % $trainMod = 0 " else ""
     val trainAnd = if (trainMod > 1) s" WHERE q.vec_id % $trainMod = 0" else ""
     val base =
       s"""q$s AS MATERIALIZED (SELECT vec_id,
-         |    list_transform(embedding[$lo:$hi],
+         |    list_transform($vec,
          |      x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS v
          |  FROM embeddings),
          |c${s}_0 AS (SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1
@@ -916,6 +825,19 @@ object VectorQueries {
          |  WHERE rk = 1)""".stripMargin
     s"$base\n$its\n$fin"
   }
+
+  /** The ADC replay over [[pqChain]]'s `m` subspaces: per subspace
+    * the query-side lookup table `l$s` (queries = every 100th vector,
+    * against the codebook after `iters` rounds) and its code-indexed
+    * join `j$s` (q_id, vec_id, d2). */
+  private def adcLuts(m: Int, iters: Int): String = (0 until m).map { s =>
+    s"""l$s AS (SELECT q.vec_id AS q_id, c.cell_id,
+       |    CAST(list_sum(list_transform(range(1, len(q.v) + 1),
+       |      j -> (q.v[j] - c.c[j]) * (q.v[j] - c.c[j]))) AS BIGINT) AS d2
+       |  FROM q$s q CROSS JOIN c${s}_$iters c WHERE q.vec_id % 100 = 0),
+       |j$s AS (SELECT l.q_id, f.vec_id, l.d2
+       |  FROM f$s f JOIN l$s l ON f.cell_id = l.cell_id)""".stripMargin
+  }.mkString(",\n")
 
   val all: Seq[QueryDef] = Seq(nn01BruteTopK, nn03NearDup,
     nn05LshRecall, nn06IvfAllProbe, nn07LshPortable,

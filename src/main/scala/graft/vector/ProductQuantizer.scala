@@ -19,11 +19,10 @@ import org.apache.spark.sql.functions._
   * this one proves the math, and the production path swaps in more
   * iterations/codes with the same shapes.
   *
-  * Scale shape — LONG FORMAT, all m subspaces in one pass (the r9
-  * redesign; the r8 version ran m independent k-means branches, i.e.
-  * m corpus scans per Lloyd round and an m-way union on the query
-  * side): each vector explodes once into m (sub_id, subvector) rows,
-  * and every stage keys by sub_id —
+  * Scale shape — LONG FORMAT, all m subspaces in one pass: each
+  * vector explodes once into m (sub_id, subvector) rows, and every
+  * stage keys by sub_id, so a Lloyd round or an encode scans the
+  * corpus once whatever m is —
   *  - TRAIN: per Lloyd round, ONE corpus scan; assignment is a
   *    broadcast join against the m×k codebook rows (row-local argmin,
   *    no corpus shuffle); the update is one partial-agg shuffle keyed
@@ -37,11 +36,7 @@ import org.apache.spark.sql.functions._
   * DETERMINISTIC slice rather than file-order limit, so the sampled
   * path stays replayable cross-engine — nn12 oracle-matches it in
   * DuckDB, and ProductQuantizerSpec pins recall parity vs full
-  * training). The long format is exactly that encode pass, m× fewer
-  * scans than the branch-per-subspace plan at identical results
-  * (bit-for-bit: ProductQuantizerSpec pins m=1 ≡ plain k-means, and
-  * vq02/nn08/nn09/nn11 hash-match the same DuckDB replays as before
-  * the redesign).
+  * training). ProductQuantizerSpec also pins m=1 ≡ plain k-means.
   */
 object ProductQuantizer {
 
@@ -76,91 +71,17 @@ object ProductQuantizer {
       .withColumn("sub_id", col("sub_id").cast("long"))
   }
 
-  /** (sub_id, cell_id, c: array<long>) codebook rows collected to the
-    * driver, reinjected as a LocalRelation — m×k rows of dim/m longs
-    * each at ANY corpus size (the [[QuantizedKMeans]] r17 pattern). */
-  private def localCents(spark: org.apache.spark.sql.SparkSession,
-                         rows: Array[org.apache.spark.sql.Row]): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("sub_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("cell_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("c",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType, containsNull = true))))
-    spark.createDataFrame(
-      rows.sortBy(r => (r.getLong(0), r.getLong(1))).toList.asJava, schema)
-  }
+  /** All m codebooks, trained simultaneously by the
+    * [[QuantizedKMeans]] Lloyd core keyed by sub_id: (sub_id, cell_id,
+    * c). Every subspace starts from the same k lowest-id vectors, so
+    * the init slices them once. Each round is one corpus scan, one
+    * (sub, cell, dim)-keyed partial-agg shuffle and one collect of the
+    * m×k-row codebook. */
+  private def centroidsAll(train: DataFrame, dims: Int, m: Int, k: Int,
+                           iters: Int, idCol: String, vecCol: String): DataFrame =
+    QuantizedKMeans.lloyd(subspaces(train, dims, m, idCol, vecCol), Seq("sub_id"), idCol,
+      subspaces(train.orderBy(col(idCol)).limit(k), dims, m, idCol, vecCol), iters)
 
-  /** All m codebooks, trained simultaneously: (sub_id, cell_id, c).
-    * Init is the k lowest-id vectors (cell_id in id order — the
-    * [[QuantizedKMeans.centroids]] init, computed ONCE on full vectors
-    * and sliced, since every subspace picks the same k ids); each
-    * Lloyd round is one corpus scan + one (sub,cell,dim)-keyed
-    * partial-agg shuffle. Cells that lose every member disappear,
-    * exactly as in the per-subspace trainer.
-    *
-    * DRIVER-PACED (r17 — see [[QuantizedKMeans.centroids]]): each
-    * round collects the m×k-row codebook and reinjects it as a
-    * LocalRelation, so every round is ONE job over a flat plan, the
-    * per-round codebook broadcasts build driver-side with no job, and
-    * [[adcTopK]]'s two codebook consumers read the local rows instead
-    * of persisting the whole training chain. Bit-identical rows. */
-  private[graft] def centroidsAll(guarded: DataFrame, dims: Int, m: Int, k: Int,
-                           iters: Int, idCol: String, vecCol: String): DataFrame = {
-    val initW = org.apache.spark.sql.expressions.Window.orderBy(col(idCol))
-    // k lowest-id vectors; the k-row window is harmless (post-limit)
-    val init = guarded.orderBy(col(idCol)).limit(k)
-      .withColumn("cell_id", (row_number().over(initW) - 1).cast("long"))
-    var cents = localCents(guarded.sparkSession,
-      subspaces(init, dims, m, "cell_id", vecCol)
-        .select(col("sub_id"), col("cell_id"), col("q").as("c"))
-        .collect())
-    val longQ = subspaces(guarded, dims, m, idCol, vecCol)
-    // one Lloyd step: assign to nearest centroid (ties -> lowest cell),
-    // then recompute each non-empty cell as the exact floor-div mean
-    for (_ <- 1 to iters) {
-      val assigned = longQ.join(broadcast(cents), "sub_id")
-        .select(col("sub_id"), col(idCol), col("q"), col("cell_id"),
-          QuantizedKMeans.dist2(col("q"), col("c")).as("d2"))
-        .groupBy(col("sub_id"), col(idCol), col("q"))
-        .agg(min(struct(col("d2"), col("cell_id"))).as("m"))
-        .select(col("sub_id"), col("q"), col("m.cell_id").as("cell_id"))
-      cents = localCents(guarded.sparkSession, assigned
-        .select(col("sub_id"), col("cell_id"), posexplode(col("q")).as(Seq("i", "x")))
-        .groupBy("sub_id", "cell_id", "i")
-        .agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
-        .select(col("sub_id"), col("cell_id"), col("i"),
-          expr("(s - pmod(s, n)) div n").as("v"))
-        .groupBy("sub_id", "cell_id")
-        .agg(sort_array(collect_list(struct(col("i"), col("v")))).as("sv"))
-        .select(col("sub_id"), col("cell_id"),
-          transform(col("sv"), s => s.getField("v")).as("c"))
-        .collect())
-    }
-    cents
-  }
-
-  /** Argmin assignment of every (keyCol, sub_id) row to its nearest
-    * centroid in that subspace (ties → lowest cell):
-    * (keyCol, sub_id, cell_id, d2). Broadcast m×k codebook, row-local
-    * argmin — no corpus shuffle before the key-grouped min. */
-  private[graft] def assignAll(longQ: DataFrame, cents: DataFrame,
-                        keyCol: String): DataFrame =
-    longQ.join(broadcast(cents), "sub_id")
-      .select(col("sub_id"), col(keyCol), col("cell_id"),
-        QuantizedKMeans.dist2(col("q"), col("c")).as("d2"))
-      .groupBy(col("sub_id"), col(keyCol))
-      .agg(min(struct(col("d2"), col("cell_id"))).as("m"))
-      .select(col(keyCol), col("sub_id"), col("m.cell_id").as("cell_id"),
-        col("m.d2").as("d2"))
-
-  /** Train + encode in long format: (idCol, sub_id, code, d2) — one
-    * row per vector per subspace. `dims` must be the vector length and
-    * divide evenly by `m` (slice would silently truncate otherwise —
-    * guarded in-plan on every row). */
   /** Deterministic 1/trainMod training slice (ids ≡ 0 mod trainMod) —
     * the 100 TB sample cap as a filter, not a sort+limit: no global
     * order, no single-partition pull, and the sample is a pure function
@@ -174,6 +95,10 @@ object ProductQuantizer {
     else guarded.filter(pmod(col(idCol), lit(trainMod)) === 0)
   }
 
+  /** Train + encode in long format: (idCol, sub_id, code, d2) — one
+    * row per vector per subspace. `dims` must be the vector length and
+    * divide evenly by `m` (slice would silently truncate otherwise —
+    * guarded in-plan on every row). */
   def encode(df: DataFrame, dims: Int, m: Int, k: Int, iters: Int,
              idCol: String = "vec_id", vecCol: String = "embedding",
              trainMod: Long = 1): DataFrame = {
@@ -181,7 +106,8 @@ object ProductQuantizer {
     val guarded = dimsGuarded(df, dims, vecCol)
     val cents = centroidsAll(trainSlice(guarded, trainMod, idCol),
       dims, m, k, iters, idCol, vecCol)
-    assignAll(subspaces(guarded, dims, m, idCol, vecCol), cents, idCol)
+    QuantizedKMeans.nearest(subspaces(guarded, dims, m, idCol, vecCol), cents,
+        Seq("sub_id"), Seq(idCol))
       .select(col(idCol), col("sub_id"), col("cell_id").as("code"), col("d2"))
   }
 
@@ -195,28 +121,22 @@ object ProductQuantizer {
     * pair. Returns (qIdCol, idCol, adist) — the `topK` nearest by
     * approximate distance per query, ties by id.
     *
-    * Scale shape (the r10 redesign): the pre-r10 plan joined the
-    * corpus code rows against the LUT on (sub_id, cell_id) — with
-    * only m×k distinct join keys EVERY query matches every code row,
-    * so the join emitted corpus×queries×m rows into a
-    * corpus×queries-group hash aggregate and a rank window sorted the
-    * result: at sf10 that was a multi-billion-row shuffle (the
-    * "failed to allocate page" GC storms) and ADC measured 4× SLOWER
-    * than brute force. Now the corpus codes fold to ONE array<long>
-    * row per vector, each query's LUT flattens to ONE dense
-    * m×k array<long> (indexed sub·k + code; cells KMeans emptied stay
-    * null and are never indexed), the queries side broadcasts, and
-    * adist = Σ_s lut[s·k + codes[s]] is an unrolled codegen
-    * element_at chain evaluated in the broadcast-nested-loop join's
-    * output iterator — the bruteForceTopK shape, but m lookups per
-    * pair instead of dims multiplies. The per-query top-k is
+    * Scale shape: no stage grows with corpus×queries. The corpus
+    * codes fold to ONE array<long> row per vector, each query's LUT
+    * flattens to ONE dense m×k array<long> (indexed sub·k + code; cells
+    * Lloyd emptied stay null and are never indexed), the queries side
+    * broadcasts, and adist = Σ_s lut[s·k + codes[s]] is an unrolled
+    * codegen element_at chain evaluated in the broadcast-nested-loop
+    * join's output iterator — the bruteForceTopK shape, but m lookups
+    * per pair instead of dims multiplies. (Joining code rows to LUT
+    * rows on (sub_id, cell_id) instead matches every query to every
+    * code row — only m×k distinct keys — and shuffles
+    * corpus×queries×m rows.) The per-query top-k is
     * [[graft.topk.TopKAgg.min_k_long]] (map-side bounded heaps), so
     * the ONLY shuffles anywhere are the corpus-sized encode
-    * aggregations and a queries×topK heap merge — the intermediate
-    * pair stream never touches a shuffle at any corpus size. All
-    * arithmetic stays in exact micro-unit longs: bit-identical
-    * results to the joined form (nn08/nn09/nn11/nn12 hash-match the
-    * same DuckDB replays).
+    * aggregations and a queries×topK heap merge. All arithmetic stays
+    * in exact micro-unit longs, so DuckDB replays it value-exactly
+    * (nn08/nn09/nn11/nn12).
     *
     * Definitional identity pinned by the spec: a query that is itself
     * in the corpus scores its OWN codes at exactly its `encode` error
@@ -231,16 +151,14 @@ object ProductQuantizer {
     require(m >= 1 && dims % m == 0, s"m=$m must divide dims=$dims")
     require(topK >= 1)
     val guarded = dimsGuarded(corpus, dims, vecCol)
-    // centroidsAll is a LocalRelation since r17 (driver-paced rounds):
-    // both consumers below (codes, lut) read the m×k local rows
-    // directly — the pre-r17 sharedInPlan persist of the lazy training
-    // chain is no longer needed
+    // a LocalRelation: both consumers below (codes, lut) read it
     val cents = centroidsAll(trainSlice(guarded, trainMod, idCol),
       dims, m, k, iters, idCol, vecCol)
     // corpus side: m codes per vector folded to one array row,
     // ordered by sub_id (collect_list is unordered pre-sort;
     // sort_array on the (sub_id, cell_id) struct restores it)
-    val codes = assignAll(subspaces(guarded, dims, m, idCol, vecCol), cents, idCol)
+    val codes = QuantizedKMeans.nearest(subspaces(guarded, dims, m, idCol, vecCol), cents,
+        Seq("sub_id"), Seq(idCol))
       .groupBy(col(idCol))
       .agg(sort_array(collect_list(struct(col("sub_id"), col("cell_id")))).as("__sc"))
       .select(col(idCol),
@@ -248,11 +166,11 @@ object ProductQuantizer {
     // query side: dense per-query LUT array, position = sub_id·k + cell_id
     // (scattered through a map so codebook cells KMeans emptied leave
     // nulls — codes never name an empty cell, so null slots are dead)
-    val lut = subspaces(dimsGuarded(queries, dims, vecCol), dims, m, qIdCol, vecCol)
-      .join(broadcast(cents), "sub_id")
+    val lut = QuantizedKMeans.distances(
+        subspaces(dimsGuarded(queries, dims, vecCol), dims, m, qIdCol, vecCol), cents,
+        Seq("sub_id"), Seq(qIdCol))
       .select(col(qIdCol),
-        (col("sub_id") * k + col("cell_id")).as("__pos"),
-        QuantizedKMeans.dist2(col("q"), col("c")).as("d2"))
+        (col("sub_id") * k + col("cell_id")).as("__pos"), col("d2"))
       .groupBy(col(qIdCol))
       .agg(sort_array(collect_list(struct(col("__pos"), col("d2")))).as("__pd"))
       .withColumn("__pm", map_from_entries(col("__pd")))

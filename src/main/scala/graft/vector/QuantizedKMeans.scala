@@ -1,8 +1,9 @@
 package graft.vector
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Deterministic, integer-exact Lloyd's k-means over an embedding
   * column — the coarse-quantizer trainer (IVF cells, SemDeDup buckets,
@@ -28,10 +29,12 @@ import org.apache.spark.sql.types.DoubleType
   * explicit): centroids are k×dim — broadcast; ASSIGNMENT is row-local
   * (a broadcast nested loop over k per vector, no shuffle); UPDATE is
   * one partial-agg shuffle keyed by (cell, dim) whose output is
-  * k×dim rows regardless of corpus size. Per iteration the corpus is
-  * scanned once; the whole run is one lazy linear plan (each
-  * iteration's frames are consumed exactly once — the pr01 rule:
-  * nothing here is worth persisting).
+  * k×dim rows regardless of corpus size. Per round the corpus is
+  * scanned once.
+  *
+  * One Lloyd core ([[lloyd]], [[nearest]], [[codebook]]) serves both
+  * this trainer and [[ProductQuantizer]]: a codebook may carry key
+  * columns (PQ's `sub_id`), and every stage then runs per key.
   */
 object QuantizedKMeans {
 
@@ -51,75 +54,85 @@ object QuantizedKMeans {
     * end-to-end on the PQ argmin joins). */
   def dist2(a: Column, b: Column): Column = IntL2Expr.l2(a, b)
 
-  /** (cell_id: long, c: array<long>) centroid rows collected to the
-    * driver, reinjected as a LocalRelation — the codebook is k×dim
-    * longs at ANY corpus size (k ≤ 64 everywhere in graft), so the
-    * collect is the CC-convergence-probe/BpeTrain pattern, legal at
-    * 100 TB. */
-  private def localCents(spark: org.apache.spark.sql.SparkSession,
-                         rows: Array[org.apache.spark.sql.Row]): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("cell_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("c",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType, containsNull = true))))
-    spark.createDataFrame(rows.sortBy(_.getLong(0)).toList.asJava, schema)
+  /** The codebook (keys…, cell_id, c: array<bigint>) as a
+    * LocalRelation over driver rows, sorted by keys then cell_id. A
+    * codebook is k×dim longs per key at any corpus size (k ≤ 64
+    * everywhere in graft), so holding it on the driver is bounded and
+    * its broadcast builds with no job. */
+  private def codebook(spark: SparkSession, keys: Seq[String], rows: Seq[Row]): DataFrame = {
+    val schema = StructType((keys :+ "cell_id").map(StructField(_, LongType, nullable = false)) :+
+      StructField("c", ArrayType(LongType, containsNull = true)))
+    spark.createDataFrame(
+      rows.sortBy(r => (0 to keys.size).map(r.getLong))(
+        Ordering.Implicits.seqOrdering[IndexedSeq, Long]).asJava, schema)
   }
 
-  /** Train the codebook alone: `iters` Lloyd rounds, returns the final
-    * (cell_id, c: array<bigint>) centroids frame — what an ADC lookup
-    * table or a downstream encode pass consumes.
-    *
-    * DRIVER-PACED (r17, the BpeTrain/CC-probe pattern, guide §1.2
-    * step 1): each Lloyd round COLLECTS the k×dim-long centroid frame
-    * (k ≤ 64 at any corpus size — a bounded scalar artifact, not data)
-    * and reinjects it as a LocalRelation. The old lazy form nested
-    * round k's plan inside round k+1's: Catalyst re-analyzed the whole
-    * O(iters)-deep tree at every consumer, each round's centroid
-    * BroadcastExchange was a separate scheduler barrier with a full
-    * upstream plan, and adcTopK had to persist the codebook because
-    * two consumers would otherwise recompute the entire training
-    * chain. Now each round is exactly ONE job (the collect; the
-    * LocalRelation broadcast builds driver-side with no job), every
-    * downstream plan is flat, and nothing needs a persist. Values are
-    * bit-identical: the same exact-integer aggregation rows, collected
-    * instead of kept lazy. */
+  /** Exact squared distance from every `q` row to every centroid of
+    * its key: (keys…, by…, cell_id, d2). The codebook broadcasts — a
+    * cross join when `keys` is empty, an equi-join on `keys` otherwise —
+    * so the scoring is row-local. */
+  private[vector] def distances(q: DataFrame, cents: DataFrame,
+                                keys: Seq[String], by: Seq[String]): DataFrame =
+    (if (keys.isEmpty) q.crossJoin(broadcast(cents)) else q.join(broadcast(cents), keys))
+      .select((keys ++ by).map(col) ++
+        Seq(col("cell_id"), dist2(col("q"), col("c")).as("d2")): _*)
+
+  /** Argmin of [[distances]] per (keys…, by…), ties → lowest cell:
+    * (by…, keys…, cell_id, d2). */
+  private[vector] def nearest(q: DataFrame, cents: DataFrame,
+                              keys: Seq[String], by: Seq[String]): DataFrame =
+    distances(q, cents, keys, by)
+      .groupBy((keys ++ by).map(col): _*)
+      .agg(min(struct(col("d2"), col("cell_id"))).as("m"))
+      .select((by ++ keys).map(col) ++
+        Seq(col("m.cell_id").as("cell_id"), col("m.d2").as("d2")): _*)
+
+  /** `iters` Lloyd rounds over `q` (idCol, keys…, q: array<bigint>)
+    * from the centroids `init`: per key, its rows in id order become
+    * cells 0..k−1 (a collect of an orderBy().limit(), and any row-local
+    * step after it, keeps that order). Each round assigns every row to
+    * its [[nearest]] cell and recomputes each non-empty cell as the
+    * exact floor-div mean per coordinate; a cell that loses every
+    * member disappears. Each round is one job — the collect of the
+    * new codebook, fed back through [[codebook]] — so every plan stays
+    * flat and nothing is persisted. Returns the final codebook. */
+  private[vector] def lloyd(q: DataFrame, keys: Seq[String], idCol: String,
+                            init: DataFrame, iters: Int): DataFrame = {
+    val cells = scala.collection.mutable.Map.empty[Seq[Long], Long]
+    val spark = q.sparkSession
+    var cents = codebook(spark, keys,
+      init.select((keys :+ "q").map(col): _*).collect().toSeq.map { r =>
+        val key = keys.indices.map(r.getLong)
+        val cell = cells.getOrElse(key, 0L)
+        cells(key) = cell + 1
+        Row.fromSeq(key ++ Seq(cell, r.getSeq[Long](keys.size)))
+      })
+    val ks = keys.map(col)
+    for (_ <- 1 to iters) {
+      cents = codebook(spark, keys, nearest(q, cents, keys, Seq(idCol, "q"))
+        .select(ks ++ Seq(col("cell_id"), posexplode(col("q")).as(Seq("i", "x"))): _*)
+        .groupBy(ks ++ Seq(col("cell_id"), col("i")): _*)
+        .agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
+        .select(ks ++ Seq(col("cell_id"), col("i"),
+          expr("(s - pmod(s, n)) div n").as("v")): _*)
+        .groupBy(ks :+ col("cell_id"): _*)
+        .agg(sort_array(collect_list(struct(col("i"), col("v")))).as("sv"))
+        .select(ks ++ Seq(col("cell_id"),
+          transform(col("sv"), s => s.getField("v")).as("c")): _*)
+        .collect().toSeq)
+    }
+    cents
+  }
+
+  /** Train the codebook alone: `iters` Lloyd rounds from the k
+    * lowest-id vectors; returns the final (cell_id, c: array<bigint>)
+    * centroids — a LocalRelation, so any number of consumers (an ADC
+    * lookup table, an encode pass) read it without recomputation. */
   def centroids(df: DataFrame, k: Int, iters: Int,
                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(k >= 1 && iters >= 0, s"need k >= 1, iters >= 0; got $k, $iters")
     val q = quantize(df, idCol, vecCol)
-    // k lowest-id vectors, ids dense 0..k-1 in id order: collect() of
-    // an orderBy().limit() preserves the sort order, so driver-side
-    // numbering reproduces the old row_number() exactly
-    val initRows = q.orderBy(col(idCol)).limit(k).select(col("q")).collect()
-    var cents = localCents(df.sparkSession,
-      initRows.zipWithIndex.map { case (r, i) =>
-        org.apache.spark.sql.Row(i.toLong, r.getSeq[Long](0))
-      })
-    // one Lloyd step: assign to nearest centroid (ties -> lowest cell),
-    // then recompute each non-empty cell as the exact floor-div mean
-    for (_ <- 1 to iters) {
-      val assigned = q.crossJoin(broadcast(cents))
-        .select(col(idCol), col("q"), col("cell_id"),
-          dist2(col("q"), col("c")).as("d2"))
-        .groupBy(col(idCol), col("q"))
-        .agg(min(struct(col("d2"), col("cell_id"))).as("m"))
-        .select(col(idCol), col("q"), col("m.cell_id").as("cell_id"))
-      cents = localCents(df.sparkSession, assigned
-        .select(col("cell_id"), posexplode(col("q")).as(Seq("i", "x")))
-        .groupBy("cell_id", "i")
-        .agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
-        .select(col("cell_id"), col("i"),
-          expr("(s - pmod(s, n)) div n").as("v"))
-        .groupBy("cell_id")
-        .agg(sort_array(collect_list(struct(col("i"), col("v")))).as("sv"))
-        .select(col("cell_id"),
-          transform(col("sv"), s => s.getField("v")).as("c"))
-        .collect())
-    }
-    cents
+    lloyd(q, Nil, idCol, q.orderBy(col(idCol)).limit(k), iters)
   }
 
   /** Exact quantized squared distance from every row of `df` to EVERY
@@ -127,17 +140,13 @@ object QuantizedKMeans {
     * Centroids broadcast; the cross join is k-bounded per row. */
   def distancesTo(df: DataFrame, cents: DataFrame,
                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    quantize(df, idCol, vecCol).crossJoin(broadcast(cents))
-      .select(col(idCol), col("cell_id"), dist2(col("q"), col("c")).as("d2"))
+    distances(quantize(df, idCol, vecCol), cents, Nil, Seq(idCol))
 
   /** Argmin assignment of every row to its nearest centroid
     * (ties → lowest cell): (idCol, cell_id, d2). */
   def assignTo(df: DataFrame, cents: DataFrame,
                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    distancesTo(df, cents, idCol, vecCol)
-      .groupBy(col(idCol))
-      .agg(min(struct(col("d2"), col("cell_id"))).as("m"))
-      .select(col(idCol), col("m.cell_id").as("cell_id"), col("m.d2").as("d2"))
+    nearest(quantize(df, idCol, vecCol), cents, Nil, Seq(idCol))
 
   /** Run `iters` Lloyd iterations with k = `k`; returns the final
     * assignment (idCol, cell_id, d2) — the full per-vector mapping,

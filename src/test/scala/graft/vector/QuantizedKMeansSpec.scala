@@ -1,6 +1,7 @@
 package graft.vector
 
-import graft.{SparkSpec, Tables}
+import graft.{SourceScan, SparkSpec, Tables}
+import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 class QuantizedKMeansSpec extends SparkSpec {
@@ -48,5 +49,21 @@ class QuantizedKMeansSpec extends SparkSpec {
       a.size == emb.count() && a.forall(r => r._2 >= 0 && r._2 < 8))
     // the run actually separates the corpus (not everything in one cell)
     assert(a.map(_._2).distinct.size > 1)
+  }
+
+  test("the Lloyd update rule has one Spark owner and one SQL replay") {
+    // k-means and PQ training share QuantizedKMeans.lloyd, and every
+    // k-means/PQ oracle shares VectorQueries.pqChain: a second copy of
+    // either floor-div update can drift from the one the oracles check.
+    val mains = SourceScan.mainSources
+    val update = """"\(s - pmod\(s, n\)\) div n"""".r
+    val owner = (p: java.nio.file.Path) => p.endsWith("graft/vector/QuantizedKMeans.scala")
+    val offenders = SourceScan.overLimit(update, mains)(p => if (owner(p)) Int.MaxValue else 0)
+    assert(offenders.isEmpty, s"Spark Lloyd update outside QuantizedKMeans: ${offenders.mkString(", ")}")
+    assert(mains.filter(owner).exists(p => update.findFirstIn(Files.readString(p)).nonEmpty),
+      "scan found no Lloyd update in QuantizedKMeans.scala")
+    val replay = """% n\) \+ n\) % n\)\) // n""".r
+    val sqlSites = mains.map(p => replay.findAllIn(Files.readString(p)).size).sum
+    assert(sqlSites <= 1, s"the SQL Lloyd update appears $sqlSites times under src/main/scala")
   }
 }

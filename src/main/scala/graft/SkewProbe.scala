@@ -215,16 +215,12 @@ object SkewProbe {
     // ---- 3. star pairing: hot bucket in every band ----
     // Window form = TextDedup.minHashCandidates' per-bucket min stage
     // verbatim as of commit d094bb3 (pre-edbd999: min(id) OVER
-    // (PARTITION BY band) — replaced by groupBy min + equi-join back).
-    val banded = TextDedup.withMinHashSig(corpus, k = 3, nHashes = 32)
-      .withColumn("band", explode(array((0 until 8).map(bId =>
-        struct(lit(bId).as("band_id"),
-          xxhash64(lit(bId) +: (0 until 4)
-            .map(r => element_at(col("sig"), bId * 4 + r + 1)): _*)
-            .as("band_sig"))): _*)))
-      .select(col("id"), col("band.band_id").as("band_id"),
-        col("band.band_sig").as("band_sig"))
-    val w3 = Window.partitionBy("band_id", "band_sig")
+    // (PARTITION BY band) — replaced by groupBy min + equi-join back),
+    // over the library's own MinHash banding; agg shape = the library's
+    // Star pairing.
+    val banded = TextDedup.minHashBands(
+      TextDedup.withMinHashSig(corpus, k = 3, nHashes = 32), nHashes = 32, bands = 8)
+    val w3 = Window.partitionBy("band_id", "band_val")
     val r3w = time("star_pairing", "window") {
       banded.withColumn("id1", min(col("id")).over(w3))
         .filter(col("id") =!= col("id1"))
@@ -232,12 +228,7 @@ object SkewProbe {
         .dropDuplicates("id1", "id2")
     }
     val r3a = time("star_pairing", "agg_join") {
-      val mins = banded.groupBy("band_id", "band_sig")
-        .agg(min(col("id")).as("id1"))
-      banded.join(mins, Seq("band_id", "band_sig"))
-        .filter(col("id") =!= col("id1"))
-        .select(col("id1"), col("id").as("id2"))
-        .dropDuplicates("id1", "id2")
+      TextDedup.starPairs(banded).dropDuplicates("id1", "id2")
     }
     require(r3w == r3a, s"star shapes disagree: $r3w vs $r3a")
     gateAggVsWindow("star_pairing", "window", "agg_join")

@@ -11,6 +11,16 @@ import org.apache.spark.sql.functions._
   */
 object GraphQueries {
 
+  /** The recursive-CTE replay of `graph.ConnectedComponents.runStars`:
+    * `bi` symmetrizes the (id1, id2) edge CTE `edges`, `walk` floods
+    * each node id (column `idCol` of `nodes`) along it, and
+    * `lbl(<idCol>, cluster_id)` keeps every node's min reachable id. */
+  private[queries] def sqlClosure(edges: String, nodes: String, idCol: String): String =
+    s"""bi(a, b) AS (SELECT id1, id2 FROM $edges UNION SELECT id2, id1 FROM $edges),
+       |walk(id, l) AS (SELECT $idCol, $idCol FROM $nodes
+       |  UNION SELECT bi.b, walk.l FROM walk JOIN bi ON bi.a = walk.id),
+       |lbl AS (SELECT id AS $idCol, MIN(l) AS cluster_id FROM walk GROUP BY id)""".stripMargin
+
   /** PAGERANK, fixed 6 power iterations, INTEGER-QUANTIZED: ranks live
     * as integer mass in units of 10⁻¹⁵ of the total, every per-step
     * operation is integer floor division/multiplication/addition —

@@ -11,10 +11,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
   * NULLS LAST; Spark defaults NULLS FIRST). */
 object GroupingQueries {
 
-  private def revD = col("l_extendedprice").cast(DecimalType(12, 2)) *
-    (lit(1).cast(DecimalType(3, 2)) - col("l_discount").cast(DecimalType(4, 2)))
-  private val sqlRevTerm =
-    "CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))"
+  import RelationalQueries.{revTerm, sqlRevTerm}
 
   /** ROLLUP over (returnflag, linestatus): per-pair, per-flag subtotals
     * and a grand total in one pass (partial aggregation handles the
@@ -24,7 +21,7 @@ object GroupingQueries {
     * sum() would compute it 3x per input row. */
   val g01Rollup = QueryDef("g01_rollup",
     (s, d) => Tables.lineitem(s, d)
-      .select(col("l_returnflag"), col("l_linestatus"), revD.as("__rev"))
+      .select(col("l_returnflag"), col("l_linestatus"), revTerm.as("__rev"))
       .rollup("l_returnflag", "l_linestatus")
       .agg(count(lit(1)).as("n"), sum(col("__rev")).cast(DoubleType).as("revenue"))
       .orderBy(col("l_returnflag"), col("l_linestatus")),

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.LongType
   * fingerprints, not just counts. */
 object PipelineQueries {
 
-  private val sqlTokArr = """regexp_split_to_array(trim(text), '\s+')"""
+  import TextQueries.sqlTokArr
 
   /** Overlapping context windows (size 32, overlap 8): per-chunk token
     * count and content fingerprint. DuckDB replays the same start
@@ -149,14 +149,11 @@ object PipelineQueries {
     * deletion-signature block — same verify stage. */
   val fz03JaroTypos = QueryDef("fz03_jaro_typos",
     (s, d) => {
-      def side(idAs: String, nameAs: String) =
-        Tables.supplier(s, d).select(col("s_suppkey").as(idAs),
-          col("s_name").as(nameAs),
-          array_join(array_sort(split(col("s_name"), "")), "").as("blk"))
-      side("id1", "na").join(side("id2", "nb"), "blk")
-        .filter(col("id1") < col("id2"))
+      val names = Tables.supplier(s, d).select(col("s_suppkey").as("id"),
+        col("s_name").as("n"), array_join(array_sort(split(col("s_name"), "")), "").as("blk"))
+      graft.util.Blocking.selfPairs(names, Seq("blk"))
         .withColumn("sim",
-          round(graft.text.JaroWinklerExpr.jaroWinkler(col("na"), col("nb")), 6))
+          round(graft.text.JaroWinklerExpr.jaroWinkler(col("n1"), col("n2")), 6))
         .filter(col("sim") >= 0.985)
         .select(col("id1"), col("id2"), col("sim"))
         .orderBy("id1", "id2")
@@ -248,18 +245,9 @@ object PipelineQueries {
       Tables.documents(s, d).filter(Probe.scoped(col("doc_id") % 5 === 0)),
       num = 4, den = 5)
       .orderBy("id1", "id2"),
-    Some("""WITH tok AS (SELECT doc_id,
-           |    unnest(list_distinct(regexp_split_to_array(trim(text), '\s+'))) AS t
-           |  FROM documents WHERE doc_id % 5 = 0),
-           |sz AS (SELECT doc_id, COUNT(*) AS n FROM tok GROUP BY doc_id),
-           |i AS (SELECT a.doc_id AS id1, b.doc_id AS id2, COUNT(*) AS inter
-           |      FROM tok a JOIN tok b ON a.t = b.t AND a.doc_id < b.doc_id
-           |      GROUP BY 1, 2)
-           |SELECT id1, id2, inter, n1.n + n2.n - inter AS uni,
-           |  CAST(inter AS DOUBLE) / (n1.n + n2.n - inter) AS jaccard
-           |FROM i JOIN sz n1 ON id1 = n1.doc_id JOIN sz n2 ON id2 = n2.doc_id
-           |WHERE 5 * inter >= 4 * (n1.n + n2.n - inter)
-           |ORDER BY id1, id2""".stripMargin))
+    Some(s"""WITH ${TextQueries.sqlTokenJaccard}
+           |SELECT id1, id2, inter, uni, CAST(inter AS DOUBLE) / uni AS jaccard
+           |FROM e ORDER BY id1, id2""".stripMargin))
 
   /** Misra-Gries frequent tokens per language. k=4096 exceeds the
     * per-lang vocabulary with wide margin, so the summary runs in its

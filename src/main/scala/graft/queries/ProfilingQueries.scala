@@ -453,8 +453,7 @@ object ProfilingQueries {
     (s, d) => {
       def row(parts: org.apache.spark.sql.Column*) =
         concat_ws("|", parts.map(p => coalesce(p.cast("string"), lit("∅"))): _*)
-      def h(c: org.apache.spark.sql.Column) =
-        conv(substring(md5(c), 1, 15), 16, 10).cast(LongType)
+      def h(c: org.apache.spark.sql.Column) = graft.text.TextDedup.portableTokenHash(c)
       def sum38(c: org.apache.spark.sql.Column) =
         sum(c.cast(DecimalType(38, 0))).cast(DecimalType(38, 0)).cast("string")
       val nat = Tables.nation(s, d).select(h(row(col("n_nationkey"),

@@ -24,8 +24,8 @@ object RelationalQueries {
   /** Exact sum of a 2-decimal money column, as double. */
   private def exactSum(c: Column): Column = sum(dMoney(c)).cast(DoubleType)
   /** Exact revenue term: price * (1 - discount), decimal arithmetic. */
-  private def revTerm: Column = dMoney(col("l_extendedprice")) * (oneD - dRate(col("l_discount")))
-  private val sqlRevTerm =
+  private[queries] def revTerm: Column = dMoney(col("l_extendedprice")) * (oneD - dRate(col("l_discount")))
+  private[queries] val sqlRevTerm =
     "CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))"
   private def weekOf(c: Column): Column = date_trunc("week", c).cast(DateType)
 

@@ -16,7 +16,7 @@ object TextQueries {
 
   // SQL fragments shared with the Spark expressions (kept literally in
   // sync — a drift here is exactly what the oracle gate catches).
-  private val sqlTokArr = """regexp_split_to_array(trim(text), '\s+')"""
+  private[queries] val sqlTokArr = """regexp_split_to_array(trim(text), '\s+')"""
   private def sqlWordCount(w: String) =
     s"""(len(regexp_split_to_array(text, '\\b$w\\b')) - 1)"""
   /** token-equality marker count — mirrors TextFunctions.tokenEquals */
@@ -32,6 +32,108 @@ object TextQueries {
        |          / NULLIF(length(text), 0) <= 0.2 THEN 1.0 ELSE 0.0 END
        | + LEAST(CAST(${sqlWordCount("the")} + ${sqlWordCount("and")} + ${sqlWordCount("of")} AS DOUBLE)
        |          / len($sqlTokArr) * 2.0, 1.0)) / 3.0""".stripMargin
+
+  /** The replay of TextDedup's portable MinHash candidates at k = 2,
+    * nHashes = 16, bands = 4: per (prefix, docs CTE) side, CTEs
+    * `<p>tok`, `<p>sh` (bigram shingles), `<p>hs` (doc_id, i, mh) and
+    * `<p>bands` (doc_id, band_id, band_sig); then `pairs` (band-sharing
+    * pairs across the two sides, or `id1 < id2` within the one side)
+    * and `est(<id1>, <id2>, est_jaccard)` rounded to 6 places. */
+  private def sqlPortableMinHash(sides: Seq[(String, String)], id1: String,
+                                 id2: String): String = {
+    def sigs(p: String, docs: String) =
+      s"""${sqlShingles(p, docs, k = 2, "sh")},
+         |${p}hs AS (SELECT doc_id, i,
+         |         MIN(CAST(('0x' || substr(md5(CAST(i AS VARCHAR) || ':' || s), 1, 15)) AS UBIGINT)) AS mh
+         |       FROM ${p}sh CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS i) ii
+         |       GROUP BY doc_id, i),
+         |${p}bands AS (SELECT doc_id, i // 4 AS band_id,
+         |            md5(string_agg(CAST(mh AS VARCHAR), ',' ORDER BY i)) AS band_sig
+         |          FROM ${p}hs GROUP BY doc_id, i // 4),""".stripMargin
+    val (l, r) = (sides.head._1, sides.last._1)
+    val ordered = if (sides.size == 1) "\n               AND l.doc_id < r.doc_id" else ""
+    sides.map { case (p, docs) => sigs(p, docs) }.mkString("\n") +
+      s"""
+         |pairs AS (SELECT DISTINCT l.doc_id AS $id1, r.doc_id AS $id2
+         |          FROM ${l}bands l JOIN ${r}bands r
+         |            ON l.band_id = r.band_id AND l.band_sig = r.band_sig$ordered),
+         |est AS (SELECT p.$id1, p.$id2,
+         |          round(CAST(SUM(CASE WHEN a.mh = b.mh THEN 1 ELSE 0 END) AS DOUBLE) / 16, 6)
+         |            AS est_jaccard
+         |        FROM pairs p
+         |        JOIN ${l}hs a ON a.doc_id = p.$id1
+         |        JOIN ${r}hs b ON b.doc_id = p.$id2 AND b.i = a.i
+         |        GROUP BY 1, 2)""".stripMargin
+  }
+
+  /** The portable SimHash replay (TextDedup.withSimHash fed
+    * TextDedup.portableTokenHash) over `src`: CTEs n, tok, th, bits and
+    * `sh(doc_id, simhash)` — per bit, the ±occurrence vote over 60-bit
+    * md5-prefix token hashes; bit set iff the sum is positive. */
+  private def sqlPortableSimHash(src: String): String =
+    s"""n AS (SELECT doc_id, $sqlNormalize AS nt FROM $src),
+       |tok AS (SELECT doc_id, unnest(regexp_split_to_array(nt, '\\s+')) AS w FROM n),
+       |th AS (SELECT doc_id,
+       |         CAST(('0x' || substr(md5(w), 1, 15)) AS UBIGINT) AS h FROM tok),
+       |bits AS (SELECT doc_id, i,
+       |           SUM(CASE WHEN (h >> i) & 1 = 1 THEN 1 ELSE -1 END) AS c
+       |         FROM th CROSS JOIN (SELECT unnest(generate_series(0, 59)) AS i) ii
+       |         GROUP BY doc_id, i),
+       |sh AS (SELECT doc_id,
+       |         CAST(SUM(CASE WHEN c > 0
+       |           THEN CAST(1 AS BIGINT) << i ELSE 0 END) AS BIGINT) AS simhash
+       |       FROM bits GROUP BY doc_id)""".stripMargin
+
+  /** CTEs `<p>tok` (doc_id, w, i) over docs CTE `docs` and `<p><sh>`
+    * (doc_id, s): its distinct k-word shingles, words joined by ' '. */
+  private def sqlShingles(p: String, docs: String, k: Int, sh: String): String = {
+    val t = (0 until k).map(j => ('a' + j).toChar.toString)
+    val joins = t.tail.zipWithIndex.map { case (x, j) =>
+      s"JOIN ${p}tok $x ON $x.doc_id = a.doc_id AND $x.i = a.i + ${j + 1}" }
+    s"""${p}tok AS (SELECT doc_id, unnest($sqlTokArr) AS w,
+       |        generate_subscripts($sqlTokArr, 1) AS i FROM $docs),
+       |$p$sh AS (SELECT DISTINCT a.doc_id, ${t.map(_ + ".w").mkString(" || ' ' || ")} AS s
+       |       FROM ${p}tok a ${joins.mkString("\n                  ")})""".stripMargin
+  }
+
+  /** The replay of TextDedup.jaccardPairs over `documents WHERE <where>`:
+    * CTEs docs, tok, sh (distinct k-word shingles — with `maxDf`, only
+    * those in at most that many docs), sizes, inter and `jac(id1, id2,
+    * j)`: every pair whose exact Jaccard j is ≥ `threshold`. */
+  private def sqlJaccard(where: String, k: Int, threshold: Double,
+                         maxDf: Option[Int] = None): String = {
+    val sh = maxDf.fold(sqlShingles("", "docs", k, "sh")) { df =>
+      s"""${sqlShingles("", "docs", k, "sh0")},
+         |keep AS (SELECT s FROM (SELECT s, COUNT(*) AS df FROM sh0 GROUP BY s) t
+         |         WHERE df <= $df),
+         |sh AS (SELECT sh0.* FROM sh0 JOIN keep USING (s))""".stripMargin
+    }
+    s"""docs AS (SELECT * FROM documents WHERE $where),
+       |$sh,
+       |sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
+       |inter AS (SELECT x.doc_id AS id1, y.doc_id AS id2, COUNT(*) AS i
+       |          FROM sh x JOIN sh y ON x.s = y.s AND x.doc_id < y.doc_id
+       |          GROUP BY 1, 2),
+       |jac AS (SELECT id1, id2, CAST(i AS DOUBLE) / (n1.n + n2.n - i) AS j
+       |        FROM inter
+       |        JOIN sizes n1 ON n1.doc_id = id1
+       |        JOIN sizes n2 ON n2.doc_id = id2
+       |        WHERE CAST(i AS DOUBLE) / (n1.n + n2.n - i) >= $threshold)""".stripMargin
+  }
+
+  /** The quadratic ground truth of TextDedup.prefixJaccardPairs at
+    * τ = 4/5 on the doc_id % 5 probe: CTEs tok (distinct tokens), sz, i
+    * and `e(id1, id2, inter, uni)` — every pair with 5·inter ≥ 4·uni. */
+  private[queries] val sqlTokenJaccard =
+    s"""tok AS (SELECT doc_id, unnest(list_distinct($sqlTokArr)) AS t
+       |  FROM documents WHERE doc_id % 5 = 0),
+       |sz AS (SELECT doc_id, COUNT(*) AS n FROM tok GROUP BY doc_id),
+       |i AS (SELECT a.doc_id AS id1, b.doc_id AS id2, COUNT(*) AS inter
+       |      FROM tok a JOIN tok b ON a.t = b.t AND a.doc_id < b.doc_id
+       |      GROUP BY 1, 2),
+       |e AS (SELECT id1, id2, inter, n1.n + n2.n - inter AS uni
+       |      FROM i JOIN sz n1 ON id1 = n1.doc_id JOIN sz n2 ON id2 = n2.doc_id
+       |      WHERE 5 * inter >= 4 * (n1.n + n2.n - inter))""".stripMargin
 
   /** Token statistics per language partition. */
   val x10TokenStats = QueryDef("x10_token_stats",
@@ -473,23 +575,9 @@ object TextQueries {
       Tables.documents(s, d).filter(col("doc_id") % 10 === 0), k = 3, threshold = 0.5)
       .withColumn("jaccard", round(col("jaccard"), 6))
       .orderBy("id1", "id2"),
-    Some("""WITH docs AS (SELECT * FROM documents WHERE doc_id % 10 = 0),
-           |tok AS (SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS w,
-           |        generate_subscripts(regexp_split_to_array(trim(text), '\s+'), 1) AS i FROM docs),
-           |sh AS (SELECT DISTINCT a.doc_id, a.w || ' ' || b.w || ' ' || c.w AS s
-           |       FROM tok a JOIN tok b ON b.doc_id = a.doc_id AND b.i = a.i + 1
-           |                  JOIN tok c ON c.doc_id = a.doc_id AND c.i = a.i + 2),
-           |sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-           |inter AS (SELECT x.doc_id AS id1, y.doc_id AS id2, COUNT(*) AS i
-           |          FROM sh x JOIN sh y ON x.s = y.s AND x.doc_id < y.doc_id
-           |          GROUP BY 1, 2)
-           |SELECT id1, id2,
-           |  round(CAST(i AS DOUBLE) / (n1.n + n2.n - i), 6) AS jaccard
-           |FROM inter
-           |JOIN sizes n1 ON n1.doc_id = id1
-           |JOIN sizes n2 ON n2.doc_id = id2
-           |WHERE CAST(i AS DOUBLE) / (n1.n + n2.n - i) >= 0.5
-           |ORDER BY id1, id2""".stripMargin))
+    Some(s"""WITH ${sqlJaccard("doc_id % 10 = 0", k = 3, threshold = 0.5)}
+            |SELECT id1, id2, round(j, 6) AS jaccard FROM jac
+            |ORDER BY id1, id2""".stripMargin))
 
   /** The HASHED-shingle Jaccard (the 100 TB form: 64-bit shingle hashes
     * shuffle instead of strings) against the STRING-shingle oracle —
@@ -508,25 +596,9 @@ object TextQueries {
       threshold = 0.3, maxShingleDf = 50, hashedShingles = true)
       .withColumn("jaccard", round(col("jaccard"), 6))
       .orderBy("id1", "id2"),
-    Some("""WITH docs AS (SELECT * FROM documents WHERE doc_id % 2 = 0),
-           |tok AS (SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS w,
-           |        generate_subscripts(regexp_split_to_array(trim(text), '\s+'), 1) AS i FROM docs),
-           |sh0 AS (SELECT DISTINCT a.doc_id, a.w || ' ' || b.w AS s
-           |       FROM tok a JOIN tok b ON b.doc_id = a.doc_id AND b.i = a.i + 1),
-           |keep AS (SELECT s FROM (SELECT s, COUNT(*) AS df FROM sh0 GROUP BY s) t
-           |         WHERE df <= 50),
-           |sh AS (SELECT sh0.* FROM sh0 JOIN keep USING (s)),
-           |sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-           |inter AS (SELECT x.doc_id AS id1, y.doc_id AS id2, COUNT(*) AS i
-           |          FROM sh x JOIN sh y ON x.s = y.s AND x.doc_id < y.doc_id
-           |          GROUP BY 1, 2)
-           |SELECT id1, id2,
-           |  round(CAST(i AS DOUBLE) / (n1.n + n2.n - i), 6) AS jaccard
-           |FROM inter
-           |JOIN sizes n1 ON n1.doc_id = id1
-           |JOIN sizes n2 ON n2.doc_id = id2
-           |WHERE CAST(i AS DOUBLE) / (n1.n + n2.n - i) >= 0.3
-           |ORDER BY id1, id2""".stripMargin))
+    Some(s"""WITH ${sqlJaccard("doc_id % 2 = 0", k = 2, threshold = 0.3, Some(50))}
+            |SELECT id1, id2, round(j, 6) AS jaccard FROM jac
+            |ORDER BY id1, id2""".stripMargin))
 
   // dd04 (xxhash64-permutation MinHash+LSH candidates, rows-only) was
   // demoted to TextDedupSpec in round 10: the production
@@ -570,27 +642,11 @@ object TextQueries {
           round(col("n_captured").cast(DoubleType) / col("n_truth"), 6))
         .orderBy("bucket")
     },
-    Some("""WITH docs AS (SELECT * FROM documents WHERE doc_id % 2 = 0),
-           |tok AS (SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS w,
-           |        generate_subscripts(regexp_split_to_array(trim(text), '\s+'), 1) AS i FROM docs),
-           |sh0 AS (SELECT DISTINCT a.doc_id, a.w || ' ' || b.w AS s
-           |       FROM tok a JOIN tok b ON b.doc_id = a.doc_id AND b.i = a.i + 1),
-           |keep AS (SELECT s FROM (SELECT s, COUNT(*) AS df FROM sh0 GROUP BY s) t
-           |         WHERE df <= 50),
-           |sh AS (SELECT sh0.* FROM sh0 JOIN keep USING (s)),
-           |sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-           |inter AS (SELECT x.doc_id AS id1, y.doc_id AS id2, COUNT(*) AS i
-           |          FROM sh x JOIN sh y ON x.s = y.s AND x.doc_id < y.doc_id
-           |          GROUP BY 1, 2),
-           |truth AS (SELECT CAST(i AS DOUBLE) / (n1.n + n2.n - i) AS j
-           |          FROM inter
-           |          JOIN sizes n1 ON n1.doc_id = id1
-           |          JOIN sizes n2 ON n2.doc_id = id2
-           |          WHERE CAST(i AS DOUBLE) / (n1.n + n2.n - i) >= 0.5)
-           |SELECT CAST(floor(round(j, 6) * 10) AS BIGINT) AS bucket,
-           |  COUNT(*) AS n_truth, COUNT(*) AS n_captured,
-           |  CAST(1.0 AS DOUBLE) AS recall
-           |FROM truth GROUP BY 1 ORDER BY bucket""".stripMargin))
+    Some(s"""WITH ${sqlJaccard("doc_id % 2 = 0", k = 2, threshold = 0.5, Some(50))}
+            |SELECT CAST(floor(round(j, 6) * 10) AS BIGINT) AS bucket,
+            |  COUNT(*) AS n_truth, COUNT(*) AS n_captured,
+            |  CAST(1.0 AS DOUBLE) AS recall
+            |FROM jac GROUP BY 1 ORDER BY bucket""".stripMargin))
 
   // dd05 (xxhash64-token SimHash pairs, rows-only) was demoted to
   // TextDedupSpec in round 10: the production simHashPairs machinery
@@ -616,22 +672,10 @@ object TextQueries {
       .select(col("doc_id"),
         graft.text.SimHashExpr.simhash64(transform(
           TextFunctions.tokens(TextFunctions.normalize(col("text"))),
-          w => conv(substring(md5(w), 1, 15), 16, 10).cast(LongType)))
+          TextDedup.portableTokenHash(_)))
           .as("simhash"))
       .orderBy("doc_id"),
-    Some(s"""WITH n AS (SELECT doc_id, $sqlNormalize AS nt FROM documents
-            |           WHERE doc_id % 4 = 0),
-            |tok AS (SELECT doc_id, unnest(regexp_split_to_array(nt, '\\s+')) AS w FROM n),
-            |th AS (SELECT doc_id,
-            |         CAST(('0x' || substr(md5(w), 1, 15)) AS UBIGINT) AS h FROM tok),
-            |bits AS (SELECT doc_id, i,
-            |           SUM(CASE WHEN (h >> i) & 1 = 1 THEN 1 ELSE -1 END) AS c
-            |         FROM th CROSS JOIN (SELECT unnest(generate_series(0, 59)) AS i) ii
-            |         GROUP BY doc_id, i),
-            |sh AS (SELECT doc_id,
-            |         CAST(SUM(CASE WHEN c > 0
-            |           THEN CAST(1 AS BIGINT) << i ELSE 0 END) AS BIGINT) AS simhash
-            |       FROM bits GROUP BY doc_id)
+    Some(s"""WITH ${sqlPortableSimHash("documents WHERE doc_id % 4 = 0")}
             |SELECT doc_id, simhash FROM sh ORDER BY doc_id""".stripMargin))
 
   /** Hamming-distance near-dup PAIRS over the portable SimHash, under
@@ -670,18 +714,7 @@ object TextQueries {
             |  SELECT doc_id + (SELECT MAX(doc_id) + 1 FROM documents) AS doc_id,
             |         text || ' zzqx vvky zzqx' AS text
             |  FROM documents WHERE doc_id % 20 = 0),
-            |n AS (SELECT doc_id, $sqlNormalize AS nt FROM base),
-            |tok AS (SELECT doc_id, unnest(regexp_split_to_array(nt, '\\s+')) AS w FROM n),
-            |th AS (SELECT doc_id,
-            |         CAST(('0x' || substr(md5(w), 1, 15)) AS UBIGINT) AS h FROM tok),
-            |bits AS (SELECT doc_id, i,
-            |           SUM(CASE WHEN (h >> i) & 1 = 1 THEN 1 ELSE -1 END) AS c
-            |         FROM th CROSS JOIN (SELECT unnest(generate_series(0, 59)) AS i) ii
-            |         GROUP BY doc_id, i),
-            |sh AS (SELECT doc_id,
-            |         CAST(SUM(CASE WHEN c > 0
-            |           THEN CAST(1 AS BIGINT) << i ELSE 0 END) AS BIGINT) AS simhash
-            |       FROM bits GROUP BY doc_id)
+            |${sqlPortableSimHash("base")}
             |SELECT a.doc_id AS id1, b.doc_id AS id2,
             |  CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
             |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
@@ -715,34 +748,13 @@ object TextQueries {
         k = 2, nHashes = 16, bands = 4, minEstJaccard = 0.5)
         .orderBy("id1", "id2")
     },
-    Some("""WITH docs AS (
+    Some(s"""WITH docs AS (
            |  SELECT doc_id, text FROM documents WHERE doc_id % 4 = 0
            |  UNION ALL
            |  SELECT doc_id + (SELECT MAX(doc_id) + 1 FROM documents) AS doc_id,
            |         text || ' zzqx' AS text
            |  FROM documents WHERE doc_id % 20 = 0),
-           |tok AS (SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS w,
-           |        generate_subscripts(regexp_split_to_array(trim(text), '\s+'), 1) AS i FROM docs),
-           |sh AS (SELECT DISTINCT a.doc_id, a.w || ' ' || b.w AS s
-           |       FROM tok a JOIN tok b ON b.doc_id = a.doc_id AND b.i = a.i + 1),
-           |hs AS (SELECT doc_id, i,
-           |         MIN(CAST(('0x' || substr(md5(CAST(i AS VARCHAR) || ':' || s), 1, 15)) AS UBIGINT)) AS mh
-           |       FROM sh CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS i) ii
-           |       GROUP BY doc_id, i),
-           |bands AS (SELECT doc_id, i // 4 AS band_id,
-           |            md5(string_agg(CAST(mh AS VARCHAR), ',' ORDER BY i)) AS band_sig
-           |          FROM hs GROUP BY doc_id, i // 4),
-           |pairs AS (SELECT DISTINCT l.doc_id AS id1, r.doc_id AS id2
-           |          FROM bands l JOIN bands r
-           |            ON l.band_id = r.band_id AND l.band_sig = r.band_sig
-           |               AND l.doc_id < r.doc_id),
-           |est AS (SELECT p.id1, p.id2,
-           |          round(CAST(SUM(CASE WHEN a.mh = b.mh THEN 1 ELSE 0 END) AS DOUBLE) / 16, 6)
-           |            AS est_jaccard
-           |        FROM pairs p
-           |        JOIN hs a ON a.doc_id = p.id1
-           |        JOIN hs b ON b.doc_id = p.id2 AND b.i = a.i
-           |        GROUP BY 1, 2)
+           |${sqlPortableMinHash(Seq("" -> "docs"), "id1", "id2")}
            |SELECT id1, id2, est_jaccard FROM est
            |WHERE est_jaccard >= 0.5 ORDER BY id1, id2""".stripMargin))
 
@@ -772,41 +784,10 @@ object TextQueries {
           col("est_jaccard"))
         .orderBy("doc_id", "bench_id")
     },
-    Some("""WITH corpus AS (SELECT doc_id, text FROM documents WHERE doc_id % 4 = 0),
+    Some(s"""WITH corpus AS (SELECT doc_id, text FROM documents WHERE doc_id % 4 = 0),
            |bench AS (SELECT doc_id, text || ' zzqx' AS text FROM documents
            |          WHERE doc_id % 20 = 0),
-           |ctok AS (SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS w,
-           |        generate_subscripts(regexp_split_to_array(trim(text), '\s+'), 1) AS i FROM corpus),
-           |btok AS (SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS w,
-           |        generate_subscripts(regexp_split_to_array(trim(text), '\s+'), 1) AS i FROM bench),
-           |csh AS (SELECT DISTINCT a.doc_id, a.w || ' ' || b.w AS s
-           |        FROM ctok a JOIN ctok b ON b.doc_id = a.doc_id AND b.i = a.i + 1),
-           |bsh AS (SELECT DISTINCT a.doc_id, a.w || ' ' || b.w AS s
-           |        FROM btok a JOIN btok b ON b.doc_id = a.doc_id AND b.i = a.i + 1),
-           |chs AS (SELECT doc_id, i,
-           |          MIN(CAST(('0x' || substr(md5(CAST(i AS VARCHAR) || ':' || s), 1, 15)) AS UBIGINT)) AS mh
-           |        FROM csh CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS i) ii
-           |        GROUP BY doc_id, i),
-           |bhs AS (SELECT doc_id, i,
-           |          MIN(CAST(('0x' || substr(md5(CAST(i AS VARCHAR) || ':' || s), 1, 15)) AS UBIGINT)) AS mh
-           |        FROM bsh CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS i) ii
-           |        GROUP BY doc_id, i),
-           |cbands AS (SELECT doc_id, i // 4 AS band_id,
-           |             md5(string_agg(CAST(mh AS VARCHAR), ',' ORDER BY i)) AS band_sig
-           |           FROM chs GROUP BY doc_id, i // 4),
-           |bbands AS (SELECT doc_id, i // 4 AS band_id,
-           |             md5(string_agg(CAST(mh AS VARCHAR), ',' ORDER BY i)) AS band_sig
-           |           FROM bhs GROUP BY doc_id, i // 4),
-           |pairs AS (SELECT DISTINCT l.doc_id AS doc_id, r.doc_id AS bench_id
-           |          FROM cbands l JOIN bbands r
-           |            ON l.band_id = r.band_id AND l.band_sig = r.band_sig),
-           |est AS (SELECT p.doc_id, p.bench_id,
-           |          round(CAST(SUM(CASE WHEN a.mh = b.mh THEN 1 ELSE 0 END) AS DOUBLE) / 16, 6)
-           |            AS est_jaccard
-           |        FROM pairs p
-           |        JOIN chs a ON a.doc_id = p.doc_id
-           |        JOIN bhs b ON b.doc_id = p.bench_id AND b.i = a.i
-           |        GROUP BY 1, 2)
+           |${sqlPortableMinHash(Seq("c" -> "corpus", "b" -> "bench"), "doc_id", "bench_id")}
            |SELECT doc_id, bench_id, est_jaccard FROM est
            |WHERE est_jaccard >= 0.5 ORDER BY doc_id, bench_id""".stripMargin))
 
@@ -887,22 +868,9 @@ object TextQueries {
         .select(col("id").as("doc_id"), col("cluster_id"), col("fold"))
         .orderBy("doc_id")
     },
-    Some("""WITH RECURSIVE
-           |tok AS (SELECT doc_id,
-           |    unnest(list_distinct(regexp_split_to_array(trim(text), '\s+'))) AS t
-           |  FROM documents WHERE doc_id % 5 = 0),
-           |sz AS (SELECT doc_id, COUNT(*) AS n FROM tok GROUP BY doc_id),
-           |i AS (SELECT a.doc_id AS id1, b.doc_id AS id2, COUNT(*) AS inter
-           |      FROM tok a JOIN tok b ON a.t = b.t AND a.doc_id < b.doc_id
-           |      GROUP BY 1, 2),
-           |p AS (SELECT id1, id2
-           |      FROM i JOIN sz n1 ON id1 = n1.doc_id JOIN sz n2 ON id2 = n2.doc_id
-           |      WHERE 5 * inter >= 4 * (n1.n + n2.n - inter)),
-           |bi(a, b) AS (SELECT id1, id2 FROM p UNION SELECT id2, id1 FROM p),
-           |walk(id, l) AS (SELECT doc_id, doc_id FROM documents
-           |  WHERE doc_id % 5 = 0
-           |  UNION SELECT bi.b, walk.l FROM walk JOIN bi ON bi.a = walk.id),
-           |lbl AS (SELECT id AS doc_id, MIN(l) AS cluster_id FROM walk GROUP BY id)
+    Some(s"""WITH RECURSIVE
+           |$sqlTokenJaccard,
+           |${GraphQueries.sqlClosure("e", "documents WHERE doc_id % 5 = 0", "doc_id")}
            |SELECT doc_id, cluster_id,
            |  ('0x' || substr(md5('graft' || CAST(cluster_id AS VARCHAR)), 1, 15))::UBIGINT
            |    % 5 AS fold
@@ -1246,18 +1214,8 @@ object TextQueries {
         .orderBy("doc_id")
     },
     Some(s"""WITH RECURSIVE d AS (SELECT * FROM documents WHERE doc_id % 5 = 0),
-            |tok AS (SELECT doc_id, unnest(list_distinct($sqlTokArr)) AS t FROM d),
-            |sz AS (SELECT doc_id, COUNT(*) AS n FROM tok GROUP BY doc_id),
-            |i AS (SELECT a.doc_id AS id1, b.doc_id AS id2, COUNT(*) AS inter
-            |      FROM tok a JOIN tok b ON a.t = b.t AND a.doc_id < b.doc_id
-            |      GROUP BY 1, 2),
-            |e AS (SELECT id1, id2
-            |      FROM i JOIN sz n1 ON id1 = n1.doc_id JOIN sz n2 ON id2 = n2.doc_id
-            |      WHERE 5 * inter >= 4 * (n1.n + n2.n - inter)),
-            |bi(a, b) AS (SELECT id1, id2 FROM e UNION SELECT id2, id1 FROM e),
-            |walk(id, l) AS (SELECT doc_id, doc_id FROM d
-            |  UNION SELECT bi.b, walk.l FROM walk JOIN bi ON bi.a = walk.id),
-            |lbl AS (SELECT id AS doc_id, MIN(l) AS cluster_id FROM walk GROUP BY id),
+            |$sqlTokenJaccard,
+            |${GraphQueries.sqlClosure("e", "d", "doc_id")},
             |q AS (SELECT doc_id, $sqlQuality AS quality FROM d),
             |r AS (SELECT lbl.doc_id, cluster_id, quality,
             |    ROW_NUMBER() OVER (PARTITION BY cluster_id

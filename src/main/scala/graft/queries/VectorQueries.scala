@@ -14,6 +14,11 @@ object VectorQueries {
 
   private val sqlCos =
     "list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))"
+  /** semanticDedup's output over the closure of edge CTE `e` on nodes `s`. */
+  private val sqlKeptAs =
+    s"""${GraphQueries.sqlClosure("e", "s", "vec_id")}
+       |SELECT vec_id AS id, cluster_id AS kept_as, vec_id = cluster_id AS is_kept
+       |FROM lbl ORDER BY id""".stripMargin
 
   /** Exact brute-force cosine top-5 for a query subset — the ANN
     * exactness baseline. Queries broadcast; corpus scanned once. */
@@ -222,13 +227,10 @@ object VectorQueries {
     },
     Some(s"""WITH RECURSIVE
             |s AS (SELECT * FROM embeddings WHERE vec_id % 5 = 0),
-            |e(a, b) AS (SELECT a.vec_id, b.vec_id
+            |e(id1, id2) AS (SELECT a.vec_id, b.vec_id
             |  FROM s a JOIN s b ON a.vec_id < b.vec_id
             |  WHERE $sqlCos >= 0.3),
-            |bi(a, b) AS (SELECT a, b FROM e UNION SELECT b, a FROM e),
-            |walk(id, l) AS (SELECT vec_id, vec_id FROM s
-            |  UNION SELECT bi.b, walk.l FROM walk JOIN bi ON bi.a = walk.id),
-            |lbl AS (SELECT id, MIN(l) AS cluster_id FROM walk GROUP BY id)
+            |${GraphQueries.sqlClosure("e", "s", "vec_id")}
             |SELECT cluster_id, COUNT(*) AS n_members
             |FROM lbl GROUP BY cluster_id ORDER BY cluster_id""".stripMargin))
 
@@ -281,15 +283,10 @@ object VectorQueries {
     },
     Some(s"""WITH RECURSIVE
             |s AS (SELECT * FROM embeddings WHERE vec_id % 4 = 0),
-            |e(a, b) AS (SELECT a.vec_id, b.vec_id
+            |e(id1, id2) AS (SELECT a.vec_id, b.vec_id
             |  FROM s a JOIN s b ON a.vec_id < b.vec_id
             |  WHERE $sqlCos >= 0.25),
-            |bi(a, b) AS (SELECT a, b FROM e UNION SELECT b, a FROM e),
-            |walk(id, l) AS (SELECT vec_id, vec_id FROM s
-            |  UNION SELECT bi.b, walk.l FROM walk JOIN bi ON bi.a = walk.id),
-            |lbl AS (SELECT id, MIN(l) AS kept_as FROM walk GROUP BY id)
-            |SELECT id, kept_as, id = kept_as AS is_kept
-            |FROM lbl ORDER BY id""".stripMargin))
+            |$sqlKeptAs""".stripMargin))
 
   /** SEMANTIC DEDUP, BANDED KERNEL (the 100 TB path): same contraction
     * and output contract as sd01, but edges come from
@@ -325,15 +322,10 @@ object VectorQueries {
             |  SELECT vec_id + 100000000,
             |    list_transform(embedding, x -> CAST(x * 2 AS FLOAT))
             |  FROM base),
-            |e(a, b) AS (SELECT a.vec_id, b.vec_id
+            |e(id1, id2) AS (SELECT a.vec_id, b.vec_id
             |  FROM s a JOIN s b ON a.vec_id < b.vec_id
             |  WHERE $sqlCos >= 0.9),
-            |bi(a, b) AS (SELECT a, b FROM e UNION SELECT b, a FROM e),
-            |walk(id, l) AS (SELECT vec_id, vec_id FROM s
-            |  UNION SELECT bi.b, walk.l FROM walk JOIN bi ON bi.a = walk.id),
-            |lbl AS (SELECT id, MIN(l) AS kept_as FROM walk GROUP BY id)
-            |SELECT id, kept_as, id = kept_as AS is_kept
-            |FROM lbl ORDER BY id""".stripMargin))
+            |$sqlKeptAs""".stripMargin))
 
   /** EMBEDDING-COLUMN PROFILE (per-dimension mean/variance/min/max —
     * the dead-dimension and scale-drift audit run before any index

@@ -28,9 +28,7 @@ object FuzzyJoin {
   def pairsWithin1(df: DataFrame, idCol: String, strCol: String): DataFrame = {
     val sigs = df.select(col(idCol).as("id"), col(strCol).as("s"),
       explode(signatures(strCol)).as("sig"))
-    val l = sigs.select(col("id").as("id1"), col("s").as("s1"), col("sig"))
-    val r = sigs.select(col("id").as("id2"), col("s").as("s2"), col("sig"))
-    l.join(r, Seq("sig")).filter(col("id1") < col("id2"))
+    graft.util.Blocking.selfPairs(sigs, Seq("sig"))
       .select("id1", "id2", "s1", "s2").dropDuplicates("id1", "id2")
       .withColumn("dist", levenshtein(col("s1"), col("s2")).cast("long"))
       .filter(col("dist") <= 1)

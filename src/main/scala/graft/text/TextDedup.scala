@@ -1,9 +1,9 @@
 package graft.text
 
+import graft.util.Blocking
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 /** Document deduplication for training-data pipelines: exact (hash),
   * n-gram Jaccard, MinHash+LSH, SimHash.
@@ -22,6 +22,8 @@ import org.apache.spark.sql.types.LongType
   *  - SimHash: 64-bit weighted-token fingerprint; near-dups = hamming
   *    distance ≤ k found by (k+1)-chunk blocking (pigeonhole: any pair
   *    within hamming k agrees on ≥1 chunk).
+  *
+  * Banding and pair orientation come from [[graft.util.Blocking]].
   */
 object TextDedup {
 
@@ -35,16 +37,13 @@ object TextDedup {
   /** Exact dedup: keep the min-id document per fingerprint (ids must
     * be unique, as in every caller).
     *
-    * SKEW (r13): this was a row_number window partitioned by
-    * fingerprint — a duplicate-heavy corpus (one doc exactly copied
-    * into 20% of the corpus = one hot fingerprint) lands 20% of the
-    * rows, full text riding, in a single window task that no AQE rule
-    * can split. The groupBy(min) form is skew-immune — partial
-    * aggregation collapses the hot fingerprint to one row PER INPUT
-    * PARTITION before the shuffle — and the keep-set joins back
-    * left-semi on the UNIQUE id, a uniformly-distributed key.
-    * Measured on the 20%-hot-fingerprint probe (graft.SkewProbe):
-    * see NOTES_r13. */
+    * Skew-immune by construction: partial aggregation collapses a hot
+    * fingerprint (one doc copied into 20% of the corpus) to one row PER
+    * INPUT PARTITION before the shuffle, and the keep-set joins back
+    * left-semi on the UNIQUE id, a uniformly-distributed key. A window
+    * partitioned by fingerprint would instead land every copy, full
+    * text riding, in one task no AQE rule can split; graft.SkewProbe
+    * times the two shapes on a 20%-hot-fingerprint corpus. */
   def exactDedup(docs: DataFrame, idCol: String = "doc_id",
                  textCol: String = "text"): DataFrame = {
     val keep = docs
@@ -95,9 +94,7 @@ object TextDedup {
         sh.join(dfCounts.select("s"), Seq("s"))
       }
     val sizes = kept.groupBy("id").agg(count(lit(1)).as("n"))
-    val a = kept.select(col("id").as("id1"), col("s"))
-    val b = kept.select(col("id").as("id2"), col("s"))
-    val inter = a.join(b, Seq("s")).filter(col("id1") < col("id2"))
+    val inter = Blocking.selfPairs(kept, Seq("s"))
       .groupBy("id1", "id2").agg(count(lit(1)).as("inter"))
     inter
       .join(sizes.select(col("id").as("id1"), col("n").as("n1")), Seq("id1"))
@@ -143,12 +140,9 @@ object TextDedup {
                          textCol: String = "text"): DataFrame = {
     require(num > 0 && num <= den, "threshold must be in (0, 1]")
     // distinct tokens per doc; feeds df-count, prefixes, and both
-    // verification sides — one materialization. The set size n rides
-    // along SCAN-SIDE (r16, guide §1.2 step 2): it is just the length
-    // of the distinct-token array, known before the explode — the old
-    // count().over(partitionBy(id)) window recomputed it from the
-    // exploded stream, adding a second Window operator to every
-    // consumer of `ranked` for a value the scan already had.
+    // verification sides — one materialization. The set size n is the
+    // length of the distinct-token array, computed scan-side before the
+    // explode, so no window over the exploded stream is needed for it.
     val tok = docs.select(col(idCol).as("id"),
         array_distinct(TextFunctions.tokens(col(textCol))).as("__ts"))
       .select(col("id"), size(col("__ts")).cast("long").as("n"),
@@ -158,23 +152,16 @@ object TextDedup {
     val ranked = tok.join(dfc, "t")
       .withColumn("r", row_number().over(
         Window.partitionBy("id").orderBy(col("df"), col("t"))))
-    // prefix length n − ⌈τn⌉ + 1, integer-exact. Persisted (r16): the
-    // candidate self-join references this frame TWICE, and without the
-    // persist the whole df-join + rank-window subtree is planned (and
-    // executed) once per side — broadcast-hash self-joins get no
-    // ReusedExchange dedup. The frame is small by construction
-    // (prefix tokens only, ≈(1−τ)·|tok| rows).
+    // prefix length n − ⌈τn⌉ + 1, integer-exact. The frame is small by
+    // construction (prefix tokens only, ≈(1−τ)·|tok| rows).
     val prefix = ranked.filter(
         col("r") <= col("n") - expr(s"($num * n + ${den - 1}) div $den") + lit(1))
       .select(col("id"), col("t"), col("n"))
     // candidates: a shared PREFIX token + the length condition
     // (den·min(n1,n2) ≥ num·max — sizes too far apart can't reach τ)
-    val cand = prefix.as("p1").join(prefix.as("p2"),
-        col("p1.t") === col("p2.t") && col("p1.id") < col("p2.id") &&
-          lit(den) * least(col("p1.n"), col("p2.n")) >=
-            lit(num) * greatest(col("p1.n"), col("p2.n")))
-      .select(col("p1.id").as("id1"), col("p2.id").as("id2"),
-        col("p1.n").as("n1"), col("p2.n").as("n2"))
+    val cand = Blocking.selfPairs(prefix, Seq("t"))
+      .filter(lit(den) * least(col("n1"), col("n2")) >= lit(num) * greatest(col("n1"), col("n2")))
+      .select("id1", "id2", "n1", "n2")
       .dropDuplicates("id1", "id2")
     // exact verification: fan candidates out by id1's tokens, keep the
     // ones id2 also has — |A∩B| — then the integer threshold test
@@ -225,7 +212,6 @@ object TextDedup {
                         idCol: String = "doc_id", textCol: String = "text",
                         maxShingleDf: Int = Int.MaxValue): DataFrame = {
     require(nHashes % bands == 0)
-    val rowsPerBand = nHashes / bands
     // The signature table is referenced three times (banding + both
     // sides of the est-jaccard join); materialize it once — at corpus
     // scale an LSH signature table is a first-class artifact (~256 B/doc),
@@ -252,44 +238,80 @@ object TextDedup {
         .groupBy("id").agg(collect_list(col("s")).as("hs"))
         .select(col("id"), MinHashesExpr.minhashes(col("hs"), nHashes).as("sig"))
     }).transform(org.apache.spark.sql.graftbridge.GraftSqlBridge.sharedInPlan)
-    val banded = sigs.withColumn("band", explode(array((0 until bands).map(bId =>
-      struct(lit(bId).as("band_id"),
-        xxhash64(lit(bId) +: (0 until rowsPerBand)
-          .map(r => element_at(col("sig"), bId * rowsPerBand + r + 1)): _*)
-          .as("band_sig"))): _*)))
-      .select(col("id"), col("band.band_id").as("band_id"),
-        col("band.band_sig").as("band_sig"))
+    val banded = minHashBands(sigs, nHashes, bands)
     val rawPairs = pairing match {
-      case AllPairs =>
-        val l = banded.select(col("id").as("id1"), col("band_id"), col("band_sig"))
-        val r = banded.select(col("id").as("id2"), col("band_id"), col("band_sig"))
-        l.join(r, Seq("band_id", "band_sig")).filter(col("id1") < col("id2"))
-      case Star =>
-        // SKEW (r13): the bucket min was a window over (band_id,
-        // band_sig) — a duplicate-heavy corpus concentrates one hot
-        // bucket per band (B near-identical docs agree in EVERY band)
-        // and the window sorts all B rows in one task. groupBy(min) is
-        // the skew-immune form (map-side combine collapses the hot
-        // bucket per input partition), and the join back is a plain
-        // shuffled equi-join AQE's skew rule CAN split. Same output:
-        // each member pairs with its bucket's min id.
-        val mins = banded.groupBy("band_id", "band_sig")
-          .agg(min(col("id")).as("id1"))
-        banded.join(mins, Seq("band_id", "band_sig"))
-          .filter(col("id") =!= col("id1"))
-          .select(col("id1"), col("id").as("id2"))
+      case AllPairs => Blocking.selfPairs(banded, Seq("band_id", "band_val"))
+      case Star => starPairs(banded)
     }
-    val pairs = rawPairs.select("id1", "id2").dropDuplicates("id1", "id2")
+    estimated(rawPairs.select("id1", "id2").dropDuplicates("id1", "id2"),
+      sigs, sigs, nHashes, minEstJaccard, rounded = false)
+  }
+
+  /** [[Star]] pairing of (id, band_id, band_val) rows: each bucket
+    * member pairs with the bucket's min id, as (id1, id2).
+    *
+    * Skew-immune: a duplicate-heavy corpus puts one hot bucket in every
+    * band (B near-identical docs agree on all of them). groupBy(min)
+    * collapses it map-side per input partition, and the join back is a
+    * plain shuffled equi-join AQE's skew rule can split; a min window
+    * over the bucket would sort all B rows in one task. */
+  private[graft] def starPairs(banded: DataFrame): DataFrame = {
+    val mins = banded.groupBy("band_id", "band_val").agg(min(col("id")).as("id1"))
+    banded.join(mins, Seq("band_id", "band_val"))
+      .filter(col("id") =!= col("id1"))
+      .select(col("id1"), col("id").as("id2"))
+  }
+
+  /** (id, band_id, band_val): the band values of [[minHashCandidates]]
+    * — band b is xxhash64 of b and minhashes [b·r, (b+1)·r),
+    * r = nHashes / bands. */
+  private[graft] def minHashBands(sigs: DataFrame, nHashes: Int, bands: Int): DataFrame =
+    bandsOf(sigs, nHashes, bands)((b, hs) => xxhash64(lit(b) +: hs: _*))
+
+  /** (id, band_id, band_val) for `sig` cut into `bands` runs of
+    * nHashes / bands minhashes, each run reduced to one value by
+    * `digest(band_id, run)`. */
+  private def bandsOf(sigs: DataFrame, nHashes: Int, bands: Int)(
+      digest: (Int, Seq[Column]) => Column): DataFrame = {
+    val r = nHashes / bands
+    Blocking.bands(sigs, Seq("id"), (0 until bands).map(b =>
+      digest(b, (0 until r).map(i => element_at(col("sig"), b * r + i + 1)))))
+  }
+
+  /** Joins both signatures back onto the (id1, id2) `pairs` by id —
+    * after pair dedup, so wide rows never ride the pair shuffle — and
+    * keeps pairs whose estimated Jaccard (the fraction of equal
+    * minhashes, rounded to 6 places when `rounded`) is ≥ `minEst`. */
+  private def estimated(pairs: DataFrame, left: DataFrame, right: DataFrame,
+                        nHashes: Int, minEst: Double, rounded: Boolean): DataFrame = {
+    val est = aggregate(zip_with(col("sig1"), col("sig2"),
+      (x, y) => when(x === y, 1).otherwise(0)),
+      lit(0), (acc, e) => acc + e).cast("double") / nHashes
     pairs
-      .join(sigs.select(col("id").as("id1"), col("sig").as("sig1")), Seq("id1"))
-      .join(sigs.select(col("id").as("id2"), col("sig").as("sig2")), Seq("id2"))
-      .withColumn("est_jaccard",
-        aggregate(zip_with(col("sig1"), col("sig2"),
-          (x, y) => when(x === y, 1).otherwise(0)),
-          lit(0), (acc, e) => acc + e).cast("double") / nHashes)
-      .filter(col("est_jaccard") >= minEstJaccard)
+      .join(left.select(col("id").as("id1"), col("sig").as("sig1")), Seq("id1"))
+      .join(right.select(col("id").as("id2"), col("sig").as("sig2")), Seq("id2"))
+      .withColumn("est_jaccard", if (rounded) round(est, 6) else est)
+      .filter(col("est_jaccard") >= minEst)
       .select("id1", "id2", "est_jaccard")
   }
+
+  /** (id, sig) portable md5-permutation signatures — shared by the
+    * self-join and cross-corpus portable candidate generators. */
+  private def portableSigs(docs: DataFrame, k: Int, nHashes: Int,
+                           idCol: String, textCol: String): DataFrame =
+    docs
+      .select(col(idCol).as("id"), TextFunctions.shingles(col(textCol), k).as("__sh"))
+      .filter(size(col("__sh")) > 0)
+      .select(col("id"), array((0 until nHashes).map(i =>
+        array_min(transform(col("__sh"), s =>
+          portableTokenHash(concat(lit(s"$i:"), s))))): _*).as("sig"))
+      .transform(org.apache.spark.sql.graftbridge.GraftSqlBridge.sharedInPlan)
+
+  /** (id, band_id, band_val): md5 over the comma-joined minhashes of
+    * each band of [[portableSigs]] output. */
+  private def portableBands(sigs: DataFrame, nHashes: Int, bands: Int): DataFrame =
+    bandsOf(sigs, nHashes, bands)((_, hs) =>
+      md5(concat_ws(",", hs.map(_.cast("string")): _*)))
 
   /** PORTABLE MinHash+LSH candidates — the value-exact, SQL-replayable
     * sibling of [[minHashCandidates]] (the dd09 move applied to
@@ -306,55 +328,16 @@ object TextDedup {
     * strings); this variant is the cross-engine verification harness,
     * same algebra at ~md5 cost. AllPairs pairing: exhaustive within
     * buckets, the form an oracle replays directly. */
-  /** (id, sig) portable md5-permutation signatures — shared by the
-    * self-join and cross-corpus portable candidate generators. */
-  private def portableSigs(docs: DataFrame, k: Int, nHashes: Int,
-                           idCol: String, textCol: String): DataFrame =
-    docs
-      .select(col(idCol).as("id"), TextFunctions.shingles(col(textCol), k).as("__sh"))
-      .filter(size(col("__sh")) > 0)
-      .select(col("id"), array((0 until nHashes).map(i =>
-        array_min(transform(col("__sh"), s =>
-          conv(substring(md5(concat(lit(s"$i:"), s)), 1, 15), 16, 10)
-            .cast(LongType)))): _*).as("sig"))
-
-  /** (id, band_id, band_sig) banded form of [[portableSigs]] output. */
-  private def portableBands(sigs: DataFrame, nHashes: Int,
-                            bands: Int): DataFrame = {
-    val rowsPerBand = nHashes / bands
-    sigs.withColumn("band", explode(array((0 until bands).map(b =>
-      struct(lit(b).as("band_id"),
-        md5(concat_ws(",", (0 until rowsPerBand).map(r =>
-          element_at(col("sig"), b * rowsPerBand + r + 1).cast("string")): _*))
-          .as("band_sig"))): _*)))
-      .select(col("id"), col("band.band_id"), col("band.band_sig"))
-  }
-
-  /** Per-pair estimated Jaccard = fraction of agreeing minhashes. */
-  private def estJaccard(nHashes: Int): Column = round(
-    aggregate(zip_with(col("sig1"), col("sig2"),
-      (x, y) => when(x === y, 1).otherwise(0)),
-      lit(0), (acc, e) => acc + e).cast("double") / nHashes, 6)
-
   def portableMinHashCandidates(docs: DataFrame, k: Int = 2, nHashes: Int = 16,
                                 bands: Int = 4, minEstJaccard: Double = 0.5,
                                 idCol: String = "doc_id",
                                 textCol: String = "text"): DataFrame = {
     require(nHashes % bands == 0)
     val sigs = portableSigs(docs, k, nHashes, idCol, textCol)
-      .transform(org.apache.spark.sql.graftbridge.GraftSqlBridge.sharedInPlan)
-    val banded = portableBands(sigs, nHashes, bands)
-    val pairs = banded.select(col("id").as("id1"), col("band_id"), col("band_sig"))
-      .join(banded.select(col("id").as("id2"), col("band_id"), col("band_sig")),
-        Seq("band_id", "band_sig"))
-      .filter(col("id1") < col("id2"))
+    val pairs = Blocking.selfPairs(portableBands(sigs, nHashes, bands),
+        Seq("band_id", "band_val"))
       .select("id1", "id2").dropDuplicates("id1", "id2")
-    pairs
-      .join(sigs.select(col("id").as("id1"), col("sig").as("sig1")), Seq("id1"))
-      .join(sigs.select(col("id").as("id2"), col("sig").as("sig2")), Seq("id2"))
-      .withColumn("est_jaccard", estJaccard(nHashes))
-      .filter(col("est_jaccard") >= minEstJaccard)
-      .select("id1", "id2", "est_jaccard")
+    estimated(pairs, sigs, sigs, nHashes, minEstJaccard, rounded = true)
   }
 
   /** CROSS-corpus portable MinHash candidates: left (corpus) × right
@@ -374,21 +357,12 @@ object TextDedup {
                                      textCol: String = "text"): DataFrame = {
     require(nHashes % bands == 0)
     val ls = portableSigs(left, k, nHashes, idCol, textCol)
-      .transform(org.apache.spark.sql.graftbridge.GraftSqlBridge.sharedInPlan)
     val rs = portableSigs(right, k, nHashes, idCol, textCol)
-      .transform(org.apache.spark.sql.graftbridge.GraftSqlBridge.sharedInPlan)
-    val pairs = portableBands(ls, nHashes, bands)
-      .select(col("id").as("id1"), col("band_id"), col("band_sig"))
-      .join(portableBands(rs, nHashes, bands)
-        .select(col("id").as("id2"), col("band_id"), col("band_sig")),
-        Seq("band_id", "band_sig"))
+    def banded(sigs: DataFrame, id: String) = portableBands(sigs, nHashes, bands)
+      .select(col("id").as(id), col("band_id"), col("band_val"))
+    val pairs = banded(ls, "id1").join(banded(rs, "id2"), Seq("band_id", "band_val"))
       .select("id1", "id2").dropDuplicates("id1", "id2")
-    pairs
-      .join(ls.select(col("id").as("id1"), col("sig").as("sig1")), Seq("id1"))
-      .join(rs.select(col("id").as("id2"), col("sig").as("sig2")), Seq("id2"))
-      .withColumn("est_jaccard", estJaccard(nHashes))
-      .filter(col("est_jaccard") >= minEstJaccard)
-      .select("id1", "id2", "est_jaccard")
+    estimated(pairs, ls, rs, nHashes, minEstJaccard, rounded = true)
   }
 
   /** SEGMENT-level dedup with order-preserving document reassembly —
@@ -412,15 +386,12 @@ object TextDedup {
                           textCol: String = "text"): DataFrame = {
     require(segTokens > 0)
     val segs = segmented(docs, segTokens, idCol, textCol)
-    // SKEW (r13): first-occurrence-per-segment was a row_number window
-    // partitioned by segment content — a boilerplate-heavy corpus (one
-    // hot segment in 20% of documents) put all its copies in one
-    // window task. min(struct(doc_id, idx)) per segment is the SAME
-    // "first by (doc_id, idx)" choice (lexicographic struct ordering)
-    // as ONE skew-immune partial aggregate, and the kept row is
-    // reconstructed from the aggregate output directly — no join, no
-    // window, no sort. Measured on the hot-segment probe
-    // (graft.SkewProbe): see NOTES_r13.
+    // Skew-immune: min(struct(doc_id, idx)) per segment is the "first
+    // by (doc_id, idx)" choice (lexicographic struct ordering) as ONE
+    // partial aggregate, so a boilerplate segment in 20% of documents
+    // collapses map-side instead of landing in one window task; the
+    // kept row comes straight from the aggregate output — no join, no
+    // window, no sort. graft.SkewProbe times it against the window.
     val kept = segs.groupBy("s")
       .agg(min(struct(col("doc_id"), col("idx"))).as("__first"))
       .select(col("__first.doc_id").as("doc_id"),
@@ -536,22 +507,14 @@ object TextDedup {
     require(64 % nChunks == 0,
       s"maxHamming+1 must divide 64 (got $nChunks); use 1, 3, 7, 15 or 31 — " +
         "the pigeonhole blocking needs chunks to partition all 64 bits")
-    val chunkBits = 64 / nChunks
     // referenced by both sides of the chunk self-join — materialize once
     val sigs = withSimHash(docs, idCol, textCol, tokenHash)
       .transform(org.apache.spark.sql.graftbridge.GraftSqlBridge.sharedInPlan)
-    val chunked = sigs.withColumn("chunk", explode(array((0 until nChunks).map(cId =>
-      struct(lit(cId).as("chunk_id"),
-        shiftright(col("simhash"), cId * chunkBits)
-          .bitwiseAND(lit((1L << chunkBits) - 1)).as("chunk_val"))): _*)))
-      .select(col("id"), col("simhash"), col("chunk.chunk_id"), col("chunk.chunk_val"))
-    val l = chunked.select(col("id").as("id1"), col("simhash").as("sh1"),
-      col("chunk_id"), col("chunk_val"))
-    val r = chunked.select(col("id").as("id2"), col("simhash").as("sh2"),
-      col("chunk_id"), col("chunk_val"))
-    l.join(r, Seq("chunk_id", "chunk_val")).filter(col("id1") < col("id2"))
+    val chunks = Blocking.packed(col("simhash"), nChunks, 64 / nChunks)
+    Blocking.selfPairs(Blocking.bands(sigs, Seq("id", "simhash"), chunks),
+        Seq("band_id", "band_val"))
       .dropDuplicates("id1", "id2")
-      .withColumn("hamming", bit_count(col("sh1").bitwiseXOR(col("sh2"))))
+      .withColumn("hamming", bit_count(col("simhash1").bitwiseXOR(col("simhash2"))))
       .filter(col("hamming") <= maxHamming)
       .select("id1", "id2", "hamming")
   }

@@ -1,5 +1,6 @@
 package graft.vector
 
+import graft.util.Blocking
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -19,21 +20,36 @@ import org.apache.spark.sql.types.DoubleType
   *    per query instead of the full corpus. Recall measured in tests.
   *  - `nearDupPairs` restricts to a probe subset (all-pairs at corpus
   *    scale is quadratic; callers shard the probe side or use LSH
-  *    blocking via `lshNearDupPairs`).
+  *    blocking via `bandedNearDupPairs`).
+  *
+  * Banding, band pairing and the emit-once test come from
+  * [[graft.util.Blocking]].
   */
 object SimilaritySearch {
 
-  /** Per-query top-k over a scored candidate stream via [[graft.topk.TopKAgg]]
-    * (value DESC, tag ASC — identical selection and tie-break to
-    * `row_number() OVER (PARTITION BY query_id ORDER BY sim_r DESC,
-    * neighbor_id) <= k`, which this replaced). The windowed form SORTS
-    * the whole stream — at sf10 the brute-force side's queries×corpus
-    * scored rows became a spilling SMJ sort that once filled the disk;
-    * the heap form combines map-side (partial aggregation) and ships at
-    * most k pairs per query per partition, so the shuffle is
-    * queries-sized regardless of candidate volume. */
-  private def heapTopK(scored: DataFrame, k: Int): DataFrame =
-    scored.groupBy("query_id")
+  /** (id, `<p>_vec`, `<p>_norm`, extra…) — one side of a scored pair. */
+  private def side(df: DataFrame, idCol: String, vecCol: String, id: String,
+                   p: String, extra: Column*): DataFrame =
+    df.select(Seq(col(idCol).as(id), col(vecCol).as(s"${p}_vec"),
+      VectorFunctions.normSq(col(vecCol)).as(s"${p}_norm")) ++ extra: _*)
+
+  /** Exact cosine between the `l` and `r` sides built by [[side]]. */
+  private def cosine(l: String, r: String): Column =
+    VectorFunctions.cosinePrenormed(
+      VectorFunctions.dot(col(s"${l}_vec"), col(s"${r}_vec")),
+      col(s"${l}_norm"), col(s"${r}_norm"))
+
+  /** Per-query top-k over (query, corpus) pairs, scored by cosine
+    * rounded to 6dp, via [[graft.topk.TopKAgg]] (value DESC, tag ASC —
+    * the selection and tie-break of `row_number() OVER (PARTITION BY
+    * query_id ORDER BY sim_r DESC, neighbor_id) <= k`). The heap
+    * combines map-side (partial aggregation) and ships at most k pairs
+    * per query per partition, so the shuffle is queries-sized whatever
+    * the candidate volume; a rank window would sort the whole scored
+    * stream, which spills to disk at sf10. */
+  private def heapTopK(pairs: DataFrame, k: Int): DataFrame =
+    pairs.withColumn("sim_r", round(cosine("q", "c"), 6))
+      .groupBy("query_id")
       .agg(graft.topk.TopKAgg.top_k(col("sim_r"), col("neighbor_id"), k).as("__top"))
       .select(col("query_id"), posexplode(col("__top")).as(Seq("__pos", "__pair")))
       .select(col("query_id"), (col("__pos") + 1).as("rank"),
@@ -43,35 +59,10 @@ object SimilaritySearch {
     * Output: (query_id, rank, neighbor_id, sim_r) with sim rounded to
     * 6dp and id tie-breaks — deterministic across engines. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"),
-      VectorFunctions.normSq(col(vecCol)).as("c_norm"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"),
-      VectorFunctions.normSq(col(vecCol)).as("q_norm"))
-    val sim = VectorFunctions.cosinePrenormed(
-      VectorFunctions.dot(col("q_vec"), col("c_vec")), col("q_norm"), col("c_norm"))
-    val scored = broadcast(q).join(c, col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim_r", round(sim, 6))
-    heapTopK(scored, k)
-  }
-
-  /** Emit-once band pairing: a pair that agrees on several bands comes
-    * out of the band join once per agreeing band; keeping only the
-    * occurrence from the FIRST agreeing band (computable row-locally
-    * from the two signatures' XOR) makes the candidate set exactly
-    * once-per-pair with NO dropDuplicates shuffle. With capture-sized
-    * banding (nn05's 24 single-bit bands: ~half the corpus agrees on
-    * every band) the dedup shuffle used to carry ~nBands/2 copies of
-    * queries×corpus — the sf10 disk bomb; now the duplicates die in the
-    * join's output iterator before touching a shuffle. */
-  private def firstAgreeingBand(qSig: Column, cSig: Column,
-                                nBands: Int, bandWidth: Int): Column = {
-    val x = qSig.bitwiseXOR(cSig)
-    val agrees = array((0 until nBands).map(b =>
-      shiftright(x, b * bandWidth)
-        .bitwiseAND(lit((1L << bandWidth) - 1)) === 0): _*)
-    array_position(agrees, lit(true)) - 1
-  }
+                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    heapTopK(broadcast(side(queries, idCol, vecCol, "query_id", "q"))
+      .join(side(corpus, idCol, vecCol, "neighbor_id", "c"),
+        col("query_id") =!= col("neighbor_id")), k)
 
   /** LSH-bucketed approximate top-k: candidates must share the signature
     * of at least one of `nBands` bit-bands before scoring.
@@ -82,22 +73,15 @@ object SimilaritySearch {
     * band rows in-stage and hash-joins the broadcast — so candidate
     * generation, the emit-once band filter, scoring, and the partial
     * top-k heap all ride ONE streaming pass over the corpus scan, and
-    * the only shuffle anywhere is the queries-sized heap merge. Two
-    * earlier shapes died at sf10 before this one: the rank-window
-    * top-k (sorts the scored stream — disk-full spill), and pair-id
-    * re-join payloads (shuffles a candidates-sized pair list — with
-    * capture-sized 1-bit bands that is queries×corpus rows of shuffle
-    * write). Each pair is scored exactly once: only its FIRST agreeing
-    * band's copy survives (row-local XOR test), replacing the old
-    * dropDuplicates shuffle. */
+    * the only shuffle anywhere is the queries-sized heap merge. The
+    * payloads ride the band rows, so no candidates-sized pair list is
+    * ever shuffled to re-join them. Each pair is scored exactly once:
+    * only its FIRST agreeing band's copy survives (row-local XOR test),
+    * so no pair-keyed dedup shuffle exists either. */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               nBits: Int = 24, nBands: Int = 6,
-              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val cands = lshCandidates(corpus, queries, nBits, nBands, idCol, vecCol)
-    val sim = VectorFunctions.cosinePrenormed(
-      VectorFunctions.dot(col("q_vec"), col("c_vec")), col("q_norm"), col("c_norm"))
-    heapTopK(cands.withColumn("sim_r", round(sim, 6)), k)
-  }
+              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    heapTopK(lshCandidates(corpus, queries, nBits, nBands, idCol, vecCol), k)
 
   /** The candidate-generation half of [[lshTopK]]: band-agreeing
     * (query, corpus) pairs after the emit-once first-agreeing-band
@@ -107,27 +91,25 @@ object SimilaritySearch {
   private[graft] def lshCandidates(corpus: DataFrame, queries: DataFrame,
                                    nBits: Int, nBands: Int,
                                    idCol: String = "vec_id",
-                                   vecCol: String = "embedding"): DataFrame = {
+                                   vecCol: String = "embedding"): DataFrame =
+    lshCandidates(corpus, queries, VectorFunctions.hyperplaneSignature(col(vecCol), nBits),
+      nBits, nBands, idCol, vecCol)
+
+  /** [[lshCandidates]] over any packed-long signature of `vecCol`. */
+  private def lshCandidates(corpus: DataFrame, queries: DataFrame, sig: Column,
+                            nBits: Int, nBands: Int,
+                            idCol: String, vecCol: String): DataFrame = {
     require(nBits % nBands == 0, "nBits must divide into nBands")
-    val bandWidth = nBits / nBands
-    def bands(df: DataFrame, id: String, vec: String, norm: String,
-              sigName: String): DataFrame = {
-      val sig = VectorFunctions.hyperplaneSignature(col(vecCol), nBits)
-      df.select(col(idCol).as(id), col(vecCol).as(vec),
-          VectorFunctions.normSq(col(vecCol)).as(norm), sig.as(sigName))
-        .withColumn("band", explode(array((0 until nBands).map(b =>
-          struct(lit(b).as("band_id"),
-            (shiftright(col(sigName), b * bandWidth)
-              .bitwiseAND(lit((1L << bandWidth) - 1))).as("band_val"))): _*)))
-        .select(col(id), col(vec), col(norm), col(sigName),
-          col("band.band_id"), col("band.band_val"))
-    }
-    broadcast(bands(queries, "query_id", "q_vec", "q_norm", "__qsig"))
-      .join(bands(corpus, "neighbor_id", "c_vec", "c_norm", "__csig"),
-        Seq("band_id", "band_val"))
+    val width = nBits / nBands
+    def banded(df: DataFrame, id: String, p: String, sigName: String): DataFrame =
+      Blocking.bands(side(df, idCol, vecCol, id, p, sig.as(sigName)),
+        Seq(id, s"${p}_vec", s"${p}_norm", sigName),
+        Blocking.packed(col(sigName), nBands, width))
+    broadcast(banded(queries, "query_id", "q", "__qsig"))
+      .join(banded(corpus, "neighbor_id", "c", "__csig"), Seq("band_id", "band_val"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .filter(firstAgreeingBand(col("__qsig"), col("__csig"),
-        nBands, bandWidth) === col("band_id"))
+      .filter(Blocking.firstAgreeing(col("__qsig"), col("__csig"),
+        nBands, width) === col("band_id"))
   }
 
   /** Deterministic ±1 hyperplane matrix derived from md5 — the portable
@@ -161,56 +143,25 @@ object SimilaritySearch {
                       nBits: Int, nBands: Int, dim: Int,
                       idCol: String = "vec_id",
                       vecCol: String = "embedding"): DataFrame = {
-    require(nBits % nBands == 0, "nBits must divide into nBands")
     require(nBits < 63)
-    val bandWidth = nBits / nBands
-    val planes = portablePlanes(nBits, dim)
-    val sig = planes.zipWithIndex.map { case (p, j) =>
+    val sig = portablePlanes(nBits, dim).zipWithIndex.map { case (p, j) =>
       val proj = aggregate(
         zip_with(col(vecCol), typedLit(p), (x, y) => x.cast(DoubleType) * y),
         lit(0.0), (acc, e) => acc + e)
       when(proj >= 0, lit(1L << j)).otherwise(lit(0L))
     }.reduce(_ + _)
-    // the lshTopK shape: payloads ride the band explode, the query side
-    // broadcasts, each pair survives only from its first agreeing band,
-    // and the top-k is the map-side heap — one streaming corpus pass,
-    // queries-sized shuffle only
-    def bands(df: DataFrame, id: String, vec: String, norm: String,
-              sigName: String): DataFrame =
-      df.select(col(idCol).as(id), col(vecCol).as(vec),
-          VectorFunctions.normSq(col(vecCol)).as(norm), sig.as(sigName))
-        .withColumn("band", explode(array((0 until nBands).map(b =>
-          struct(lit(b).as("band_id"),
-            (shiftright(col(sigName), b * bandWidth)
-              .bitwiseAND(lit((1L << bandWidth) - 1))).as("band_val"))): _*)))
-        .select(col(id), col(vec), col(norm), col(sigName),
-          col("band.band_id"), col("band.band_val"))
-    val cands = broadcast(bands(queries, "query_id", "q_vec", "q_norm", "__qsig"))
-      .join(bands(corpus, "neighbor_id", "c_vec", "c_norm", "__csig"),
-        Seq("band_id", "band_val"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .filter(firstAgreeingBand(col("__qsig"), col("__csig"),
-        nBands, bandWidth) === col("band_id"))
-    val sim = VectorFunctions.cosinePrenormed(
-      VectorFunctions.dot(col("q_vec"), col("c_vec")), col("q_norm"), col("c_norm"))
-    heapTopK(cands.withColumn("sim_r", round(sim, 6)), k)
+    heapTopK(lshCandidates(corpus, queries, sig, nBits, nBands, idCol, vecCol), k)
   }
 
   /** Exact near-duplicate pairs (cosine ≥ threshold) between a probe
     * subset and the corpus, id1 < id2. */
   def nearDupPairs(corpus: DataFrame, probes: DataFrame, threshold: Double,
-                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val c = corpus.select(col(idCol).as("id2"), col(vecCol).as("c_vec"),
-      VectorFunctions.normSq(col(vecCol)).as("c_norm"))
-    val p = probes.select(col(idCol).as("id1"), col(vecCol).as("p_vec"),
-      VectorFunctions.normSq(col(vecCol)).as("p_norm"))
-    val sim = VectorFunctions.cosinePrenormed(
-      VectorFunctions.dot(col("p_vec"), col("c_vec")), col("p_norm"), col("c_norm"))
-    broadcast(p).join(c, col("id1") < col("id2"))
-      .withColumn("sim", sim)
+                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    broadcast(side(probes, idCol, vecCol, "id1", "p"))
+      .join(side(corpus, idCol, vecCol, "id2", "c"), col("id1") < col("id2"))
+      .withColumn("sim", cosine("p", "c"))
       .filter(col("sim") >= threshold)
       .select(col("id1"), col("id2"), round(col("sim"), 6).as("sim_r"))
-  }
 
   /** SemDeDup-shaped SEMANTIC DEDUPLICATION: connect items whose
     * embedding cosine ≥ threshold, resolve transitive groups with the
@@ -228,14 +179,6 @@ object SimilaritySearch {
   def semanticDedup(corpus: DataFrame, threshold: Double,
                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
     dedupFromEdges(corpus, nearDupPairs(corpus, corpus, threshold, idCol, vecCol), idCol)
-
-  /** Emit-once test for ARRAY band signatures (the wide analogue of
-    * [[firstAgreeingBand]]'s packed-long XOR): index of the first
-    * position where the two `array<long>` signatures agree, 0-based —
-    * a candidate pair survives only from the copy whose band_id equals
-    * it, row-locally, with no pair-keyed dedup shuffle. */
-  private def firstAgreeingBandArr(s1: Column, s2: Column): Column =
-    array_position(zip_with(s1, s2, (a, b) => a === b), lit(true)) - 1
 
   /** Choose (bandWidth, nBands) for [[bandedNearDupPairs]] from the
     * similarity of the duplicates the kernel must capture. With
@@ -277,7 +220,7 @@ object SimilaritySearch {
     * (per-plane agree probability ≈ ½) collides on some band with
     * probability ≈ nBands·2^−bandWidth, so the defaults (16 bands of
     * width 16, 256 planes as an `array<long>` of independent per-band
-    * signatures — no longer capped by one packed 64-bit word) admit
+    * signatures, so width is not capped by one packed 64-bit word) admit
     * ~2.4·10⁻⁴ of cross pairs (≈4000× pruning) while capturing a
     * SemDeDup-regime near-copy (sim ≥ 0.99, p ≥ 0.955) with
     * probability 1 − (1 − p¹⁶)¹⁶ ≥ 0.9999 — and an exact positive
@@ -302,28 +245,16 @@ object SimilaritySearch {
     // cut to ~qualifying + nBands·2^−bandWidth of cross pairs, so the
     // wide rows cross one candidates-sized exchange instead of
     // nBands× corpus-sized ones.
-    def bands(id: String, sigName: String): DataFrame =
-      corpus.select(col(idCol).as(id),
-          VectorFunctions.bandSignatures(col(vecCol), nBands, bandWidth).as(sigName))
-        .withColumn("band", explode(array((0 until nBands).map(b =>
-          struct(lit(b).as("band_id"),
-            element_at(col(sigName), b + 1).as("band_val"))): _*)))
-        .select(col(id), col(sigName),
-          col("band.band_id"), col("band.band_val"))
-    val cands = bands("id1", "__s1")
-      .join(bands("id2", "__s2"), Seq("band_id", "band_val"))
-      .filter(col("id1") < col("id2"))
-      .filter(firstAgreeingBandArr(col("__s1"), col("__s2")) === col("band_id"))
+    val rows = Blocking.bands(
+      corpus.select(col(idCol).as("id"),
+        VectorFunctions.bandSignatures(col(vecCol), nBands, bandWidth).as("__s")),
+      Seq("id", "__s"), (1 to nBands).map(element_at(col("__s"), _)))
+    Blocking.selfPairs(rows, Seq("band_id", "band_val"))
+      .filter(Blocking.firstAgreeing(col("__s1"), col("__s2")) === col("band_id"))
       .select("id1", "id2")
-    def vecs(id: String, vec: String, norm: String): DataFrame =
-      corpus.select(col(idCol).as(id), col(vecCol).as(vec),
-        VectorFunctions.normSq(col(vecCol)).as(norm))
-    val sim = VectorFunctions.cosinePrenormed(
-      VectorFunctions.dot(col("p_vec"), col("c_vec")), col("p_norm"), col("c_norm"))
-    cands
-      .join(vecs("id1", "p_vec", "p_norm"), "id1")
-      .join(vecs("id2", "c_vec", "c_norm"), "id2")
-      .withColumn("sim", sim).filter(col("sim") >= threshold)
+      .join(side(corpus, idCol, vecCol, "id1", "p"), "id1")
+      .join(side(corpus, idCol, vecCol, "id2", "c"), "id2")
+      .withColumn("sim", cosine("p", "c")).filter(col("sim") >= threshold)
       .select(col("id1"), col("id2"), round(col("sim"), 6).as("sim_r"))
   }
 

@@ -83,6 +83,27 @@ class SimilaritySpec extends SparkSpec {
     info(f"portable LSH recall@5 = $recall%.2f")
   }
 
+  test("width-64 bands key on the whole signature: LSH candidates are the equal-signature pairs") {
+    // every vector plus an exact x2-scaled twin (id + 10^8): a twin has
+    // the same 64-bit signature as its source, unrelated vectors
+    // (almost surely) do not. A width-64 mask of 0 would instead make
+    // every (query, corpus) pair a candidate.
+    val base = Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
+    val corpus = base.unionByName(base.select(($"vec_id" + 100000000L).as("vec_id"),
+      transform($"embedding", x => (x * lit(2.0f)).cast("float")).as("embedding")))
+    val queries = corpus.filter($"vec_id" % 100 === 0)
+    val got = SimilaritySearch.lshCandidates(corpus, queries, nBits = 64, nBands = 1)
+      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
+    def sigs(df: org.apache.spark.sql.DataFrame, id: String, sig: String) =
+      df.select($"vec_id".as(id), VectorFunctions.hyperplaneSignature($"embedding", 64).as(sig))
+    val want = sigs(queries, "query_id", "q").join(sigs(corpus, "neighbor_id", "c"),
+        $"q" === $"c" && $"query_id" =!= $"neighbor_id")
+      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
+    assert(want.size >= queries.count(), s"twins missing from the equal-signature pairs: $want")
+    assert(got == want, s"${got.size} candidates, ${want.size} equal-signature pairs")
+    intercept[IllegalArgumentException](graft.util.Blocking.packed($"x", 1, 65))
+  }
+
   test("IVF index round-trips through disk; loaded index answers identically") {
     val emb = graft.Tables.embeddings(spark, sfDir)
     val queries = emb.filter(org.apache.spark.sql.functions.col("vec_id") % 100 === 0)

@@ -50,12 +50,14 @@ object Cleaning {
     when(c === "Yes", lit(true)).when(c === "No", lit(false)).otherwise(lit(null).cast(BooleanType))
 
   /** P8 — best-effort numeric cast: unparseable → NULL (matches pandas
-    * errors='coerce', reference: load_quality.py:104, Reporting.py:256). */
-  def toDouble(c: Column): Column = c.cast(DoubleType)
+    * errors='coerce', reference: load_quality.py:104, Reporting.py:256).
+    * `try_cast`, because a plain cast throws under ANSI mode. */
+  def toDouble(c: Column): Column = c.try_cast(DoubleType)
 
   /** P9 — date parse 'yyyy-MM-dd' (reference: load_hhs.py:53,
-    * load_quality.py:106). Malformed → NULL. */
-  def parseDate(c: Column): Column = to_date(c, "yyyy-MM-dd")
+    * load_quality.py:106). Malformed → NULL (`try_to_date`: `to_date`
+    * throws under ANSI mode). */
+  def parseDate(c: Column): Column = try_to_date(c, "yyyy-MM-dd")
 
   /** P3 — constant column from a pipeline parameter
     * (reference: load_quality.py:106-107, the CLI data_date). */
@@ -63,11 +65,12 @@ object Cleaning {
     df.withColumn(name, lit(isoDate).cast(DateType))
 
   /** P8 applied to a column subset (reference load_hhs.py:52 casts only
-    * what parses; we cast the 8 known metric columns explicitly). */
+    * what parses; we cast the 8 known metric columns explicitly).
+    * Unparseable → NULL, as in [[toDouble]]. */
   def castColumns(df: DataFrame, cols: Seq[String], to: DataType): DataFrame = {
     val colSet = cols.toSet
     df.select(df.columns.toIndexedSeq.map { c =>
-      if (colSet(c)) col(c).cast(to).as(c) else col(c)
+      if (colSet(c)) col(c).try_cast(to).as(c) else col(c)
     }: _*)
   }
 }

@@ -45,11 +45,17 @@ object HhsPipeline {
   }
 
   /** V1 (8 metric non-negativity with int()-truncation quirk) + V3
-    * (hospital_name NOT NULL), elif order matching load_hhs.py:104-127. */
+    * (hospital_name NOT NULL), elif order matching load_hhs.py:104-127,
+    * then the two key columns NOT NULL: hospital_pk is the reference's
+    * PRIMARY KEY, and a NULL key never matches the cross-load anti-join,
+    * so every replay would append such a row again. An unparseable week
+    * cleans to NULL and rejects here. */
   def validationRules: Seq[Validation.Rule] =
-    Validation.Rule("hospital_name_null", Validation.notNull(col("hospital_name"))) +:
+    (Validation.Rule("hospital_name_null", Validation.notNull(col("hospital_name"))) +:
       Schemas.hhsMetricColumns.map(c =>
-        Validation.Rule(s"negative_$c", Validation.nonNegativeTruncated(col(c))))
+        Validation.Rule(s"negative_$c", Validation.nonNegativeTruncated(col(c))))) ++
+      Seq("hospital_pk", "collection_week").map(c =>
+        Validation.Rule(s"${c}_null", Validation.notNull(col(c))))
 
   /** Full load. `existing*` are the current warehouse tables (empty
     * DataFrames on first load). */

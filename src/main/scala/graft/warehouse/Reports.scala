@@ -3,14 +3,22 @@ package graft.warehouse
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** The reference dashboard's 7 analytics queries (Reporting.py:27-263) as
+/** The reference dashboard's analytics queries (Reporting.py:27-263) as
   * DataFrame pipelines over the warehouse tables. Each stays fully
   * distributed — the driver collects only display-sized results, unlike
   * the reference which fetchall()s every result into pandas.
   *
+  * One summary per page: the reference's per-week sections (R1 records
+  * for a week, R2 records per week, R3 bed sums for a week, R4 the same
+  * sums for the 4 latest weeks, R6 cases per week) are all slices of one
+  * `GROUP BY collection_week` over the bed table, so they are one
+  * pipeline, [[weekSummary]], and the page reads the bed history once for
+  * all five. R5, R7, R8 and R9 join other tables and keep pipelines of
+  * their own.
+  *
   * Scale notes: dimension joins (hospitals, locations) auto-broadcast;
-  * fact-side filters on collection_week / data_date hit parquet partition
-  * pruning because the pipelines write partitioned by those columns.
+  * fact-side filters on data_date hit parquet partition pruning because
+  * the quality pipeline writes partitioned by that column.
   */
 object Reports {
 
@@ -29,33 +37,22 @@ object Reports {
     col("all_adult_hospital_beds_7_day_avg") +
       col("all_pediatric_inpatient_beds_7_day_avg")
 
-  /** R1 — A1: record count for the selected week (Reporting.py:29-33). */
-  def recordsForWeek(bedInfo: DataFrame, week: String): DataFrame =
-    bedInfo.filter(col("collection_week") === lit(week))
-      .agg(count(lit(1)).as("n_records"))
-
-  /** R2 — A2/T1: records per week, ordered (Reporting.py:36-41). */
-  def recordsByWeek(bedInfo: DataFrame): DataFrame =
-    bedInfo.groupBy("collection_week").agg(count(lit(1)).as("n_records"))
-      .orderBy("collection_week")
-
-  private def bedSumAggs: Seq[Column] =
-    bedCols5.map(c => round(sum(col(c)), 2).as(s"sum_$c"))
-
-  /** R3 — A3/P12: 5 bed-metric sums for one week (Reporting.py:59-67). */
-  def bedSumsForWeek(bedInfo: DataFrame, week: String): DataFrame =
-    bedInfo.filter(col("collection_week") === lit(week))
-      .agg(bedSumAggs.head, bedSumAggs.tail: _*)
-
-  /** R4 — A4/T2: same sums for the 4 most recent weeks <= `week`, then
-    * re-sorted ascending (Reporting.py:84-106). TakeOrderedAndProject =
-    * true top-k, no full sort. */
-  def bedSumsRecentWeeks(bedInfo: DataFrame, week: String, k: Int = 4): DataFrame =
-    bedInfo.filter(col("collection_week") <= lit(week))
-      .groupBy("collection_week")
-      .agg(bedSumAggs.head, bedSumAggs.tail: _*)
-      .orderBy(col("collection_week").desc).limit(k)
-      .orderBy(col("collection_week"))
+  /** One row per stored `collection_week` — everything the page's
+    * per-week sections read: `n_records` (R1 for one week, R2 over all
+    * weeks — Reporting.py:29-41), the five `sum_<col>` bed sums rounded to
+    * 2 places (R3 for one week, R4 for the 4 latest — Reporting.py:59-106)
+    * and `all_cases`/`covid_cases` (R6 — Reporting.py:144-153). One
+    * `groupBy` over the whole bed history; the result is display-sized
+    * (one row per week) and unordered, so the report page collects it
+    * once and slices it on the driver. */
+  def weekSummary(bedInfo: DataFrame): DataFrame =
+    bedInfo.groupBy("collection_week").agg(
+      count(lit(1)).as("n_records"),
+      bedCols5.map(c => round(sum(col(c)), 2).as(s"sum_$c")) ++ Seq(
+        sum(col("all_adult_hospital_inpatient_bed_occupied_7_day_coverage") +
+          col("all_pediatric_inpatient_bed_occupied_7_day_avg") +
+          col("icu_beds_used_7_day_avg")).as("all_cases"),
+        sum(col("inpatient_beds_used_covid_7_day_avg")).as("covid_cases")): _*)
 
   /** R5 — J1/A5: fraction of beds in use by quality rating
     * (Reporting.py:109-135). Deliberately NO date alignment in the join —
@@ -67,17 +64,6 @@ object Reports {
       .agg((sum(inUse) / when(sum(available) =!= 0d, sum(available)))
         .as("fraction_of_beds_in_use"))
       .orderBy("hospital_overall_rating")
-
-  /** R6 — A6/P11: all cases vs covid cases per week (Reporting.py:144-153). */
-  def casesByWeek(bedInfo: DataFrame, week: String): DataFrame =
-    bedInfo.filter(col("collection_week") <= lit(week))
-      .groupBy("collection_week")
-      .agg(
-        sum(col("all_adult_hospital_inpatient_bed_occupied_7_day_coverage") +
-          col("all_pediatric_inpatient_bed_occupied_7_day_avg") +
-          col("icu_beds_used_7_day_avg")).as("all_cases"),
-        sum(col("inpatient_beds_used_covid_7_day_avg")).as("covid_cases"))
-      .orderBy("collection_week")
 
   /** R7 — J2/A7/T3: emergency-service hospitals per state, top 20
     * (Reporting.py:180-196). Dim joins broadcast. */

@@ -3,6 +3,8 @@ package graft.cli
 import graft.SparkSpec
 import graft.warehouse.Schemas
 import java.nio.file.{Files, Paths}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graftbridge.GraftSqlBridge
 
 /** End-to-end proof for the third reference entry point: load fixture
   * CSVs through the CLI pipelines into a warehouse, then render the
@@ -14,30 +16,40 @@ class ReportSpec extends SparkSpec {
     Paths.get("/root/repo/target"), "report").toString
   private lazy val warehouseDir = s"$dir/warehouse"
 
-  private lazy val loaded: Unit = {
+  /** Load the fixture HHS week file and a quality snapshot of
+    * (facility id, ownership, emergency services, rating) rows dated
+    * 2023-01-20 into warehouse `wh`. */
+  private def loadFixture(wh: String, quality: Seq[(String, String, String, String)]): Unit = {
     val hhsHeader = Schemas.hhsRawCsv.fieldNames.mkString(",")
+    // metric i of a row is v + 1.3·i, so every page column differs
     def hhsRow(pk: String, name: String, state: String, week: String, v: Double) =
       s"$pk,$name,$state,1 Main St,Pittsburgh,15213,42003,POINT (-79 40),$week," +
-        Seq.fill(8)(v.toString).mkString(",")
+        Seq.tabulate(8)(i => BigDecimal(v) + i * BigDecimal("1.3")).mkString(",")
     val hhsCsv = s"$dir/hhs.csv"
     Files.writeString(Paths.get(hhsCsv), (hhsHeader +: Seq(
+      hhsRow("A", "Alpha", "PA", "2022-12-16", 5.0),
+      hhsRow("A", "Alpha", "PA", "2022-12-23", 6.0),
+      hhsRow("A", "Alpha", "PA", "2022-12-30", 7.0),
       hhsRow("A", "Alpha", "PA", "2023-01-06", 10.0),
       hhsRow("B", "Beta", "PA", "2023-01-06", 20.0),
       hhsRow("C", "Gamma", "NY", "2023-01-13", 30.0))).mkString("\n"))
 
     val qHeader = Schemas.qualityRawCsv.fieldNames
       .map(f => s""""$f"""").mkString(",")
-    def qRow(id: String, own: String, emerg: String, rating: String) =
-      s""""$id","Acute Care","$own","$emerg","$rating""""
-    val qCsv = s"$dir/quality.csv"
-    Files.writeString(Paths.get(qCsv), (qHeader +: Seq(
-      qRow("A", "Government", "Yes", "3"),
-      qRow("B", "Proprietary", "Yes", "5"),
-      qRow("C", "Government", "No", "1"))).mkString("\n"))
+    val qCsv = s"$wh-quality.csv"
+    Files.writeString(Paths.get(qCsv), (qHeader +: quality.map {
+      case (id, own, emerg, rating) =>
+        s""""$id","Acute Care","$own","$emerg","$rating""""
+    }).mkString("\n"))
 
-    Cli.runHhs(spark, hhsCsv, warehouseDir, s"$dir/rejects/hhs")
-    Cli.runQuality(spark, "2023-01-20", qCsv, warehouseDir, s"$dir/rejects/quality")
+    Cli.runHhs(spark, hhsCsv, wh, s"$wh-rejects/hhs")
+    Cli.runQuality(spark, "2023-01-20", qCsv, wh, s"$wh-rejects/quality")
   }
+
+  private lazy val loaded: Unit = loadFixture(warehouseDir, Seq(
+    ("A", "Government", "Yes", "3"),
+    ("B", "Proprietary", "Yes", "5"),
+    ("C", "Government", "No", "1")))
 
   test("report page renders every dashboard section from the warehouse") {
     loaded
@@ -70,6 +82,51 @@ class ReportSpec extends SparkSpec {
     assert(page.contains("ownership = Proprietary"))
   }
 
+  /** The page with the temporary warehouse path masked. */
+  private def page(week: Option[String] = None): String =
+    Report.render(spark, warehouseDir, week = week).replace(warehouseDir, "<warehouse>")
+
+  private def golden(name: String): String = scala.io.Source.fromResource(
+    s"graft/cli/report_$name.txt", getClass.getClassLoader)(scala.io.Codec.UTF8).mkString
+
+  test("the full page is pinned for defaults, a stored week and an empty week") {
+    loaded
+    assert(page() == golden("defaults"))
+    assert(page(Some("2023-01-06")) == golden("week_2023-01-06"))
+    // no bed rows that week: R1 prints 0 and R3 a row of NULLs
+    val empty = page(Some("2023-01-09"))
+    assert(empty == golden("week_2023-01-09"))
+    assert(empty.contains("|         0 |"))
+    assert(empty.split("\n").exists(_.matches("""\|( +NULL \|){5}""")))
+  }
+
+  test("one render runs 7 job-launching SQL executions") {
+    loaded
+    val executions = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .foreach(executions.add)
+    }
+    GraftSqlBridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Report.render(spark, warehouseDir)
+      GraftSqlBridge.drainListenerBus(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // the week summary, data date, ownership, then R5, R7, R8 and R9
+    assert(executions.size == 7)
+  }
+
+  test("the ownership default skips a NULL ownership") {
+    val wh = s"$dir/warehouse-null-ownership"
+    loadFixture(wh, Seq(("A", "", "Yes", "3"), ("B", "Government", "Yes", "5")))
+    val page = Report.render(spark, wh)
+    assert(page.contains("ownership = Government"), page)
+    // R8: facility B's one week
+    assert(page.split("\n").count(_.startsWith("| Government ")) == 1, page)
+  }
+
   test("formatTable aligns, formats NULL, and truncates at maxRows") {
     import spark.implicits._
     val df = Seq((1L, Option(2.5), "x"), (2L, None, "longer"))
@@ -94,5 +151,10 @@ class ReportSpec extends SparkSpec {
       Report.render(spark, warehouseDir, dataDate = Some("1999-01-01"))
     }
     assert(e2.getMessage.contains("load quality data for that date first"))
+    // a --week that is no date fails before any section renders
+    val e3 = intercept[IllegalArgumentException] {
+      Report.render(spark, warehouseDir, week = Some("2023-13-45"))
+    }
+    assert(e3.getMessage.contains("--week must be a yyyy-MM-dd date"))
   }
 }

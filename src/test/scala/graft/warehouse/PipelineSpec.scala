@@ -80,6 +80,59 @@ class PipelineSpec extends SparkSpec {
     assert(r3.quality.count() == 3)
   }
 
+  test("HHS rows with a NULL key are rejected, so a replay appends nothing") {
+    import graft.cli.Cli
+    val csv = writeCsv("null_keys.csv", Seq(
+      hhsHeader,
+      hhsRow("A", "Alpha", "2023-01-06", "10.0"),
+      hhsRow("", "No Key", "2023-01-06", "5.0"),
+      hhsRow("C", "No Week", "", "5.0")
+    ).mkString("\n"))
+    val wh = s"$dir/null_key_warehouse"
+    val rej = s"$dir/null_key_rejects"
+    def counts = Seq("hospitals", "hospital_locations", "hospital_bed_information")
+      .map(t => spark.read.parquet(s"$wh/$t").count())
+    Cli.runHhs(spark, csv, wh, rej)
+    val first = counts
+    Cli.runHhs(spark, csv, wh, rej)
+    assert(counts == first)
+    assert(first == Seq(1L, 1L, 1L))
+    val reasons = spark.read.option("header", "true").csv(s"$rej/hhs")
+      .select("hospital_name", "reject_reason").as[(String, String)].collect().toMap
+    assert(reasons == Map("No Key" -> "hospital_pk_null", "No Week" -> "collection_week_null"))
+  }
+
+  test("a malformed cell becomes NULL instead of aborting the load") {
+    val csv = writeCsv("malformed.csv", Seq(
+      hhsHeader,
+      hhsRow("A", "Alpha", "2023-01-06", "10.0"),
+      hhsRow("B", "Bad Week", "2023-13-45", "10.0"),
+      hhsRow("C", "Bad Metric", "2023-01-06", "N/A")
+    ).mkString("\n"))
+    val emptyHospitals = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitals)
+    val emptyBeds = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitalBedInformation)
+    val h = HhsPipeline.load(spark, csv, emptyHospitals, emptyBeds)
+    assert(h.bedInfo.count() + h.rejects.count() == 3)
+    assert(h.rejects.select("hospital_pk", "reject_reason").as[(String, String)]
+      .collect().toSeq == Seq("B" -> "collection_week_null"))
+    assert(h.bedInfo.filter($"hospital_fk" === "C")
+      .select("total_icu_beds_7_day_avg").as[Option[Double]].head().isEmpty)
+
+    val qcsv = writeCsv("malformed_quality.csv", Seq(
+      """Facility ID,Hospital Type,Hospital Ownership,Emergency Services,Hospital overall rating""",
+      """F1,Acute Care,Proprietary,Yes,Not Applicable""",
+      """F2,Acute Care,Proprietary,Yes,4"""
+    ).mkString("\n"))
+    val emptyQuality = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitalQualityInformation)
+    val q = QualityPipeline.load(spark, qcsv, "2023-07-01", emptyQuality)
+    assert(q.quality.count() + q.rejects.count() == 2)
+    assert(q.quality.filter($"facility_id" === "F1")
+      .select("hospital_overall_rating").as[Option[Double]].head().isEmpty)
+  }
+
   test("Reports run end-to-end over loaded warehouse tables") {
     val csv = writeCsv("hhs2.csv", Seq(
       hhsHeader,
@@ -98,16 +151,18 @@ class PipelineSpec extends SparkSpec {
     val h = HhsPipeline.load(spark, csv, eH, eB)
     val q = QualityPipeline.load(spark, qcsv, "2023-07-01", eQ)
 
-    assert(Reports.recordsForWeek(h.bedInfo, "2023-01-06").as[Long].head() == 2L)
-    assert(Reports.recordsByWeek(h.bedInfo).count() == 2)
-    assert(Reports.bedSumsForWeek(h.bedInfo, "2023-01-06")
-      .select("sum_total_icu_beds_7_day_avg").as[Double].head() == 30.0)
+    val weeks = Reports.weekSummary(h.bedInfo)
+    val week0106 = weeks.filter($"collection_week" === "2023-01-06")
+    assert(week0106.select("n_records").as[Long].head() == 2L)
+    assert(weeks.count() == 2)
+    assert(week0106.select("sum_total_icu_beds_7_day_avg").as[Double].head() == 30.0)
     val frac = Reports.bedUseByRating(q.quality, h.bedInfo)
     assert(frac.count() == 2) // ratings 4 and 2
     assert(Reports.emergencyHospitalsByState(q.quality, h.hospitals, h.locations, "2023-07-01")
       .select("n_hospitals").as[Long].head() == 2L)
     assert(Reports.ratingByStateTopBottom(q.quality, h.locations, "2023-07-01").count() == 1)
-    assert(Reports.casesByWeek(h.bedInfo, "2023-01-13").count() == 2)
+    assert(weeks.filter($"collection_week" <= "2023-01-13")
+      .select("all_cases", "covid_cases").count() == 2)
     assert(Reports.bedUseByOwnership(q.quality, h.bedInfo, "Proprietary").count() == 2)
   }
 

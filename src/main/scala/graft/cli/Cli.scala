@@ -2,7 +2,9 @@ package graft.cli
 
 import graft.GraftSession
 import graft.warehouse.{HhsPipeline, QualityPipeline, Warehouse}
+import java.time.LocalDate
 import org.apache.spark.sql.SparkSession
+import scala.util.Try
 
 /** Operational entry points mirroring the reference's CLI surface
   * (README.md:21-33: `python load_hhs.py <csv>` /
@@ -54,6 +56,13 @@ object Cli {
     (m.getOrElse("--warehouse", "warehouse"), m.getOrElse("--rejects", "rejects"))
   }
 
+  /** `value` as a `yyyy-MM-dd` date. A malformed or impossible date
+    * (`2023-02-30`) fails here, naming `flag`, before it can reach a
+    * Spark cast that would fail mid-job. */
+  private[cli] def date(flag: String, value: String): LocalDate =
+    Try(LocalDate.parse(value)).getOrElse(throw new IllegalArgumentException(
+      s"$flag must be a yyyy-MM-dd date, got '$value'"))
+
   def runHhs(spark: SparkSession, csvPath: String,
              warehouseDir: String, rejectDir: String): HhsPipeline.Result = {
     val r = HhsPipeline.load(spark, csvPath,
@@ -95,8 +104,7 @@ object LoadQuality {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: LoadQuality <yyyy-MM-dd> <csv> [--warehouse dir] [--rejects dir]")
-    require(args(0).matches("""\d{4}-\d{2}-\d{2}"""),
-      s"first argument must be a yyyy-MM-dd date, got '${args(0)}'")
+    Cli.date("first argument", args(0))
     val (warehouseDir, rejectDir) = Cli.dirs(args.toIndexedSeq.drop(2))
     val spark = Cli.session("graft-load-quality")
     try {

@@ -3,9 +3,7 @@ package graft.cli
 import graft.warehouse.{Reports, Warehouse}
 import java.time.LocalDate
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{NumericType, StructType}
-import scala.util.Try
 
 /** The reference dashboard's report page as a CLI (Reporting.py:275-281
   * renders the same query sequence through Streamlit selectboxes +
@@ -15,14 +13,16 @@ import scala.util.Try
   * load CSVs into the warehouse, then render every dashboard table from
   * it as formatted text.
   *
-  * One page reads the bed history for its per-week sections once: it
-  * collects [[graft.warehouse.Reports.weekSummary]] (one row per week)
-  * and derives R1-R4, R6 and the default week from those rows on the
-  * driver, with no further Spark job. R5, R7, R8, R9 and the data-date
-  * and ownership defaults are one [[graft.warehouse.Reports]] pipeline or
-  * scalar aggregate each. The driver collects only display-sized results
-  * (weeks, states, ratings — the reports aggregate before they return),
-  * so rendering cost is independent of warehouse size.
+  * One summary per table read, sliced on the driver: a page collects
+  * [[graft.warehouse.Reports.weekSummary]] (one row per week) for R1-R4,
+  * R6 and the default week; [[graft.warehouse.Reports.bedUse]] (one row
+  * per rating and per ownership and week) for R5 and R8; and, only when
+  * `dataDate` or `ownership` is not given, one (data_date, ownership)
+  * count for both defaults. R7 and R9 are one pipeline each. A default
+  * page is 5 SQL executions, 2 of them over the bed history. The driver
+  * collects only display-sized results (weeks, states, ratings — the
+  * reports aggregate before they return), so rendering cost is
+  * independent of warehouse size.
   */
 object Report {
 
@@ -66,72 +66,83 @@ object Report {
   /** The full report page over a parquet warehouse. Parameters default
     * from the data like the dashboard's selectboxes: `week` = most
     * recent collection_week, `dataDate` = most recent quality load,
-    * `ownership` = the modal non-NULL ownership at that date. */
+    * `ownership` = the modal non-NULL ownership at that date (ties go to
+    * the smaller name). */
   def render(spark: SparkSession, warehouseDir: String,
              week: Option[String] = None, dataDate: Option[String] = None,
              ownership: Option[String] = None, maxRows: Int = 100): String = {
+    // a given date that is no date fails before any Spark job
+    val givenWeek = week.map(Cli.date("--week", _))
+    val givenDate = dataDate.map(Cli.date("--data-date", _))
     val hospitals = Warehouse.read(spark, warehouseDir, Warehouse.Hospitals)
     val locations = Warehouse.read(spark, warehouseDir, Warehouse.Locations)
     val bedInfo = Warehouse.read(spark, warehouseDir, Warehouse.BedInformation)
     val quality = Warehouse.read(spark, warehouseDir, Warehouse.QualityInformation)
 
-    // selectbox defaults: single-row scalar aggregates, not data pulls;
     // nothing to default from fails fast with a load hint
-    def orHint(v: Option[String], missing: String, load: String, flag: String): String = {
+    def orHint[T](v: Option[T], missing: String, load: String, flag: String): T = {
       require(v.isDefined, s"$warehouseDir has no $missing: " +
         s"load $load first or pass $flag explicitly")
       v.get
     }
-    // the per-week sections' one bed-history scan, in week order (a NULL
-    // week first, as SQL's ascending order puts it)
-    val summary = Reports.weekSummary(bedInfo)
     def day(r: Row): Option[LocalDate] = Option(r.getDate(0)).map(_.toLocalDate)
-    val weeks = summary.collect().toSeq.sortBy(day(_).map(_.toEpochDay))
-    val wk = week.getOrElse(orHint(weeks.lastOption.flatMap(day).map(_.toString),
+    // `rows` in SQL's ascending order of column `i`: NULL first
+    def ascending(rows: Seq[Row], i: Int): Seq[Row] =
+      rows.sortBy(r => Option(r.getAs[Comparable[Any]](i)))(Ordering.Option(_ compareTo _))
+    // the named columns of `rows`, under `schema`'s names
+    def slice(schema: StructType, rows: Seq[Row], cols: Seq[String]): String = {
+      val idx = cols.map(schema.fieldIndex)
+      formatRows(StructType(idx.map(schema(_))), rows.map(r => Row.fromSeq(idx.map(r.get))), maxRows)
+    }
+
+    // the per-week sections' summary, in week order
+    val summary = Reports.weekSummary(bedInfo)
+    val weeks = ascending(summary.collect().toSeq, 0)
+    val at = givenWeek.getOrElse(orHint(weeks.lastOption.flatMap(day),
       "bed information", "HHS data", "--week"))
-    val at = Try(LocalDate.parse(wk)).getOrElse(throw new IllegalArgumentException(
-      s"--week must be a yyyy-MM-dd date, got '$wk'"))
     // a week with no rows reads like a global aggregate over none:
     // count 0, every sum NULL
     val ofWeek = weeks.find(day(_).contains(at)).getOrElse(Row.fromSeq(
       summary.columns.toSeq.map(c => if (c == "n_records") 0L else null)))
     val through = weeks.filter(day(_).exists(!_.isAfter(at)))
-    def slice(rows: Seq[Row], cols: Seq[String]): String = {
-      val idx = cols.map(summary.schema.fieldIndex)
-      formatRows(StructType(idx.map(summary.schema(_))),
-        rows.map(r => Row.fromSeq(idx.map(r.get))), maxRows)
-    }
     val sums = summary.columns.toSeq.filter(_.startsWith("sum_"))
 
-    val dd = dataDate.getOrElse(orHint(
-      Option(quality.agg(max("data_date")).head().get(0)).map(_.toString),
+    // the selectbox defaults: one (data_date, ownership) count, read only
+    // when a default is needed
+    lazy val owners = quality.groupBy("data_date", "hospital_ownership").count().collect().toSeq
+    val dd = givenDate.getOrElse(orHint(owners.flatMap(day).maxByOption(_.toEpochDay),
       "quality information", "quality data", "--data-date"))
     val own = ownership.getOrElse(orHint(
-      quality.filter(col("data_date") === lit(dd) && col("hospital_ownership").isNotNull)
-        .groupBy("hospital_ownership").agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("hospital_ownership")).limit(1)
-        .head(1).headOption.map(_.getString(0)),
+      owners.filter(r => day(r).contains(dd) && !r.isNullAt(1))
+        .sortBy(r => (-r.getLong(2), r.getString(1))).headOption.map(_.getString(1)),
       s"quality information for $dd", "quality data for that date", "--ownership"))
 
+    // R5 and R8 from one bed-use aggregate: each section's grouping set
+    val bedUse = Reports.bedUse(quality, bedInfo)
+    val sets = bedUse.collect().toSeq.groupBy(_.getAs[Long]("grouping_id")).withDefaultValue(Nil)
+    val byRating = ascending(sets(Reports.ByRating), 0)
+    val byWeek = ascending(sets(Reports.ByOwnershipWeek).filter(_.getString(1) == own), 2)
+
     val sections = Seq(
-      s"Records loaded for week $wk (Reporting.py:29-33)" ->
-        slice(Seq(ofWeek), Seq("n_records")),
+      s"Records loaded for week $at (Reporting.py:29-33)" ->
+        slice(summary.schema, Seq(ofWeek), Seq("n_records")),
       "Records loaded by week (Reporting.py:36-41)" ->
-        slice(weeks, Seq("collection_week", "n_records")),
-      s"Bed availability and use, week $wk (Reporting.py:59-67)" ->
-        slice(Seq(ofWeek), sums),
-      s"Bed availability and use, 4 most recent weeks <= $wk (Reporting.py:84-106)" ->
-        slice(through.takeRight(4), "collection_week" +: sums),
+        slice(summary.schema, weeks, Seq("collection_week", "n_records")),
+      s"Bed availability and use, week $at (Reporting.py:59-67)" ->
+        slice(summary.schema, Seq(ofWeek), sums),
+      s"Bed availability and use, 4 most recent weeks <= $at (Reporting.py:84-106)" ->
+        slice(summary.schema, through.takeRight(4), "collection_week" +: sums),
       "Fraction of beds in use by hospital quality rating (Reporting.py:109-135)" ->
-        formatTable(Reports.bedUseByRating(quality, bedInfo), maxRows),
-      s"All cases vs covid cases by week through $wk (Reporting.py:144-153)" ->
-        slice(through, Seq("collection_week", "all_cases", "covid_cases")),
+        slice(bedUse.withColumnRenamed("fraction_in_use", "fraction_of_beds_in_use").schema,
+          byRating, Seq("hospital_overall_rating", "fraction_of_beds_in_use")),
+      s"All cases vs covid cases by week through $at (Reporting.py:144-153)" ->
+        slice(summary.schema, through, Seq("collection_week", "all_cases", "covid_cases")),
       s"Emergency-service hospitals by state, top 20, as of $dd (Reporting.py:180-196)" ->
-        formatTable(Reports.emergencyHospitalsByState(quality, hospitals, locations, dd), maxRows),
+        formatTable(Reports.emergencyHospitalsByState(quality, hospitals, locations, dd.toString), maxRows),
       s"Fraction of beds in use by week, ownership = $own (Reporting.py:200-224)" ->
-        formatTable(Reports.bedUseByOwnership(quality, bedInfo, own), maxRows),
+        slice(bedUse.schema, byWeek, Seq("hospital_ownership", "collection_week", "fraction_in_use")),
       s"Mean overall rating by state, top and bottom 10, as of $dd (Reporting.py:240-263)" ->
-        formatTable(Reports.ratingByStateTopBottom(quality, locations, dd), maxRows))
+        formatTable(Reports.ratingByStateTopBottom(quality, locations, dd.toString), maxRows))
 
     sections.map { case (title, table) => s"== $title ==\n$table" }
       .mkString(s"graft report — warehouse: $warehouseDir\n\n", "\n\n", "\n")

@@ -49,10 +49,13 @@ object Cleaning {
   def yesNoToBoolean(c: Column): Column =
     when(c === "Yes", lit(true)).when(c === "No", lit(false)).otherwise(lit(null).cast(BooleanType))
 
-  /** P8 — best-effort numeric cast: unparseable → NULL (matches pandas
-    * errors='coerce', reference: load_quality.py:104, Reporting.py:256).
-    * `try_cast`, because a plain cast throws under ANSI mode. */
-  def toDouble(c: Column): Column = c.try_cast(DoubleType)
+  /** P8 — best-effort numeric cast: unparseable or NaN → NULL (matches
+    * pandas errors='coerce', which reads NaN as missing, reference:
+    * load_quality.py:104, Reporting.py:256). `try_cast`, because a plain
+    * cast throws under ANSI mode; `nanvl`, because `try_cast('NaN')` is
+    * NaN, which passes every `>=`/`>` rule and poisons a sum or mean. */
+  def toDouble(c: Column): Column =
+    nanvl(c.try_cast(DoubleType), lit(null).cast(DoubleType))
 
   /** P9 — date parse 'yyyy-MM-dd' (reference: load_hhs.py:53,
     * load_quality.py:106). Malformed → NULL (`try_to_date`: `to_date`
@@ -66,11 +69,11 @@ object Cleaning {
 
   /** P8 applied to a column subset (reference load_hhs.py:52 casts only
     * what parses; we cast the 8 known metric columns explicitly).
-    * Unparseable → NULL, as in [[toDouble]]. */
-  def castColumns(df: DataFrame, cols: Seq[String], to: DataType): DataFrame = {
+    * Unparseable or NaN → NULL, as in [[toDouble]]. */
+  def castColumns(df: DataFrame, cols: Seq[String]): DataFrame = {
     val colSet = cols.toSet
     df.select(df.columns.toIndexedSeq.map { c =>
-      if (colSet(c)) col(c).try_cast(to).as(c) else col(c)
+      if (colSet(c)) toDouble(col(c)).as(c) else col(c)
     }: _*)
   }
 }

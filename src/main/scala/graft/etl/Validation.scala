@@ -24,9 +24,12 @@ object Validation {
 
   /** V1 — non-negativity with the reference's `int()` truncation quirk:
     * a value in (-1, 0) truncates to 0 and PASSES (load_hhs.py:104-127).
-    * Spark's double→long cast truncates toward zero, matching `int()`. */
+    * For every finite value `int(v) >= 0` exactly when `v > -1`, so the
+    * rule compares without a cast, and a value past the long range
+    * cannot overflow one. NaN compares greater than -1 in Spark, so
+    * cleaning maps it to NULL first ([[Cleaning.toDouble]]). */
   def nonNegativeTruncated(c: Column): Column =
-    c.isNull || c.cast(LongType) >= 0
+    c.isNull || c > -1
 
   /** V3 — NOT NULL constraint (reference: ipynb cell-0 hospital_name). */
   def notNull(c: Column): Column = c.isNotNull

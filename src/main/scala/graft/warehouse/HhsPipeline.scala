@@ -3,7 +3,6 @@ package graft.warehouse
 import graft.etl.{Cleaning, Dedup, Validation}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** HHS weekly hospital-capacity ingest (reference: load_hhs.py end to end).
   *
@@ -39,7 +38,7 @@ object HhsPipeline {
     * (P8), date parse (P9). String columns stay raw for the reject sink. */
   def clean(raw: DataFrame): DataFrame = {
     val sentinelCleared = Cleaning.sentinelToNull(
-      Cleaning.castColumns(raw, Schemas.hhsMetricColumns, DoubleType),
+      Cleaning.castColumns(raw, Schemas.hhsMetricColumns),
       -999999d, Schemas.hhsMetricColumns)
     sentinelCleared.withColumn("collection_week", Cleaning.parseDate(col("collection_week")))
   }

@@ -8,13 +8,14 @@ import org.apache.spark.sql.functions._
   * distributed — the driver collects only display-sized results, unlike
   * the reference which fetchall()s every result into pandas.
   *
-  * One summary per page: the reference's per-week sections (R1 records
-  * for a week, R2 records per week, R3 bed sums for a week, R4 the same
-  * sums for the 4 latest weeks, R6 cases per week) are all slices of one
-  * `GROUP BY collection_week` over the bed table, so they are one
-  * pipeline, [[weekSummary]], and the page reads the bed history once for
-  * all five. R5, R7, R8 and R9 join other tables and keep pipelines of
-  * their own.
+  * One summary per table read: sections that read the same rows are
+  * slices of one aggregate, computed once per page and sliced on the
+  * driver. The per-week sections (R1 records for a week, R2 records per
+  * week, R3 bed sums for a week, R4 the same sums for the 4 latest weeks,
+  * R6 cases per week) are one `GROUP BY collection_week` over the bed
+  * table, [[weekSummary]]; R5 and R8 are one grouping-set aggregate over
+  * the quality ⨝ bed join, [[bedUse]]. R7 and R9 keep pipelines of their
+  * own.
   *
   * Scale notes: dimension joins (hospitals, locations) auto-broadcast;
   * fact-side filters on data_date hit parquet partition pruning because
@@ -54,16 +55,31 @@ object Reports {
           col("icu_beds_used_7_day_avg")).as("all_cases"),
         sum(col("inpatient_beds_used_covid_7_day_avg")).as("covid_cases")): _*)
 
-  /** R5 — J1/A5: fraction of beds in use by quality rating
-    * (Reporting.py:109-135). Deliberately NO date alignment in the join —
-    * reference fidelity (SURVEY §7.4.5). Null on zero denominator
-    * (Postgres would error; documented divergence). */
-  def bedUseByRating(quality: DataFrame, bedInfo: DataFrame): DataFrame =
+  /** [[bedUse]]'s `grouping_id` for its rating rows (R5) and for its
+    * ownership-and-week rows (R8). Bit i is set when grouping column i of
+    * (rating, ownership, week) is not in the row's set. */
+  val ByRating = 3L
+  val ByOwnershipWeek = 4L
+
+  /** R5 and R8 — J1/J4/A5/A8: the fraction of beds in use by quality
+    * rating (Reporting.py:109-135) and by ownership and week
+    * (Reporting.py:200-224), as one join and one aggregate over
+    * `groupingSets` (hospital_overall_rating) and (hospital_ownership,
+    * collection_week). Deliberately NO date alignment in the join —
+    * reference fidelity (SURVEY §7.4.5): a bed row counts once per
+    * quality snapshot of its facility. `fraction_in_use` is NULL on a
+    * zero denominator (Postgres would error; documented divergence).
+    * `grouping_id` names each row's set; a NULL rating or week is a real
+    * group, so rows are told apart by it, never by NULL. Unordered and
+    * display-sized (ratings plus ownerships × weeks). */
+  def bedUse(quality: DataFrame, bedInfo: DataFrame): DataFrame = {
+    val Seq(rating, ownership, week) =
+      Seq("hospital_overall_rating", "hospital_ownership", "collection_week").map(col)
     quality.join(bedInfo, quality("facility_id") === bedInfo("hospital_fk"))
-      .groupBy("hospital_overall_rating")
-      .agg((sum(inUse) / when(sum(available) =!= 0d, sum(available)))
-        .as("fraction_of_beds_in_use"))
-      .orderBy("hospital_overall_rating")
+      .groupingSets(Seq(Seq(rating), Seq(ownership, week)), rating, ownership, week)
+      .agg(grouping_id().as("grouping_id"),
+        (sum(inUse) / when(sum(available) =!= 0d, sum(available))).as("fraction_in_use"))
+  }
 
   /** R7 — J2/A7/T3: emergency-service hospitals per state, top 20
     * (Reporting.py:180-196). Dim joins broadcast. */
@@ -74,16 +90,6 @@ object Reports {
       .join(locations, hospitals("hospital_pk") === locations("hospital_fk"))
       .groupBy("state").agg(count(lit(1)).as("n_hospitals"))
       .orderBy(col("n_hospitals").desc, col("state")).limit(20)
-
-  /** R8 — J4/A8: bed-use fraction by ownership over weeks
-    * (Reporting.py:200-224). */
-  def bedUseByOwnership(quality: DataFrame, bedInfo: DataFrame, ownership: String): DataFrame =
-    quality.filter(col("hospital_ownership") === lit(ownership))
-      .join(bedInfo, quality("facility_id") === bedInfo("hospital_fk"))
-      .groupBy("hospital_ownership", "collection_week")
-      .agg((sum(inUse) / when(sum(available) =!= 0d, sum(available)))
-        .as("fraction_in_use"))
-      .orderBy("collection_week")
 
   /** R9 — A9/T4/V6: mean rating per state, top-10 + bottom-10
     * (Reporting.py:240-263). */

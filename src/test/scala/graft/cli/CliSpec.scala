@@ -60,4 +60,19 @@ class CliSpec extends AnyFunSuite {
     }
     assert(stray.getMessage.contains("oops"))
   }
+
+  test("date: a yyyy-MM-dd argument parses, anything else names its flag") {
+    assert(Cli.date("--week", "2023-01-06") == java.time.LocalDate.of(2023, 1, 6))
+    Seq("2023-02-30", "2023-13-45", "2023-1-6", "20230106", "").foreach { v =>
+      val e = intercept[IllegalArgumentException](Cli.date("--data-date", v))
+      assert(e.getMessage == s"--data-date must be a yyyy-MM-dd date, got '$v'")
+    }
+  }
+
+  test("LoadQuality rejects an impossible date before a session starts") {
+    val e = intercept[IllegalArgumentException] {
+      LoadQuality.main(Array("2023-02-30", "missing.csv"))
+    }
+    assert(e.getMessage == "first argument must be a yyyy-MM-dd date, got '2023-02-30'")
+  }
 }

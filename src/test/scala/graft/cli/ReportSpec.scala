@@ -16,34 +16,45 @@ class ReportSpec extends SparkSpec {
     Paths.get("/root/repo/target"), "report").toString
   private lazy val warehouseDir = s"$dir/warehouse"
 
-  /** Load the fixture HHS week file and a quality snapshot of
-    * (facility id, ownership, emergency services, rating) rows dated
-    * 2023-01-20 into warehouse `wh`. */
-  private def loadFixture(wh: String, quality: Seq[(String, String, String, String)]): Unit = {
+  /** An HHS CSV row with the eight metric cells `metrics`, in
+    * `Schemas.hhsMetricColumns` order. */
+  private def hhsRow(pk: String, name: String, state: String, week: String,
+                     metrics: Seq[Any]): String =
+    s"$pk,$name,$state,1 Main St,Pittsburgh,15213,42003,POINT (-79 40),$week," +
+      metrics.mkString(",")
+
+  /** Load the fixture HHS week file plus `moreHhs` rows, a quality
+    * snapshot of (facility id, ownership, emergency services, rating) rows
+    * dated 2023-01-20 and, when `later` is non-empty, a second snapshot
+    * dated 2023-01-27 into warehouse `wh`. */
+  private def loadFixture(wh: String, quality: Seq[(String, String, String, String)],
+                          later: Seq[(String, String, String, String)] = Nil,
+                          moreHhs: Seq[String] = Nil): Unit = {
     val hhsHeader = Schemas.hhsRawCsv.fieldNames.mkString(",")
     // metric i of a row is v + 1.3·i, so every page column differs
-    def hhsRow(pk: String, name: String, state: String, week: String, v: Double) =
-      s"$pk,$name,$state,1 Main St,Pittsburgh,15213,42003,POINT (-79 40),$week," +
-        Seq.tabulate(8)(i => BigDecimal(v) + i * BigDecimal("1.3")).mkString(",")
-    val hhsCsv = s"$dir/hhs.csv"
-    Files.writeString(Paths.get(hhsCsv), (hhsHeader +: Seq(
-      hhsRow("A", "Alpha", "PA", "2022-12-16", 5.0),
-      hhsRow("A", "Alpha", "PA", "2022-12-23", 6.0),
-      hhsRow("A", "Alpha", "PA", "2022-12-30", 7.0),
-      hhsRow("A", "Alpha", "PA", "2023-01-06", 10.0),
-      hhsRow("B", "Beta", "PA", "2023-01-06", 20.0),
-      hhsRow("C", "Gamma", "NY", "2023-01-13", 30.0))).mkString("\n"))
+    def row(pk: String, name: String, state: String, week: String, v: Double) =
+      hhsRow(pk, name, state, week, Seq.tabulate(8)(i => BigDecimal(v) + i * BigDecimal("1.3")))
+    val hhsCsv = s"$wh-hhs.csv"
+    Files.writeString(Paths.get(hhsCsv), (hhsHeader +: (Seq(
+      row("A", "Alpha", "PA", "2022-12-16", 5.0),
+      row("A", "Alpha", "PA", "2022-12-23", 6.0),
+      row("A", "Alpha", "PA", "2022-12-30", 7.0),
+      row("A", "Alpha", "PA", "2023-01-06", 10.0),
+      row("B", "Beta", "PA", "2023-01-06", 20.0),
+      row("C", "Gamma", "NY", "2023-01-13", 30.0)) ++ moreHhs)).mkString("\n"))
+    Cli.runHhs(spark, hhsCsv, wh, s"$wh-rejects/hhs")
 
     val qHeader = Schemas.qualityRawCsv.fieldNames
       .map(f => s""""$f"""").mkString(",")
-    val qCsv = s"$wh-quality.csv"
-    Files.writeString(Paths.get(qCsv), (qHeader +: quality.map {
-      case (id, own, emerg, rating) =>
-        s""""$id","Acute Care","$own","$emerg","$rating""""
-    }).mkString("\n"))
-
-    Cli.runHhs(spark, hhsCsv, wh, s"$wh-rejects/hhs")
-    Cli.runQuality(spark, "2023-01-20", qCsv, wh, s"$wh-rejects/quality")
+    Seq("2023-01-20" -> quality, "2023-01-27" -> later).filter(_._2.nonEmpty).foreach {
+      case (date, rows) =>
+        val qCsv = s"$wh-quality-$date.csv"
+        Files.writeString(Paths.get(qCsv), (qHeader +: rows.map {
+          case (id, own, emerg, rating) =>
+            s""""$id","Acute Care","$own","$emerg","$rating""""
+        }).mkString("\n"))
+        Cli.runQuality(spark, date, qCsv, wh, s"$wh-rejects/quality")
+    }
   }
 
   private lazy val loaded: Unit = loadFixture(warehouseDir, Seq(
@@ -100,22 +111,58 @@ class ReportSpec extends SparkSpec {
     assert(empty.split("\n").exists(_.matches("""\|( +NULL \|){5}""")))
   }
 
-  test("one render runs 7 job-launching SQL executions") {
-    loaded
-    val executions = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  /** The job-launching SQL executions one `body` runs. */
+  private def executions(body: => Unit): Int = {
+    val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
         Option(js.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-          .foreach(executions.add)
+          .foreach(ids.add)
     }
     GraftSqlBridge.drainListenerBus(spark)
     spark.sparkContext.addSparkListener(listener)
     try {
-      Report.render(spark, warehouseDir)
+      body
       GraftSqlBridge.drainListenerBus(spark)
     } finally spark.sparkContext.removeSparkListener(listener)
-    // the week summary, data date, ownership, then R5, R7, R8 and R9
-    assert(executions.size == 7)
+    ids.size
+  }
+
+  test("one render runs 5 job-launching SQL executions") {
+    loaded
+    // the week summary, the quality defaults, bed use (R5 and R8), R7, R9
+    assert(executions(Report.render(spark, warehouseDir)) == 5)
+  }
+
+  test("a render given --data-date and --ownership runs 4 executions") {
+    loaded
+    // no quality defaults to compute
+    assert(executions(Report.render(spark, warehouseDir,
+      dataDate = Some("2023-01-20"), ownership = Some("Government"))) == 4)
+  }
+
+  test("two quality snapshots: R5 and R8 join every snapshot, NULL first") {
+    val wh = s"$dir/warehouse-snapshots"
+    loadFixture(wh,
+      Seq(("A", "Government", "Yes", "3"), ("B", "Government", "Yes", "5"),
+        ("C", "Government", "No", "5")),
+      // A changes rating and ownership and C's rating turns empty (NULL),
+      // so a bed row counts once per snapshot it matches: R5's rating 5
+      // sums B twice and C once, R8's 2023-01-06 A once and B twice. D's
+      // only bed rows have no available beds. E and F have no bed rows and
+      // tie Proprietary with Government at 3, so the ownership default is
+      // the smaller name, Government.
+      later = Seq(("A", "Proprietary", "Yes", "4"), ("B", "Government", "Yes", "5"),
+        ("C", "Government", "No", ""), ("D", "Government", "Yes", "2"),
+        ("E", "Proprietary", "No", "3"), ("F", "Proprietary", "No", "3")),
+      moreHhs = Seq(hhsRow("D", "Delta", "OH", "2022-12-09",
+        Seq("0", "0", "4.5", "1.5", "2.0", "1.0", "0.5", "0.25"))))
+    val page = Report.render(spark, wh).replace(wh, "<warehouse>")
+    assert(page == golden("snapshots"))
+    assert(page.contains("ownership = Government"))
+    // R5: the NULL rating group prints first
+    assert(page.contains(
+      "| ----------------------- | ----------------------- |\n|                    NULL |"), page)
   }
 
   test("the ownership default skips a NULL ownership") {
@@ -156,5 +203,10 @@ class ReportSpec extends SparkSpec {
       Report.render(spark, warehouseDir, week = Some("2023-13-45"))
     }
     assert(e3.getMessage.contains("--week must be a yyyy-MM-dd date"))
+    // so does a --data-date that is no date
+    val e4 = intercept[IllegalArgumentException] {
+      Report.render(spark, warehouseDir, dataDate = Some("2023-13-45"))
+    }
+    assert(e4.getMessage == "--data-date must be a yyyy-MM-dd date, got '2023-13-45'")
   }
 }

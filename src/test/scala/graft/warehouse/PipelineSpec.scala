@@ -107,29 +107,40 @@ class PipelineSpec extends SparkSpec {
       hhsHeader,
       hhsRow("A", "Alpha", "2023-01-06", "10.0"),
       hhsRow("B", "Bad Week", "2023-13-45", "10.0"),
-      hhsRow("C", "Bad Metric", "2023-01-06", "N/A")
+      hhsRow("C", "Bad Metric", "2023-01-06", "N/A"),
+      hhsRow("D", "Huge", "2023-01-06", "1e20"),        // past the long range: loads
+      hhsRow("E", "Tiny", "2023-01-06", "-0.5"),        // (-1,0) truncation quirk: loads
+      hhsRow("F", "No Number", "2023-01-06", "NaN"),    // NaN → NULL, as pandas reads it
+      hhsRow("G", "Minus One", "2023-01-06", "-1")      // truncates below zero: rejects
     ).mkString("\n"))
     val emptyHospitals = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitals)
     val emptyBeds = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitalBedInformation)
     val h = HhsPipeline.load(spark, csv, emptyHospitals, emptyBeds)
-    assert(h.bedInfo.count() + h.rejects.count() == 3)
+    assert(h.bedInfo.count() + h.rejects.count() == 7)
     assert(h.rejects.select("hospital_pk", "reject_reason").as[(String, String)]
-      .collect().toSeq == Seq("B" -> "collection_week_null"))
+      .collect().sorted.toSeq == Seq("B" -> "collection_week_null",
+        "G" -> "negative_all_adult_hospital_beds_7_day_avg"))
     assert(h.bedInfo.filter($"hospital_fk" === "C")
       .select("total_icu_beds_7_day_avg").as[Option[Double]].head().isEmpty)
+    val icu = h.bedInfo.select("hospital_fk", "total_icu_beds_7_day_avg")
+      .as[(String, Option[Double])].collect().toMap
+    assert(icu("D") == Some(1e20) && icu("E") == Some(-0.5) && icu("F").isEmpty)
 
     val qcsv = writeCsv("malformed_quality.csv", Seq(
       """Facility ID,Hospital Type,Hospital Ownership,Emergency Services,Hospital overall rating""",
       """F1,Acute Care,Proprietary,Yes,Not Applicable""",
-      """F2,Acute Care,Proprietary,Yes,4"""
+      """F2,Acute Care,Proprietary,Yes,4""",
+      """F3,Acute Care,Proprietary,Yes,NaN"""
     ).mkString("\n"))
     val emptyQuality = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitalQualityInformation)
     val q = QualityPipeline.load(spark, qcsv, "2023-07-01", emptyQuality)
-    assert(q.quality.count() + q.rejects.count() == 2)
+    assert(q.quality.count() + q.rejects.count() == 3)
     assert(q.quality.filter($"facility_id" === "F1")
+      .select("hospital_overall_rating").as[Option[Double]].head().isEmpty)
+    assert(q.quality.filter($"facility_id" === "F3")
       .select("hospital_overall_rating").as[Option[Double]].head().isEmpty)
   }
 
@@ -156,14 +167,15 @@ class PipelineSpec extends SparkSpec {
     assert(week0106.select("n_records").as[Long].head() == 2L)
     assert(weeks.count() == 2)
     assert(week0106.select("sum_total_icu_beds_7_day_avg").as[Double].head() == 30.0)
-    val frac = Reports.bedUseByRating(q.quality, h.bedInfo)
-    assert(frac.count() == 2) // ratings 4 and 2
+    val bedUse = Reports.bedUse(q.quality, h.bedInfo)
+    assert(bedUse.filter($"grouping_id" === Reports.ByRating).count() == 2) // ratings 4 and 2
     assert(Reports.emergencyHospitalsByState(q.quality, h.hospitals, h.locations, "2023-07-01")
       .select("n_hospitals").as[Long].head() == 2L)
     assert(Reports.ratingByStateTopBottom(q.quality, h.locations, "2023-07-01").count() == 1)
     assert(weeks.filter($"collection_week" <= "2023-01-13")
       .select("all_cases", "covid_cases").count() == 2)
-    assert(Reports.bedUseByOwnership(q.quality, h.bedInfo, "Proprietary").count() == 2)
+    assert(bedUse.filter($"grouping_id" === Reports.ByOwnershipWeek &&
+      $"hospital_ownership" === "Proprietary").count() == 2)
   }
 
   test("CLI loaders: end-to-end shell workflow writes warehouse dirs + reject CSVs") {

@@ -1,8 +1,9 @@
 package graft.etl
 
+import graft.util.Exact.moneyState
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
 /** Incremental aggregate maintenance: keep a per-key STATE table of
   * algebraic partials (count / decimal sum / min / max), fold each new
@@ -18,7 +19,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * min and max take extrema, avg = sum/count at the end — exactly the
   * partial/final split Spark's own HashAggregate performs inside one
   * job, lifted to a persistable table so it composes ACROSS jobs.
-  * Sums live in DecimalType (exact, associative, order-independent),
+  * Sums live in [[graft.util.Exact.moneyState]] (exact, associative, order-independent),
   * so merged state is bit-identical to a from-scratch aggregate — the
   * claim ia01 pins against the oracle.
   *
@@ -29,13 +30,11 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   */
 object IncrementalAgg {
 
-  private val Dec = DecimalType(28, 2)
-
   /** Aggregate a batch into a state frame keyed by `keys`. */
   def state(df: DataFrame, keys: Seq[String], valueCol: String): DataFrame =
     df.groupBy(keys.map(col): _*)
       .agg(count(col(valueCol)).as("n_rows"),
-        sum(col(valueCol).cast(Dec)).as("sum_v"),
+        sum(moneyState(col(valueCol))).as("sum_v"),
         min(col(valueCol)).as("min_v"),
         max(col(valueCol)).as("max_v"))
 

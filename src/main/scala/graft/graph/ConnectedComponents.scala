@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.util.Exact.int128
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -50,7 +51,7 @@ object ConnectedComponents {
       var labels = ids.select(col("id"), col("id").as("cluster_id"))
         .localCheckpoint()
       def labelSum(df: DataFrame): java.math.BigDecimal =
-        Option(df.agg(sum(col("cluster_id").cast("decimal(38,0)"))).head()
+        Option(df.agg(sum(int128(col("cluster_id")))).head()
           .getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO)
       var prevSum = labelSum(labels)
       var iter = 0
@@ -89,7 +90,7 @@ object ConnectedComponents {
   /** One large-star round: every node u connects its STRICTLY LARGER
     * neighbors to m = min(Γ(u) ∪ {u}). Edges stay canonical (h > l).
     *
-    * NOT deduplicated (r17, guide §2.4 — one fewer edge-scale exchange
+    * NOT deduplicated (one fewer edge-scale exchange
     * per alternation): two apexes u, u' can emit the same (v, m) row,
     * but every consumer is duplicate-insensitive — [[smallStar]]'s
     * per-h min ignores multiplicity and its final `.distinct()`
@@ -140,7 +141,7 @@ object ConnectedComponents {
     * exposed so specs can pin the O(log diameter) convergence bound. */
   def starContraction(ids: DataFrame, edges: DataFrame,
                       maxIter: Int = 30): (DataFrame, Int) = {
-    // LAZY checkpoints throughout (r16): eager localCheckpoint runs a
+    // LAZY checkpoints throughout: eager localCheckpoint runs a
     // materialization job and the fingerprint scan right after it is a
     // second job — lazy, the fingerprint aggregate materializes the
     // checkpoint in the SAME job, halving the per-round job count (at
@@ -156,7 +157,7 @@ object ConnectedComponents {
       .localCheckpoint(false)
     def fp(df: DataFrame): (Long, java.math.BigDecimal) = {
       val r = df.agg(count(lit(1)),
-        sum(xxhash64(col("h"), col("l")).cast("decimal(38,0)"))).head()
+        sum(int128(xxhash64(col("h"), col("l"))))).head()
       (r.getLong(0), Option(r.getDecimal(1)).getOrElse(java.math.BigDecimal.ZERO))
     }
     var prev = fp(e)
@@ -173,7 +174,7 @@ object ConnectedComponents {
       // contracted edge set (≤ one edge per non-root node): the cost
       // is a single small anti-join, the payoff is a deterministic
       // correctness guarantee instead of an astronomically-likely one.
-      // both anti-join directions in ONE action (r16): the symmetric
+      // both anti-join directions in ONE action: the symmetric
       // difference is empty iff both sides are — a union costs the
       // same two anti-joins but one job instead of two
       converged = cur == prev && {

@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.util.Exact.int128
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -35,7 +36,7 @@ object Hierarchy {
         when(col("parent").isNull, 0L).otherwise(1L).as("d"))
       .localCheckpoint()
     def dSum(df: DataFrame): java.math.BigDecimal =
-      Option(df.agg(sum(col("d").cast("decimal(38,0)"))).head().getDecimal(0))
+      Option(df.agg(sum(int128(col("d")))).head().getDecimal(0))
         .getOrElse(java.math.BigDecimal.ZERO)
     var prev = dSum(st)
     var iter = 0

@@ -1,9 +1,10 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
+import graft.util.Exact._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** Breadth beyond the reference's surface: outer joins, scalar string/
   * date functions, conditional aggregation, ranking windows, exact
@@ -95,14 +96,13 @@ object BreadthQueries {
     (s, d) => Tables.lineitem(s, d).groupBy("l_linestatus").agg(
       count(lit(1)).as("n"),
       count(when(col("l_returnflag") === "R", 1)).as("n_returned"),
-      sum(when(col("l_discount") > 0.05,
-        col("l_extendedprice").cast(DecimalType(12, 2)))).cast(DoubleType)
+      exactSum(when(col("l_discount") > 0.05, money(col("l_extendedprice"))))
         .as("deep_discount_base"),
       max(when(col("l_quantity") >= 49, col("l_quantity"))).as("max_bulk_qty"))
       .orderBy("l_linestatus"),
-    Some("""SELECT l_linestatus, COUNT(*) AS n,
+    Some(s"""SELECT l_linestatus, COUNT(*) AS n,
            |  COUNT(*) FILTER (l_returnflag = 'R') AS n_returned,
-           |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) FILTER (l_discount > 0.05) AS DOUBLE) AS deep_discount_base,
+           |  CAST(SUM(${sqlMoney("l_extendedprice")}) FILTER (l_discount > 0.05) AS DOUBLE) AS deep_discount_base,
            |  MAX(l_quantity) FILTER (l_quantity >= 49) AS max_bulk_qty
            |FROM lineitem GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin))
 
@@ -110,7 +110,7 @@ object BreadthQueries {
   val w04RankNtile = QueryDef("w04_rank_ntile",
     (s, d) => {
       val byNation = Tables.customer(s, d).groupBy("c_nationkey")
-        .agg(sum(col("c_acctbal").cast(DecimalType(12, 2))).cast(DoubleType).as("bal"))
+        .agg(moneySum(col("c_acctbal")).as("bal"))
       val w = Window.orderBy(col("bal").desc, col("c_nationkey"))
       byNation.select(
         col("c_nationkey"), col("bal"),
@@ -119,8 +119,8 @@ object BreadthQueries {
         ntile(4).over(w).cast(LongType).as("quartile"))
         .orderBy("rnk", "c_nationkey")
     },
-    Some("""WITH b AS (SELECT c_nationkey,
-           |  CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE) AS bal
+    Some(s"""WITH b AS (SELECT c_nationkey,
+           |  ${sqlMoneySum("c_acctbal")} AS bal
            |  FROM customer GROUP BY c_nationkey)
            |SELECT c_nationkey, bal,
            |  RANK() OVER w AS rnk, DENSE_RANK() OVER w AS drnk,
@@ -156,7 +156,7 @@ object BreadthQueries {
         col("o_orderkey"), col("o_custkey"),
         datediff(col("o_orderdate").cast("date"), lit("1970-01-01").cast("date"))
           .cast(LongType).as("epoch_day"),
-        col("o_totalprice").cast(DecimalType(12, 2)).as("__price"))
+        money(col("o_totalprice")).as("__price"))
       val w = Window.partitionBy(col("o_custkey")).orderBy(col("epoch_day"))
         .rangeBetween(-30, Window.currentRow)
       base.select(
@@ -165,9 +165,9 @@ object BreadthQueries {
         sum(col("__price")).over(w).cast(DoubleType).as("rev_30d"))
         .orderBy("o_orderkey")
     },
-    Some("""WITH b AS (SELECT o_orderkey, o_custkey,
+    Some(s"""WITH b AS (SELECT o_orderkey, o_custkey,
            |    date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS epoch_day,
-           |    CAST(o_totalprice AS DECIMAL(12,2)) AS price
+           |    ${sqlMoney("o_totalprice")} AS price
            |  FROM orders)
            |SELECT o_orderkey, o_custkey, epoch_day,
            |  COUNT(*) OVER w AS n_30d,
@@ -277,7 +277,7 @@ object BreadthQueries {
     * tiny per-group bound table, corpus scanned twice, no window). */
   val f09WinsorizedStats = QueryDef("f09_winsorized_stats",
     (s, d) => {
-      // lineitemSpread (r16): exact percentile buffers every value in
+      // lineitemSpread: exact percentile buffers every value in
       // per-group maps during the PARTIAL phase — single-threaded on
       // the 1-row-group scan before the spread (see Tables)
       val li = Tables.lineitemSpread(s, d)
@@ -294,19 +294,19 @@ object BreadthQueries {
         .agg(count(lit(1)).as("n"),
           sum(col("is_lo")).as("n_clip_lo"),
           sum(col("is_hi")).as("n_clip_hi"),
-          (sum(col("clip").cast(DecimalType(24, 6))).cast(DoubleType) /
+          (exactSum(clipped(col("clip"))) /
             count(lit(1)).cast(DoubleType)).as("robust_mean"),
           first(col("lo_r")).as("lo_r"), first(col("hi_r")).as("hi_r"))
         .orderBy("l_returnflag")
     },
-    Some("""WITH b AS (SELECT l_returnflag,
+    Some(s"""WITH b AS (SELECT l_returnflag,
            |    round(quantile_cont(l_extendedprice, 0.05), 6) AS lo_r,
            |    round(quantile_cont(l_extendedprice, 0.95), 6) AS hi_r
            |  FROM lineitem GROUP BY l_returnflag)
            |SELECT l.l_returnflag, COUNT(*) AS n,
            |  CAST(SUM(CASE WHEN l_extendedprice < lo_r THEN 1 ELSE 0 END) AS BIGINT) AS n_clip_lo,
            |  CAST(SUM(CASE WHEN l_extendedprice > hi_r THEN 1 ELSE 0 END) AS BIGINT) AS n_clip_hi,
-           |  CAST(SUM(CAST(LEAST(GREATEST(l_extendedprice, lo_r), hi_r) AS DECIMAL(24,6))) AS DOUBLE)
+           |  ${sqlExactSum(sqlClipped("LEAST(GREATEST(l_extendedprice, lo_r), hi_r)"))}
            |    / COUNT(*) AS robust_mean,
            |  ANY_VALUE(lo_r) AS lo_r, ANY_VALUE(hi_r) AS hi_r
            |FROM lineitem l JOIN b ON l.l_returnflag = b.l_returnflag

@@ -3,9 +3,10 @@ package graft.queries
 import graft.{QueryDef, Tables}
 import graft.etl.{OrderedShuffle, Sampling}
 import graft.text.Repetition
+import graft.util.Exact._
 import org.apache.spark.sql.functions._
 
-/** Corpus-curation queries added round 5: repetition-based quality
+/** Corpus-curation queries: repetition-based quality
   * signals, rank-based stratum filtering, target-mixture resampling,
   * and the deterministic global training-order shuffle. All four are
   * oracle-gated — the approximation-free core of a pretraining data
@@ -20,10 +21,7 @@ object CurationQueries {
   val rp01RepetitionStats = QueryDef("rp01_repetition_stats",
     (s, d) => Repetition.repetitionStats(Tables.documents(s, d))
       .orderBy("doc_id"),
-    Some("""WITH tok AS (
-           |  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS w,
-           |         generate_subscripts(regexp_split_to_array(trim(text), '\s+'), 1) AS i
-           |  FROM documents),
+    Some(s"""WITH ${TextQueries.sqlTok()},
            |wc AS (SELECT doc_id, COUNT(DISTINCT w) AS wdist, COUNT(*) AS wtot
            |       FROM tok GROUP BY 1),
            |big AS (SELECT a.doc_id, a.w || ' ' || b.w AS g
@@ -158,21 +156,21 @@ object CurationQueries {
       Tables.documents(s, d), "source")
       .select(col("grp").as("source"), col("n_tokens"), col("tv"))
       .orderBy("source"),
-    Some("""WITH tok AS (SELECT source,
-           |    unnest(regexp_split_to_array(trim(text), '\s+')) AS t
+    Some(s"""WITH tok AS (SELECT source,
+           |    unnest(${TextQueries.sqlTokArr}) AS t
            |  FROM documents),
            |st AS (SELECT source, t, COUNT(*) AS c FROM tok GROUP BY 1, 2),
            |gt AS (SELECT t, SUM(c) AS g FROM st GROUP BY 1),
            |ns AS (SELECT source, SUM(c) AS n FROM st GROUP BY 1),
            |gg AS (SELECT SUM(n) AS bigg FROM ns),
            |f AS (SELECT st.source, ns.n, gg.bigg,
-           |        SUM(ABS(CAST(st.c AS HUGEINT) * gg.bigg
-           |                - CAST(gt.g AS HUGEINT) * ns.n)) AS sdev,
+           |        SUM(ABS(${sqlInt128("st.c")} * gg.bigg
+           |                - ${sqlInt128("gt.g")} * ns.n)) AS sdev,
            |        SUM(gt.g) AS gseen
            |      FROM st JOIN gt USING (t) JOIN ns USING (source)
            |      CROSS JOIN gg GROUP BY 1, 2, 3)
            |SELECT source, CAST(n AS BIGINT) AS n_tokens,
-           |  CAST(sdev + CAST(bigg - gseen AS HUGEINT) * n AS DOUBLE)
+           |  CAST(sdev + ${sqlInt128("bigg - gseen")} * n AS DOUBLE)
            |    / (2.0 * CAST(n AS DOUBLE) * CAST(bigg AS DOUBLE)) AS tv
            |FROM f ORDER BY source""".stripMargin))
 

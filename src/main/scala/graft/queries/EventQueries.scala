@@ -2,9 +2,10 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.events.Sessions
+import graft.util.Exact._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** Sessionization and event-stream analytics (batch form; the streaming
   * form shares operators via graft.streaming). Gap rule: 30 minutes. */
@@ -30,12 +31,12 @@ object EventQueries {
     (s, d) => Tables.events(s, d)
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
       .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast(DecimalType(12, 2))).cast(DoubleType).as("total_value"))
+        moneySum(col("value")).as("total_value"))
       .select(col("user_id"),
         col("session_window.start").as("session_start"),
         col("n_events"), col("total_value"))
       .orderBy("user_id", "session_start"),
-    Some("""WITH e AS (
+    Some(s"""WITH e AS (
            |  SELECT user_id, ts, value,
            |    CASE WHEN LAG(epoch_us(ts)) OVER w IS NULL
            |           OR epoch_us(ts) - LAG(epoch_us(ts)) OVER w > 1800000000
@@ -44,7 +45,7 @@ object EventQueries {
            |g AS (SELECT *, SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts
            |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM e)
            |SELECT user_id, MIN(ts) AS session_start, COUNT(*) AS n_events,
-           |  CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total_value
+           |  ${sqlMoneySum("value")} AS total_value
            |FROM g GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin))
 
   /** Event-type funnel counts per day — V4-style equality filters over a
@@ -53,10 +54,10 @@ object EventQueries {
     (s, d) => Tables.events(s, d)
       .groupBy(col("ts").cast("date").as("day"), col("event_type"))
       .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(12, 2))).cast(DoubleType).as("total_value"))
+        moneySum(col("value")).as("total_value"))
       .orderBy("day", "event_type"),
-    Some("""SELECT CAST(ts AS DATE) AS day, event_type, COUNT(*) AS n,
-           |  CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total_value
+    Some(s"""SELECT CAST(ts AS DATE) AS day, event_type, COUNT(*) AS n,
+           |  ${sqlMoneySum("value")} AS total_value
            |FROM events GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin))
 
   /** TOP SESSION PATHS (clickstream path analysis): sessionize under
@@ -356,7 +357,6 @@ object EventQueries {
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("user_id", "day").orderBy(col("ts"), col("event_id"))
-      val dec = (c: org.apache.spark.sql.Column) => c.cast(DecimalType(38, 0))
       val seg = Tables.events(s, d)
         .select(col("user_id"), to_date(col("ts")).as("day"), col("ts"),
           col("event_id"), floor(col("value") * 1000000L).cast(LongType).as("vq"))
@@ -364,7 +364,7 @@ object EventQueries {
           unix_micros(col("ts")))
       seg.groupBy("user_id", "day")
         .agg(count(lit(1)).as("n_events"),
-          sum(dec(col("vq")) * dec(col("dt"))).as("num"),
+          sum(int128(col("vq")) * int128(col("dt"))).as("num"),
           sum(col("dt")).cast(LongType).as("den"))
         .filter(col("den") > 0)
         .select(col("user_id"), col("day"), col("n_events"),
@@ -372,13 +372,13 @@ object EventQueries {
             / 1e6, 6).as("twap"))
         .orderBy("user_id", "day")
     },
-    Some("""WITH seg AS (SELECT user_id, CAST(ts AS DATE) AS day, ts, event_id,
+    Some(s"""WITH seg AS (SELECT user_id, CAST(ts AS DATE) AS day, ts, event_id,
            |    CAST(FLOOR(value * 1000000.0) AS BIGINT) AS vq,
            |    epoch_us(LEAD(ts, 1) OVER (PARTITION BY user_id, CAST(ts AS DATE)
            |      ORDER BY ts, event_id)) - epoch_us(ts) AS dt
            |  FROM events),
            |a AS (SELECT user_id, day, COUNT(*) AS n_events,
-           |    SUM(CAST(vq AS HUGEINT) * CAST(dt AS HUGEINT)) AS num,
+           |    SUM(${sqlInt128("vq")} * ${sqlInt128("dt")}) AS num,
            |    CAST(SUM(dt) AS BIGINT) AS den
            |  FROM seg GROUP BY 1, 2)
            |SELECT user_id, day, n_events,
@@ -562,7 +562,7 @@ object EventQueries {
         .rowsBetween(-10, -1)
       Tables.events(s, d)
         .withColumn("v_cents",
-          (col("value").cast(DecimalType(12, 2)) * 100).cast(LongType))
+          cents(col("value")))
         .withColumn("n_win", count(lit(1)).over(w))
         .withColumn("s_win", sum(col("v_cents")).over(w))
         .withColumn("ss_win", sum(col("v_cents") * col("v_cents")).over(w))
@@ -574,13 +574,13 @@ object EventQueries {
           col("n_win"), col("s_win"), col("ss_win"))
         .orderBy("user_id", "event_id")
     },
-    Some("""WITH e AS (
+    Some(s"""WITH e AS (
            |  SELECT user_id, event_id,
-           |    CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS v_cents,
+           |    ${sqlCents("value")} AS v_cents,
            |    COUNT(*) OVER w AS n_win,
-           |    CAST(SUM(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)) OVER w AS BIGINT) AS s_win,
-           |    CAST(SUM(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
-           |             * CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)) OVER w AS BIGINT) AS ss_win
+           |    CAST(SUM(${sqlCents("value")}) OVER w AS BIGINT) AS s_win,
+           |    CAST(SUM(${sqlCents("value")}
+           |             * ${sqlCents("value")}) OVER w AS BIGINT) AS ss_win
            |  FROM events
            |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
            |               ROWS BETWEEN 10 PRECEDING AND 1 PRECEDING))
@@ -807,15 +807,15 @@ object EventQueries {
         .rowsBetween(Window.unboundedPreceding, 0)
       Tables.events(s, d)
         .select(col("user_id"), col("ts"), col("event_id"),
-          (col("value").cast(DecimalType(12, 2)) * 100).cast(LongType).as("cents"))
+          cents(col("value")).as("cents"))
         .withColumn("cum", sum(col("cents")).over(w))
         .withColumn("peak", max(col("cum")).over(w))
         .groupBy("user_id")
         .agg(max(col("peak") - col("cum")).as("max_drawdown_cents"))
         .orderBy("user_id")
     },
-    Some("""WITH c AS (SELECT user_id, ts, event_id,
-           |    CAST(SUM(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT))
+    Some(s"""WITH c AS (SELECT user_id, ts, event_id,
+           |    CAST(SUM(${sqlCents("value")})
            |      OVER (PARTITION BY user_id ORDER BY ts, event_id
            |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
            |  FROM events),

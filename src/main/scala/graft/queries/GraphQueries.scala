@@ -60,7 +60,7 @@ object GraphQueries {
       val e = Tables.orders(s, d)
         .select(col("o_orderkey"), (col("o_custkey") * 2).as("src"))
         // SHUFFLE_HASH: build the orders side per partition instead of
-        // sorting both fact streams for a merge (guide §3.1)
+        // sorting both fact streams for a merge
         .hint("shuffle_hash")
         .join(Tables.lineitem(s, d)
           .select(col("l_orderkey"), (col("l_suppkey") * 2 + 1).as("dst")),
@@ -71,10 +71,10 @@ object GraphQueries {
       val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
       val baseDf = nodes.agg(count(lit(1)).as("__n"))
         .select(expr(s"$Q div nullif(__n, 0)").as("base"))
-      // The rank frame CARRIES outdeg (r16 opt, guide §2.4): the old
-      // shape joined e⨝deg inside every round — a loop-invariant
-      // |e|-sized merge join repeated 6× (exchange reuse dedupes the
-      // SHUFFLES, not the per-round join work above them). Attaching
+      // The rank frame CARRIES outdeg: joining e⨝deg inside every
+      // round would repeat a loop-invariant |e|-sized merge join 6×
+      // (exchange reuse dedupes the SHUFFLES, not the per-round join
+      // work above them). Attaching
       // outdeg to the node frame once (left join; sink-only nodes carry
       // null and contribute nothing — they never match e.src) turns
       // each round into exactly two joins: e⨝r on src, nodes⨝contrib
@@ -86,7 +86,7 @@ object GraphQueries {
       val r0 = nd.crossJoin(broadcast(baseDf))
         .select(col("id"), col("base").as("pr"), col("outdeg"))
       def step(r: DataFrame): DataFrame = {
-        // SHUFFLE_HASH on the rank side (guide §3.1): sort-merge would
+        // SHUFFLE_HASH on the rank side: sort-merge would
         // re-SORT the |e| edge stream in every round (exchange reuse
         // dedupes the shuffle, not the sort above it); hashing the
         // |V|-row rank frame per partition streams the edges unsorted.
@@ -219,10 +219,10 @@ object GraphQueries {
       val e = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
       val seed = e.agg(min(col("src")).as("id"))
         .select(col("id"), lit(0L).as("dist"))
-      // FRONTIER-ONLY expansion (r16 opt, guide §2.3 — shuffle fewer
-      // bytes): round k only expands nodes discovered in round k−1
-      // (dist = k−1). Expanding the full distance table re-walked every
-      // settled node's edges each round for hops that can never improve
+      // FRONTIER-ONLY expansion (fewer shuffled bytes): round k only
+      // expands nodes discovered in round k−1 (dist = k−1). Expanding
+      // the full distance table would re-walk every settled node's
+      // edges each round for hops that can never improve
       // (a node at dist j was already expanded in round j+1, and min()
       // discards re-derived distances). Textbook BFS correctness: the
       // set of nodes at dist k is exactly the frontier's neighbors not

@@ -1,8 +1,9 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
+import graft.util.Exact._
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+import org.apache.spark.sql.types.LongType
 
 /** Multi-level aggregation (ROLLUP / CUBE / grouping sets) and the
   * SQL-text query interface — beyond the reference's flat GROUP BYs,
@@ -23,10 +24,10 @@ object GroupingQueries {
     (s, d) => Tables.lineitem(s, d)
       .select(col("l_returnflag"), col("l_linestatus"), revTerm.as("__rev"))
       .rollup("l_returnflag", "l_linestatus")
-      .agg(count(lit(1)).as("n"), sum(col("__rev")).cast(DoubleType).as("revenue"))
+      .agg(count(lit(1)).as("n"), exactSum(col("__rev")).as("revenue"))
       .orderBy(col("l_returnflag"), col("l_linestatus")),
     Some(s"""SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
-            |  CAST(SUM($sqlRevTerm) AS DOUBLE) AS revenue
+            |  ${sqlExactSum(sqlRevTerm)} AS revenue
             |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
             |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin))
 
@@ -49,14 +50,14 @@ object GroupingQueries {
     (s, d) => {
       Tables.orders(s, d).createOrReplaceTempView("v_orders")
       Tables.customer(s, d).createOrReplaceTempView("v_customer")
-      s.sql("""
+      s.sql(s"""
         SELECT c_mktsegment, COUNT(*) AS n_orders,
-          CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total
+          ${sqlMoneySum("o_totalprice")} AS total
         FROM v_orders JOIN v_customer ON o_custkey = c_custkey
         GROUP BY c_mktsegment ORDER BY c_mktsegment""")
     },
-    Some("""SELECT c_mktsegment, COUNT(*) AS n_orders,
-           |  CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total
+    Some(s"""SELECT c_mktsegment, COUNT(*) AS n_orders,
+           |  ${sqlMoneySum("o_totalprice")} AS total
            |FROM orders JOIN customer ON o_custkey = c_custkey
            |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin))
 
@@ -69,16 +70,16 @@ object GroupingQueries {
   val g04GroupingSets = QueryDef("g04_grouping_sets",
     (s, d) => Tables.orders(s, d)
       .select(col("o_orderstatus"), col("o_orderpriority"),
-        col("o_totalprice").cast(DecimalType(12, 2)).as("__price"))
+        money(col("o_totalprice")).as("__price"))
       .groupingSets(
         Seq(Seq(col("o_orderstatus")), Seq(col("o_orderpriority"))),
         col("o_orderstatus"), col("o_orderpriority"))
       .agg(count(lit(1)).as("n"),
-        sum(col("__price")).cast(DoubleType).as("total"),
+        exactSum(col("__price")).as("total"),
         grouping_id().cast(LongType).as("gid"))
       .orderBy(col("o_orderstatus"), col("o_orderpriority")),
-    Some("""SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
-           |  CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total,
+    Some(s"""SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
+           |  ${sqlMoneySum("o_totalprice")} AS total,
            |  GROUPING(o_orderstatus, o_orderpriority) AS gid
            |FROM orders GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
            |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin))

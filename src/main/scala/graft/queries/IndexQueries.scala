@@ -2,9 +2,9 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.text.TextFunctions
+import graft.util.Exact._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Corpus indexing structures: the inverted index (search/retrieval),
   * asymmetric shingle containment (quote/subset detection — what
@@ -49,10 +49,7 @@ object IndexQueries {
             .cast("array<string>"), ",").as("postings10"))
         .orderBy("term")
     },
-    Some("""WITH tok AS (SELECT doc_id,
-           |    unnest(regexp_split_to_array(trim(text), '\s+')) AS w,
-           |    generate_subscripts(regexp_split_to_array(trim(text), '\s+'), 1) AS i
-           |  FROM documents),
+    Some(s"""WITH ${TextQueries.sqlTok()},
            |term AS (SELECT a.doc_id, a.w || ' ' || b.w AS term
            |         FROM tok a JOIN tok b ON b.doc_id = a.doc_id AND b.i = a.i + 1)
            |SELECT term, COUNT(DISTINCT doc_id) AS df, COUNT(*) AS tf,
@@ -91,7 +88,7 @@ object IndexQueries {
       val dsh = docs.select(col("doc_id"),
         explode(TextFunctions.shingles(col("text"), 2)).as("s"))
       val sizes = esh.groupBy("ex_id").agg(count(lit(1)).as("n"))
-      // broadcast the PROBE-side shingles (r16 opt, guide §3.1): esh is
+      // broadcast the PROBE-side shingles: esh is
       // 1/20 of docs × ≤7 prefix shingles — small by construction at
       // any corpus size — while dsh is the full corpus shingle stream.
       // Unhinted, Spark's size estimate (raw parquet bytes, blind to
@@ -108,15 +105,13 @@ object IndexQueries {
             .as("containment"))
         .orderBy("ex_id", "doc_id")
     },
-    Some("""WITH ex AS (SELECT doc_id AS ex_id,
-           |        array_to_string((regexp_split_to_array(trim(text), '\s+'))[1:8], ' ') AS text
+    Some(s"""WITH ex AS (SELECT doc_id AS ex_id,
+           |        array_to_string((${TextQueries.sqlTokArr})[1:8], ' ') AS text
            |      FROM documents WHERE doc_id % 20 = 0),
-           |etok AS (SELECT ex_id, unnest(regexp_split_to_array(text, '\s+')) AS w,
-           |        generate_subscripts(regexp_split_to_array(text, '\s+'), 1) AS i FROM ex),
+           |${TextQueries.sqlTok("etok", "ex", "ex_id", "regexp_split_to_array(text, '\\s+')")},
            |esh AS (SELECT DISTINCT a.ex_id, a.w || ' ' || b.w AS s
            |        FROM etok a JOIN etok b ON b.ex_id = a.ex_id AND b.i = a.i + 1),
-           |dtok AS (SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS w,
-           |        generate_subscripts(regexp_split_to_array(trim(text), '\s+'), 1) AS i FROM documents),
+           |${TextQueries.sqlTok("dtok")},
            |dsh AS (SELECT DISTINCT a.doc_id, a.w || ' ' || b.w AS s
            |        FROM dtok a JOIN dtok b ON b.doc_id = a.doc_id AND b.i = a.i + 1),
            |sizes AS (SELECT ex_id, COUNT(*) AS n FROM esh GROUP BY ex_id),
@@ -149,7 +144,7 @@ object IndexQueries {
           split(col("sh"), " ").getItem(1).as("nxt"))
         .groupBy("ctx", "nxt").agg(count(lit(1)).as("cnt"))
       val byCtx = Window.partitionBy("ctx")
-      // rank FIRST, total SECOND (r16 opt): row_number's window sorts
+      // rank FIRST, total SECOND: row_number's window sorts
       // by (ctx, cnt desc, nxt); the unordered sum-over-ctx window only
       // requires clustering by ctx, which that ordering already
       // satisfies — this order plans ONE sort between the two windows
@@ -164,10 +159,7 @@ object IndexQueries {
         .select(col("ctx"), col("nxt"), col("cnt"), col("ctx_total"), col("rk"))
         .orderBy("ctx", "rk")
     },
-    Some("""WITH tok AS (SELECT doc_id,
-           |    unnest(regexp_split_to_array(trim(text), '\s+')) AS w,
-           |    generate_subscripts(regexp_split_to_array(trim(text), '\s+'), 1) AS i
-           |  FROM documents),
+    Some(s"""WITH ${TextQueries.sqlTok()},
            |big AS (SELECT a.w AS ctx, b.w AS nxt, COUNT(*) AS cnt
            |        FROM tok a JOIN tok b ON b.doc_id = a.doc_id AND b.i = a.i + 1
            |        GROUP BY 1, 2),
@@ -189,8 +181,8 @@ object IndexQueries {
     * signal); low = boilerplate.
     *
     * NO LOGARITHM IS EVER EVALUATED. floor(log₂(T/c)) = max k with
-    * c·2ᵏ ≤ T (row-local exact bit length of T div c — see the r16
-    * note at the computation), and the two fractional bits come from comparing
+    * c·2ᵏ ≤ T (row-local exact bit length of T div c — see the note
+    * at the computation), and the two fractional bits come from comparing
     * c⁴·2⁴ᵇ·{2,4,8} ≤ T⁴ in DECIMAL(38,0) — floor(4·log₂ r) = 4b+f
     * exactly, because x ∈ [1,2) ⇒ floor(log₂ x⁴) = floor(4·log₂ x).
     * Cross-checked against float log₂ on every term at build time;
@@ -216,8 +208,7 @@ object IndexQueries {
       val c = dt.groupBy("term").agg(sum(col("occ")).cast("bigint").as("c"))
         .withColumn("ctx", split(col("term"), " ").getItem(0))
       val t = c.groupBy("ctx").agg(sum(col("c")).cast("bigint").as("tc"))
-      val dec = (x: org.apache.spark.sql.Column) => x.cast(DecimalType(38, 0))
-      // b = max k with c·2ᵏ ≤ tc, computed ROW-LOCALLY (r16 opt): since
+      // b = max k with c·2ᵏ ≤ tc, computed ROW-LOCALLY: since
       // 2ᵏ is an integer, c·2ᵏ ≤ tc ⟺ 2ᵏ ≤ tc div c, so
       // b = floor(log₂(tc div c)) = length(bin(tc div c)) − 1 — the
       // gn02 exact-bit-length trick (no libm log2, whose 2.999… at
@@ -231,9 +222,8 @@ object IndexQueries {
         .withColumn("b", least(length(bin(expr("tc div c"))).cast("long") - 1L,
           lit(39L)))
         .withColumn("pb", expr("shiftleft(cast(1 as bigint), cast(b as int))"))
-      val c4 = dec(col("c")) * dec(col("c")) * dec(col("c")) * dec(col("c"))
-      val pb4 = dec(col("pb")) * dec(col("pb")) * dec(col("pb")) * dec(col("pb"))
-      val tc4 = dec(col("tc")) * dec(col("tc")) * dec(col("tc")) * dec(col("tc"))
+      val pow4 = (c: String) => Seq.fill(4)(int128(col(c))).reduce(_ * _)
+      val (c4, pb4, tc4) = (pow4("c"), pow4("pb"), pow4("tc"))
       val qb = b.select(col("term"), (lit(4L) * col("b") +
           when(c4 * pb4 * 8 <= tc4, 3L)
             .when(c4 * pb4 * 4 <= tc4, 2L)
@@ -248,10 +238,7 @@ object IndexQueries {
             (lit(4.0) * col("n_bigrams").cast("double")), 6).as("avg_bits"))
         .orderBy("doc_id")
     },
-    Some("""WITH tok AS (SELECT doc_id,
-           |    unnest(regexp_split_to_array(trim(text), '\s+')) AS w,
-           |    generate_subscripts(regexp_split_to_array(trim(text), '\s+'), 1) AS i
-           |  FROM documents),
+    Some(s"""WITH ${TextQueries.sqlTok()},
            |bg AS (SELECT a.doc_id, a.w AS ctx, a.w || ' ' || b.w AS term
            |       FROM tok a JOIN tok b ON b.doc_id = a.doc_id AND b.i = a.i + 1),
            |c AS (SELECT ctx, term, COUNT(*) AS c FROM bg GROUP BY 1, 2),

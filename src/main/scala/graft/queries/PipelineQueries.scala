@@ -134,10 +134,10 @@ object PipelineQueries {
     * the SORTED character string loses no qualifying pair — candidates
     * come from an equi-join on the anagram key (linear shuffle, group
     * sizes bounded by the domain's permutation classes: max 6, avg 4.5
-    * at sf0.1 — measured), then the scorer verifies. The r8 sf1 run
-    * measured the previous equal-length block at exponent 2.00 (all
-    * names are 18 chars — the block was the whole table); this key
-    * actually partitions the domain. The oracle is the QUADRATIC
+    * at sf0.1 — measured), then the scorer verifies. An equal-length
+    * block would not partition it (all names are 18 chars — the block
+    * is the whole table, exponent 2.00 measured at sf1); this key
+    * does. The oracle is the QUADRATIC
     * ground truth (no blocking) with DuckDB's independent
     * `jaro_winkler_similarity`, so a hash match proves the blocking
     * lossless AND cross-validates the whole scorer (window, half-
@@ -257,9 +257,8 @@ object PipelineQueries {
     * token pool is bounded by construction at 31 types/lang at every
     * driver SF (sf0.001/0.01/0.1 — vc01 computes it), and the ScaleUp
     * replica tags add ~31×(factor−1) types, so factor-10 sf1 runs at
-    * ~310/lang and even factor-100 stays under k. (r8 lesson: k=64
-    * was sized to the base corpus only and the fail-fast below fired
-    * at sf1.) MG state is ≤ min(vocab, k) entries per partition per
+    * ~310/lang and even factor-100 stays under k (a k sized to the
+    * base corpus alone would trip the fail-fast below at sf1). MG state is ≤ min(vocab, k) entries per partition per
     * group — k is a cap, not a cost, so the margin is free. The
     * sketch regime (decrements, error bounds, merge invariance) is
     * covered by FreqItemsSpec on engineered skew. */
@@ -304,10 +303,10 @@ object PipelineQueries {
     * bounds per-doc pair fan-out structurally. */
   val co01TokenPmi = QueryDef("co01_token_pmi",
     (s, d) => {
-      // distinct (doc, token) pairs computed SCAN-SIDE (r16, guide
-      // §2.4): doc_ids are unique, so per-doc array_distinct before the
-      // explode IS the distinct — the old .distinct() shuffled the full
-      // exploded token stream just to dedupe within each document
+      // distinct (doc, token) pairs computed SCAN-SIDE: doc_ids are
+      // unique, so per-doc array_distinct before the explode IS the
+      // distinct — a .distinct() would shuffle the full exploded token
+      // stream just to dedupe within each document
       val toks = Tables.documents(s, d)
         .select(col("doc_id"),
           explode(array_distinct(TextFunctions.tokens(col("text")))).as("t"))

@@ -1,8 +1,8 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
+import graft.util.Exact._
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 /** Pivot and subquery forms — the last relational surface pieces:
   * wide-format reshaping and correlated/uncorrelated subqueries. */
@@ -31,16 +31,16 @@ object PivotSubqueryQueries {
   val sq01ScalarSubquery = QueryDef("sq01_scalar_subquery",
     (s, d) => {
       Tables.orders(s, d).createOrReplaceTempView("v_sq_orders")
-      s.sql("""
+      s.sql(s"""
         SELECT o_orderkey, o_totalprice FROM v_sq_orders
         WHERE o_totalprice > (
-          SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) / COUNT(*)
+          SELECT ${sqlMoneySum("o_totalprice")} / COUNT(*)
           FROM v_sq_orders)
         ORDER BY o_orderkey""")
     },
-    Some("""SELECT o_orderkey, o_totalprice FROM orders
+    Some(s"""SELECT o_orderkey, o_totalprice FROM orders
            |WHERE o_totalprice > (
-           |  SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) / COUNT(*)
+           |  SELECT ${sqlMoneySum("o_totalprice")} / COUNT(*)
            |  FROM orders)
            |ORDER BY o_orderkey""".stripMargin))
 
@@ -68,17 +68,17 @@ object PivotSubqueryQueries {
     (s, d) => Tables.lineitem(s, d)
       .groupBy("l_returnflag")
       .agg(
-        sum(col("l_quantity").cast(DecimalType(12, 2))).cast(DoubleType).as("sum_qty"),
-        sum(col("l_extendedprice").cast(DecimalType(12, 2))).cast(DoubleType).as("sum_base"))
+        moneySum(col("l_quantity")).as("sum_qty"),
+        moneySum(col("l_extendedprice")).as("sum_base"))
       .unpivot(
         ids = Array(col("l_returnflag")),
         values = Array(col("sum_qty"), col("sum_base")),
         variableColumnName = "metric", valueColumnName = "value")
       .orderBy("l_returnflag", "metric"),
-    Some("""UNPIVOT (
+    Some(s"""UNPIVOT (
            |  SELECT l_returnflag,
-           |    CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
-           |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_base
+           |    ${sqlMoneySum("l_quantity")} AS sum_qty,
+           |    ${sqlMoneySum("l_extendedprice")} AS sum_base
            |  FROM lineitem GROUP BY l_returnflag)
            |ON sum_qty, sum_base INTO NAME metric VALUE value
            |ORDER BY l_returnflag, metric""".stripMargin))

@@ -7,13 +7,13 @@ import org.apache.spark.sql.functions.lit
   *
   * Six queries whose exact all-pairs / all-wedges work is output-bound
   * (fz02, sm04, tc01, dd12, bt02, dd13) run on a hardcoded probe slice
-  * (`doc_id % 5`, `l_partkey % 2`, …) with the measured justification
-  * recorded in NOTES: the full-scope cost is Θ(output), not an engine
+  * (`doc_id % 5`, `l_partkey % 2`, …), each justified in its
+  * scaladoc: the full-scope cost is Θ(output), not an engine
   * artifact, and corpus-wide dedup goes through star contraction
   * instead. That claim must stay a MEASUREMENT, not a memory — so
   * setting `GRAFT_AUDIT_FULL_SCOPE=1` widens every probe predicate to
-  * the full table and the same queries run corpus-wide (one audited
-  * pass per round, timings in NOTES_r{N}).
+  * the full table and the same queries run corpus-wide (an audited
+  * pass whose timings are recorded with the change that ran it).
   *
   * The DuckDB oracles are deliberately NOT parameterized: the
   * correctness gate always runs probe-scoped (flag unset), where Spark

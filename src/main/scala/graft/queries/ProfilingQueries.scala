@@ -1,9 +1,10 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
+import graft.util.Exact._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** Dataset profiling: the "what is in this table" pass every ingest
   * runs before modeling (the Deequ `ColumnProfiler` / pandas-profiling
@@ -21,21 +22,21 @@ object ProfilingQueries {
     * decimal→string does not).
     *
     * 100 TB: the scan is the cost — the aggregates ride two parallel
-    * passes (numeric/distinct + string min/max; see the r16 note in
+    * passes (numeric/distinct + string min/max; see the note in
     * [[ordersProfile]]) with partial (map-side) aggregation, and
     * adding a column adds expressions, not passes per column. The
     * deliberate scale caveat is
     * `countDistinct`: exact distinct on a high-cardinality key
     * shuffles that column's values; at 100 TB flip the
     * [[ordersProfile]] `approx` knob to HLL++ sketches — wired and
-    * oracle-gated as dp02 below (VERDICT r15 #4); the profile contract
+    * oracle-gated as dp02 below; the profile contract
     * (one scan, stacked rows) is unchanged. */
   val dp01Profile = QueryDef("dp01_profile",
     (s, d) => ordersProfile(s, d, approx = false),
     Some(dp01OracleSql))
 
-  /** The profiling pass as the reusable KNOB dp01's scaladoc promises
-    * (VERDICT r15 #4): `approx = false` is dp01's exact form;
+  /** The profiling pass as the reusable KNOB dp01's scaladoc promises:
+    * `approx = false` is dp01's exact form;
     * `approx = true` swaps every exact countDistinct for HLL++
     * `approx_count_distinct` (rsd 1%) — at 100 TB that removes the
     * only per-column value shuffle (the expand feeding exact
@@ -45,13 +46,13 @@ object ProfilingQueries {
   def ordersProfile(s: SparkSession, d: String, approx: Boolean): DataFrame = {
       val nd: Column => Column =
         if (approx) c => approx_count_distinct(c, 0.01) else c => countDistinct(c)
-      val price = col("o_totalprice").cast(DecimalType(12, 2))
+      val price = money(col("o_totalprice"))
       val day = col("o_orderdate").cast("date")
-      // r16 opt (guide §1.2 step 2), EXACT PATH ONLY: the four STRING
+      // EXACT PATH ONLY: the four STRING
       // min/max aggregates (status, priority) have immutable (string)
       // buffers, and one of them in an aggregate forces the WHOLE
       // aggregate into SortAggregate — with the exact path's
-      // distinct-rewrite Expand that meant sorting 7× the table on both
+      // distinct-rewrite Expand that would sort 7× the table on both
       // sides of the exchange (measured: the two Sorts dominated dp01,
       // 3.2 s → 1.8 s at sf0.1). Split them into their own ungrouped
       // aggregate (SortAggregate with NO grouping keys needs no Sort:
@@ -120,7 +121,7 @@ object ProfilingQueries {
   // lazy: dp01Profile above references this textually-later val — a
   // strict val would still be null at dp01Profile's init
   private lazy val dp01OracleSql: String =
-    """WITH a AS (SELECT COUNT(*) AS n,
+    s"""WITH a AS (SELECT COUNT(*) AS n,
            |  SUM(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) AS nn1,
            |  COUNT(DISTINCT o_orderkey) AS nd1,
            |  CAST(MIN(o_orderkey) AS VARCHAR) AS mn1, CAST(MAX(o_orderkey) AS VARCHAR) AS mx1,
@@ -131,9 +132,9 @@ object ProfilingQueries {
            |  COUNT(DISTINCT o_orderstatus) AS nd3,
            |  MIN(o_orderstatus) AS mn3, MAX(o_orderstatus) AS mx3,
            |  SUM(CASE WHEN o_totalprice IS NULL THEN 1 ELSE 0 END) AS nn4,
-           |  COUNT(DISTINCT CAST(o_totalprice AS DECIMAL(12,2))) AS nd4,
-           |  CAST(MIN(CAST(o_totalprice AS DECIMAL(12,2))) AS VARCHAR) AS mn4,
-           |  CAST(MAX(CAST(o_totalprice AS DECIMAL(12,2))) AS VARCHAR) AS mx4,
+           |  COUNT(DISTINCT ${sqlMoney("o_totalprice")}) AS nd4,
+           |  CAST(MIN(${sqlMoney("o_totalprice")}) AS VARCHAR) AS mn4,
+           |  CAST(MAX(${sqlMoney("o_totalprice")}) AS VARCHAR) AS mx4,
            |  SUM(CASE WHEN o_orderdate IS NULL THEN 1 ELSE 0 END) AS nn5,
            |  COUNT(DISTINCT CAST(o_orderdate AS DATE)) AS nd5,
            |  CAST(MIN(CAST(o_orderdate AS DATE)) AS VARCHAR) AS mn5,
@@ -168,17 +169,17 @@ object ProfilingQueries {
     * aggregates; the join broadcasts. */
   val dp02ProfileApproxBound = QueryDef("dp02_profile_approx_bound",
     (s, d) => {
-      // r17 (guide §2.4/§1.2 — don't rescan what a running pass can
-      // carry): the pre-r17 form ran ordersProfile twice — THREE orders
-      // scans (exact numeric frame, exact string frame, approx frame) —
-      // and joined two stacked 6-row frames on col_name. The six HLL
+      // Don't rescan what a running pass can carry: running
+      // ordersProfile twice would take THREE orders scans (exact
+      // numeric frame, exact string frame, approx frame) and join two
+      // stacked 6-row frames on col_name. The six HLL
       // aggregates have no distinct rewrite, so they ride the exact
       // path's ungrouped string frame (already a sort-free streaming
       // SortAggregate; one scan serves both) and the bound flag is
       // computed per column BEFORE the stack: two scans, no join, same
-      // rows. (r16's rejected variant was different: it SPLIT the
-      // approx frame into two scans; this MERGES frames — scans 3→2.)
-      val price = col("o_totalprice").cast(DecimalType(12, 2))
+      // rows — frames MERGE, scans 3→2 (splitting the approx frame
+      // into two scans instead would add one).
+      val price = money(col("o_totalprice"))
       val day = col("o_orderdate").cast("date")
       val apx = (c: Column) => approx_count_distinct(c, 0.01)
       val o = Tables.orders(s, d)
@@ -243,6 +244,13 @@ object ProfilingQueries {
            |FROM (${dp01OracleSql.stripSuffix("ORDER BY col_name")})
            |ORDER BY col_name""".stripMargin))
 
+  /** cv01's measures, keyed by the letter that names their sums, and
+    * the 10 (x, y) pairs with x not after y. */
+  private val covMeasures = Seq("q" -> "l_quantity", "p" -> "l_extendedprice",
+    "d" -> "l_discount", "t" -> "l_tax")
+  private val covPairs =
+    for ((x, i) <- covMeasures.zipWithIndex; y <- covMeasures.drop(i)) yield (x, y)
+
   /** PAIRWISE COVARIANCE MATRIX of lineitem's four numeric measures in
     * ONE scan: every Σx and Σxy accumulates in DECIMAL (exact,
     * order-independent — the QueryDef parity discipline), and the
@@ -259,21 +267,13 @@ object ProfilingQueries {
     * partitionings — the decimal-sum form cannot. */
   val cv01CovarianceMatrix = QueryDef("cv01_covariance_matrix",
     (s, d) => {
-      val q = col("l_quantity").cast(DecimalType(12, 2))
-      val p = col("l_extendedprice").cast(DecimalType(12, 2))
-      val dc = col("l_discount").cast(DecimalType(12, 2))
-      val t = col("l_tax").cast(DecimalType(12, 2))
-      // lineitemSpread (r16): 16 decimal multiply-sums in the partial
-      // phase of a 1-task scan were the whole query (see Tables)
-      val agg = Tables.lineitemSpread(s, d).agg(
-        count(lit(1)).as("n"),
-        sum(q).cast(DoubleType).as("sq"), sum(p).cast(DoubleType).as("sp"),
-        sum(dc).cast(DoubleType).as("sd"), sum(t).cast(DoubleType).as("st"),
-        sum(q * q).cast(DoubleType).as("sqq"), sum(q * p).cast(DoubleType).as("sqp"),
-        sum(q * dc).cast(DoubleType).as("sqd"), sum(q * t).cast(DoubleType).as("sqt"),
-        sum(p * p).cast(DoubleType).as("spp"), sum(p * dc).cast(DoubleType).as("spd"),
-        sum(p * t).cast(DoubleType).as("spt"), sum(dc * dc).cast(DoubleType).as("sdd"),
-        sum(dc * t).cast(DoubleType).as("sdt"), sum(t * t).cast(DoubleType).as("stt"))
+      val m = (c: String) => money(col(c))
+      // lineitemSpread: the decimal sums in the partial phase of a
+      // 1-task scan would be the whole query (see Tables)
+      val agg = Tables.lineitemSpread(s, d).agg(count(lit(1)).as("n"),
+        covMeasures.map { case (k, c) => exactSum(m(c)).as(s"s$k") } ++
+          covPairs.map { case ((k1, c1), (k2, c2)) =>
+            exactSum(m(c1) * m(c2)).as(s"s$k1$k2") }: _*)
       val nD = col("n").cast(DoubleType)
       def cov(sxy: String, sx: String, sy: String) =
         round((nD * col(sxy) - col(sx) * col(sy)) / nD / nD, 6)
@@ -298,21 +298,11 @@ object ProfilingQueries {
         .select(col("x_col"), col("y_col"), col("n"), col("cov"))
         .orderBy("x_col", "y_col")
     },
-    Some("""WITH a AS (SELECT COUNT(*) AS n,
-           |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sq,
-           |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sp,
-           |  CAST(SUM(CAST(l_discount AS DECIMAL(12,2))) AS DOUBLE) AS sd,
-           |  CAST(SUM(CAST(l_tax AS DECIMAL(12,2))) AS DOUBLE) AS st,
-           |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sqq,
-           |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sqp,
-           |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_discount AS DECIMAL(12,2))) AS DOUBLE) AS sqd,
-           |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_tax AS DECIMAL(12,2))) AS DOUBLE) AS sqt,
-           |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS spp,
-           |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_discount AS DECIMAL(12,2))) AS DOUBLE) AS spd,
-           |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_tax AS DECIMAL(12,2))) AS DOUBLE) AS spt,
-           |  CAST(SUM(CAST(l_discount AS DECIMAL(12,2)) * CAST(l_discount AS DECIMAL(12,2))) AS DOUBLE) AS sdd,
-           |  CAST(SUM(CAST(l_discount AS DECIMAL(12,2)) * CAST(l_tax AS DECIMAL(12,2))) AS DOUBLE) AS sdt,
-           |  CAST(SUM(CAST(l_tax AS DECIMAL(12,2)) * CAST(l_tax AS DECIMAL(12,2))) AS DOUBLE) AS stt
+    Some(s"""WITH a AS (SELECT COUNT(*) AS n,
+           |  ${(covMeasures.map { case (k, c) => s"${sqlMoneySum(c)} AS s$k" } ++
+                covPairs.map { case ((k1, c1), (k2, c2)) =>
+                  s"${sqlExactSum(s"${sqlMoney(c1)} * ${sqlMoney(c2)}")} AS s$k1$k2" })
+                .mkString(",\n  ")}
            |  FROM lineitem),
            |c AS (SELECT n,
            |  ROUND((n * sqq - sq * sq) / n / n, 6) AS c11,
@@ -380,10 +370,7 @@ object ProfilingQueries {
           round(col("top10").cast(DoubleType) / col("total").cast(DoubleType), 6)
             .as("top10_share"))
     },
-    Some("""WITH tok AS (SELECT doc_id,
-           |    unnest(regexp_split_to_array(trim(text), '\s+')) AS w,
-           |    generate_subscripts(regexp_split_to_array(trim(text), '\s+'), 1) AS i
-           |  FROM documents),
+    Some(s"""WITH ${TextQueries.sqlTok()},
            |bg AS (SELECT a.w || ' ' || b.w AS term
            |       FROM tok a JOIN tok b ON b.doc_id = a.doc_id AND b.i = a.i + 1),
            |c AS (SELECT term, COUNT(*) AS c FROM bg GROUP BY term),
@@ -422,10 +409,7 @@ object ProfilingQueries {
             Window.orderBy("batch").rowsBetween(Window.unboundedPreceding, 0)))
         .orderBy("batch")
     },
-    Some("""WITH tok AS (SELECT doc_id,
-           |    unnest(regexp_split_to_array(trim(text), '\s+')) AS w,
-           |    generate_subscripts(regexp_split_to_array(trim(text), '\s+'), 1) AS i
-           |  FROM documents),
+    Some(s"""WITH ${TextQueries.sqlTok()},
            |bg AS (SELECT a.doc_id // 50 AS batch, a.w || ' ' || b.w AS term
            |       FROM tok a JOIN tok b ON b.doc_id = a.doc_id AND b.i = a.i + 1),
            |fs AS (SELECT term, MIN(batch) AS fb FROM bg GROUP BY term),
@@ -455,26 +439,26 @@ object ProfilingQueries {
         concat_ws("|", parts.map(p => coalesce(p.cast("string"), lit("∅"))): _*)
       def h(c: org.apache.spark.sql.Column) = graft.text.TextDedup.portableTokenHash(c)
       def sum38(c: org.apache.spark.sql.Column) =
-        sum(c.cast(DecimalType(38, 0))).cast(DecimalType(38, 0)).cast("string")
+        int128(sum(int128(c))).cast("string")
       val nat = Tables.nation(s, d).select(h(row(col("n_nationkey"),
         col("n_name"), col("n_regionkey"))).as("rh"))
         .agg(count(lit(1)).as("n_rows"), sum38(col("rh")).as("checksum"))
         .select(lit("nation").as("table_name"), col("n_rows"), col("checksum"))
       val cust = Tables.customer(s, d).select(h(row(col("c_custkey"),
         col("c_name"), col("c_nationkey"),
-        col("c_acctbal").cast(DecimalType(12, 2)), col("c_mktsegment"))).as("rh"))
+        money(col("c_acctbal")), col("c_mktsegment"))).as("rh"))
         .agg(count(lit(1)).as("n_rows"), sum38(col("rh")).as("checksum"))
         .select(lit("customer").as("table_name"), col("n_rows"), col("checksum"))
       val ord = Tables.orders(s, d).select(h(row(col("o_orderkey"),
         col("o_custkey"), col("o_orderstatus"),
-        col("o_totalprice").cast(DecimalType(12, 2)),
+        money(col("o_totalprice")),
         unix_micros(col("o_orderdate").cast("timestamp")),
         col("o_orderpriority"))).as("rh"))
         .agg(count(lit(1)).as("n_rows"), sum38(col("rh")).as("checksum"))
         .select(lit("orders").as("table_name"), col("n_rows"), col("checksum"))
       nat.unionAll(cust).unionAll(ord).orderBy("table_name")
     },
-    Some("""WITH n AS (SELECT CAST(('0x' || substr(md5(
+    Some(s"""WITH n AS (SELECT CAST(('0x' || substr(md5(
            |    concat_ws('|', COALESCE(CAST(n_nationkey AS VARCHAR), '∅'),
            |      COALESCE(n_name, '∅'),
            |      COALESCE(CAST(n_regionkey AS VARCHAR), '∅'))), 1, 15)) AS UBIGINT) AS rh
@@ -483,24 +467,24 @@ object ProfilingQueries {
            |    concat_ws('|', COALESCE(CAST(c_custkey AS VARCHAR), '∅'),
            |      COALESCE(c_name, '∅'),
            |      COALESCE(CAST(c_nationkey AS VARCHAR), '∅'),
-           |      COALESCE(CAST(CAST(c_acctbal AS DECIMAL(12,2)) AS VARCHAR), '∅'),
+           |      COALESCE(CAST(${sqlMoney("c_acctbal")} AS VARCHAR), '∅'),
            |      COALESCE(c_mktsegment, '∅'))), 1, 15)) AS UBIGINT) AS rh
            |  FROM customer),
            |o AS (SELECT CAST(('0x' || substr(md5(
            |    concat_ws('|', COALESCE(CAST(o_orderkey AS VARCHAR), '∅'),
            |      COALESCE(CAST(o_custkey AS VARCHAR), '∅'),
            |      COALESCE(o_orderstatus, '∅'),
-           |      COALESCE(CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS VARCHAR), '∅'),
+           |      COALESCE(CAST(${sqlMoney("o_totalprice")} AS VARCHAR), '∅'),
            |      COALESCE(CAST(epoch_us(o_orderdate) AS VARCHAR), '∅'),
            |      COALESCE(o_orderpriority, '∅'))), 1, 15)) AS UBIGINT) AS rh
            |  FROM orders)
            |SELECT table_name, n_rows, checksum FROM (
            |  SELECT 'nation' AS table_name, COUNT(*) AS n_rows,
-           |    CAST(SUM(CAST(rh AS HUGEINT)) AS VARCHAR) AS checksum FROM n
+           |    CAST(SUM(${sqlInt128("rh")}) AS VARCHAR) AS checksum FROM n
            |  UNION ALL SELECT 'customer', COUNT(*),
-           |    CAST(SUM(CAST(rh AS HUGEINT)) AS VARCHAR) FROM c
+           |    CAST(SUM(${sqlInt128("rh")}) AS VARCHAR) FROM c
            |  UNION ALL SELECT 'orders', COUNT(*),
-           |    CAST(SUM(CAST(rh AS HUGEINT)) AS VARCHAR) FROM o)
+           |    CAST(SUM(${sqlInt128("rh")}) AS VARCHAR) FROM o)
            |ORDER BY table_name""".stripMargin))
 
   /** PER-GROUP LINEAR TREND (OLS) of weekly revenue vs calendar week —
@@ -529,16 +513,12 @@ object ProfilingQueries {
         .join(Tables.nation(s, d), col("c_nationkey") === col("n_nationkey"))
         .groupBy(col("n_name"),
           expr("datediff(o_orderdate, date'1970-01-01') div 7").as("wk"))
-        .agg(sum((col("o_totalprice").cast(DecimalType(12, 2)) * 100)
-          .cast(LongType)).as("cents"))
-      val dec = (c: org.apache.spark.sql.Column) => c.cast(DecimalType(38, 0))
+        .agg(sum(cents(col("o_totalprice"))).as("cents"))
+      val (x, y) = (int128(col("wk")), int128(col("cents")))
       val sums = weekly.groupBy("n_name").agg(
         count(lit(1)).as("n_weeks"),
-        sum(dec(col("wk"))).cast(DoubleType).as("sx"),
-        sum(dec(col("cents"))).cast(DoubleType).as("sy"),
-        sum(dec(col("wk")) * dec(col("cents"))).cast(DoubleType).as("sxy"),
-        sum(dec(col("wk")) * dec(col("wk"))).cast(DoubleType).as("sxx"),
-        sum(dec(col("cents")) * dec(col("cents"))).cast(DoubleType).as("syy"))
+        exactSum(x).as("sx"), exactSum(y).as("sy"), exactSum(x * y).as("sxy"),
+        exactSum(x * x).as("sxx"), exactSum(y * y).as("syy"))
       val nD = col("n_weeks").cast(DoubleType)
       val slope = (nD * col("sxy") - col("sx") * col("sy")) /
         (nD * col("sxx") - col("sx") * col("sx"))
@@ -550,19 +530,19 @@ object ProfilingQueries {
               (nD * col("syy") - col("sy") * col("sy"))), 6).as("r"))
         .orderBy("n_name")
     },
-    Some("""WITH weekly AS (SELECT n_name,
+    Some(s"""WITH weekly AS (SELECT n_name,
            |    datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) // 7 AS wk,
-           |    CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT))
+           |    CAST(SUM(${sqlCents("o_totalprice")})
            |      AS BIGINT) AS cents
            |  FROM orders JOIN customer ON o_custkey = c_custkey
            |  JOIN nation ON c_nationkey = n_nationkey
            |  GROUP BY 1, 2),
            |s AS (SELECT n_name, COUNT(*) AS n_weeks,
-           |    CAST(SUM(CAST(wk AS HUGEINT)) AS DOUBLE) AS sx,
-           |    CAST(SUM(CAST(cents AS HUGEINT)) AS DOUBLE) AS sy,
-           |    CAST(SUM(CAST(wk AS HUGEINT) * CAST(cents AS HUGEINT)) AS DOUBLE) AS sxy,
-           |    CAST(SUM(CAST(wk AS HUGEINT) * CAST(wk AS HUGEINT)) AS DOUBLE) AS sxx,
-           |    CAST(SUM(CAST(cents AS HUGEINT) * CAST(cents AS HUGEINT)) AS DOUBLE) AS syy
+           |    ${sqlExactSum(sqlInt128("wk"))} AS sx,
+           |    ${sqlExactSum(sqlInt128("cents"))} AS sy,
+           |    ${sqlExactSum(s"${sqlInt128("wk")} * ${sqlInt128("cents")}")} AS sxy,
+           |    ${sqlExactSum(s"${sqlInt128("wk")} * ${sqlInt128("wk")}")} AS sxx,
+           |    ${sqlExactSum(s"${sqlInt128("cents")} * ${sqlInt128("cents")}")} AS syy
            |  FROM weekly GROUP BY 1)
            |SELECT n_name, n_weeks,
            |  ROUND((n_weeks * sxy - sx * sy) / (n_weeks * sxx - sx * sx), 6)

@@ -14,14 +14,14 @@ object Registry {
       CurationQueries.all ++ GraphQueries.all ++ ProfilingQueries.all ++
       IndexQueries.all
 
-  /** Queries whose BUILD runs Spark jobs by design (ADVICE r16: one
-    * central list instead of per-tool exclusion sets). Three causes,
+  /** Queries whose BUILD runs Spark jobs by design — the one central
+    * list, so no tool keeps its own exclusion set. Three causes,
     * all driver-paced loops whose per-step artifact is scalar-sized at
     * any corpus scale:
     *  - CC fixpoints (localCheckpoint + convergence probe per round):
     *    dd06, sd01, sd02, dd13, sm04; hi01's pointer-doubling loop;
     *  - argmax/codebook collection (BpeTrain merge steps; the
-    *    QuantizedKMeans/ProductQuantizer Lloyd rounds since r17):
+    *    driver-paced QuantizedKMeans/ProductQuantizer Lloyd rounds):
     *    bt01/bt02, km01, vq02, nn08–nn12;
     *  - build-once warehouse fixtures (j03/j04/zo01 bucketed copies)
     *    and sampled quantizer training (nn06's ML KMeans fit).

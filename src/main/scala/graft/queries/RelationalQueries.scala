@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.etl.{Dedup, Validation}
+import graft.util.Exact._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,16 +18,10 @@ import org.apache.spark.sql.types._
   */
 object RelationalQueries {
 
-  // ---- decimal-exact helpers (order-independent aggregation) ----
-  private def dMoney(c: Column): Column = c.cast(DecimalType(12, 2))
-  private def dRate(c: Column): Column  = c.cast(DecimalType(4, 2))
-  private val oneD: Column = lit(1).cast(DecimalType(3, 2))
-  /** Exact sum of a 2-decimal money column, as double. */
-  private def exactSum(c: Column): Column = sum(dMoney(c)).cast(DoubleType)
-  /** Exact revenue term: price * (1 - discount), decimal arithmetic. */
-  private[queries] def revTerm: Column = dMoney(col("l_extendedprice")) * (oneD - dRate(col("l_discount")))
+  /** Exact revenue term: price * (1 - discount), in [[graft.util.Exact]] decimals. */
+  private[queries] def revTerm: Column = money(col("l_extendedprice")) * (one - rate(col("l_discount")))
   private[queries] val sqlRevTerm =
-    "CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))"
+    s"${sqlMoney("l_extendedprice")} * ($sqlOne - ${sqlRate("l_discount")})"
   private def weekOf(c: Column): Column = date_trunc("week", c).cast(DateType)
 
   // =========================================================================
@@ -85,10 +80,10 @@ object RelationalQueries {
       .filter(col("l_shipdate") >= to_timestamp(lit("1996-01-01 00:00:00")) &&
         col("l_shipdate") < to_timestamp(lit("1997-01-01 00:00:00")))
       .groupBy("l_returnflag")
-      .agg(count(lit(1)).as("n"), sum(revTerm).cast(DoubleType).as("revenue"))
+      .agg(count(lit(1)).as("n"), exactSum(revTerm).as("revenue"))
       .orderBy("l_returnflag"),
     Some(s"""SELECT l_returnflag, COUNT(*) AS n,
-            |  CAST(SUM($sqlRevTerm) AS DOUBLE) AS revenue
+            |  ${sqlExactSum(sqlRevTerm)} AS revenue
             |FROM lineitem
             |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
             |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
@@ -182,13 +177,13 @@ object RelationalQueries {
   val a03GlobalSums = QueryDef("a03_global_sums",
     (s, d) => Tables.lineitem(s, d).agg(
       count(lit(1)).as("n_rows"),
-      sum(col("l_quantity").cast(DecimalType(12, 2))).cast(DoubleType).as("sum_qty"),
-      exactSum(col("l_extendedprice")).as("sum_base"),
-      (sum(dRate(col("l_discount"))).cast(DoubleType) / count(lit(1))).as("avg_disc")),
-    Some("""SELECT COUNT(*) AS n_rows,
-           |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
-           |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_base,
-           |  CAST(SUM(CAST(l_discount AS DECIMAL(4,2))) AS DOUBLE) / COUNT(*) AS avg_disc
+      moneySum(col("l_quantity")).as("sum_qty"),
+      moneySum(col("l_extendedprice")).as("sum_base"),
+      (exactSum(rate(col("l_discount"))) / count(lit(1))).as("avg_disc")),
+    Some(s"""SELECT COUNT(*) AS n_rows,
+           |  ${sqlMoneySum("l_quantity")} AS sum_qty,
+           |  ${sqlMoneySum("l_extendedprice")} AS sum_base,
+           |  ${sqlExactSum(sqlRate("l_discount"))} / COUNT(*) AS avg_disc
            |FROM lineitem""".stripMargin))
 
   /** A4 — grouped weekly sums (ref: Reporting.py:84-96). */
@@ -196,12 +191,12 @@ object RelationalQueries {
     (s, d) => Tables.lineitem(s, d)
       .groupBy(weekOf(col("l_shipdate")).as("week"))
       .agg(
-        sum(col("l_quantity").cast(DecimalType(12, 2))).cast(DoubleType).as("sum_qty"),
-        sum(revTerm).cast(DoubleType).as("revenue"))
+        moneySum(col("l_quantity")).as("sum_qty"),
+        exactSum(revTerm).as("revenue"))
       .orderBy("week"),
     Some(s"""SELECT CAST(date_trunc('week', l_shipdate) AS DATE) AS week,
-            |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
-            |  CAST(SUM($sqlRevTerm) AS DOUBLE) AS revenue
+            |  ${sqlMoneySum("l_quantity")} AS sum_qty,
+            |  ${sqlExactSum(sqlRevTerm)} AS revenue
             |FROM lineitem GROUP BY 1 ORDER BY week""".stripMargin))
 
   /** A5/J1 — ratio-of-sums after a fact⨝fact join, the flagship report
@@ -215,8 +210,8 @@ object RelationalQueries {
       o.join(l, o("o_orderkey") === l("l_orderkey"))
         .groupBy("o_orderstatus")
         .agg(
-          sum(revTerm).cast(DoubleType).as("revenue"),
-          exactSum(col("l_extendedprice")).as("base"))
+          exactSum(revTerm).as("revenue"),
+          moneySum(col("l_extendedprice")).as("base"))
         // NULLIF guard: ANSI Spark ERRORS on /0 (like Postgres); null on
         // both engine and oracle keeps pathological groups comparable
         .withColumn("discounted_fraction",
@@ -224,10 +219,10 @@ object RelationalQueries {
         .orderBy("o_orderstatus")
     },
     Some(s"""SELECT o_orderstatus,
-            |  CAST(SUM($sqlRevTerm) AS DOUBLE) AS revenue,
-            |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS base,
-            |  CAST(SUM($sqlRevTerm) AS DOUBLE) /
-            |    NULLIF(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE), 0) AS discounted_fraction
+            |  ${sqlExactSum(sqlRevTerm)} AS revenue,
+            |  ${sqlMoneySum("l_extendedprice")} AS base,
+            |  ${sqlExactSum(sqlRevTerm)} /
+            |    NULLIF(${sqlMoneySum("l_extendedprice")}, 0) AS discounted_fraction
             |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
             |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin))
 
@@ -235,14 +230,13 @@ object RelationalQueries {
   val a06SumArithmetic = QueryDef("a06_sum_arithmetic",
     (s, d) => Tables.lineitem(s, d).groupBy("l_returnflag")
       .agg(
-        sum(dMoney(col("l_extendedprice")) * (oneD + dRate(col("l_tax"))))
-          .cast(DoubleType).as("charge"),
-        sum(revTerm).cast(DoubleType).as("revenue"))
+        exactSum(money(col("l_extendedprice")) * (one + rate(col("l_tax")))).as("charge"),
+        exactSum(revTerm).as("revenue"))
       .orderBy("l_returnflag"),
     Some(s"""SELECT l_returnflag,
-            |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) *
-            |    (CAST(1 AS DECIMAL(3,2)) + CAST(l_tax AS DECIMAL(4,2)))) AS DOUBLE) AS charge,
-            |  CAST(SUM($sqlRevTerm) AS DOUBLE) AS revenue
+            |  CAST(SUM(${sqlMoney("l_extendedprice")} *
+            |    ($sqlOne + ${sqlRate("l_tax")})) AS DOUBLE) AS charge,
+            |  ${sqlExactSum(sqlRevTerm)} AS revenue
             |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin))
 
   /** Deep multi-join analytics — the TPC-H Q5 shape over the testdata
@@ -266,10 +260,10 @@ object RelationalQueries {
         col("o_orderdate") >= lit("1996-01-01").cast(TimestampType) &&
         col("o_orderdate") < lit("1998-01-01").cast(TimestampType))
       .groupBy("n_name")
-      .agg(sum(revTerm).cast(DoubleType).as("revenue"),
+      .agg(exactSum(revTerm).as("revenue"),
         count(lit(1)).as("n_items"))
       .orderBy(col("revenue").desc, col("n_name")),
-    Some(s"""SELECT n_name, CAST(SUM($sqlRevTerm) AS DOUBLE) AS revenue,
+    Some(s"""SELECT n_name, ${sqlExactSum(sqlRevTerm)} AS revenue,
             |  COUNT(*) AS n_items
             |FROM customer
             |JOIN orders   ON c_custkey = o_custkey
@@ -291,10 +285,10 @@ object RelationalQueries {
       .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
       .join(broadcast(Tables.region(s, d)), col("n_regionkey") === col("r_regionkey"))
       .groupBy("r_name")
-      .agg(count(lit(1)).as("n_customers"), exactSum(col("c_acctbal")).as("total_balance"))
+      .agg(count(lit(1)).as("n_customers"), moneySum(col("c_acctbal")).as("total_balance"))
       .orderBy("r_name"),
-    Some("""SELECT r_name, COUNT(*) AS n_customers,
-           |  CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE) AS total_balance
+    Some(s"""SELECT r_name, COUNT(*) AS n_customers,
+           |  ${sqlMoneySum("c_acctbal")} AS total_balance
            |FROM customer
            |JOIN nation ON c_nationkey = n_nationkey
            |JOIN region ON n_regionkey = r_regionkey
@@ -308,17 +302,17 @@ object RelationalQueries {
       val l = Tables.lineitem(s, d)
       o.join(l, o("o_orderkey") === l("l_orderkey"))
         .groupBy(col("o_orderpriority"), weekOf(col("o_orderdate")).as("week"))
-        .agg(sum(revTerm).cast(DoubleType).as("revenue"),
-          exactSum(col("l_extendedprice")).as("base"))
+        .agg(exactSum(revTerm).as("revenue"),
+          moneySum(col("l_extendedprice")).as("base"))
         .withColumn("discounted_fraction",
           col("revenue") / when(col("base") =!= 0d, col("base")))
         .orderBy("o_orderpriority", "week")
     },
     Some(s"""SELECT o_orderpriority, CAST(date_trunc('week', o_orderdate) AS DATE) AS week,
-            |  CAST(SUM($sqlRevTerm) AS DOUBLE) AS revenue,
-            |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS base,
-            |  CAST(SUM($sqlRevTerm) AS DOUBLE) /
-            |    NULLIF(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE), 0) AS discounted_fraction
+            |  ${sqlExactSum(sqlRevTerm)} AS revenue,
+            |  ${sqlMoneySum("l_extendedprice")} AS base,
+            |  ${sqlExactSum(sqlRevTerm)} /
+            |    NULLIF(${sqlMoneySum("l_extendedprice")}, 0) AS discounted_fraction
             |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
             |WHERE o_orderstatus = 'F'
             |GROUP BY o_orderpriority, 2 ORDER BY o_orderpriority, week""".stripMargin))
@@ -326,11 +320,11 @@ object RelationalQueries {
   /** A9 — per-group average as exact-sum / count (ref: Reporting.py:259). */
   val a09AvgByGroup = QueryDef("a09_avg_by_group",
     (s, d) => Tables.customer(s, d).groupBy("c_mktsegment")
-      .agg((exactSum(col("c_acctbal")) / count(lit(1))).as("avg_balance"),
+      .agg((moneySum(col("c_acctbal")) / count(lit(1))).as("avg_balance"),
         count(lit(1)).as("n"))
       .orderBy("c_mktsegment"),
-    Some("""SELECT c_mktsegment,
-           |  CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE) / COUNT(*) AS avg_balance,
+    Some(s"""SELECT c_mktsegment,
+           |  ${sqlMoneySum("c_acctbal")} / COUNT(*) AS avg_balance,
            |  COUNT(*) AS n
            |FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin))
 
@@ -344,12 +338,12 @@ object RelationalQueries {
   val t02RecentWeeks = QueryDef("t02_recent_weeks",
     (s, d) => Tables.lineitem(s, d)
       .groupBy(weekOf(col("l_shipdate")).as("week"))
-      .agg(sum(revTerm).cast(DoubleType).as("revenue"))
+      .agg(exactSum(revTerm).as("revenue"))
       .orderBy(col("week").desc).limit(4)
       .orderBy("week"),
     Some(s"""SELECT * FROM (
             |  SELECT CAST(date_trunc('week', l_shipdate) AS DATE) AS week,
-            |    CAST(SUM($sqlRevTerm) AS DOUBLE) AS revenue
+            |    ${sqlExactSum(sqlRevTerm)} AS revenue
             |  FROM lineitem GROUP BY 1 ORDER BY week DESC LIMIT 4) t
             |ORDER BY week""".stripMargin))
 
@@ -360,14 +354,14 @@ object RelationalQueries {
   val t03TopkCustomers = QueryDef("t03_topk_customers",
     (s, d) => {
       val top = Tables.orders(s, d).groupBy("o_custkey")
-        .agg(exactSum(col("o_totalprice")).as("total_spent"), count(lit(1)).as("n_orders"))
+        .agg(moneySum(col("o_totalprice")).as("total_spent"), count(lit(1)).as("n_orders"))
         .orderBy(col("total_spent").desc, col("o_custkey")).limit(20)
       top.join(broadcast(Tables.customer(s, d)), top("o_custkey") === col("c_custkey"))
         .select(col("c_custkey"), col("c_name"), col("total_spent"), col("n_orders"))
         .orderBy(col("total_spent").desc, col("c_custkey"))
     },
-    Some("""SELECT c_custkey, c_name, total_spent, n_orders FROM (
-           |  SELECT o_custkey, CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total_spent,
+    Some(s"""SELECT c_custkey, c_name, total_spent, n_orders FROM (
+           |  SELECT o_custkey, ${sqlMoneySum("o_totalprice")} AS total_spent,
            |    COUNT(*) AS n_orders
            |  FROM orders GROUP BY o_custkey
            |  ORDER BY total_spent DESC, o_custkey LIMIT 20) t
@@ -381,13 +375,13 @@ object RelationalQueries {
       val avgByNation = Tables.customer(s, d)
         .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
         .groupBy("n_name")
-        .agg((exactSum(col("c_acctbal")) / count(lit(1))).as("avg_balance"))
+        .agg((moneySum(col("c_acctbal")) / count(lit(1))).as("avg_balance"))
       val top = avgByNation.orderBy(col("avg_balance").desc, col("n_name")).limit(10)
       val bottom = avgByNation.orderBy(col("avg_balance").asc, col("n_name")).limit(10)
       top.unionByName(bottom).distinct().orderBy(col("avg_balance").desc, col("n_name"))
     },
-    Some("""WITH a AS (
-           |  SELECT n_name, CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE) / COUNT(*) AS avg_balance
+    Some(s"""WITH a AS (
+           |  SELECT n_name, ${sqlMoneySum("c_acctbal")} / COUNT(*) AS avg_balance
            |  FROM customer JOIN nation ON c_nationkey = n_nationkey GROUP BY n_name)
            |SELECT * FROM (
            |  SELECT * FROM (SELECT * FROM a ORDER BY avg_balance DESC, n_name LIMIT 10)
@@ -416,10 +410,10 @@ object RelationalQueries {
         base, mods.unionByName(ins), Seq("c_custkey"))
       merged.groupBy("c_nationkey")
         .agg(count(lit(1)).as("n"),
-          sum(col("c_acctbal").cast(DecimalType(12, 2))).cast(DoubleType).as("bal"))
+          moneySum(col("c_acctbal")).as("bal"))
         .orderBy("c_nationkey")
     },
-    Some("""WITH upd AS (
+    Some(s"""WITH upd AS (
            |  SELECT * REPLACE (c_acctbal + 1000 AS c_acctbal)
            |  FROM customer WHERE c_custkey % 10 = 0
            |  UNION ALL
@@ -431,7 +425,7 @@ object RelationalQueries {
            |  WHERE c_custkey NOT IN (SELECT c_custkey FROM upd)
            |  UNION ALL SELECT * FROM upd)
            |SELECT c_nationkey, COUNT(*) AS n,
-           |  CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE) AS bal
+           |  ${sqlMoneySum("c_acctbal")} AS bal
            |FROM merged GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin))
 
   /** SCD-2 historization over the event stream as a change log: each
@@ -488,17 +482,16 @@ object RelationalQueries {
         Seq("o_orderkey"), "seq", "op")
       cur.groupBy("o_orderstatus").agg(
         count(lit(1)).as("n"),
-        sum(col("o_totalprice").cast(DecimalType(14, 2))).cast(DoubleType)
-          .as("total"))
+        exactSum(cdcTotal(col("o_totalprice"))).as("total"))
         .orderBy("o_orderstatus")
     },
-    Some("""WITH cur AS (
+    Some(s"""WITH cur AS (
            |  SELECT o_orderkey, o_orderstatus,
            |    CASE WHEN o_orderkey % 3 = 0 THEN o_totalprice + 10
            |         ELSE o_totalprice END AS p
            |  FROM orders WHERE o_orderkey % 7 <> 0)
            |SELECT o_orderstatus, COUNT(*) AS n,
-           |  CAST(SUM(CAST(p AS DECIMAL(14,2))) AS DOUBLE) AS total
+           |  ${sqlExactSum(sqlCdcTotal("p"))} AS total
            |FROM cur GROUP BY 1 ORDER BY 1""".stripMargin))
 
   // =========================================================================
@@ -668,11 +661,10 @@ object RelationalQueries {
 
   /** HyperLogLog++ approximate distinct — the 100 TB path (no expand, one
     * pass, fixed-size sketch per partition) — registered as a GROUPED
-    * bound query the oracle can hash-check (VERDICT r15 #1: the raw
-    * global-estimate form was the last `no_oracle` row besides x03;
-    * its estimate values legitimately differ from DuckDB's HLL, so —
-    * the dd04/nn02 demotion pattern — the raw form lives in SketchSpec
-    * and the REGISTERED row asserts the sketch contract per group).
+    * bound query the oracle can hash-check: raw estimate values
+    * legitimately differ from DuckDB's HLL, so the raw global-estimate
+    * form lives in SketchSpec and the REGISTERED row asserts the
+    * sketch contract per group.
     * Per l_returnflag: exact distinct part/order keys (the oracle
     * side) plus a flag pinning the HLL++ estimate within 5× its
     * configured 1% rsd OF THAT GROUP — strictly more coverage than the
@@ -680,7 +672,7 @@ object RelationalQueries {
     * partial-merge across the group-keyed shuffle, and a regression in
     * hash, merge, or precision flips a hashed `within_bound` to false.
     *
-    * SHAPE WARNING (measured at sf10, r16): the exact and approx
+    * SHAPE WARNING (measured at sf10): the exact and approx
     * aggregates must be SEPARATE frames joined on the group key — the
     * x04 pattern — never one fused groupBy. HLL++ at rsd 1% carries a
     * fixed-width ~13 KB imperative buffer, and inside Spark's
@@ -717,9 +709,9 @@ object RelationalQueries {
   /** Approximate percentiles (Greenwald-Khanna sketch) — the
     * fixed-memory companion to f04's exact quantiles: mergeable
     * per-partition sketches, no sort, no expand — registered as a
-    * GROUPED rank-error bound (VERDICT r15 #1, same demotion as x02:
-    * raw quartile values are sketch-internal → SketchSpec; the
-    * registered row asserts the guarantee the sketch publishes). Per
+    * GROUPED rank-error bound (as x02: raw quartile values are
+    * sketch-internal → SketchSpec; the registered row asserts the
+    * guarantee the sketch publishes). Per
     * o_orderpriority: the RANK each approximate quartile actually
     * attains within its group (an exact count both engines agree on)
     * must sit within 2% of its target — per-group sketches exercise GK
@@ -818,7 +810,7 @@ object RelationalQueries {
     Some("""SELECT CAST(COUNT(*) AS BIGINT) AS n, true AS ranks_within_bound
            |FROM orders""".stripMargin))
 
-  /** The x02 endgame (VERDICT r12 #8): an HLL register STATE that is
+  /** The x02 endgame: an HLL register STATE that is
     * engine-portable and therefore hash-checkable — strictly stronger
     * than comparing estimates. Spark's own HLL++ blob can never match
     * DuckDB's (different hash, different encoding), but the sketch

@@ -2,9 +2,10 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.etl.Scale
+import graft.util.Exact._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
 /** Scale-pattern queries under the ORACLE gate (not just specs): the
   * shuffle-free bucketed fact⨝fact join and skew-safe salted
@@ -88,11 +89,11 @@ object ScaleQueries {
         .join(s.table(lT), col("o_orderkey") === col("l_orderkey"))
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n_items"),
-          sum(col("l_quantity").cast(DecimalType(12, 2))).cast(DoubleType).as("sum_qty"))
+          moneySum(col("l_quantity")).as("sum_qty"))
         .orderBy("o_orderpriority")
     },
-    Some("""SELECT o_orderpriority, COUNT(*) AS n_items,
-           |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty
+    Some(s"""SELECT o_orderpriority, COUNT(*) AS n_items,
+           |  ${sqlMoneySum("l_quantity")} AS sum_qty
            |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
            |GROUP BY 1 ORDER BY o_orderpriority""".stripMargin))
 
@@ -152,10 +153,10 @@ object ScaleQueries {
         col("l_suppkey").between(2L, 6L))
       .groupBy("l_partkey", "l_suppkey")
       .agg(count(lit(1)).as("n_items"),
-        sum(col("l_quantity").cast(DecimalType(12, 2))).cast(DoubleType).as("sum_qty"))
+        moneySum(col("l_quantity")).as("sum_qty"))
       .orderBy("l_partkey", "l_suppkey"),
-    Some("""SELECT l_partkey, l_suppkey, COUNT(*) AS n_items,
-           |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty
+    Some(s"""SELECT l_partkey, l_suppkey, COUNT(*) AS n_items,
+           |  ${sqlMoneySum("l_quantity")} AS sum_qty
            |FROM lineitem
            |WHERE l_partkey BETWEEN 10 AND 40 AND l_suppkey BETWEEN 2 AND 6
            |GROUP BY 1, 2 ORDER BY l_partkey, l_suppkey""".stripMargin))
@@ -165,10 +166,10 @@ object ScaleQueries {
       .filter(col("l_orderkey").between(100L, 200L))
       .groupBy("l_orderkey")
       .agg(count(lit(1)).as("n_items"),
-        sum(col("l_quantity").cast(DecimalType(12, 2))).cast(DoubleType).as("sum_qty"))
+        moneySum(col("l_quantity")).as("sum_qty"))
       .orderBy("l_orderkey"),
-    Some("""SELECT l_orderkey, COUNT(*) AS n_items,
-           |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty
+    Some(s"""SELECT l_orderkey, COUNT(*) AS n_items,
+           |  ${sqlMoneySum("l_quantity")} AS sum_qty
            |FROM lineitem WHERE l_orderkey BETWEEN 100 AND 200
            |GROUP BY 1 ORDER BY l_orderkey""".stripMargin))
 
@@ -180,17 +181,17 @@ object ScaleQueries {
     Tables.lineitem(s, d).select(
       when(col("l_orderkey") % 2 === 0, lit(0L))
         .otherwise(col("l_orderkey")).as("k"),
-      col("l_quantity").cast(DecimalType(12, 2)).as("qd"))
+      money(col("l_quantity")).as("qd"))
 
   private val skewOracle =
-    """SELECT CASE WHEN l_orderkey % 2 = 0 THEN 0 ELSE l_orderkey END AS k,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty
+    s"""SELECT CASE WHEN l_orderkey % 2 = 0 THEN 0 ELSE l_orderkey END AS k,
+      |  ${sqlMoneySum("l_quantity")} AS sum_qty
       |FROM lineitem GROUP BY 1 ORDER BY sum_qty DESC, k LIMIT 20""".stripMargin
 
   /** The straight single-stage aggregate over the hot key (baseline). */
   val sk01SkewPlain = QueryDef("sk01_skew_plain",
     (s, d) => skewedQuantities(s, d)
-      .groupBy("k").agg(sum(col("qd")).cast(DoubleType).as("sum_qty"))
+      .groupBy("k").agg(exactSum(col("qd")).as("sum_qty"))
       .orderBy(col("sum_qty").desc, col("k")).limit(20),
     Some(skewOracle))
 
@@ -213,7 +214,7 @@ object ScaleQueries {
     Tables.lineitem(s, d).select(
       when(col("l_partkey") % 2 === 0, lit(1L))
         .otherwise(col("l_partkey")).as("k"),
-      col("l_quantity").cast(DecimalType(12, 2)).as("qd"))
+      money(col("l_quantity")).as("qd"))
 
   /** Dim side: the part table, key-unique, a PLAIN PROJECTION — no
     * aggregate between its shuffle and the join, which is exactly the
@@ -226,10 +227,10 @@ object ScaleQueries {
     Tables.part(s, d).select(col("p_partkey").as("k"), col("p_brand"))
 
   private val skewJoinOracle =
-    """WITH sk AS (SELECT CASE WHEN l_partkey % 2 = 0 THEN 1 ELSE l_partkey END AS k,
-      |             CAST(l_quantity AS DECIMAL(12,2)) AS qd FROM lineitem),
+    s"""WITH sk AS (SELECT CASE WHEN l_partkey % 2 = 0 THEN 1 ELSE l_partkey END AS k,
+      |             ${sqlMoney("l_quantity")} AS qd FROM lineitem),
       |dim AS (SELECT p_partkey AS k, p_brand FROM part)
-      |SELECT sk.k, CAST(SUM(sk.qd) AS DOUBLE) AS sum_qty, dim.p_brand
+      |SELECT sk.k, ${sqlExactSum("sk.qd")} AS sum_qty, dim.p_brand
       |FROM sk JOIN dim ON sk.k = dim.k
       |GROUP BY sk.k, dim.p_brand
       |ORDER BY sum_qty DESC, sk.k LIMIT 20""".stripMargin
@@ -245,7 +246,7 @@ object ScaleQueries {
   val sk03SkewJoinPlain = QueryDef("sk03_skew_join_plain",
     (s, d) => skewedByPart(s, d).join(partDim(s, d), "k")
       .groupBy("k", "p_brand")
-      .agg(sum(col("qd")).cast(DoubleType).as("sum_qty"))
+      .agg(exactSum(col("qd")).as("sum_qty"))
       .select(col("k"), col("sum_qty"), col("p_brand"))
       .orderBy(col("sum_qty").desc, col("k")).limit(20),
     Some(skewJoinOracle))
@@ -260,7 +261,7 @@ object ScaleQueries {
     (s, d) => Scale.saltedJoin(
       skewedByPart(s, d), partDim(s, d), "k", salts = 8)
       .groupBy("k", "p_brand")
-      .agg(sum(col("qd")).cast(DoubleType).as("sum_qty"))
+      .agg(exactSum(col("qd")).as("sum_qty"))
       .select(col("k"), col("sum_qty"), col("p_brand"))
       .orderBy(col("sum_qty").desc, col("k")).limit(20),
     Some(skewJoinOracle))
@@ -286,10 +287,10 @@ object ScaleQueries {
         Seq("l_returnflag"))
       graft.etl.IncrementalAgg.result(merged).orderBy("l_returnflag")
     },
-    Some("""SELECT l_returnflag, COUNT(l_quantity) AS n_rows,
-           |  CAST(SUM(CAST(l_quantity AS DECIMAL(28,2))) AS DOUBLE) AS sum_v,
+    Some(s"""SELECT l_returnflag, COUNT(l_quantity) AS n_rows,
+           |  ${sqlExactSum(sqlMoneyState("l_quantity"))} AS sum_v,
            |  MIN(l_quantity) AS min_v, MAX(l_quantity) AS max_v,
-           |  CAST(SUM(CAST(l_quantity AS DECIMAL(28,2))) AS DOUBLE)
+           |  ${sqlExactSum(sqlMoneyState("l_quantity"))}
            |    / COUNT(l_quantity) AS avg_v
            |FROM lineitem GROUP BY 1 ORDER BY l_returnflag""".stripMargin))
 
@@ -317,7 +318,7 @@ object ScaleQueries {
       val full = li.groupBy("l_returnflag").agg(
         expr("hll_sketch_estimate(hll_sketch_agg(l_partkey))").as("est_direct"),
         countDistinct(col("l_partkey")).as("n_exact"))
-      // broadcast hints (r16): all three frames are |distinct flag|
+      // broadcast hints: all three frames are |distinct flag|
       // rows (3 here) of sketch blobs — group-count-sized at ANY corpus
       // scale — but the blobs inflate Catalyst's size estimate past the
       // auto-broadcast threshold, so unhinted these planned as TWO

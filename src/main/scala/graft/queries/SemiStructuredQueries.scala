@@ -1,8 +1,9 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
+import graft.util.Exact._
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+import org.apache.spark.sql.types.LongType
 
 /** Semi-structured and collection operators: JSON extraction (the
   * events.props payload), array aggregation, numeric binning — the
@@ -47,11 +48,11 @@ object SemiStructuredQueries {
     (s, d) => Tables.orders(s, d)
       .groupBy(floor(col("o_totalprice") / 50000).cast(LongType).as("price_bucket"))
       .agg(count(lit(1)).as("n"),
-        sum(col("o_totalprice").cast(DecimalType(12, 2))).cast(DoubleType).as("bucket_total"))
+        moneySum(col("o_totalprice")).as("bucket_total"))
       .orderBy("price_bucket"),
-    Some("""SELECT CAST(FLOOR(o_totalprice / 50000) AS BIGINT) AS price_bucket,
+    Some(s"""SELECT CAST(FLOOR(o_totalprice / 50000) AS BIGINT) AS price_bucket,
            |  COUNT(*) AS n,
-           |  CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS bucket_total
+           |  ${sqlMoneySum("o_totalprice")} AS bucket_total
            |FROM orders GROUP BY 1 ORDER BY price_bucket""".stripMargin))
 
   val all: Seq[QueryDef] = Seq(js01JsonExtract, f05ArrayAgg, f06Binning)

@@ -84,14 +84,42 @@ object TextQueries {
        |           THEN CAST(1 AS BIGINT) << i ELSE 0 END) AS BIGINT) AS simhash
        |       FROM bits GROUP BY doc_id)""".stripMargin
 
+  /** CTE `<name>(<cols>, w, i)` over `from`: one row per element w of
+    * the array `arr` — by default the whitespace tokens of `text` — at
+    * its 1-based position i. */
+  private[queries] def sqlTok(name: String = "tok", from: String = "documents",
+                              cols: String = "doc_id", arr: String = sqlTokArr): String =
+    s"""$name AS (SELECT $cols, unnest($arr) AS w,
+       |        generate_subscripts($arr, 1) AS i FROM $from)""".stripMargin
+
+  /** The SQL replay of TextFunctions.langId over `documents`: CTE `s`
+    * (`keep`, one marker-token score `s_<lang>` per language, then
+    * `also`) and the argmax fold p1…p4 (a later language replaces the
+    * best only on a strictly greater score, so the first listed wins
+    * ties), which leaves `lang_pred` in the last p CTE. */
+  private def sqlLangId(keep: String, also: Seq[String] = Nil): String = {
+    val langs = TextFunctions.langMarkers.map(_._1)
+    val scores = TextFunctions.langMarkers.map { case (l, words) =>
+      words.map(sqlTokCount).mkString(" + ") + s" AS s_$l" }
+    val folds = (1 until langs.size).map { k =>
+      val (best, top) = if (k == 1) (s"'${langs(0)}'", s"s_${langs(0)}") else (s"b${k - 1}", s"g${k - 1}")
+      val last = k == langs.size - 1
+      val pick = s"CASE WHEN s_${langs(k)} > $top THEN '${langs(k)}' ELSE $best END AS " +
+        (if (last) "lang_pred" else s"b$k")
+      val max = if (last) "" else s",\n       GREATEST($top, s_${langs(k)}) AS g$k"
+      s"p$k AS (SELECT *, $pick$max FROM ${if (k == 1) "s" else s"p${k - 1}"})"
+    }
+    s"s AS (SELECT $keep,\n    ${(scores ++ also).mkString(",\n    ")}\n  FROM documents),\n" +
+      folds.mkString(",\n")
+  }
+
   /** CTEs `<p>tok` (doc_id, w, i) over docs CTE `docs` and `<p><sh>`
     * (doc_id, s): its distinct k-word shingles, words joined by ' '. */
   private def sqlShingles(p: String, docs: String, k: Int, sh: String): String = {
     val t = (0 until k).map(j => ('a' + j).toChar.toString)
     val joins = t.tail.zipWithIndex.map { case (x, j) =>
       s"JOIN ${p}tok $x ON $x.doc_id = a.doc_id AND $x.i = a.i + ${j + 1}" }
-    s"""${p}tok AS (SELECT doc_id, unnest($sqlTokArr) AS w,
-       |        generate_subscripts($sqlTokArr, 1) AS i FROM $docs),
+    s"""${sqlTok(s"${p}tok", docs)},
        |$p$sh AS (SELECT DISTINCT a.doc_id, ${t.map(_ + ".w").mkString(" || ' ' || ")} AS s
        |       FROM ${p}tok a ${joins.mkString("\n                  ")})""".stripMargin
   }
@@ -173,20 +201,7 @@ object TextQueries {
       .select(col("lang"), TextFunctions.langId(col("text")).as("lang_pred"))
       .groupBy("lang", "lang_pred").agg(count(lit(1)).as("n"))
       .orderBy("lang", "lang_pred"),
-    Some(s"""WITH s AS (SELECT lang,
-            |    ${sqlTokCount("the")} + ${sqlTokCount("and")} + ${sqlTokCount("of")} + ${sqlTokCount("is")} AS s_en,
-            |    ${sqlTokCount("el")} + ${sqlTokCount("la")} + ${sqlTokCount("los")} + ${sqlTokCount("que")} AS s_es,
-            |    ${sqlTokCount("der")} + ${sqlTokCount("die")} + ${sqlTokCount("und")} + ${sqlTokCount("nicht")} AS s_de,
-            |    ${sqlTokCount("le")} + ${sqlTokCount("les")} + ${sqlTokCount("est")} + ${sqlTokCount("une")} AS s_fr,
-            |    ${sqlTokCount("de")} + ${sqlTokCount("shi")} + ${sqlTokCount("bu")} + ${sqlTokCount("le")} AS s_zh
-            |  FROM documents),
-            |p1 AS (SELECT *, CASE WHEN s_es > s_en THEN 'es' ELSE 'en' END AS b1,
-            |       GREATEST(s_en, s_es) AS g1 FROM s),
-            |p2 AS (SELECT *, CASE WHEN s_de > g1 THEN 'de' ELSE b1 END AS b2,
-            |       GREATEST(g1, s_de) AS g2 FROM p1),
-            |p3 AS (SELECT *, CASE WHEN s_fr > g2 THEN 'fr' ELSE b2 END AS b3,
-            |       GREATEST(g2, s_fr) AS g3 FROM p2),
-            |p4 AS (SELECT *, CASE WHEN s_zh > g3 THEN 'zh' ELSE b3 END AS lang_pred FROM p3)
+    Some(s"""WITH ${sqlLangId("lang")}
             |SELECT lang, lang_pred, COUNT(*) AS n FROM p4
             |GROUP BY lang, lang_pred ORDER BY lang, lang_pred""".stripMargin))
 
@@ -419,12 +434,7 @@ object TextQueries {
         .agg(count_distinct(col("g")).as("n_shared"))
         .orderBy("doc_id")
     },
-    Some("""WITH tok AS (SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS w,
-           |        generate_subscripts(regexp_split_to_array(trim(text), '\s+'), 1) AS i
-           |        FROM documents),
-           |sh AS (SELECT DISTINCT a.doc_id, a.w || ' ' || b.w || ' ' || c.w AS s
-           |       FROM tok a JOIN tok b ON b.doc_id = a.doc_id AND b.i = a.i + 1
-           |                  JOIN tok c ON c.doc_id = a.doc_id AND c.i = a.i + 2),
+    Some(s"""WITH ${sqlShingles("", "documents", k = 3, "sh")},
            |bench AS (SELECT DISTINCT s FROM sh WHERE doc_id % 97 = 0)
            |SELECT sh.doc_id, COUNT(DISTINCT sh.s) AS n_shared
            |FROM sh JOIN bench USING (s)
@@ -461,10 +471,7 @@ object TextQueries {
           expr("aff_sum div n_grams").as("importance"))
         .orderBy(col("importance").desc, col("doc_id")).limit(20)
     },
-    Some("""WITH tok AS (SELECT doc_id, source,
-           |        unnest(regexp_split_to_array(trim(text), '\s+')) AS w,
-           |        generate_subscripts(regexp_split_to_array(trim(text), '\s+'), 1) AS i
-           |        FROM documents),
+    Some(s"""WITH ${sqlTok(cols = "doc_id, source")},
            |sh AS (SELECT DISTINCT a.doc_id, a.source, a.w || ' ' || b.w AS s
            |       FROM tok a JOIN tok b ON b.doc_id = a.doc_id AND b.i = a.i + 1),
            |st AS (SELECT s, COUNT(*) AS df_all,
@@ -508,12 +515,7 @@ object TextQueries {
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .orderBy("doc_id")
     },
-    Some("""WITH tok AS (SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS w,
-           |        generate_subscripts(regexp_split_to_array(trim(text), '\s+'), 1) AS i
-           |        FROM documents),
-           |sh AS (SELECT DISTINCT a.doc_id, a.w || ' ' || b.w || ' ' || c.w AS s
-           |       FROM tok a JOIN tok b ON b.doc_id = a.doc_id AND b.i = a.i + 1
-           |                  JOIN tok c ON c.doc_id = a.doc_id AND c.i = a.i + 2),
+    Some(s"""WITH ${sqlShingles("", "documents", k = 3, "sh")},
            |bench AS (SELECT DISTINCT s FROM sh WHERE doc_id % 97 = 0),
            |contaminated AS (SELECT DISTINCT sh.doc_id FROM sh JOIN bench USING (s)
            |                 WHERE sh.doc_id % 97 <> 0)
@@ -600,12 +602,10 @@ object TextQueries {
             |SELECT id1, id2, round(j, 6) AS jaccard FROM jac
             |ORDER BY id1, id2""".stripMargin))
 
-  // dd04 (xxhash64-permutation MinHash+LSH candidates, rows-only) was
-  // demoted to TextDedupSpec in round 10: the production
-  // minHashCandidates path stays benched/oracle-bounded through dd08
-  // (same code, capture-sized params, full-capture oracle) and dd11 is
-  // its value-exact portable twin, so the registered rows-only variant
-  // carried no verification the spec doesn't — see NOTES_r10.
+  // The production minHashCandidates path (xxhash64 permutations) is
+  // pinned in TextDedupSpec: dd08 benches and oracle-bounds the same
+  // code at capture-sized params and dd11 is its value-exact portable
+  // twin, so a rows-only registered variant would verify nothing more.
 
   /** MinHash RECALL against exact ground truth, as a registered query
     * the oracle can bound: exact (hashed-shingle) Jaccard pairs ≥ 0.5
@@ -648,12 +648,11 @@ object TextQueries {
             |  CAST(1.0 AS DOUBLE) AS recall
             |FROM jac GROUP BY 1 ORDER BY bucket""".stripMargin))
 
-  // dd05 (xxhash64-token SimHash pairs, rows-only) was demoted to
-  // TextDedupSpec in round 10: the production simHashPairs machinery
-  // stays benched/oracle-gated through dd09 (value-exact portable
-  // fingerprints, same SimHashExpr + blocking) and dd10 (pair-level
-  // portable hamming join), so the registered rows-only variant
-  // carried no verification the spec doesn't — see NOTES_r10.
+  // The production simHashPairs machinery (xxhash64 tokens) is pinned
+  // in TextDedupSpec: dd09 (value-exact portable fingerprints, same
+  // SimHashExpr + blocking) and dd10 (pair-level portable hamming
+  // join) bench and oracle-gate it, so a rows-only registered variant
+  // would verify nothing more.
 
   /** SimHash with a PORTABLE token hash, value-exact under the oracle —
     * the companion that was missing for the dd05 family: production
@@ -998,25 +997,7 @@ object TextQueries {
           sum(col("n_tokens")).as("kept_tokens"))
         .orderBy("source")
     },
-    Some(s"""WITH s AS (SELECT *,
-            |    ${sqlTokCount("the")} + ${sqlTokCount("and")} + ${sqlTokCount("of")} + ${sqlTokCount("is")} AS s_en,
-            |    ${sqlTokCount("el")} + ${sqlTokCount("la")} + ${sqlTokCount("los")} + ${sqlTokCount("que")} AS s_es,
-            |    ${sqlTokCount("der")} + ${sqlTokCount("die")} + ${sqlTokCount("und")} + ${sqlTokCount("nicht")} AS s_de,
-            |    ${sqlTokCount("le")} + ${sqlTokCount("les")} + ${sqlTokCount("est")} + ${sqlTokCount("une")} AS s_fr,
-            |    ${sqlTokCount("de")} + ${sqlTokCount("shi")} + ${sqlTokCount("bu")} + ${sqlTokCount("le")} AS s_zh,
-            |    (CASE WHEN len($sqlTokArr) >= 5 AND len($sqlTokArr) <= 1000 THEN 1.0 ELSE 0.0 END
-            |     + CASE WHEN CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE)
-            |              / NULLIF(length(text), 0) <= 0.2 THEN 1.0 ELSE 0.0 END
-            |     + LEAST(CAST(${sqlWordCount("the")} + ${sqlWordCount("and")} + ${sqlWordCount("of")} AS DOUBLE)
-            |              / len($sqlTokArr) * 2.0, 1.0)) / 3.0 AS quality
-            |  FROM documents),
-            |p1 AS (SELECT *, CASE WHEN s_es > s_en THEN 'es' ELSE 'en' END AS b1,
-            |       GREATEST(s_en, s_es) AS g1 FROM s),
-            |p2 AS (SELECT *, CASE WHEN s_de > g1 THEN 'de' ELSE b1 END AS b2,
-            |       GREATEST(g1, s_de) AS g2 FROM p1),
-            |p3 AS (SELECT *, CASE WHEN s_fr > g2 THEN 'fr' ELSE b2 END AS b3,
-            |       GREATEST(g2, s_fr) AS g3 FROM p2),
-            |p4 AS (SELECT *, CASE WHEN s_zh > g3 THEN 'zh' ELSE b3 END AS lang_pred FROM p3),
+    Some(s"""WITH ${sqlLangId("*", Seq(s"$sqlQuality AS quality"))},
             |filtered AS (SELECT * FROM p4 WHERE lang_pred = 'en' AND quality >= 0.5),
             |kept AS (SELECT * FROM filtered
             |  WHERE doc_id IN (SELECT MIN(doc_id) FROM filtered GROUP BY md5($sqlNormalize)))
@@ -1037,25 +1018,7 @@ object TextQueries {
         .groupBy("bucket").agg(count(lit(1)).as("n"))
         .orderBy("bucket")
     },
-    Some(s"""WITH s AS (SELECT *,
-            |    ${sqlTokCount("the")} + ${sqlTokCount("and")} + ${sqlTokCount("of")} + ${sqlTokCount("is")} AS s_en,
-            |    ${sqlTokCount("el")} + ${sqlTokCount("la")} + ${sqlTokCount("los")} + ${sqlTokCount("que")} AS s_es,
-            |    ${sqlTokCount("der")} + ${sqlTokCount("die")} + ${sqlTokCount("und")} + ${sqlTokCount("nicht")} AS s_de,
-            |    ${sqlTokCount("le")} + ${sqlTokCount("les")} + ${sqlTokCount("est")} + ${sqlTokCount("une")} AS s_fr,
-            |    ${sqlTokCount("de")} + ${sqlTokCount("shi")} + ${sqlTokCount("bu")} + ${sqlTokCount("le")} AS s_zh,
-            |    (CASE WHEN len($sqlTokArr) >= 5 AND len($sqlTokArr) <= 1000 THEN 1.0 ELSE 0.0 END
-            |     + CASE WHEN CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE)
-            |              / NULLIF(length(text), 0) <= 0.2 THEN 1.0 ELSE 0.0 END
-            |     + LEAST(CAST(${sqlWordCount("the")} + ${sqlWordCount("and")} + ${sqlWordCount("of")} AS DOUBLE)
-            |              / len($sqlTokArr) * 2.0, 1.0)) / 3.0 AS quality
-            |  FROM documents),
-            |p1 AS (SELECT *, CASE WHEN s_es > s_en THEN 'es' ELSE 'en' END AS b1,
-            |       GREATEST(s_en, s_es) AS g1 FROM s),
-            |p2 AS (SELECT *, CASE WHEN s_de > g1 THEN 'de' ELSE b1 END AS b2,
-            |       GREATEST(g1, s_de) AS g2 FROM p1),
-            |p3 AS (SELECT *, CASE WHEN s_fr > g2 THEN 'fr' ELSE b2 END AS b3,
-            |       GREATEST(g2, s_fr) AS g3 FROM p2),
-            |p4 AS (SELECT *, CASE WHEN s_zh > g3 THEN 'zh' ELSE b3 END AS lang_pred FROM p3),
+    Some(s"""WITH ${sqlLangId("*", Seq(s"$sqlQuality AS quality"))},
             |passing AS (SELECT * FROM p4 WHERE lang_pred = 'en' AND quality >= 0.5),
             |keepers AS (SELECT MIN(doc_id) AS kid FROM passing GROUP BY md5($sqlNormalize)),
             |b AS (SELECT CASE

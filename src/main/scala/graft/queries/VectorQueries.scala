@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.vector.SimilaritySearch
+import graft.util.Exact._
 import org.apache.spark.sql.functions._
 
 /** Embedding similarity-search queries. The oracle uses DuckDB's
@@ -14,6 +15,37 @@ object VectorQueries {
 
   private val sqlCos =
     "list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))"
+  /** `cols` of the 5 best-ranked rows per query_id of CTE `scored`
+    * (sim_r descending, ties to the smaller neighbor_id). */
+  private def sqlTop5(cols: String): String =
+    s"""SELECT $cols FROM (
+       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+       |    ORDER BY sim_r DESC, neighbor_id) AS rank FROM scored) t
+       |WHERE rank <= 5""".stripMargin
+  /** A float as exact integer micro-units: floor(x·10⁶), the fixed
+    * point every integer-L2 oracle (and QuantizedKMeans) works in. */
+  private def sqlMicro(x: String): String = s"CAST(FLOOR(CAST($x AS DOUBLE) * 1000000) AS BIGINT)"
+  /** CTE `<name>(vec_id, v)`: the embedding slice `vec` in micro-units. */
+  private def sqlQuantized(name: String, vec: String = "embedding"): String =
+    s"""$name AS MATERIALIZED (SELECT vec_id,
+       |    list_transform($vec,
+       |      x -> ${sqlMicro("x")}) AS v
+       |  FROM embeddings)""".stripMargin
+  /** The exact squared L2 distance between micro-unit vectors `a` and
+    * `b`, as BIGINT. */
+  private def sqlDist2(a: String, b: String): String =
+    s"""CAST(list_sum(list_transform(range(1, len($a) + 1),
+       |        j -> ($a[j] - $b[j]) * ($a[j] - $b[j]))) AS BIGINT)""".stripMargin
+  /** nn09/nn11's exact side: CTE `ex(q_id, vec_id)`, the integer-L2
+    * top-5 of every 100th vector over the `qf` micro-unit vectors. */
+  private val sqlExactL2Top5 =
+    s"""ex AS (SELECT q_id, vec_id FROM (
+       |  SELECT a.vec_id AS q_id, b.vec_id,
+       |    ROW_NUMBER() OVER (PARTITION BY a.vec_id ORDER BY
+       |      ${sqlDist2("b.v", "a.v")},
+       |      b.vec_id) AS rk
+       |  FROM qf a JOIN qf b ON a.vec_id % 100 = 0) z
+       |  WHERE rk <= 5)""".stripMargin
   /** semanticDedup's output over the closure of edge CTE `e` on nodes `s`. */
   private val sqlKeptAs =
     s"""${GraphQueries.sqlClosure("e", "s", "vec_id")}
@@ -34,17 +66,12 @@ object VectorQueries {
             |    round($sqlCos, 6) AS sim_r
             |  FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
             |  WHERE a.vec_id % 100 = 0)
-            |SELECT query_id, rank, neighbor_id, sim_r FROM (
-            |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-            |    ORDER BY sim_r DESC, neighbor_id) AS rank FROM scored) t
-            |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin))
+            |${sqlTop5("query_id, rank, neighbor_id, sim_r")} ORDER BY query_id, rank""".stripMargin))
 
-  // nn02 (SplitMix64-signature LSH top-k, rows-only) was demoted to
-  // SimilaritySpec in round 10: the production lshTopK path stays
-  // benched/oracle-bounded through nn05 (same code, capture-sized
-  // bands, full-capture oracle) and nn07 is its value-exact portable
-  // twin, so the registered rows-only variant carried no verification
-  // the spec doesn't — see NOTES_r10.
+  // The production lshTopK path (SplitMix64 signatures) is pinned in
+  // SimilaritySpec: nn05 benches and oracle-bounds the same code at
+  // capture-sized bands and nn07 is its value-exact portable twin, so
+  // a rows-only registered variant would verify nothing more.
 
   /** Exact embedding near-duplicate pairs (cosine ≥ threshold) from a
     * probe subset against the full corpus. Threshold 0.4 because the
@@ -62,12 +89,11 @@ object VectorQueries {
             |WHERE $sqlCos >= 0.4
             |ORDER BY id1, id2""".stripMargin))
 
-  // nn04 (IVF-flat at production nProbe=4, rows-only) was demoted to
-  // SimilaritySpec in round 10: the production IvfIndex.build/topK path
-  // stays benched/oracle-gated through nn06 (same code, all-probe —
-  // structurally exhaustive, verified against the nn01 oracle verbatim)
-  // and nn10 is its value-exact portable twin; the spec keeps the
-  // nProbe=4 recall floor — see NOTES_r10.
+  // The production IvfIndex.build/topK path at nProbe=4 is pinned in
+  // SimilaritySpec (its recall floor): nn06 benches and oracle-gates
+  // the same code all-probe — structurally exhaustive, verified
+  // against the nn01 oracle verbatim — and nn10 is its value-exact
+  // portable twin.
 
   /** LSH RECALL against the exact top-5, as a registered query the
     * oracle can bound. Capture-sized banding (24 single-bit bands: a
@@ -98,10 +124,7 @@ object VectorQueries {
             |    round($sqlCos, 6) AS sim_r
             |  FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
             |  WHERE a.vec_id % 100 = 0),
-            |topk AS (SELECT query_id, neighbor_id FROM (
-            |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-            |    ORDER BY sim_r DESC, neighbor_id) AS rank FROM scored) t
-            |  WHERE rank <= 5)
+            |topk AS (${sqlTop5("query_id, neighbor_id")})
             |SELECT query_id, COUNT(*) AS n_exact, COUNT(*) AS n_hit,
             |  CAST(1.0 AS DOUBLE) AS recall
             |FROM topk GROUP BY query_id ORDER BY query_id""".stripMargin))
@@ -132,10 +155,7 @@ object VectorQueries {
             |    round($sqlCos, 6) AS sim_r
             |  FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
             |  WHERE a.vec_id % 100 = 0 AND a.vec_id < 5000)
-            |SELECT query_id, rank, neighbor_id, sim_r FROM (
-            |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-            |    ORDER BY sim_r DESC, neighbor_id) AS rank FROM scored) t
-            |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin))
+            |${sqlTop5("query_id, rank, neighbor_id, sim_r")} ORDER BY query_id, rank""".stripMargin))
 
   /** IVF partition-completeness: probing ALL cells must reproduce the
     * exact brute-force frame bit-for-bit — cells partition the corpus,
@@ -199,10 +219,7 @@ object VectorQueries {
             |           FROM pairs p
             |           JOIN embeddings a ON a.vec_id = p.query_id
             |           JOIN embeddings b ON b.vec_id = p.neighbor_id)
-            |SELECT query_id, rank, neighbor_id, sim_r FROM (
-            |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-            |    ORDER BY sim_r DESC, neighbor_id) AS rank FROM scored) t
-            |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin))
+            |${sqlTop5("query_id, rank, neighbor_id, sim_r")} ORDER BY query_id, rank""".stripMargin))
 
   /** Duplicate CLUSTERS from near-dup edges: embedding-cosine pairs
     * (≥ 0.3 within a vec_id%5 probe subset) fed to iterative min-label
@@ -343,8 +360,7 @@ object VectorQueries {
     * DECIMAL(38) widening — which is what the sums use. */
   val em01DimStats = QueryDef("em01_dim_stats",
     (s, d) => {
-      import org.apache.spark.sql.types.{DecimalType, DoubleType}
-      val dec = (c: org.apache.spark.sql.Column) => c.cast(DecimalType(38, 0))
+      import org.apache.spark.sql.types.DoubleType
       val q = Tables.embeddings(s, d)
         .select(posexplode(col("embedding")).as(Seq("dim", "x")))
         .select(col("dim").cast("long").as("dim"),
@@ -352,8 +368,8 @@ object VectorQueries {
       val nD = col("n").cast(DoubleType)
       q.groupBy("dim").agg(
           count(lit(1)).as("n"),
-          sum(dec(col("xq"))).cast(DoubleType).as("sx"),
-          sum(dec(col("xq")) * dec(col("xq"))).cast(DoubleType).as("sxx"),
+          exactSum(int128(col("xq"))).as("sx"),
+          exactSum(int128(col("xq")) * int128(col("xq"))).as("sxx"),
           min(col("xq")).as("min_q"), max(col("xq")).as("max_q"))
         .select(col("dim"), col("n"),
           round(col("sx") / nD / 1e6, 6).as("mean"),
@@ -363,13 +379,13 @@ object VectorQueries {
           round(col("max_q") / 1e6, 6).as("max_v"))
         .orderBy("dim")
     },
-    Some("""WITH q AS (SELECT
+    Some(s"""WITH q AS (SELECT
            |    CAST(generate_subscripts(embedding, 1) - 1 AS BIGINT) AS dim,
-           |    CAST(FLOOR(CAST(unnest(embedding) AS DOUBLE) * 1000000) AS BIGINT) AS xq
+           |    ${sqlMicro("unnest(embedding)")} AS xq
            |  FROM embeddings),
            |a AS (SELECT dim, COUNT(*) AS n,
-           |    CAST(SUM(CAST(xq AS HUGEINT)) AS DOUBLE) AS sx,
-           |    CAST(SUM(CAST(xq AS HUGEINT) * CAST(xq AS HUGEINT)) AS DOUBLE) AS sxx,
+           |    ${sqlExactSum(sqlInt128("xq"))} AS sx,
+           |    ${sqlExactSum(s"${sqlInt128("xq")} * ${sqlInt128("xq")}")} AS sxx,
            |    MIN(xq) AS min_q, MAX(xq) AS max_q
            |  FROM q GROUP BY dim)
            |SELECT dim, n,
@@ -558,18 +574,8 @@ object VectorQueries {
          |  SELECT q_id, vec_id,
          |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY adist, vec_id) AS rk
          |  FROM adc_all) z WHERE rk <= 5),
-         |qf AS MATERIALIZED (SELECT vec_id,
-         |    list_transform(embedding,
-         |      x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS v
-         |  FROM embeddings),
-         |ex AS (SELECT q_id, vec_id FROM (
-         |  SELECT a.vec_id AS q_id, b.vec_id,
-         |    ROW_NUMBER() OVER (PARTITION BY a.vec_id ORDER BY
-         |      CAST(list_sum(list_transform(range(1, len(b.v) + 1),
-         |        j -> (b.v[j] - a.v[j]) * (b.v[j] - a.v[j]))) AS BIGINT),
-         |      b.vec_id) AS rk
-         |  FROM qf a JOIN qf b ON a.vec_id % 100 = 0) z
-         |  WHERE rk <= 5)
+         |${sqlQuantized("qf")},
+         |$sqlExactL2Top5
          |SELECT ex.q_id, CAST(COUNT(*) AS BIGINT) AS n_exact,
          |  CAST(SUM(CASE WHEN t.vec_id IS NULL THEN 0 ELSE 1 END) AS BIGINT)
          |    AS n_hit,
@@ -621,14 +627,11 @@ object VectorQueries {
         .orderBy("q_id", "rank")
     },
     Some {
-      val dist = (a: String, b: String) =>
-        s"""CAST(list_sum(list_transform(range(1, len($a) + 1),
-           |        j -> ($a[j] - $b[j]) * ($a[j] - $b[j]))) AS BIGINT)""".stripMargin
       s"""WITH ${pqChain(0, m = 1, k = 16, iters = 2)},
          |probes AS (SELECT q_id, cell_id FROM (
          |  SELECT q_id, cell_id,
          |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY d2, cell_id) AS rk
-         |  FROM (SELECT q.vec_id AS q_id, c.cell_id, ${dist("q.v", "c.c")} AS d2
+         |  FROM (SELECT q.vec_id AS q_id, c.cell_id, ${sqlDist2("q.v", "c.c")} AS d2
          |    FROM q0 q CROSS JOIN c0_2 c WHERE q.vec_id % 100 = 0) z) y
          |  WHERE rk <= 4),
          |cand AS (SELECT p.q_id, s.vec_id FROM probes p
@@ -636,7 +639,7 @@ object VectorQueries {
          |SELECT q_id, vec_id, d2, rank FROM (
          |  SELECT q_id, vec_id, d2,
          |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY d2, vec_id) AS rank
-         |  FROM (SELECT c.q_id, c.vec_id, ${dist("a.v", "b.v")} AS d2
+         |  FROM (SELECT c.q_id, c.vec_id, ${sqlDist2("a.v", "b.v")} AS d2
          |    FROM cand c JOIN q0 a ON a.vec_id = c.q_id
          |    JOIN q0 b ON b.vec_id = c.vec_id) z) y
          |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin
@@ -703,7 +706,7 @@ object VectorQueries {
         .filter(col("__rk") <= 5)
         .select(col("q_id"), col("vec_id"), lit(1).as("hit"))
       // exact side via the map-side min-heap — the queries×corpus
-      // stream never touches a sort (nn09's r10 fix, same shape)
+      // stream never touches a sort (nn09's shape)
       val exact = cz.crossJoin(broadcast(qz))
         .select(col("q_id"), col("vec_id"),
           QuantizedKMeans.dist2(col("q"), col("qv")).as("d2"))
@@ -732,27 +735,16 @@ object VectorQueries {
          |  SELECT q_id, vec_id,
          |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY adist, vec_id) AS rk
          |  FROM adc_all) z WHERE rk <= 200),
-         |qf AS MATERIALIZED (SELECT vec_id,
-         |    list_transform(embedding,
-         |      x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS v
-         |  FROM embeddings),
+         |${sqlQuantized("qf")},
          |rr AS (SELECT q_id, vec_id FROM (
          |  SELECT s.q_id, s.vec_id,
          |    ROW_NUMBER() OVER (PARTITION BY s.q_id ORDER BY
-         |      CAST(list_sum(list_transform(range(1, len(b.v) + 1),
-         |        j -> (b.v[j] - a.v[j]) * (b.v[j] - a.v[j]))) AS BIGINT),
+         |      ${sqlDist2("b.v", "a.v")},
          |      s.vec_id) AS rk
          |  FROM shortlist s JOIN qf a ON a.vec_id = s.q_id
          |    JOIN qf b ON b.vec_id = s.vec_id) z
          |  WHERE rk <= 5),
-         |ex AS (SELECT q_id, vec_id FROM (
-         |  SELECT a.vec_id AS q_id, b.vec_id,
-         |    ROW_NUMBER() OVER (PARTITION BY a.vec_id ORDER BY
-         |      CAST(list_sum(list_transform(range(1, len(b.v) + 1),
-         |        j -> (b.v[j] - a.v[j]) * (b.v[j] - a.v[j]))) AS BIGINT),
-         |      b.vec_id) AS rk
-         |  FROM qf a JOIN qf b ON a.vec_id % 100 = 0) z
-         |  WHERE rk <= 5)
+         |$sqlExactL2Top5
          |SELECT ex.q_id, CAST(COUNT(*) AS BIGINT) AS n_exact,
          |  CAST(SUM(CASE WHEN rr.vec_id IS NULL THEN 0 ELSE 1 END) AS BIGINT)
          |    AS n_hit,
@@ -781,10 +773,7 @@ object VectorQueries {
     val trainWhere = if (trainMod > 1) s"WHERE vec_id % $trainMod = 0 " else ""
     val trainAnd = if (trainMod > 1) s" WHERE q.vec_id % $trainMod = 0" else ""
     val base =
-      s"""q$s AS MATERIALIZED (SELECT vec_id,
-         |    list_transform($vec,
-         |      x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS v
-         |  FROM embeddings),
+      s"""${sqlQuantized(s"q$s", vec)},
          |c${s}_0 AS (SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1
          |      AS BIGINT) AS cell_id, v AS c
          |  FROM (SELECT * FROM q$s ${trainWhere}ORDER BY vec_id LIMIT $k)),""".stripMargin
@@ -793,8 +782,7 @@ object VectorQueries {
          |    SELECT vec_id, v, cell_id,
          |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell_id) AS rk
          |    FROM (SELECT q.vec_id, q.v, c.cell_id,
-         |        CAST(list_sum(list_transform(range(1, len(q.v) + 1),
-         |          j -> (q.v[j] - c.c[j]) * (q.v[j] - c.c[j]))) AS BIGINT) AS d2
+         |        ${sqlDist2("q.v", "c.c")} AS d2
          |      FROM q$s q CROSS JOIN c${s}_${i - 1} c$trainAnd) z) y
          |  WHERE rk = 1),
          |s${s}_$i AS (SELECT cell_id, i, CAST(SUM(v[i]) AS BIGINT) AS sm,
@@ -811,8 +799,7 @@ object VectorQueries {
          |  SELECT vec_id, cell_id, d2,
          |    ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell_id) AS rk
          |  FROM (SELECT q.vec_id, c.cell_id,
-         |      CAST(list_sum(list_transform(range(1, len(q.v) + 1),
-         |        j -> (q.v[j] - c.c[j]) * (q.v[j] - c.c[j]))) AS BIGINT) AS d2
+         |      ${sqlDist2("q.v", "c.c")} AS d2
          |    FROM q$s q CROSS JOIN c${s}_$iters c) z) y
          |  WHERE rk = 1)""".stripMargin
     s"$base\n$its\n$fin"
@@ -824,8 +811,7 @@ object VectorQueries {
     * join `j$s` (q_id, vec_id, d2). */
   private def adcLuts(m: Int, iters: Int): String = (0 until m).map { s =>
     s"""l$s AS (SELECT q.vec_id AS q_id, c.cell_id,
-       |    CAST(list_sum(list_transform(range(1, len(q.v) + 1),
-       |      j -> (q.v[j] - c.c[j]) * (q.v[j] - c.c[j]))) AS BIGINT) AS d2
+       |    ${sqlDist2("q.v", "c.c")} AS d2
        |  FROM q$s q CROSS JOIN c${s}_$iters c WHERE q.vec_id % 100 = 0),
        |j$s AS (SELECT l.q_id, f.vec_id, l.d2
        |  FROM f$s f JOIN l$s l ON f.cell_id = l.cell_id)""".stripMargin

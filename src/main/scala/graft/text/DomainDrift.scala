@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.util.Exact.int128
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
@@ -38,16 +39,15 @@ object DomainDrift {
     val perT = perGT.groupBy("t").agg(sum(col("c")).as("g"))
     val perG = perGT.groupBy("grp").agg(sum(col("c")).as("n"))
     val total = perG.agg(sum(col("n")).as("bigg"))
-    val dec = "decimal(38,0)"
     val folded = perGT.join(perT, "t")
       .join(broadcast(perG), "grp") // group table is tiny → broadcast side
       .crossJoin(broadcast(total))
       .groupBy("grp", "n", "bigg").agg(
-        sum(abs(col("c").cast(dec) * col("bigg") -
-          col("g").cast(dec) * col("n"))).as("sdev"),
+        sum(abs(int128(col("c")) * col("bigg") -
+          int128(col("g")) * col("n"))).as("sdev"),
         sum(col("g")).as("gseen"))
     folded.select(col("grp"), col("n").cast(LongType).as("n_tokens"),
-      ((col("sdev") + (col("bigg") - col("gseen")).cast(dec) * col("n"))
+      ((col("sdev") + int128(col("bigg") - col("gseen")) * col("n"))
         .cast(DoubleType) /
         (lit(2.0) * col("n").cast(DoubleType) * col("bigg").cast(DoubleType)))
         .as("tv"))

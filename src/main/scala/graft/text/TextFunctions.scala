@@ -74,20 +74,23 @@ object TextFunctions {
     * order. Words shared between languages (e.g. "le" in fr and zh)
     * read the same counter, matching the per-word-count formulation. */
   def langId(text: Column): Column = {
-    val scores = Seq(
-      "en" -> Seq("the", "and", "of", "is"),
-      "es" -> Seq("el", "la", "los", "que"),
-      "de" -> Seq("der", "die", "und", "nicht"),
-      "fr" -> Seq("le", "les", "est", "une"),
-      "zh" -> Seq("de", "shi", "bu", "le"))
-    val scoreArr = TokenCountsExpr.groupCounts(tokens(text), scores.map(_._2))
+    val scoreArr = TokenCountsExpr.groupCounts(tokens(text), langMarkers.map(_._2))
     // argmax with first-listed-wins tie-break: array_position returns
     // the FIRST index of the max — identical to a fold where a later
     // language replaces the best only on a strictly greater score
     element_at(
-      array(scores.map(s => lit(s._1)): _*),
+      array(langMarkers.map(s => lit(s._1)): _*),
       array_position(scoreArr, array_max(scoreArr)).cast(IntegerType))
   }
+
+  /** [[langId]]'s languages in tie-break order, each with its marker
+    * tokens; the oracle's SQL replay reads the same table. */
+  val langMarkers: Seq[(String, Seq[String])] = Seq(
+    "en" -> Seq("the", "and", "of", "is"),
+    "es" -> Seq("el", "la", "los", "que"),
+    "de" -> Seq("der", "die", "und", "nicht"),
+    "fr" -> Seq("le", "les", "est", "une"),
+    "zh" -> Seq("de", "shi", "bu", "le"))
 
   /** Normalization for fingerprinting: lowercase, strip punctuation,
     * collapse whitespace. */

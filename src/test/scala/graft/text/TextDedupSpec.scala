@@ -1,7 +1,10 @@
 package graft.text
 
-import graft.SparkSpec
-import graft.Tables
+import graft.{Runner, SparkSpec, Tables}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
 class TextDedupSpec extends SparkSpec {
@@ -80,6 +83,30 @@ class TextDedupSpec extends SparkSpec {
       .filter(col("id1") === 1L && col("id2") === 2L)
       .select("inter", "uni").as[(Long, Long)].collect().toSeq
     assert(got == Seq((28L, 35L)))
+  }
+
+  /** WindowExec nodes an executed plan runs: a reused exchange is a
+    * leaf, and a cached frame counts once however many scans read it. */
+  private def windowEvaluations(plan: SparkPlan): Int = {
+    val cached = scala.collection.mutable.Set[AnyRef]()
+    def walk(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case s: InMemoryTableScanExec =>
+        if (cached.add(s.relation.cacheBuilder)) walk(s.relation.cachedPlan) else 0
+      case w: WindowExec => 1 + w.children.map(walk).sum
+      case other => other.children.map(walk).sum
+    }
+    walk(plan)
+  }
+
+  test("fz02 evaluates the prefix rank Window once") {
+    // both sides of the candidate self-join read the prefix frame (the
+    // token df-join plus the per-doc rank Window); it is evaluated once
+    Runner.reset(spark)
+    val df = graft.queries.PipelineQueries.fz02PrefixJaccard.fn(spark, sfDir)
+    df.collect()
+    assert(windowEvaluations(df.queryExecution.executedPlan) == 1)
   }
 
   test("minhash AllPairs candidates ⊇ high-jaccard pairs, est within 0.35 of exact") {

@@ -659,9 +659,13 @@ object Plans {
 
   /** All failed assertions for a session (empty = every pin holds);
     * shared by the CLI main below and PlanSpec so the pins run under
-    * `sbt test`, not only when someone remembers the main. */
-  def failures(spark: SparkSession, sfDir: String): Seq[String] =
-    checks.flatMap { case Check(name, wants, nones, shuf) =>
+    * `sbt test`, not only when someone remembers the main. Each pinned
+    * query is built from an empty cache, as in `--shuffles`: a frame
+    * that an earlier build materialized prints both its final and its
+    * initial plan, so its exchanges would count twice. */
+  def failures(spark: SparkSession, sfDir: String, pins: Seq[Check] = checks): Seq[String] =
+    pins.flatMap { case Check(name, wants, nones, shuf) =>
+      Runner.reset(spark)
       val plan = SparkEntry.queries(name)(spark, sfDir)
         .queryExecution.explainString(ExplainMode.fromString("formatted"))
       wants.filterNot(plan.contains).map(w => s"$name :: missing($w)") ++

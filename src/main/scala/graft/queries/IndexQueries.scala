@@ -3,6 +3,7 @@ package graft.queries
 import graft.{QueryDef, Tables}
 import graft.text.TextFunctions
 import graft.util.Exact._
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -172,6 +173,10 @@ object IndexQueries {
            |FROM r WHERE ctx_total >= 100 AND rk <= 3
            |ORDER BY ctx, rk""".stripMargin))
 
+  /** x⁴ as a product of four int128 factors, and its SQL twin. */
+  private def pow4(x: String): Column = Seq.fill(4)(int128(col(x))).reduce(_ * _)
+  private def sqlPow4(x: String): String = Seq.fill(4)(sqlInt128(x)).mkString(" * ")
+
   /** QUANTIZED CONDITIONAL SURPRISAL (the KenLM-style LM quality
     * scorer, made bit-portable): per-doc mean of
     * floor(4·log₂(T_ctx/c)) over its bigram occurrences, where c is
@@ -222,7 +227,6 @@ object IndexQueries {
         .withColumn("b", least(length(bin(expr("tc div c"))).cast("long") - 1L,
           lit(39L)))
         .withColumn("pb", expr("shiftleft(cast(1 as bigint), cast(b as int))"))
-      val pow4 = (c: String) => Seq.fill(4)(int128(col(c))).reduce(_ * _)
       val (c4, pb4, tc4) = (pow4("c"), pow4("pb"), pow4("tc"))
       val qb = b.select(col("term"), (lit(4L) * col("b") +
           when(c4 * pb4 * 8 <= tc4, 3L)
@@ -250,12 +254,12 @@ object IndexQueries {
            |      JOIN pw ON pw.p <= t.tc AND c.c * pw.p <= t.tc
            |      GROUP BY 1, 2, 3),
            |qb AS (SELECT term, CAST(4 * b +
-           |    CASE WHEN c::HUGEINT*c*c*c * (pb::HUGEINT*pb*pb*pb) * 8
-           |              <= tc::HUGEINT*tc*tc*tc THEN 3
-           |         WHEN c::HUGEINT*c*c*c * (pb::HUGEINT*pb*pb*pb) * 4
-           |              <= tc::HUGEINT*tc*tc*tc THEN 2
-           |         WHEN c::HUGEINT*c*c*c * (pb::HUGEINT*pb*pb*pb) * 2
-           |              <= tc::HUGEINT*tc*tc*tc THEN 1
+           |    CASE WHEN ${sqlPow4("c")} * (${sqlPow4("pb")}) * 8
+           |              <= ${sqlPow4("tc")} THEN 3
+           |         WHEN ${sqlPow4("c")} * (${sqlPow4("pb")}) * 4
+           |              <= ${sqlPow4("tc")} THEN 2
+           |         WHEN ${sqlPow4("c")} * (${sqlPow4("pb")}) * 2
+           |              <= ${sqlPow4("tc")} THEN 1
            |         ELSE 0 END AS BIGINT) AS qbits FROM b)
            |SELECT d.doc_id, COUNT(*) AS n_bigrams,
            |  CAST(SUM(q.qbits) AS BIGINT) AS sum_qbits,

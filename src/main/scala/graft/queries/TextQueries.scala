@@ -92,11 +92,14 @@ object TextQueries {
     s"""$name AS (SELECT $cols, unnest($arr) AS w,
        |        generate_subscripts($arr, 1) AS i FROM $from)""".stripMargin
 
+  /** The CTE in which [[sqlLangId]] leaves `lang_pred`. */
+  private val sqlLangPred = s"p${TextFunctions.langMarkers.size - 1}"
+
   /** The SQL replay of TextFunctions.langId over `documents`: CTE `s`
     * (`keep`, one marker-token score `s_<lang>` per language, then
-    * `also`) and the argmax fold p1…p4 (a later language replaces the
-    * best only on a strictly greater score, so the first listed wins
-    * ties), which leaves `lang_pred` in the last p CTE. */
+    * `also`) and the argmax fold p1, p2, … (a later language replaces
+    * the best only on a strictly greater score, so the first listed
+    * wins ties), which leaves `lang_pred` in [[sqlLangPred]]. */
   private def sqlLangId(keep: String, also: Seq[String] = Nil): String = {
     val langs = TextFunctions.langMarkers.map(_._1)
     val scores = TextFunctions.langMarkers.map { case (l, words) =>
@@ -202,7 +205,7 @@ object TextQueries {
       .groupBy("lang", "lang_pred").agg(count(lit(1)).as("n"))
       .orderBy("lang", "lang_pred"),
     Some(s"""WITH ${sqlLangId("lang")}
-            |SELECT lang, lang_pred, COUNT(*) AS n FROM p4
+            |SELECT lang, lang_pred, COUNT(*) AS n FROM $sqlLangPred
             |GROUP BY lang, lang_pred ORDER BY lang, lang_pred""".stripMargin))
 
   /** Content fingerprints (md5 of normalized text). */
@@ -998,7 +1001,7 @@ object TextQueries {
         .orderBy("source")
     },
     Some(s"""WITH ${sqlLangId("*", Seq(s"$sqlQuality AS quality"))},
-            |filtered AS (SELECT * FROM p4 WHERE lang_pred = 'en' AND quality >= 0.5),
+            |filtered AS (SELECT * FROM $sqlLangPred WHERE lang_pred = 'en' AND quality >= 0.5),
             |kept AS (SELECT * FROM filtered
             |  WHERE doc_id IN (SELECT MIN(doc_id) FROM filtered GROUP BY md5($sqlNormalize)))
             |SELECT source, COUNT(*) AS n_kept, CAST(SUM(len($sqlTokArr)) AS BIGINT) AS kept_tokens
@@ -1019,13 +1022,13 @@ object TextQueries {
         .orderBy("bucket")
     },
     Some(s"""WITH ${sqlLangId("*", Seq(s"$sqlQuality AS quality"))},
-            |passing AS (SELECT * FROM p4 WHERE lang_pred = 'en' AND quality >= 0.5),
+            |passing AS (SELECT * FROM $sqlLangPred WHERE lang_pred = 'en' AND quality >= 0.5),
             |keepers AS (SELECT MIN(doc_id) AS kid FROM passing GROUP BY md5($sqlNormalize)),
             |b AS (SELECT CASE
             |    WHEN lang_pred <> 'en' THEN 'lang_filtered'
             |    WHEN quality < 0.5 THEN 'low_quality'
             |    WHEN doc_id IN (SELECT kid FROM keepers) THEN 'kept'
-            |    ELSE 'duplicate' END AS bucket FROM p4)
+            |    ELSE 'duplicate' END AS bucket FROM $sqlLangPred)
             |SELECT bucket, COUNT(*) AS n FROM b GROUP BY bucket ORDER BY bucket""".stripMargin))
 
   /** Distributed BPE merge TRAINING (x15 applies a fixed merge table;

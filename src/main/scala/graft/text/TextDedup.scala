@@ -127,14 +127,12 @@ object TextDedup {
     * (0.8·35 = 28.000000000000004 → ceil 29) would silently shorten a
     * prefix and drop true pairs.
     *
-    * Plan shape: tokenize + df-count (one agg), per-doc rank window
-    * (partitioned by doc — small partitions), evaluated once into a
-    * token → prefix-docs index that every token row probes in a
-    * broadcast join (so the index must fit a broadcast: this is the
-    * probe-scale exact join; corpus-wide dedup goes through star
-    * contraction), then exact verification joins that touch only
-    * candidate×doc-size rows. The final ≥-filter cross-multiplies
-    * integers (den·inter ≥ num·union): no float enters the decision.
+    * Plan shape at 100 TB: tokenize + df-count (one agg), per-doc rank
+    * window (partitioned by doc — small partitions), prefix self-join
+    * keyed by RARE tokens (bounded fanout by construction), then exact
+    * verification joins that touch only candidate×doc-size rows. The
+    * final ≥-filter cross-multiplies integers (den·inter ≥ num·union):
+    * no float enters the decision.
     *
     * @return (id1, id2, inter, uni, jaccard) with id1 < id2, exact. */
   def prefixJaccardPairs(docs: DataFrame, num: Int, den: Int,
@@ -155,23 +153,18 @@ object TextDedup {
       .withColumn("r", row_number().over(
         Window.partitionBy("id").orderBy(col("df"), col("t"))))
     // prefix length n − ⌈τn⌉ + 1, integer-exact. The frame is small by
-    // construction (prefix tokens only, ≈(1−τ)·|tok| rows).
+    // construction (prefix tokens only, ≈(1−τ)·|tok| rows); it is
+    // persisted because both sides of the self-join read it, and the
+    // df-join and rank Window would otherwise run once per side.
     val prefix = ranked.filter(
         col("r") <= col("n") - expr(s"($num * n + ${den - 1}) div $den") + lit(1))
       .select(col("id"), col("t"), col("n"))
+      .transform(org.apache.spark.sql.graftbridge.GraftSqlBridge.sharedInPlan)
     // candidates: a shared PREFIX token + the length condition
-    // (den·min(n1,n2) ≥ num·max — sizes too far apart can't reach τ).
-    // The prefix frame is read once, as a token → docs index that each
-    // token row of id1 probes: id1 itself in the token's list says the
-    // token is in id1's prefix. (A prefix self-join reads the frame on
-    // both sides and so runs the df-join and the rank Window twice.)
-    val index = prefix.groupBy("t").agg(collect_list(struct(col("id"), col("n"))).as("docs"))
-    val cand = tok.join(broadcast(index), "t")
-      .filter(array_contains(col("docs.id"), col("id")))
-      .select(col("id").as("id1"), col("n").as("n1"), explode(col("docs")).as("d"))
-      .select(col("id1"), col("d.id").as("id2"), col("n1"), col("d.n").as("n2"))
-      .filter(col("id1") < col("id2") &&
-        lit(den) * least(col("n1"), col("n2")) >= lit(num) * greatest(col("n1"), col("n2")))
+    // (den·min(n1,n2) ≥ num·max — sizes too far apart can't reach τ)
+    val cand = Blocking.selfPairs(prefix, Seq("t"))
+      .filter(lit(den) * least(col("n1"), col("n2")) >= lit(num) * greatest(col("n1"), col("n2")))
+      .select("id1", "id2", "n1", "n2")
       .dropDuplicates("id1", "id2")
     // exact verification: fan candidates out by id1's tokens, keep the
     // ones id2 also has — |A∩B| — then the integer threshold test

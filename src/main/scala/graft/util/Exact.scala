@@ -11,8 +11,8 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
   * at the end. Each rule is named by its role and given twice, side by
   * side: a Spark `Column` function and its SQL twin, the string the
   * DuckDB oracle runs. The SQL twins take a SQL expression and return
-  * one. No other file spells a decimal type, so a precision is changed
-  * in exactly one place for both engines.
+  * one. No other file spells a decimal type or `HUGEINT`, so a
+  * precision is changed in exactly one place for both engines.
   *
   * The twins agree on every rule (ExactSpec evaluates each SQL twin in
   * Spark against its Column twin); the one dialect gap is DuckDB's
@@ -45,7 +45,7 @@ object Exact {
   def moneyState(c: Column): Column = c.cast(DecimalType(28, 2))
   def sqlMoneyState(x: String): String = s"CAST($x AS DECIMAL(28,2))"
 
-  /** A change-data-capture total (cdc01): money widened by two digits
+  /** A change-data-capture total (up02): money widened by two digits
     * for the upserted adjustments. */
   def cdcTotal(c: Column): Column = c.cast(DecimalType(14, 2))
   def sqlCdcTotal(x: String): String = s"CAST($x AS DECIMAL(14,2))"

@@ -11,6 +11,16 @@ class PlanSpec extends SparkSpec {
     assert(fails.isEmpty, s"plan pins violated:\n  ${fails.mkString("\n  ")}")
   }
 
+  test("a pin holds whatever an earlier run left in the cache") {
+    // fz02 persists its token and prefix frames; once they are
+    // materialized, a formatted plan prints each one's final and
+    // initial plan, which must not change the pinned shuffle count
+    val pin = Plans.checks.filter(_.query == "fz02_prefix_jaccard")
+    SparkEntry.queries("fz02_prefix_jaccard")(spark, sfDir).collect()
+    val fails = Plans.failures(spark, sfDir, pin)
+    assert(fails.isEmpty, fails.mkString("; "))
+  }
+
   test("unpartitioned windows are exactly the audited small-frame set") {
     // The bench tail's "Moving all data to a single partition" warnings
     // were audited r6–r9 to post-aggregation / post-limit frames; this

@@ -61,7 +61,7 @@ class ExactSpec extends SparkSpec {
     // A second spelling of a precision is a second copy of the parity
     // rule, and the copies drift. Bench.scala keeps its calibration
     // probe, which the benchmark reads as it is.
-    val decimal = """DecimalType\(|AS DECIMAL\(|"decimal\(""".r
+    val decimal = """DecimalType\(|AS DECIMAL\(|"decimal\(|HUGEINT""".r
     val mains = SourceScan.mainSources
     val owner = (p: java.nio.file.Path) => p.endsWith("graft/util/Exact.scala")
     val offenders = SourceScan.overLimit(decimal, mains) { p =>

@@ -49,7 +49,7 @@ object ScaleUp {
   // round offsets comfortably above every source max key.
   // private[graft] (not private): ScaleUpSpec derives each row's
   // replica id as key/offset and must reference THESE constants, not
-  // re-typed literals that could drift (ADVICE r12).
+  // re-typed literals that could drift.
   private[graft] val C = 1000000L   // custkey
   private[graft] val O = 10000000L  // orderkey
   private[graft] val P = 1000000L   // partkey
@@ -234,18 +234,16 @@ object ScaleUp {
     // event volume accumulates — instead of multiplying density over a
     // fixed span. Density replication is why fixed-eps proximity /
     // overlap pair counts (bj01/ov01) measured ~quadratic at sf10: a
-    // corpus-construction artifact, not those operators (SCALE.md
-    // §round 11 triage). Day-granular translation keeps replica
-    // windows disjoint for any source span, preserves the source ts
-    // type (day-time interval addition is type-preserving incl.
-    // TIMESTAMP_NTZ), and commutes exactly with session windows,
-    // eps-buckets, and
-    // inter-event deltas (a pure translation). Default OFF as a flag
-    // (callers must opt in explicitly so a corpus's construction is
-    // visible at the call site and in the completion marker); the
-    // round-12 decade corpora are built WITH stretch-time — the
-    // pre-r12 fingerprints in bench/history.jsonl are density-scaled,
-    // so cross-round event-family comparisons must mind the corpus id.
+    // corpus-construction artifact, not those operators (SCALE.md).
+    // Day-granular translation keeps replica windows disjoint for any
+    // source span, preserves the source ts type (day-time interval
+    // addition is type-preserving incl. TIMESTAMP_NTZ), and commutes
+    // exactly with session windows, eps-buckets, and inter-event
+    // deltas (a pure translation). Default OFF as a flag (callers must
+    // opt in explicitly so a corpus's construction is visible at the
+    // call site and in the completion marker). Event-family timings
+    // over a density-scaled corpus and over a stretched one are not
+    // comparable, so comparisons must mind the corpus id.
     write(replicate(srcEv, factor) { (df, i) =>
       val moved =
         if (!stretchEvents || i == 0) df
@@ -331,7 +329,7 @@ object ScaleUp {
     // Completion marker — the LAST artifact of the build. Rebuild
     // guards key on this ONE file: a destDir without it is a partial
     // build to be wiped and re-run (per-table _SUCCESS heuristics let
-    // a mid-write death masquerade as a finished corpus — ADVICE r11).
+    // a mid-write death masquerade as a finished corpus).
     val marker = new org.apache.hadoop.fs.Path(destDir, "_GRAFT_SCALEUP_SUCCESS")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(marker, true)

@@ -96,9 +96,8 @@ object Tables {
       case _ => raw
     }
   }
-  /** SCAN-PARALLELISM FLOOR (r16, guide §2.5 "input skew: one huge
-    * unsplittable file ... repartition immediately after the read").
-    * The driver corpus writes each table as ONE parquet file with ONE
+  /** SCAN-PARALLELISM FLOOR (input skew: one huge unsplittable file
+    * is repartitioned immediately after the read). The driver corpus writes each table as ONE parquet file with ONE
     * row group, and Spark's byte-range splits cannot cut inside a row
     * group — so every scan-side expression over documents/embeddings
     * (gram explodes, shingle/minhash/simhash kernels, quality scores,

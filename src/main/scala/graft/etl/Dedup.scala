@@ -11,16 +11,16 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes:
   *  - `firstOccurrenceWins` / `latestWins` are ONE partial aggregate
-  *    keyed by the dedup key (r14; previously a row_number window).
-  *    The window shape put every copy of a key in ONE task — a hot
-  *    ingest key (one hospital_pk repeated across millions of rows at
-  *    100 TB) became a single unsplittable sort that no AQE rule can
+  *    keyed by the dedup key, never a row_number window: a window
+  *    puts every copy of a key in ONE task — a hot ingest key (one
+  *    hospital_pk repeated across millions of rows at 100 TB) becomes
+  *    a single unsplittable sort that no AQE rule can
   *    break up, with full row width riding the shuffle. min/max of a
   *    struct ordered by (orderCol, remaining columns) is the SAME
   *    "first/latest by orderCol" choice as a partial aggregate:
   *    map-side combine collapses the hot key to one row per input
-  *    partition before anything shuffles. Same shape the text-side
-  *    kernels adopted in r13 (TextDedup.segmentDedupRebuild).
+  *    partition before anything shuffles. The text-side kernels
+  *    share the shape (TextDedup.segmentDedupRebuild).
   *  - Tie-break: the window's row_number over equal orderCol values
   *    picked an arbitrary row; the struct min/max breaks full-row ties
   *    deterministically by the remaining columns (lexicographic field

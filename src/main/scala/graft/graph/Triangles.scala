@@ -84,7 +84,7 @@ object Triangles {
     // out-neighbor pair once, and makes (dst1, dst2) canonical for the
     // closing-edge probe
     // SHUFFLE_HASH on the wedge self-join and the closing-edge probe
-    // (r16, guide §3.1 — the pr01 rationale): sort-merge planned a
+    // (the pr01 rationale): sort-merge planned a
     // Sort above every exchange of the oriented/canonical edge
     // streams; hash-building one side per partition streams the other
     // unsorted. Keyed shuffles, not broadcasts — both sides are

@@ -9,8 +9,8 @@ package graft.multimodal
   * finalizable garbage faster than the single finalizer thread drains
   * it, and decode throughput *collapses* as parallelism rises
   * (measured, 20k tiny-PNG decodes per thread: 0.75 s at 1 thread →
-  * 64.6 s at 32 threads with per-call reader + MemoryCache stream;
-  * see NOTES_r9). One instance of THIS class per partition, re-pointed
+  * 64.6 s at 32 threads with per-call reader + MemoryCache stream).
+  * One instance of THIS class per partition, re-pointed
   * at each payload via [[setBytes]], allocates nothing per frame.
   *
   * Only the two `read` methods and `length` are overridden;

@@ -25,7 +25,7 @@ object CurationQueries {
            |wc AS (SELECT doc_id, COUNT(DISTINCT w) AS wdist, COUNT(*) AS wtot
            |       FROM tok GROUP BY 1),
            |big AS (SELECT a.doc_id, a.w || ' ' || b.w AS g
-           |        FROM tok a JOIN tok b ON b.doc_id = a.doc_id AND b.i = a.i + 1),
+           |        ${TextQueries.sqlBigrams()}),
            |bc AS (SELECT doc_id, g, COUNT(*) AS c FROM big GROUP BY 1, 2),
            |bs AS (SELECT doc_id, MAX(c) AS btop, SUM(c) AS btot,
            |       COALESCE(SUM(c) FILTER (WHERE c > 1), 0) AS bdup

@@ -173,13 +173,12 @@ object GraphQueries {
     * recursive CTE — DuckDB walks the tree top-down one level per
     * step — so parity checks the doubling shortcut against the
     * textbook recursion. */
-  val hi01HierarchyFlatten = QueryDef("hi01_hierarchy_flatten",
-    (s, d) => {
-      val nodes = Tables.part(s, d).select(col("p_partkey").as("id"),
+  val hi01HierarchyFlatten = QueryDef.prepared("hi01_hierarchy_flatten",
+    (s, d) => graft.graph.Hierarchy.flatten(
+      Tables.part(s, d).select(col("p_partkey").as("id"),
         when(col("p_partkey") < 10, lit(null).cast("long"))
-          .otherwise(expr("p_partkey div 2")).as("parent"))
-      graft.graph.Hierarchy.flatten(nodes).orderBy("id")
-    },
+          .otherwise(expr("p_partkey div 2")).as("parent"))))(
+    (_, _, flat) => flat.orderBy("id"),
     Some("""WITH RECURSIVE walk(id, root, depth) AS (
            |  SELECT p_partkey, p_partkey, CAST(0 AS BIGINT) FROM part
            |  WHERE p_partkey < 10

@@ -52,7 +52,7 @@ object IndexQueries {
     },
     Some(s"""WITH ${TextQueries.sqlTok()},
            |term AS (SELECT a.doc_id, a.w || ' ' || b.w AS term
-           |         FROM tok a JOIN tok b ON b.doc_id = a.doc_id AND b.i = a.i + 1)
+           |         ${TextQueries.sqlBigrams()})
            |SELECT term, COUNT(DISTINCT doc_id) AS df, COUNT(*) AS tf,
            |  array_to_string(list_sort(list_distinct(list(doc_id)))[1:10], ',') AS postings10
            |FROM term GROUP BY term
@@ -111,10 +111,10 @@ object IndexQueries {
            |      FROM documents WHERE doc_id % 20 = 0),
            |${TextQueries.sqlTok("etok", "ex", "ex_id", "regexp_split_to_array(text, '\\s+')")},
            |esh AS (SELECT DISTINCT a.ex_id, a.w || ' ' || b.w AS s
-           |        FROM etok a JOIN etok b ON b.ex_id = a.ex_id AND b.i = a.i + 1),
+           |        ${TextQueries.sqlBigrams("etok", "ex_id")}),
            |${TextQueries.sqlTok("dtok")},
            |dsh AS (SELECT DISTINCT a.doc_id, a.w || ' ' || b.w AS s
-           |        FROM dtok a JOIN dtok b ON b.doc_id = a.doc_id AND b.i = a.i + 1),
+           |        ${TextQueries.sqlBigrams("dtok")}),
            |sizes AS (SELECT ex_id, COUNT(*) AS n FROM esh GROUP BY ex_id),
            |inter AS (SELECT e.ex_id, d.doc_id, COUNT(*) AS inter
            |          FROM esh e JOIN dsh d ON e.s = d.s GROUP BY 1, 2)
@@ -162,7 +162,7 @@ object IndexQueries {
     },
     Some(s"""WITH ${TextQueries.sqlTok()},
            |big AS (SELECT a.w AS ctx, b.w AS nxt, COUNT(*) AS cnt
-           |        FROM tok a JOIN tok b ON b.doc_id = a.doc_id AND b.i = a.i + 1
+           |        ${TextQueries.sqlBigrams()}
            |        GROUP BY 1, 2),
            |r AS (SELECT ctx, nxt, cnt,
            |        CAST(SUM(cnt) OVER (PARTITION BY ctx) AS BIGINT) AS ctx_total,
@@ -244,7 +244,7 @@ object IndexQueries {
     },
     Some(s"""WITH ${TextQueries.sqlTok()},
            |bg AS (SELECT a.doc_id, a.w AS ctx, a.w || ' ' || b.w AS term
-           |       FROM tok a JOIN tok b ON b.doc_id = a.doc_id AND b.i = a.i + 1),
+           |       ${TextQueries.sqlBigrams()}),
            |c AS (SELECT ctx, term, COUNT(*) AS c FROM bg GROUP BY 1, 2),
            |t AS (SELECT ctx, CAST(SUM(c) AS BIGINT) AS tc FROM c GROUP BY 1),
            |pw AS (SELECT k, CAST(1 AS BIGINT) << k AS p

@@ -241,8 +241,7 @@ object PipelineQueries {
     * dedup goes through star contraction (dd06/sd01), which is linear
     * in cluster size. */
   val fz02PrefixJaccard = QueryDef("fz02_prefix_jaccard",
-    (s, d) => graft.text.TextDedup.prefixJaccardPairs(
-      Tables.documents(s, d).filter(Probe.scoped(col("doc_id") % 5 === 0)),
+    (s, d) => graft.text.TextDedup.prefixJaccardPairs(TextQueries.probeDocs(s, d),
       num = 4, den = 5)
       .orderBy("id1", "id2"),
     Some(s"""WITH ${TextQueries.sqlTokenJaccard}

@@ -372,7 +372,7 @@ object ProfilingQueries {
     },
     Some(s"""WITH ${TextQueries.sqlTok()},
            |bg AS (SELECT a.w || ' ' || b.w AS term
-           |       FROM tok a JOIN tok b ON b.doc_id = a.doc_id AND b.i = a.i + 1),
+           |       ${TextQueries.sqlBigrams()}),
            |c AS (SELECT term, COUNT(*) AS c FROM bg GROUP BY term),
            |r AS (SELECT c, term,
            |             ROW_NUMBER() OVER (ORDER BY c DESC, term DESC) AS j FROM c)
@@ -411,7 +411,7 @@ object ProfilingQueries {
     },
     Some(s"""WITH ${TextQueries.sqlTok()},
            |bg AS (SELECT a.doc_id // 50 AS batch, a.w || ' ' || b.w AS term
-           |       FROM tok a JOIN tok b ON b.doc_id = a.doc_id AND b.i = a.i + 1),
+           |       ${TextQueries.sqlBigrams()}),
            |fs AS (SELECT term, MIN(batch) AS fb FROM bg GROUP BY term),
            |nb AS (SELECT fb AS batch, COUNT(*) AS new_terms FROM fs GROUP BY fb)
            |SELECT batch, new_terms,

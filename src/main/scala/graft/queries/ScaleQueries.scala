@@ -14,39 +14,34 @@ import org.apache.spark.sql.types.DoubleType
   */
 object ScaleQueries {
 
-  /** One-time bucketed warehouse prep per (session, sfDir): orders and
-    * lineitem copies bucketed+sorted 8-ways on the join key. Memoized —
-    * Verify's parallel dump and Bench's warmup+timed passes prepare
-    * once. Eager BY DESIGN (it is a write, the library analogue of
-    * CREATE TABLE ... CLUSTERED BY), documented in LazinessSpec. */
   /** Once-only cell: computeIfAbsent installs it cheaply under the map
-    * lock; the `lazy val` runs the expensive prep outside that lock,
+    * lock; the `lazy val` runs the expensive write outside that lock,
     * synchronized on the cell itself, so exactly ONE caller per key ever
-    * executes the write (racing DROP+overwrite of the same table paths
-    * is NOT idempotent under interleaving — one job can delete files the
-    * other just committed). */
-  private final class Memo[T](thunk: () => T) { lazy val value: T = thunk() }
-  private val prepared =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Memo[(String, String)]]()
-  private val clustered =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Memo[String]]()
+    * executes it (Verify builds queries in parallel, and racing
+    * DROP+overwrite of the same table paths is NOT idempotent under
+    * interleaving — one job can delete files the other just committed). */
+  private final class Memo(write: () => Unit) { lazy val done: Unit = write() }
+  /** The layout copies written so far, by (session, sfDir, fixture). */
+  private val written =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), Memo]()
   private val hooked = java.util.Collections.newSetFromMap(
     new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
 
-  // evict with the session (mirrors Tables' listener) — a stopped
-  // session must not pin its plans, and a successor session must not
-  // inherit memoized table names whose catalog entries died with it
-  private def hook(s: SparkSession): Unit =
+  /** Runs `write` once per (session, sfDir, fixture). Entries evict with
+    * the session (mirrors Tables' listener): a stopped session must not
+    * pin its plans, and a successor session must not inherit table names
+    * whose catalog entries died with it. */
+  private def once(s: SparkSession, d: String, fixture: String)(write: => Unit): Unit = {
     if (hooked.add(s))
       s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         override def onApplicationEnd(
             end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
           hooked.remove(s)
-          prepared.keySet.removeIf(_._1 eq s)
-          clustered.keySet.removeIf(_._1 eq s)
-          zordered.keySet.removeIf(_._1 eq s)
+          written.keySet.removeIf(_._1 eq s)
         }
       })
+    written.computeIfAbsent((s, d, fixture), _ => new Memo(() => write)).done
+  }
 
   // short path-hash keeps the tag injective: sanitization alone would
   // collide .../sf0.1 with .../sf0_1 and silently overwrite tables
@@ -57,11 +52,13 @@ object ScaleQueries {
           d.getBytes("UTF-8"), org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
           d.getBytes("UTF-8").length, 42) & 0xffffffffL)
 
-  private def bucketedTables(s: SparkSession, d: String): (String, String) = {
-    hook(s)
-    prepared.computeIfAbsent((s, d), _ => new Memo(() => {
-      val oT = s"orders_bkt${tag(d)}"
-      val lT = s"lineitem_bkt${tag(d)}"
+  /** j03's prepare step: orders and lineitem copies bucketed+sorted
+    * 8-ways on the join key, written once per (session, sfDir) — the
+    * library analogue of CREATE TABLE ... CLUSTERED BY. */
+  private def bucketedTables(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val oT = s"orders_bkt${tag(d)}"
+    val lT = s"lineitem_bkt${tag(d)}"
+    once(s, d, "bucketed") {
       val root = new java.io.File(s"target/bucketed/${tag(d)}").getAbsolutePath
       s.sql(s"DROP TABLE IF EXISTS $oT")
       s.sql(s"DROP TABLE IF EXISTS $lT")
@@ -69,8 +66,8 @@ object ScaleQueries {
         oT, "o_orderkey", buckets = 8, path = s"$root/$oT")
       Scale.writeBucketed(Tables.lineitem(s, d).select("l_orderkey", "l_quantity"),
         lT, "l_orderkey", buckets = 8, path = s"$root/$lT")
-      (oT, lT)
-    })).value
+    }
+    (s.table(oT), s.table(lT))
   }
 
   /** J-family at warehouse scale: orders⨝lineitem over copies bucketed
@@ -82,11 +79,11 @@ object ScaleQueries {
     * a 100 TB fact table is not. Oracle: the same join+aggregate in
     * plain SQL over the ORIGINAL parquet — bucketing must not change
     * one row. */
-  val j03BucketedJoin = QueryDef("j03_bucketed_join",
-    (s, d) => {
-      val (oT, lT) = bucketedTables(s, d)
-      s.table(oT).hint("merge")
-        .join(s.table(lT), col("o_orderkey") === col("l_orderkey"))
+  val j03BucketedJoin = QueryDef.prepared("j03_bucketed_join", bucketedTables)(
+    (_, _, tables) => {
+      val (orders, lineitem) = tables
+      orders.hint("merge")
+        .join(lineitem, col("o_orderkey") === col("l_orderkey"))
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n_items"),
           moneySum(col("l_quantity")).as("sum_qty"))
@@ -97,45 +94,30 @@ object ScaleQueries {
            |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
            |GROUP BY 1 ORDER BY o_orderpriority""".stripMargin))
 
-  /** One-time range-clustered copy of lineitem per (session, sfDir):
-    * 16 files, each covering a narrow non-overlapping l_orderkey slice
-    * (Scale.writeClustered). Memoized like the bucketed prep. */
-  private def clusteredLineitem(s: SparkSession, d: String): String = {
-    hook(s)
-    clustered.computeIfAbsent((s, d), _ => new Memo(() => {
-      val path = new java.io.File(
-        s"target/clustered/${tag(d)}/lineitem").getAbsolutePath
+  /** j04's prepare step: a range-clustered copy of lineitem, 16 files,
+    * each covering a narrow non-overlapping l_orderkey slice
+    * (Scale.writeClustered), written once per (session, sfDir). */
+  private def clusteredLineitem(s: SparkSession, d: String): DataFrame = {
+    val path = new java.io.File(s"target/clustered/${tag(d)}/lineitem").getAbsolutePath
+    once(s, d, "clustered") {
       Scale.writeClustered(
         Tables.lineitem(s, d).select("l_orderkey", "l_quantity"),
         path, Seq("l_orderkey"), nFiles = 16)
-      path
-    })).value
+    }
+    s.read.parquet(path)
   }
 
-  /** Selective key-range aggregate over the range-CLUSTERED lineitem
-    * copy: the layout that turns a predicate into file/row-group
-    * skipping (each file holds one narrow l_orderkey slice, so parquet
-    * min/max stats exclude ~15 of 16 files before any row is read —
-    * ScaleSpec measures the locality; Plans pins the pushed filter).
-    * Oracle runs the same aggregate over the ORIGINAL parquet: layout
-    * changes bytes on disk, never one row of the answer — the same
-    * claim class j03 makes for bucketing. */
-  /** One-time z-ordered copy of lineitem per (session, sfDir):
-    * 16 files sorted by the (l_partkey, l_suppkey) Morton interleave.
-    * Memoized like the bucketed/clustered preps. */
-  private val zordered =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Memo[String]]()
-
-  private def zorderedLineitem(s: SparkSession, d: String): String = {
-    hook(s)
-    zordered.computeIfAbsent((s, d), _ => new Memo(() => {
-      val path = new java.io.File(
-        s"target/zordered/${tag(d)}/lineitem").getAbsolutePath
+  /** zo01's prepare step: a z-ordered copy of lineitem, 16 files sorted
+    * by the (l_partkey, l_suppkey) Morton interleave, written once per
+    * (session, sfDir). */
+  private def zorderedLineitem(s: SparkSession, d: String): DataFrame = {
+    val path = new java.io.File(s"target/zordered/${tag(d)}/lineitem").getAbsolutePath
+    once(s, d, "zordered") {
       Scale.writeZOrdered(
         Tables.lineitem(s, d).select("l_partkey", "l_suppkey", "l_quantity"),
         path, "l_partkey", "l_suppkey", nFiles = 16)
-      path
-    })).value
+    }
+    s.read.parquet(path)
   }
 
   /** 2-D selective aggregate over the z-ORDERED lineitem copy: the
@@ -147,8 +129,8 @@ object ScaleQueries {
     * single dimension; the 2-D predicate here intersects). Oracle runs
     * the same aggregate over the ORIGINAL parquet: z-ordering is pure
     * layout and must not change one row. */
-  val zo01ZorderRange = QueryDef("zo01_zorder_range",
-    (s, d) => s.read.parquet(zorderedLineitem(s, d))
+  val zo01ZorderRange = QueryDef.prepared("zo01_zorder_range", zorderedLineitem)(
+    (_, _, lineitem) => lineitem
       .filter(col("l_partkey").between(10L, 40L) &&
         col("l_suppkey").between(2L, 6L))
       .groupBy("l_partkey", "l_suppkey")
@@ -161,8 +143,16 @@ object ScaleQueries {
            |WHERE l_partkey BETWEEN 10 AND 40 AND l_suppkey BETWEEN 2 AND 6
            |GROUP BY 1, 2 ORDER BY l_partkey, l_suppkey""".stripMargin))
 
-  val j04ClusteredRange = QueryDef("j04_clustered_range",
-    (s, d) => s.read.parquet(clusteredLineitem(s, d))
+  /** Selective key-range aggregate over the range-CLUSTERED lineitem
+    * copy: the layout that turns a predicate into file/row-group
+    * skipping (each file holds one narrow l_orderkey slice, so parquet
+    * min/max stats exclude ~15 of 16 files before any row is read —
+    * ScaleSpec measures the locality; Plans pins the pushed filter).
+    * Oracle runs the same aggregate over the ORIGINAL parquet: layout
+    * changes bytes on disk, never one row of the answer — the same
+    * claim class j03 makes for bucketing. */
+  val j04ClusteredRange = QueryDef.prepared("j04_clustered_range", clusteredLineitem)(
+    (_, _, lineitem) => lineitem
       .filter(col("l_orderkey").between(100L, 200L))
       .groupBy("l_orderkey")
       .agg(count(lit(1)).as("n_items"),

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.text.{BpeTrain, CurationPipeline, TextDedup, TextFunctions}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
@@ -91,6 +92,12 @@ object TextQueries {
                               cols: String = "doc_id", arr: String = sqlTokArr): String =
     s"""$name AS (SELECT $cols, unnest($arr) AS w,
        |        generate_subscripts($arr, 1) AS i FROM $from)""".stripMargin
+
+  /** The FROM clause pairing each token of `tok` (a [[sqlTok]] CTE
+    * keyed by `key`) with the next one in its document: `a` is the
+    * first word of the bigram, `b` the second. */
+  private[queries] def sqlBigrams(tok: String = "tok", key: String = "doc_id"): String =
+    s"FROM $tok a JOIN $tok b ON b.$key = a.$key AND b.i = a.i + 1"
 
   /** The CTE in which [[sqlLangId]] leaves `lang_pred`. */
   private val sqlLangPred = s"p${TextFunctions.langMarkers.size - 1}"
@@ -476,7 +483,7 @@ object TextQueries {
     },
     Some(s"""WITH ${sqlTok(cols = "doc_id, source")},
            |sh AS (SELECT DISTINCT a.doc_id, a.source, a.w || ' ' || b.w AS s
-           |       FROM tok a JOIN tok b ON b.doc_id = a.doc_id AND b.i = a.i + 1),
+           |       ${sqlBigrams()}),
            |st AS (SELECT s, COUNT(*) AS df_all,
            |         COUNT(*) FILTER (source = 'src13') AS df_target
            |       FROM sh GROUP BY s),
@@ -840,6 +847,19 @@ object TextQueries {
            |  lang, COUNT(*) AS n
            |FROM documents GROUP BY 1, 2 ORDER BY fold, lang""".stripMargin))
 
+  /** The doc_id%5 probe subset of `documents` (fz02's scope). */
+  private[queries] def probeDocs(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d).filter(Probe.scoped(col("doc_id") % 5 === 0))
+
+  /** The prepare step of sm04 and dd13: (id, cluster_id) for the probe
+    * subset, by star contraction over the exact prefix-filtered
+    * Jaccard pairs at τ = 4/5. */
+  private def jaccardClusters(s: SparkSession, d: String): DataFrame = {
+    val docs = probeDocs(s, d)
+    graft.graph.ConnectedComponents.runStars(docs.select(col("doc_id").as("id")),
+      TextDedup.prefixJaccardPairs(docs, num = 4, den = 5).select("id1", "id2"))
+  }
+
   /** LEAKAGE-SAFE k-fold split: fold membership decided per NEAR-DUP
     * CLUSTER, not per document — the fix for the classic evaluation
     * contamination where a training doc's near-duplicate lands in the
@@ -859,17 +879,11 @@ object TextQueries {
     * split would come from the star-contraction dedup pass (dd06's
     * O(cluster) edges), with this exact-join variant as the auditing
     * tool on probes. */
-  val sm04LeakageSafeSplit = QueryDef("sm04_leakage_safe_split",
-    (s, d) => {
-      val docs = Tables.documents(s, d).filter(Probe.scoped(col("doc_id") % 5 === 0))
-      val edges = TextDedup.prefixJaccardPairs(docs, num = 4, den = 5)
-        .select("id1", "id2")
-      val clusters = graft.graph.ConnectedComponents.runStars(
-        docs.select(col("doc_id").as("id")), edges)
+  val sm04LeakageSafeSplit = QueryDef.prepared("sm04_leakage_safe_split", jaccardClusters)(
+    (_, _, clusters) =>
       graft.etl.Sampling.kFold(clusters, "cluster_id", k = 5, portable = true)
         .select(col("id").as("doc_id"), col("cluster_id"), col("fold"))
-        .orderBy("doc_id")
-    },
+        .orderBy("doc_id"),
     Some(s"""WITH RECURSIVE
            |$sqlTokenJaccard,
            |${GraphQueries.sqlClosure("e", "documents WHERE doc_id % 5 = 0", "doc_id")}
@@ -1039,8 +1053,9 @@ object TextQueries {
     * so pair counts, argmax decisions, and merge applications are all
     * value-matched. See graft.text.BpeTrain for the encoding trick
     * that makes greedy left-to-right merging a plain `replace`. */
-  val bt01BpeTrain = QueryDef("bt01_bpe_train",
-    (s, d) => graft.text.BpeTrain.learnMerges(Tables.documents(s, d), "text", 6),
+  val bt01BpeTrain = QueryDef.prepared("bt01_bpe_train",
+    (s, d) => BpeTrain.learnMerges(Tables.documents(s, d), "text", 6))(
+    (_, _, merges) => merges,
     Some {
       val iter = (i: Int) =>
         s"""p$i AS (
@@ -1091,13 +1106,12 @@ object TextQueries {
     * training iterations as chained CTEs (carrying the word through,
     * unlike bt01's), then the same join + aggregate — so merge
     * decisions AND their application to every document hash-match. */
-  val bt02BpeEncode = QueryDef("bt02_bpe_encode",
-    (s, d) => {
-      val docs = Tables.documents(s, d).filter(Probe.scoped(col("doc_id") % 5 === 0))
-      val encV = BpeTrain.learnMergesAndVocab(docs, "text", 6)._2
-        .select(col("w"),
-          size(split(trim(col("enc"), "|"), "\\|\\|")).cast("long").as("n_sym"))
-      docs.select(col("doc_id"),
+  val bt02BpeEncode = QueryDef.prepared("bt02_bpe_encode",
+    (s, d) => BpeTrain.learnMergesAndVocab(probeDocs(s, d), "text", 6)._2)(
+    (s, d, vocab) => {
+      val encV = vocab.select(col("w"),
+        size(split(trim(col("enc"), "|"), "\\|\\|")).cast("long").as("n_sym"))
+      probeDocs(s, d).select(col("doc_id"),
           explode(TextFunctions.tokens(lower(col("text")))).as("w"))
         .filter(col("w").rlike("^[a-z]+$"))
         .join(encV, "w")
@@ -1160,15 +1174,10 @@ object TextQueries {
     * 100 TB: edge generation is fz02's sub-quadratic path, contraction
     * is the dd06 machinery, and the selection adds ONE window over
     * cluster-sized partitions — nothing new is wide. */
-  val dd13BestOfCluster = QueryDef("dd13_best_of_cluster",
-    (s, d) => {
+  val dd13BestOfCluster = QueryDef.prepared("dd13_best_of_cluster", jaccardClusters)(
+    (s, d, clusters) => {
       import org.apache.spark.sql.expressions.Window
-      val docs = Tables.documents(s, d).filter(Probe.scoped(col("doc_id") % 5 === 0))
-      val edges = TextDedup.prefixJaccardPairs(docs, num = 4, den = 5)
-        .select(col("id1"), col("id2"))
-      val clusters = graft.graph.ConnectedComponents.runStars(
-        docs.select(col("doc_id").as("id")), edges)
-      val scored = docs.select(col("doc_id"),
+      val scored = probeDocs(s, d).select(col("doc_id"),
         TextFunctions.qualityScore(col("text")).as("quality"))
       val w = Window.partitionBy("cluster_id")
         .orderBy(col("quality").desc, col("doc_id"))

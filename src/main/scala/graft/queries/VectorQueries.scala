@@ -1,8 +1,9 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.vector.SimilaritySearch
+import graft.vector.{IvfIndex, ProductQuantizer, QuantizedKMeans, SimilaritySearch}
 import graft.util.Exact._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Embedding similarity-search queries. The oracle uses DuckDB's
@@ -22,6 +23,14 @@ object VectorQueries {
        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
        |    ORDER BY sim_r DESC, neighbor_id) AS rank FROM scored) t
        |WHERE rank <= 5""".stripMargin
+  /** `cols` of the `n` nearest rows per q_id of `from` by ADC
+    * distance (adist ascending, ties to the smaller vec_id). */
+  private[queries] def sqlAdcCut(cols: String, from: String, n: Int): String =
+    s"""SELECT $cols FROM (
+       |  SELECT $cols,
+       |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY adist, vec_id) AS rk
+       |  FROM $from) z
+       |WHERE rk <= $n""".stripMargin
   /** A float as exact integer micro-units: floor(x·10⁶), the fixed
     * point every integer-L2 oracle (and QuantizedKMeans) works in. */
   private def sqlMicro(x: String): String = s"CAST(FLOOR(CAST($x AS DOUBLE) * 1000000) AS BIGINT)"
@@ -164,15 +173,13 @@ object VectorQueries {
     * KMeans did. Verified against the nn01 oracle verbatim: any row
     * lost at a cell boundary (the classic IVF bug class) is a hash
     * mismatch here, with no dependence on quantizer quality. */
-  val nn06IvfAllProbe = QueryDef("nn06_ivf_allprobe",
-    (s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val idx = graft.vector.IvfIndex.build(emb, nList = 16)
-      graft.vector.IvfIndex.topK(idx, emb.filter(col("vec_id") % 100 === 0),
+  val nn06IvfAllProbe = QueryDef.prepared("nn06_ivf_allprobe",
+    (s, d) => IvfIndex.build(Tables.embeddings(s, d), nList = 16))(
+    (s, d, idx) =>
+      IvfIndex.topK(idx, Tables.embeddings(s, d).filter(col("vec_id") % 100 === 0),
         k = 5, nProbe = 16)
         .withColumn("rank", col("rank").cast("long"))
-        .orderBy("query_id", "rank")
-    },
+        .orderBy("query_id", "rank"),
     nn01BruteTopK.oracle)
 
   /** PORTABLE hyperplane-LSH top-k under the FULL oracle gate — the
@@ -233,15 +240,16 @@ object VectorQueries {
     * way — the time is near-dup edge generation + per-round scheduling
     * floor, not labeling), and its O(log diameter) alternation bound is
     * the one that survives long chains at 100 TB. */
-  val dd06DupClusters = QueryDef("dd06_dup_clusters",
+  val dd06DupClusters = QueryDef.prepared("dd06_dup_clusters",
     (s, d) => {
       val sub = Tables.embeddings(s, d).filter(col("vec_id") % 5 === 0)
       val edges = SimilaritySearch.nearDupPairs(sub, sub, threshold = 0.3)
       graft.graph.ConnectedComponents.runStars(
         sub.select(col("vec_id").as("id")), edges.select("id1", "id2"))
-        .groupBy("cluster_id").agg(count(lit(1)).as("n_members"))
-        .orderBy("cluster_id")
-    },
+    })(
+    (_, _, clusters) => clusters
+      .groupBy("cluster_id").agg(count(lit(1)).as("n_members"))
+      .orderBy("cluster_id"),
     Some(s"""WITH RECURSIVE
             |s AS (SELECT * FROM embeddings WHERE vec_id % 5 = 0),
             |e(id1, id2) AS (SELECT a.vec_id, b.vec_id
@@ -293,11 +301,10 @@ object VectorQueries {
     * semantic near-duplicates while recording what they duplicated.
     * Oracle replays the closure as a recursive CTE over the exact
     * cosine edge set. */
-  val sd01SemanticDedup = QueryDef("sd01_semantic_dedup",
-    (s, d) => {
-      val sub = Tables.embeddings(s, d).filter(col("vec_id") % 4 === 0)
-      SimilaritySearch.semanticDedup(sub, threshold = 0.25).orderBy("id")
-    },
+  val sd01SemanticDedup = QueryDef.prepared("sd01_semantic_dedup",
+    (s, d) => SimilaritySearch.semanticDedup(
+      Tables.embeddings(s, d).filter(col("vec_id") % 4 === 0), threshold = 0.25))(
+    (_, _, kept) => kept.orderBy("id"),
     Some(s"""WITH RECURSIVE
             |s AS (SELECT * FROM embeddings WHERE vec_id % 4 = 0),
             |e(id1, id2) AS (SELECT a.vec_id, b.vec_id
@@ -322,16 +329,16 @@ object VectorQueries {
     * slack, in both engines, which is what lets a banded kernel be
     * hash-checked at all. Cross twin pairs inherit the base cosines
     * (cos(x,2y) = cos(x,y) ≤ 0.44) and stay under θ. */
-  val sd02SemanticDedupBanded = QueryDef("sd02_semantic_dedup_banded",
+  val sd02SemanticDedupBanded = QueryDef.prepared("sd02_semantic_dedup_banded",
     (s, d) => {
       val base = Tables.embeddings(s, d).filter(col("vec_id") % 4 === 0)
         .select("vec_id", "embedding")
       val twins = base.select((col("vec_id") + 100000000L).as("vec_id"),
         transform(col("embedding"), x => (x * lit(2.0f)).cast("float"))
           .as("embedding"))
-      SimilaritySearch.semanticDedupBanded(
-        base.unionByName(twins), threshold = 0.9).orderBy("id")
-    },
+      SimilaritySearch.semanticDedupBanded(base.unionByName(twins), threshold = 0.9)
+    })(
+    (_, _, kept) => kept.orderBy("id"),
     Some(s"""WITH RECURSIVE
             |base AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 4 = 0),
             |s AS (SELECT vec_id, embedding FROM base
@@ -412,9 +419,10 @@ object VectorQueries {
     * row-local (no shuffle); each update is one partial-agg shuffle
     * keyed (cell, dim) emitting k×dim rows regardless of corpus size.
     * See graft.vector.QuantizedKMeans. */
-  val km01KMeans = QueryDef("km01_kmeans",
-    (s, d) => graft.vector.QuantizedKMeans.run(
-      Tables.embeddings(s, d), k = 8, iters = 3).orderBy("vec_id"),
+  val km01KMeans = QueryDef.prepared("km01_kmeans",
+    (s, d) => QuantizedKMeans.centroids(Tables.embeddings(s, d), k = 8, iters = 3))(
+    (s, d, cents) =>
+      QuantizedKMeans.assignTo(Tables.embeddings(s, d), cents).orderBy("vec_id"),
     Some(s"""WITH ${pqChain(0, m = 1, k = 8, iters = 3)}
             |SELECT vec_id, cell_id, d2 FROM f0 ORDER BY vec_id""".stripMargin))
 
@@ -432,18 +440,16 @@ object VectorQueries {
     * keyed by sub_id (broadcast codebooks, row-local argmin,
     * (sub, cell, dim)-keyed updates); production trains on a capped
     * sample and runs one full-corpus encode pass. */
-  val vq02ProductQuant = QueryDef("vq02_product_quant",
-    (s, d) => {
-      val long = graft.vector.ProductQuantizer.encode(
-        Tables.embeddings(s, d), dims = 64, m = 4, k = 4, iters = 2)
-      long.groupBy("vec_id").agg(
-          max(when(col("sub_id") === 0, col("code"))).as("c0"),
-          max(when(col("sub_id") === 1, col("code"))).as("c1"),
-          max(when(col("sub_id") === 2, col("code"))).as("c2"),
-          max(when(col("sub_id") === 3, col("code"))).as("c3"),
-          sum(col("d2")).as("err"))
-        .orderBy("vec_id")
-    },
+  val vq02ProductQuant = QueryDef.prepared("vq02_product_quant",
+    pqTrain(m = 4, k = 4, iters = 2))(
+    (s, d, book) => ProductQuantizer.encode(Tables.embeddings(s, d), book)
+      .groupBy("vec_id").agg(
+        max(when(col("sub_id") === 0, col("code"))).as("c0"),
+        max(when(col("sub_id") === 1, col("code"))).as("c1"),
+        max(when(col("sub_id") === 2, col("code"))).as("c2"),
+        max(when(col("sub_id") === 3, col("code"))).as("c3"),
+        sum(col("d2")).as("err"))
+      .orderBy("vec_id"),
     Some(
       s"""WITH ${(0 until 4).map(pqChain(_, m = 4, k = 4, iters = 2)).mkString(",\n")}
          |SELECT vec_id, f0.cell_id AS c0, f1.cell_id AS c1,
@@ -466,16 +472,26 @@ object VectorQueries {
     * 100 TB: the LUT is queries×m×k rows (broadcast-sized at any
     * corpus scale); the only corpus-sized stage is the code-keyed
     * join; the top-k window partitions by query. */
-  val nn08PqAdc = QueryDef("nn08_pq_adc",
-    (s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val queries = emb.filter(col("vec_id") % 100 === 0)
-        .select(col("vec_id").as("q_id"), col("embedding"))
-      graft.vector.ProductQuantizer.adcTopK(emb, queries,
-        dims = 64, m = 4, k = 4, iters = 2, topK = 5)
-        .orderBy("q_id", "adist", "vec_id")
-    },
+  val nn08PqAdc = QueryDef.prepared("nn08_pq_adc", pqTrain(m = 4, k = 4, iters = 2))(
+    (s, d, book) => adcTop5(Tables.embeddings(s, d), book),
     Some(adcTopKOracle(trainMod = 1)))
+
+  /** PQ codebooks over the embeddings (64 dims) — the prepare step of
+    * vq02 and nn08–nn12. */
+  private def pqTrain(m: Int, k: Int, iters: Int, trainMod: Long = 1)(
+      s: SparkSession, d: String): ProductQuantizer.Codebooks =
+    ProductQuantizer.train(Tables.embeddings(s, d), dims = 64, m = m, k = k,
+      iters = iters, trainMod = trainMod)
+
+  /** Every 100th vector as a query (q_id, embedding): nn08–nn12's probe set. */
+  private def adcQueries(emb: DataFrame): DataFrame =
+    emb.filter(col("vec_id") % 100 === 0)
+      .select(col("vec_id").as("q_id"), col("embedding"))
+
+  /** nn08/nn12: the ADC top-5 of every 100th vector under `book`. */
+  private def adcTop5(emb: DataFrame, book: ProductQuantizer.Codebooks): DataFrame =
+    ProductQuantizer.adcTopK(emb, adcQueries(emb), book, topK = 5)
+      .orderBy("q_id", "adist", "vec_id")
 
   /** nn08's oracle, parameterized by the training slice: the full ADC
     * replay (4 subspace chains → per-query LUTs → code-indexed joins →
@@ -488,11 +504,7 @@ object VectorQueries {
        |      UNION ALL SELECT * FROM j2 UNION ALL SELECT * FROM j3),
        |a AS (SELECT q_id, vec_id, CAST(SUM(d2) AS BIGINT) AS adist
        |      FROM u GROUP BY q_id, vec_id)
-       |SELECT q_id, vec_id, adist FROM (
-       |  SELECT q_id, vec_id, adist,
-       |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY adist, vec_id) AS rk
-       |  FROM a) z
-       |WHERE rk <= 5 ORDER BY q_id, adist, vec_id""".stripMargin
+       |${sqlAdcCut("q_id, vec_id, adist", "a", 5)} ORDER BY q_id, adist, vec_id""".stripMargin
   }
 
   /** SAMPLED-TRAIN PQ-ADC (nn08 under the 100 TB training cap, as a
@@ -506,15 +518,9 @@ object VectorQueries {
     * result hash-matches: the sample cap provably changes only which
     * vectors Lloyd sees, nothing downstream. Recall parity vs full
     * training is pinned in ProductQuantizerSpec. */
-  val nn12AdcSampledTrain = QueryDef("nn12_adc_sampled_train",
-    (s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val queries = emb.filter(col("vec_id") % 100 === 0)
-        .select(col("vec_id").as("q_id"), col("embedding"))
-      graft.vector.ProductQuantizer.adcTopK(emb, queries,
-        dims = 64, m = 4, k = 4, iters = 2, topK = 5, trainMod = 4)
-        .orderBy("q_id", "adist", "vec_id")
-    },
+  val nn12AdcSampledTrain = QueryDef.prepared("nn12_adc_sampled_train",
+    pqTrain(m = 4, k = 4, iters = 2, trainMod = 4))(
+    (s, d, book) => adcTop5(Tables.embeddings(s, d), book),
     Some(adcTopKOracle(trainMod = 4)))
 
   /** PQ-ADC RECALL vs EXACT L2 (nn08's quality companion — the
@@ -532,14 +538,11 @@ object VectorQueries {
     * cost of 64-float→4-code compression; production PQ uses m=8–16,
     * k=256 per subspace and re-ranks ADC shortlists with full
     * vectors. */
-  val nn09AdcRecall = QueryDef("nn09_adc_recall",
-    (s, d) => {
-      import graft.vector.{ProductQuantizer, QuantizedKMeans}
+  val nn09AdcRecall = QueryDef.prepared("nn09_adc_recall", pqTrain(m = 4, k = 4, iters = 2))(
+    (s, d, book) => {
       val emb = Tables.embeddings(s, d)
-      val qs = emb.filter(col("vec_id") % 100 === 0)
-        .select(col("vec_id").as("q_id"), col("embedding"))
-      val adc = ProductQuantizer.adcTopK(emb, qs,
-          dims = 64, m = 4, k = 4, iters = 2, topK = 5)
+      val qs = adcQueries(emb)
+      val adc = ProductQuantizer.adcTopK(emb, qs, book, topK = 5)
         .select(col("q_id"), col("vec_id"), lit(1).as("hit"))
       val corpus = QuantizedKMeans.quantize(emb, "vec_id", "embedding")
       val queries = QuantizedKMeans.quantize(qs, "q_id", "embedding")
@@ -570,10 +573,7 @@ object VectorQueries {
          |      UNION ALL SELECT * FROM j2 UNION ALL SELECT * FROM j3),
          |adc_all AS (SELECT q_id, vec_id, CAST(SUM(d2) AS BIGINT) AS adist
          |      FROM u GROUP BY q_id, vec_id),
-         |adc_top AS (SELECT q_id, vec_id FROM (
-         |  SELECT q_id, vec_id,
-         |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY adist, vec_id) AS rk
-         |  FROM adc_all) z WHERE rk <= 5),
+         |adc_top AS (${sqlAdcCut("q_id, vec_id", "adc_all", 5)}),
          |${sqlQuantized("qf")},
          |$sqlExactL2Top5
          |SELECT ex.q_id, CAST(COUNT(*) AS BIGINT) AS n_exact,
@@ -599,16 +599,14 @@ object VectorQueries {
     * Same physical shapes as nn04 (broadcast centroids, cell-pruned
     * candidates, bounded per-query window); production keeps ML
     * KMeans for quantizer quality, this proves the search machinery. */
-  val nn10IvfPortable = QueryDef("nn10_ivf_portable",
-    (s, d) => {
-      import graft.vector.QuantizedKMeans
+  val nn10IvfPortable = QueryDef.prepared("nn10_ivf_portable",
+    (s, d) => QuantizedKMeans.centroids(Tables.embeddings(s, d), k = 16, iters = 2))(
+    (s, d, cents) => {
       import org.apache.spark.sql.expressions.Window
       val emb = Tables.embeddings(s, d)
-      val cents = QuantizedKMeans.centroids(emb, k = 16, iters = 2)
       val cells = QuantizedKMeans.assignTo(emb, cents)
         .select(col("vec_id"), col("cell_id"))
-      val qs = emb.filter(col("vec_id") % 100 === 0)
-        .select(col("vec_id").as("q_id"), col("embedding"))
+      val qs = adcQueries(emb)
       val wProbe = Window.partitionBy("q_id").orderBy(col("d2"), col("cell_id"))
       val probes = QuantizedKMeans.distancesTo(qs, cents, "q_id")
         .withColumn("__rk", row_number().over(wProbe))
@@ -684,14 +682,11 @@ object VectorQueries {
     * LUT); the re-rank touches topK=200 full vectors per query — the
     * only stage reading full vectors, and it's query-bounded, which is
     * exactly why the production recipe is shortlist-then-rerank. */
-  val nn11AdcRerank = QueryDef("nn11_adc_rerank",
-    (s, d) => {
-      import graft.vector.{ProductQuantizer, QuantizedKMeans}
+  val nn11AdcRerank = QueryDef.prepared("nn11_adc_rerank", pqTrain(m = 8, k = 64, iters = 1))(
+    (s, d, book) => {
       val emb = Tables.embeddings(s, d)
-      val qs = emb.filter(col("vec_id") % 100 === 0)
-        .select(col("vec_id").as("q_id"), col("embedding"))
-      val shortlist = ProductQuantizer.adcTopK(emb, qs,
-          dims = 64, m = 8, k = 64, iters = 1, topK = 200)
+      val qs = adcQueries(emb)
+      val shortlist = ProductQuantizer.adcTopK(emb, qs, book, topK = 200)
         .select("q_id", "vec_id")
       val qz = QuantizedKMeans.quantize(qs, "q_id", "embedding")
         .withColumnRenamed("q", "qv")
@@ -731,10 +726,7 @@ object VectorQueries {
          |u AS ($unions),
          |adc_all AS (SELECT q_id, vec_id, CAST(SUM(d2) AS BIGINT) AS adist
          |      FROM u GROUP BY q_id, vec_id),
-         |shortlist AS (SELECT q_id, vec_id FROM (
-         |  SELECT q_id, vec_id,
-         |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY adist, vec_id) AS rk
-         |  FROM adc_all) z WHERE rk <= 200),
+         |shortlist AS (${sqlAdcCut("q_id, vec_id", "adc_all", 200)}),
          |${sqlQuantized("qf")},
          |rr AS (SELECT q_id, vec_id FROM (
          |  SELECT s.q_id, s.vec_id,

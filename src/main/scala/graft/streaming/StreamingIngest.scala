@@ -182,8 +182,7 @@ object StreamingIngest {
 
   /** STREAMING FIRST-WINS INGEST — the generic form of the HHS
     * pipeline's dedup stage, pinned stream==batch by StreamingSpec on
-    * a duplicate-heavy fixture (r14, when the batch kernel moved from
-    * a row_number window to the skew-immune min(struct) aggregate).
+    * a duplicate-heavy fixture.
     * Per micro-batch: [[graft.etl.Dedup.firstOccurrenceWins]] drops
     * in-batch duplicates (the SAME kernel as batch — the parity pin
     * covers whatever shape the kernel carries), then an anti-join
@@ -215,8 +214,8 @@ object StreamingIngest {
   /** STREAMING LATEST-WINS INGEST — the CDC-flavored complement of
     * [[firstWinsIngestStream]], running the SAME batch kernel
     * ([[graft.etl.Dedup.latestWins]]) per micro-batch so the stream==
-    * batch parity pin (StreamingSpec, r15) covers whatever shape the
-    * kernel carries (the r14 min/max(struct) aggregate today). Unlike
+    * batch parity pin (StreamingSpec) covers whatever shape the
+    * kernel carries (the min/max(struct) aggregate today). Unlike
     * first-wins, a later batch can SUPERSEDE stored rows, so an
     * append-only sink can't express it; state lives in the
     * generational state protocol (`commitGenerations`): per batch,

@@ -53,10 +53,10 @@ object BpeTrain {
 
   /** One merge step's argmax over an encoded vocabulary `(w, cnt,
     * enc)`: the 1-row most-frequent adjacent pair, total (n desc, a, b)
-    * tie-break. Factored out (ADVICE r16) so the TRAINING-side plan
-    * shape stays pinnable: since the r16 driver-paced rewrite this
-    * frame executes as a per-step collect and never appears in
-    * bt01/bt02's final explain — BpeTrainSpec pins its plan here
+    * tie-break. Factored out so the TRAINING-side plan shape stays
+    * pinnable: this frame executes as a per-step collect in the
+    * prepare step and never appears in bt01/bt02's plan explain —
+    * BpeTrainSpec pins its plan here
     * (row-local pair explode → partial-agg → TakeOrdered(1); no
     * Window, no extra shuffle) so a shape regression in the argmax
     * can't hide behind the LocalTableScan. */
@@ -80,29 +80,28 @@ object BpeTrain {
                           nMerges: Int): (DataFrame, DataFrame) = {
     var v = vocab(docs, textCol)
       .select(col("w"), col("cnt"), encode(col("w")).as("enc"))
-    // Driver-paced argmax loop (r16, guide §1.2 step 1): the winning
-    // pair is ONE row per step, and the old lazy form paid for it
-    // twice over — the 1-row frame fed a per-step
-    // crossJoin(broadcast(best)) AND the returned merge table, two
-    // subtrees a BroadcastExchange never ReusedExchange-dedupes, so
-    // the whole vocab pair-count aggregation executed twice per step;
-    // and each step cost two scheduler barriers (cache build +
-    // broadcast build). Collecting the argmax to the driver (the CC
-    // convergence-probe pattern — a 1-row aggregate, legal at any
-    // corpus size) makes each step exactly ONE job: the TakeOrdered(1)
-    // collect, whose action also materializes that step's vocab cache.
-    // The rewrite then inlines the winner as string LITERALS — the
-    // per-step BroadcastNestedLoopJoin disappears from the plan, and
-    // the merge table is a LocalTableScan of already-computed rows.
-    // Merge decisions are identical: same aggregation, same total
-    // (n desc, a, b) tie-break, collected instead of broadcast.
+    // Driver-paced argmax loop: the winning pair is ONE row per step.
+    // Kept lazy, it would be paid for twice over — the 1-row frame
+    // would feed a per-step crossJoin(broadcast(best)) AND the
+    // returned merge table, two subtrees a BroadcastExchange never
+    // ReusedExchange-dedupes, so the whole vocab pair-count
+    // aggregation would execute twice per step, behind two scheduler
+    // barriers (cache build + broadcast build). Collecting the argmax
+    // to the driver (the CC convergence-probe pattern — a 1-row
+    // aggregate, legal at any corpus size) makes each step exactly ONE
+    // job: the TakeOrdered(1) collect, whose action also materializes
+    // that step's vocab cache. The rewrite then inlines the winner as
+    // string LITERALS — no per-step BroadcastNestedLoopJoin in the
+    // plan, and the merge table is a LocalTableScan of
+    // already-computed rows. Merge decisions equal the broadcast
+    // form's: same aggregation, same total (n desc, a, b) tie-break.
     val found = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var exhausted = false
     // step k−1's cached vocab is dead once step k's collect completes
     // (only the latest vocab feeds the next rewrite, and only the FINAL
     // one feeds bt02's encoder join) — unpersist it instead of leaving
-    // nMerges MEMORY_AND_DISK frames alive until releaseShared()
-    // (ADVICE r16). Non-blocking: the drop races nothing, the next
+    // nMerges MEMORY_AND_DISK frames alive until releaseShared().
+    // Non-blocking: the drop races nothing, the next
     // step's plan references only the newest cache entry.
     var prevVocab: Option[DataFrame] = None
     (1 to nMerges).foreach { step =>

@@ -31,9 +31,9 @@ import org.apache.spark.sql.functions._
   *  - ENCODE: one scan, one broadcast argmin — m codes per vector.
   * At 100 TB you'd train codebooks on a capped sample and run ONE
   * full-corpus encode pass — that recipe is the `trainMod` parameter
-  * of [[encode]]/[[adcTopK]] (train on the deterministic 1/trainMod
-  * id-slice, encode everything; the IvfIndex.build pattern, but as a
-  * DETERMINISTIC slice rather than file-order limit, so the sampled
+  * of [[train]] (train on the deterministic 1/trainMod id-slice,
+  * [[encode]]/[[adcTopK]] everything; the IvfIndex.build pattern, but
+  * as a DETERMINISTIC slice rather than file-order limit, so the sampled
   * path stays replayable cross-engine — nn12 oracle-matches it in
   * DuckDB, and ProductQuantizerSpec pins recall parity vs full
   * training). ProductQuantizerSpec also pins m=1 ≡ plain k-means.
@@ -71,45 +71,47 @@ object ProductQuantizer {
       .withColumn("sub_id", col("sub_id").cast("long"))
   }
 
+  /** Trained PQ codebooks: `cents` holds (sub_id, cell_id, c) for the
+    * `m` subspaces of a `dims`-long vector, `k` cells each — a
+    * LocalRelation, so any number of consumers (an encode pass, an ADC
+    * lookup table) read it without recomputation. */
+  final case class Codebooks(cents: DataFrame, dims: Int, m: Int, k: Int)
+
   /** All m codebooks, trained simultaneously by the
-    * [[QuantizedKMeans]] Lloyd core keyed by sub_id: (sub_id, cell_id,
-    * c). Every subspace starts from the same k lowest-id vectors, so
-    * the init slices them once. Each round is one corpus scan, one
+    * [[QuantizedKMeans]] Lloyd core keyed by sub_id. Every subspace
+    * starts from the same k lowest-id vectors of the training slice,
+    * so the init slices them once. Each round is one corpus scan, one
     * (sub, cell, dim)-keyed partial-agg shuffle and one collect of the
-    * m×k-row codebook. */
-  private def centroidsAll(train: DataFrame, dims: Int, m: Int, k: Int,
-                           iters: Int, idCol: String, vecCol: String): DataFrame =
-    QuantizedKMeans.lloyd(subspaces(train, dims, m, idCol, vecCol), Seq("sub_id"), idCol,
-      subspaces(train.orderBy(col(idCol)).limit(k), dims, m, idCol, vecCol), iters)
-
-  /** Deterministic 1/trainMod training slice (ids ≡ 0 mod trainMod) —
-    * the 100 TB sample cap as a filter, not a sort+limit: no global
-    * order, no single-partition pull, and the sample is a pure function
-    * of ids so the whole capped pipeline replays cross-engine (the
-    * nn12 oracle). trainMod = 1 is full-corpus training, bit-identical
-    * to the unsampled path. */
-  private def trainSlice(guarded: DataFrame, trainMod: Long,
-                         idCol: String): DataFrame = {
-    require(trainMod >= 1, s"trainMod=$trainMod must be >= 1")
-    if (trainMod == 1) guarded
-    else guarded.filter(pmod(col(idCol), lit(trainMod)) === 0)
-  }
-
-  /** Train + encode in long format: (idCol, sub_id, code, d2) — one
-    * row per vector per subspace. `dims` must be the vector length and
-    * divide evenly by `m` (slice would silently truncate otherwise —
-    * guarded in-plan on every row). */
-  def encode(df: DataFrame, dims: Int, m: Int, k: Int, iters: Int,
-             idCol: String = "vec_id", vecCol: String = "embedding",
-             trainMod: Long = 1): DataFrame = {
+    * m×k-row codebook. `dims` must be the vector length and divide
+    * evenly by `m` (slice would silently truncate otherwise — guarded
+    * in-plan on every row).
+    *
+    * `trainMod` is the 100 TB sample cap as a filter, not a sort+limit:
+    * only ids ≡ 0 mod trainMod train — no global order, no
+    * single-partition pull, and the sample is a pure function of ids so
+    * the whole capped pipeline replays cross-engine (the nn12 oracle).
+    * trainMod = 1 is full-corpus training. */
+  def train(df: DataFrame, dims: Int, m: Int, k: Int, iters: Int,
+            idCol: String = "vec_id", vecCol: String = "embedding",
+            trainMod: Long = 1): Codebooks = {
     require(m >= 1 && dims % m == 0, s"m=$m must divide dims=$dims")
+    require(trainMod >= 1, s"trainMod=$trainMod must be >= 1")
     val guarded = dimsGuarded(df, dims, vecCol)
-    val cents = centroidsAll(trainSlice(guarded, trainMod, idCol),
-      dims, m, k, iters, idCol, vecCol)
-    QuantizedKMeans.nearest(subspaces(guarded, dims, m, idCol, vecCol), cents,
-        Seq("sub_id"), Seq(idCol))
-      .select(col(idCol), col("sub_id"), col("cell_id").as("code"), col("d2"))
+    val slice = if (trainMod == 1) guarded
+      else guarded.filter(pmod(col(idCol), lit(trainMod)) === 0)
+    Codebooks(QuantizedKMeans.lloyd(subspaces(slice, dims, m, idCol, vecCol), Seq("sub_id"),
+      idCol, subspaces(slice.orderBy(col(idCol)).limit(k), dims, m, idCol, vecCol), iters),
+      dims, m, k)
   }
+
+  /** Every vector's m nearest codes, in long format: (idCol, sub_id,
+    * code, d2) — one row per vector per subspace. */
+  def encode(df: DataFrame, book: Codebooks,
+             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    QuantizedKMeans.nearest(
+        subspaces(dimsGuarded(df, book.dims, vecCol), book.dims, book.m, idCol, vecCol),
+        book.cents, Seq("sub_id"), Seq(idCol))
+      .select(col(idCol), col("sub_id"), col("cell_id").as("code"), col("d2"))
 
   /** ADC top-k search (asymmetric distance computation — the PQ query
     * side): the corpus is represented ONLY by its codes; a query's
@@ -144,20 +146,16 @@ object ProductQuantizer {
     * sub-byte compression PQ exists for); the LUT frame is
     * queries×(m×k) longs and broadcast. The codebook is a local
     * relation both codes and LUT read; nothing is persisted. */
-  def adcTopK(corpus: DataFrame, queries: DataFrame, dims: Int, m: Int,
-              k: Int, iters: Int, topK: Int,
+  def adcTopK(corpus: DataFrame, queries: DataFrame, book: Codebooks, topK: Int,
               idCol: String = "vec_id", vecCol: String = "embedding",
-              qIdCol: String = "q_id", trainMod: Long = 1): DataFrame = {
-    require(m >= 1 && dims % m == 0, s"m=$m must divide dims=$dims")
+              qIdCol: String = "q_id"): DataFrame = {
     require(topK >= 1)
-    val guarded = dimsGuarded(corpus, dims, vecCol)
-    // a LocalRelation: both consumers below (codes, lut) read it
-    val cents = centroidsAll(trainSlice(guarded, trainMod, idCol),
-      dims, m, k, iters, idCol, vecCol)
+    val Codebooks(cents, dims, m, k) = book
     // corpus side: m codes per vector folded to one array row,
     // ordered by sub_id (collect_list is unordered pre-sort;
     // sort_array on the (sub_id, cell_id) struct restores it)
-    val codes = QuantizedKMeans.nearest(subspaces(guarded, dims, m, idCol, vecCol), cents,
+    val codes = QuantizedKMeans.nearest(
+        subspaces(dimsGuarded(corpus, dims, vecCol), dims, m, idCol, vecCol), cents,
         Seq("sub_id"), Seq(idCol))
       .groupBy(col(idCol))
       .agg(sort_array(collect_list(struct(col("sub_id"), col("cell_id")))).as("__sc"))

@@ -143,15 +143,10 @@ object QuantizedKMeans {
     distances(quantize(df, idCol, vecCol), cents, Nil, Seq(idCol))
 
   /** Argmin assignment of every row to its nearest centroid
-    * (ties → lowest cell): (idCol, cell_id, d2). */
+    * (ties → lowest cell): (idCol, cell_id, d2) — over [[centroids]]'
+    * codebook, the full k-means mapping with each vector's exact
+    * quantized squared distance to its centroid. */
   def assignTo(df: DataFrame, cents: DataFrame,
                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
     nearest(quantize(df, idCol, vecCol), cents, Nil, Seq(idCol))
-
-  /** Run `iters` Lloyd iterations with k = `k`; returns the final
-    * assignment (idCol, cell_id, d2) — the full per-vector mapping,
-    * with the exact quantized squared distance to its centroid. */
-  def run(df: DataFrame, k: Int, iters: Int,
-          idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    assignTo(df, centroids(df, k, iters, idCol, vecCol), idCol, vecCol)
 }

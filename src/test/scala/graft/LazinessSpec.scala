@@ -1,50 +1,26 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.graftbridge.GraftSqlBridge
-
-/** Pins the lazy-plan contract: constructing (and analyzing/optimizing)
-  * a registered query DataFrame must launch ZERO Spark jobs. Scalars
-  * like corpus size N or avgdl must be 1-row broadcast frames inside
-  * the plan, never plan-build-time `count()`/`head()` driver actions —
-  * eager scalars can't participate in AQE or be cached with the plan.
+/** Pins the lazy-plan contract (see [[QueryDef]]): after its prepare
+  * step, constructing (and analyzing/optimizing) a registered query's
+  * plan must launch ZERO Spark jobs. Scalars like corpus size N or avgdl
+  * must be 1-row broadcast frames inside the plan, never plan-build-time
+  * `count()`/`head()` driver actions — eager scalars can't participate
+  * in AQE or be cached with the plan. Job-running work belongs in
+  * prepare.
   */
 class LazinessSpec extends SparkSpec {
 
-  private def jobsDuring(body: => Unit): Int = {
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      GraftSqlBridge.drainListenerBus(spark)
-      jobs.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
-  /** Eager BY DESIGN, not by accident — the central registry list
-    * (ADVICE r16): CC fixpoints, driver-paced argmax/codebook loops
-    * (BpeTrain; the QuantizedKMeans/ProductQuantizer Lloyd rounds
-    * since r17), sampled quantizer training, and build-once warehouse
-    * fixtures. Everything else must be a single lazy plan. */
-  private val eagerByDesign = graft.queries.Registry.eagerBuild
-
   test("every registered query builds and optimizes with zero jobs") {
-    // warm the table cache first so file-listing jobs (a read-time cost,
-    // not a query-shape cost) don't count against laziness
-    SparkEntry.queries.keys.foreach(n => SparkEntry.queries(n)(spark, sfDir))
-    val offenders = SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(eagerByDesign)
-      .flatMap { name =>
-        val n = jobsDuring {
-          SparkEntry.queries(name)(spark, sfDir)
-            .queryExecution.optimizedPlan // force analyze + optimize
-        }
-        if (n > 0) Some(s"$name ran $n jobs") else None
-      }
+    val offenders = graft.queries.Registry.all.sortBy(_.name).flatMap { q =>
+      val plan = q.prepare(spark, sfDir)
+      // build once first so file-listing jobs (a read-time cost of the
+      // table cache, not a query-shape cost) don't count against laziness
+      plan()
+      val n = jobsDuring {
+        plan().queryExecution.optimizedPlan // force analyze + optimize
+      }.size
+      if (n > 0) Some(s"${q.name} ran $n jobs") else None
+    }
     assert(offenders.isEmpty,
       s"plan construction must be fully lazy; offenders: ${offenders.mkString(", ")}")
   }

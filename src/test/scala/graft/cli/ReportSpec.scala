@@ -3,8 +3,6 @@ package graft.cli
 import graft.SparkSpec
 import graft.warehouse.Schemas
 import java.nio.file.{Files, Paths}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.graftbridge.GraftSqlBridge
 
 /** End-to-end proof for the third reference entry point: load fixture
   * CSVs through the CLI pipelines into a warehouse, then render the
@@ -112,21 +110,9 @@ class ReportSpec extends SparkSpec {
   }
 
   /** The job-launching SQL executions one `body` runs. */
-  private def executions(body: => Unit): Int = {
-    val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-          .foreach(ids.add)
-    }
-    GraftSqlBridge.drainListenerBus(spark)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      GraftSqlBridge.drainListenerBus(spark)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    ids.size
-  }
+  private def executions(body: => Unit): Int =
+    jobsDuring(body).flatMap(js => Option(js.properties)
+      .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))).distinct.size
 
   test("one render runs 5 job-launching SQL executions") {
     loaded

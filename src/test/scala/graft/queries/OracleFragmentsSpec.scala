@@ -26,12 +26,33 @@ class OracleFragmentsSpec extends AnyFunSuite {
       "scan found no generator in TextQueries.scala")
   }
 
+  test("the bigram self-join is spelled only in its generator") {
+    // TextQueries.sqlBigrams owns the next-token self-join over a
+    // token-position CTE.
+    val bigram = """b\.i = a\.i \+ 1""".r
+    val over = SourceScan.overLimit(bigram, mains)(p => if (in("TextQueries.scala")(p)) 1 else 0)
+    assert(over.isEmpty, s"bigram self-join outside its generator: $over")
+    assert(bigram.findFirstIn(Files.readString(mains.find(in("TextQueries.scala")).get)).nonEmpty,
+      "scan found no generator in TextQueries.scala")
+  }
+
+  test("the ADC top-n cut is spelled only in its generator") {
+    // VectorQueries.sqlAdcCut owns the per-query ranked cut by ADC
+    // distance (adist ascending, ties to the smaller vec_id).
+    val cut = """PARTITION BY q_id ORDER BY adist, vec_id""".r
+    val over = SourceScan.overLimit(cut, mains)(p => if (in("VectorQueries.scala")(p)) 1 else 0)
+    assert(over.isEmpty, s"ADC cut outside its generator: $over")
+    assert(cut.findFirstIn(Files.readString(mains.find(in("VectorQueries.scala")).get)).nonEmpty,
+      "scan found no generator in VectorQueries.scala")
+  }
+
   test("query-file comments state invariants, not review rounds") {
     // Provenance (which review round asked for what) lives in
-    // CHANGES.md; a comment states what holds.
+    // CHANGES.md; a comment states what holds. Every file under
+    // src/main/scala, not just the query files.
     val tag = """\bVERDICT\b|\bADVICE\b|\bNOTES_r|\bround \d+\b|\br\d{1,2}\b""".r
     val comment = """^\s*(?://|/\*|\*)(.*)$|\s//\s(.*)$""".r.unanchored
-    val offenders = mains.filter(_.toString.contains("graft/queries/")).flatMap { p =>
+    val offenders = mains.flatMap { p =>
       Files.readString(p).split("\n").zipWithIndex.collect {
         case (comment(a, b), i) if tag.findFirstIn(Option(a).getOrElse(b)).nonEmpty =>
           s"$p:${i + 1}"

@@ -8,10 +8,11 @@ class ProductQuantizerSpec extends SparkSpec {
 
   test("m=1 degenerates to plain k-means on the full vector") {
     val emb = Tables.embeddings(spark, sfDir)
-    val pq = ProductQuantizer.encode(emb, dims = 64, m = 1, k = 8, iters = 3)
+    val pq = ProductQuantizer.encode(emb,
+        ProductQuantizer.train(emb, dims = 64, m = 1, k = 8, iters = 3))
       .select("vec_id", "code", "d2")
       .orderBy("vec_id").as[(Long, Long, Long)].collect().toSeq
-    val km = QuantizedKMeans.run(emb, k = 8, iters = 3)
+    val km = QuantizedKMeans.assignTo(emb, QuantizedKMeans.centroids(emb, k = 8, iters = 3))
       .orderBy("vec_id").as[(Long, Long, Long)].collect().toSeq
     assert(pq == km)
   }
@@ -27,7 +28,8 @@ class ProductQuantizerSpec extends SparkSpec {
       (1L, Seq(0.0f, 0.0f)), (2L, Seq(10.0f, 5.0f)),
       (3L, Seq(0.0f, 5.0f)), (4L, Seq(10.0f, 0.0f))
     ).toDF("vec_id", "embedding")
-    val got = ProductQuantizer.encode(df, dims = 2, m = 2, k = 2, iters = 2)
+    val got = ProductQuantizer.encode(df,
+        ProductQuantizer.train(df, dims = 2, m = 2, k = 2, iters = 2))
       .orderBy("vec_id", "sub_id")
       .as[(Long, Long, Long, Long)].collect().toSeq
     // codebooks converge to {0, 10e6} (sub 0) and {0, 5e6} (sub 1);
@@ -46,12 +48,13 @@ class ProductQuantizerSpec extends SparkSpec {
     val df = Seq((1L, Seq(1.0f, 2.0f, 3.0f, 4.0f))).toDF("vec_id", "embedding")
     // dims=2 divides m=2 cleanly, but the vectors are length 4: without
     // the guard slice() would silently drop half of every vector. The
-    // guard rides IN the plan on every row; since the r17 driver-paced
-    // Lloyd rounds it fires during encode()'s first training collect —
-    // i.e. at BUILD — so the intercept wraps construction too. Either
-    // way no truncated code can ever be emitted.
+    // guard rides IN the plan on every row; Lloyd rounds collect on the
+    // driver, so it fires during train()'s first collect and the
+    // intercept wraps training too. Either way no truncated code can
+    // ever be emitted.
     val e = intercept[Exception] {
-      ProductQuantizer.encode(df, dims = 2, m = 2, k = 1, iters = 1).collect()
+      ProductQuantizer.encode(df,
+        ProductQuantizer.train(df, dims = 2, m = 2, k = 1, iters = 1)).collect()
     }
     val messages = Iterator.iterate[Throwable](e)(_.getCause)
       .takeWhile(_ != null).take(10).flatMap(t => Option(t.getMessage)).mkString("\n")
@@ -65,11 +68,11 @@ class ProductQuantizerSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sfDir)
     val queries = emb.filter($"vec_id" % 100 === 0)
       .select($"vec_id".as("q_id"), $"embedding")
-    val adc = ProductQuantizer.adcTopK(emb, queries,
-      dims = 64, m = 4, k = 4, iters = 2, topK = 500)
+    val book = ProductQuantizer.train(emb, dims = 64, m = 4, k = 4, iters = 2)
+    val adc = ProductQuantizer.adcTopK(emb, queries, book, topK = 500)
       .filter($"q_id" === $"vec_id")
       .select($"q_id", $"adist").as[(Long, Long)].collect().toMap
-    val err = ProductQuantizer.encode(emb, dims = 64, m = 4, k = 4, iters = 2)
+    val err = ProductQuantizer.encode(emb, book)
       .filter($"vec_id" % 100 === 0)
       .groupBy("vec_id").agg(sum($"d2").as("err"))
       .as[(Long, Long)].collect().toMap
@@ -81,7 +84,7 @@ class ProductQuantizerSpec extends SparkSpec {
     val queries = emb.filter($"vec_id" % 250 === 0)
       .select($"vec_id".as("q_id"), $"embedding")
     val rows = ProductQuantizer.adcTopK(emb, queries,
-      dims = 64, m = 4, k = 4, iters = 2, topK = 5)
+        ProductQuantizer.train(emb, dims = 64, m = 4, k = 4, iters = 2), topK = 5)
       .orderBy("q_id", "adist", "vec_id")
       .as[(Long, Long, Long)].collect().toSeq
     val byQ = rows.groupBy(_._1)
@@ -93,10 +96,11 @@ class ProductQuantizerSpec extends SparkSpec {
 
   test("trainMod=1 is bit-identical to the unsampled path") {
     val emb = Tables.embeddings(spark, sfDir)
-    val full = ProductQuantizer.encode(emb, dims = 64, m = 4, k = 4, iters = 2)
+    val full = ProductQuantizer.encode(emb,
+        ProductQuantizer.train(emb, dims = 64, m = 4, k = 4, iters = 2))
       .orderBy("vec_id", "sub_id").as[(Long, Long, Long, Long)].collect().toSeq
-    val mod1 = ProductQuantizer.encode(emb, dims = 64, m = 4, k = 4, iters = 2,
-        trainMod = 1)
+    val mod1 = ProductQuantizer.encode(emb,
+        ProductQuantizer.train(emb, dims = 64, m = 4, k = 4, iters = 2, trainMod = 1))
       .orderBy("vec_id", "sub_id").as[(Long, Long, Long, Long)].collect().toSeq
     assert(full == mod1)
   }
@@ -126,7 +130,8 @@ class ProductQuantizerSpec extends SparkSpec {
       .select("q_id", "vec_id").as[(Long, Long)].collect().toSet
     def recall(mod: Long) = {
       val adc = ProductQuantizer.adcTopK(emb, qs,
-          dims = 64, m = 4, k = 4, iters = 2, topK = 5, trainMod = mod)
+          ProductQuantizer.train(emb, dims = 64, m = 4, k = 4, iters = 2, trainMod = mod),
+          topK = 5)
         .select("q_id", "vec_id").as[(Long, Long)].collect().toSet
       (exact & adc).size.toDouble / exact.size
     }
@@ -138,14 +143,15 @@ class ProductQuantizerSpec extends SparkSpec {
     // still encoded (completeness of the sampled path)
     val nQ = qs.count()
     val rows = ProductQuantizer.adcTopK(emb, qs,
-      dims = 64, m = 4, k = 4, iters = 2, topK = 5, trainMod = 4).count()
+      ProductQuantizer.train(emb, dims = 64, m = 4, k = 4, iters = 2, trainMod = 4),
+      topK = 5).count()
     assert(rows == 5 * nQ, s"$rows != 5*$nQ - sampled path dropped queries")
   }
 
   test("rejects m that does not divide dims") {
     val emb = Tables.embeddings(spark, sfDir)
     intercept[IllegalArgumentException] {
-      ProductQuantizer.encode(emb, dims = 64, m = 5, k = 4, iters = 1)
+      ProductQuantizer.train(emb, dims = 64, m = 5, k = 4, iters = 1)
     }
   }
 }

@@ -12,7 +12,8 @@ class QuantizedKMeansSpec extends SparkSpec {
       (1L, Seq(0.0f, 0.0f)), (2L, Seq(0.1f, 0.0f)),
       (3L, Seq(10.0f, 10.0f)), (4L, Seq(10.1f, 10.0f))
     ).toDF("vec_id", "embedding")
-    val got = QuantizedKMeans.run(df, k = 2, iters = 3)
+    val got = QuantizedKMeans.assignTo(df,
+      QuantizedKMeans.centroids(df, k = 2, iters = 3))
       .orderBy("vec_id").as[(Long, Long, Long)].collect().toSeq
     // init: c0 = v1, c1 = v2 (k lowest ids). Iter 1 pulls v3/v4 to c1;
     // iter 2 re-homes v2 to c0; iter 3 is the fixed point with
@@ -31,7 +32,8 @@ class QuantizedKMeansSpec extends SparkSpec {
     val df = Seq(
       (1L, Seq(-3.0f)), (2L, Seq(-2.0f)), (3L, Seq(-2.0f))
     ).toDF("vec_id", "embedding")
-    val got = QuantizedKMeans.run(df, k = 1, iters = 1)
+    val got = QuantizedKMeans.assignTo(df,
+      QuantizedKMeans.centroids(df, k = 1, iters = 1))
       .orderBy("vec_id").as[(Long, Long, Long)].collect().toSeq
     assert(got == Seq(
       (1L, 0L, 444443555556L), (2L, 0L, 111111555556L), (3L, 0L, 111111555556L)))
@@ -39,9 +41,11 @@ class QuantizedKMeansSpec extends SparkSpec {
 
   test("assignment is deterministic and partitioning-independent on the corpus") {
     val emb = Tables.embeddings(spark, sfDir)
-    val a = QuantizedKMeans.run(emb, k = 8, iters = 3)
+    val a = QuantizedKMeans.assignTo(emb,
+      QuantizedKMeans.centroids(emb, k = 8, iters = 3))
       .orderBy("vec_id").as[(Long, Long, Long)].collect().toSeq
-    val b = QuantizedKMeans.run(emb.repartition(7), k = 8, iters = 3)
+    val b = QuantizedKMeans.assignTo(emb.repartition(7),
+      QuantizedKMeans.centroids(emb.repartition(7), k = 8, iters = 3))
       .orderBy("vec_id").as[(Long, Long, Long)].collect().toSeq
     assert(a == b)
     // total mapping: every vector exactly once, cells within [0, k)

@@ -204,12 +204,13 @@ object Plans {
     Check("f08_unicode_normalize", Seq("unicode_normalize", "Scan parquet"),
       wantNone = Seq("Join", "HashAggregate")),
     // BPE training (driver-paced loop): each step's argmax is a
-    // TakeOrdered(1) COLLECT during query build (the CC convergence-
-    // probe pattern), inlined as literals into the next rewrite — so
-    // the returned merge table is a LocalTableScan of already-computed
-    // rows and the per-step BroadcastNestedLoopJoin is gone. The
-    // training work itself (pair-count aggregations over the persisted
-    // vocab) runs in the per-step collect jobs, inside the timed build.
+    // TakeOrdered(1) COLLECT in the query's prepare step (the CC
+    // convergence-probe pattern), inlined as literals into the next
+    // rewrite — so the returned merge table is a LocalTableScan of
+    // already-computed rows with no per-step BroadcastNestedLoopJoin.
+    // The training work itself (pair-count aggregations over the
+    // persisted vocab) runs in the per-step collect jobs of prepare,
+    // inside the timed build.
     Check("bt01_bpe_train", Seq("LocalTableScan"),
       wantNone = Seq("Window", "BroadcastNestedLoopJoin", "CartesianProduct")),
     // BPE encode rides the trained merge table over the corpus scan;

@@ -1,7 +1,7 @@
 package graft.cli
 
 import graft.GraftSession
-import graft.warehouse.{HhsPipeline, QualityPipeline, Warehouse}
+import graft.warehouse.{HhsPipeline, QualityPipeline}
 import java.time.LocalDate
 import org.apache.spark.sql.SparkSession
 import scala.util.Try
@@ -64,21 +64,12 @@ object Cli {
       s"$flag must be a yyyy-MM-dd date, got '$value'"))
 
   def runHhs(spark: SparkSession, csvPath: String,
-             warehouseDir: String, rejectDir: String): HhsPipeline.Result = {
-    val r = HhsPipeline.load(spark, csvPath,
-      Warehouse.read(spark, warehouseDir, Warehouse.Hospitals),
-      Warehouse.read(spark, warehouseDir, Warehouse.BedInformation))
-    HhsPipeline.write(r, warehouseDir, rejectDir)
-    r
-  }
+             warehouseDir: String, rejectDir: String): HhsPipeline.Result =
+    HhsPipeline.loadInto(spark, csvPath, warehouseDir, rejectDir)
 
   def runQuality(spark: SparkSession, dataDate: String, csvPath: String,
-                 warehouseDir: String, rejectDir: String): QualityPipeline.Result = {
-    val r = QualityPipeline.load(spark, csvPath, dataDate,
-      Warehouse.read(spark, warehouseDir, Warehouse.QualityInformation))
-    QualityPipeline.write(r, warehouseDir, rejectDir)
-    r
-  }
+                 warehouseDir: String, rejectDir: String): QualityPipeline.Result =
+    QualityPipeline.loadInto(spark, csvPath, dataDate, warehouseDir, rejectDir)
 }
 
 /** `runMain graft.cli.LoadHhs <csv> [--warehouse dir] [--rejects dir]`

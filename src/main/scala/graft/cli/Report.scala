@@ -16,10 +16,12 @@ import org.apache.spark.sql.types.{NumericType, StructType}
   * One summary per table read, sliced on the driver: a page collects
   * [[graft.warehouse.Reports.weekSummary]] (one row per week) for R1-R4,
   * R6 and the default week; [[graft.warehouse.Reports.bedUse]] (one row
-  * per rating and per ownership and week) for R5 and R8; and, only when
-  * `dataDate` or `ownership` is not given, one (data_date, ownership)
-  * count for both defaults. R7 and R9 are one pipeline each. A default
-  * page is 5 SQL executions, 2 of them over the bed history. The driver
+  * per rating and per ownership and week) for R5 and R8;
+  * [[graft.warehouse.Reports.byState]] (one row per state) for R7 and
+  * R9; and, only when `dataDate` or `ownership` is not given, one
+  * (data_date, ownership) count for both defaults. A default page is 4
+  * SQL executions, 2 of them over the bed history; given both a data
+  * date and an ownership, 3. The driver
   * collects only display-sized results (weeks, states, ratings — the
   * reports aggregate before they return), so rendering cost is
   * independent of warehouse size.
@@ -123,6 +125,10 @@ object Report {
     val byRating = ascending(sets(Reports.ByRating), 0)
     val byWeek = ascending(sets(Reports.ByOwnershipWeek).filter(_.getString(1) == own), 2)
 
+    // R7 and R9 from one per-state aggregate at the data date
+    val byState = Reports.byState(quality, hospitals, locations, dd.toString)
+    val states = byState.collect().toSeq
+
     val sections = Seq(
       s"Records loaded for week $at (Reporting.py:29-33)" ->
         slice(summary.schema, Seq(ofWeek), Seq("n_records")),
@@ -138,11 +144,11 @@ object Report {
       s"All cases vs covid cases by week through $at (Reporting.py:144-153)" ->
         slice(summary.schema, through, Seq("collection_week", "all_cases", "covid_cases")),
       s"Emergency-service hospitals by state, top 20, as of $dd (Reporting.py:180-196)" ->
-        formatTable(Reports.emergencyHospitalsByState(quality, hospitals, locations, dd.toString), maxRows),
+        slice(byState.schema, Reports.emergencyTop(states), Seq("state", "n_hospitals")),
       s"Fraction of beds in use by week, ownership = $own (Reporting.py:200-224)" ->
         slice(bedUse.schema, byWeek, Seq("hospital_ownership", "collection_week", "fraction_in_use")),
       s"Mean overall rating by state, top and bottom 10, as of $dd (Reporting.py:240-263)" ->
-        formatTable(Reports.ratingByStateTopBottom(quality, locations, dd.toString), maxRows))
+        slice(byState.schema, Reports.ratingTopBottom(states), Seq("state", "avg_rating")))
 
     sections.map { case (title, table) => s"== $title ==\n$table" }
       .mkString(s"graft report — warehouse: $warehouseDir\n\n", "\n\n", "\n")

@@ -175,13 +175,14 @@ object ConnectedComponents {
       // is a single small anti-join, the payoff is a deterministic
       // correctness guarantee instead of an astronomically-likely one.
       // both anti-join directions in ONE action: the symmetric
-      // difference is empty iff both sides are — a union costs the
-      // same two anti-joins but one job instead of two
+      // difference is empty iff both sides are. A count, not isEmpty:
+      // isEmpty is an incremental take whose job count depends on which
+      // partitions hold rows, a count runs the same jobs every time
       converged = cur == prev && {
         val old = e
         old.join(next, Seq("h", "l"), "left_anti")
           .unionByName(next.join(old, Seq("h", "l"), "left_anti"))
-          .isEmpty
+          .count() == 0L
       }
       e = next
       prev = cur

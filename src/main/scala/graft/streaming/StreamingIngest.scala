@@ -281,10 +281,11 @@ object StreamingIngest {
     val validQ = deduped.writeStream.trigger(Trigger.AvailableNow())
       .option("checkpointLocation", s"$warehouseDir/_checkpoints/hhs_valid")
       .foreachBatch { (b: DataFrame, _: Long) =>
+        def existing(t: Warehouse.Table) = Warehouse.read(b.sparkSession, warehouseDir, t)
         HhsPipeline.append(HhsPipeline.newRows(
           b.withColumn("__file_order", monotonically_increasing_id()),
-          Warehouse.read(b.sparkSession, warehouseDir, Warehouse.Hospitals),
-          Warehouse.read(b.sparkSession, warehouseDir, Warehouse.BedInformation)), warehouseDir)
+          existing(Warehouse.Hospitals), existing(Warehouse.Locations),
+          existing(Warehouse.BedInformation)), warehouseDir)
       }.start()
 
     val rejectQ = rejects.writeStream.trigger(Trigger.AvailableNow())

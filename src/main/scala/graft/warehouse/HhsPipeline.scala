@@ -7,12 +7,18 @@ import org.apache.spark.sql.functions._
 /** HHS weekly hospital-capacity ingest (reference: load_hhs.py end to end).
   *
   * The reference does per-row work — up to 6 network round-trips per row
-  * (3 dup-probe SELECTs + 3 INSERTs, load_hhs.py:75-137). This pipeline is
-  * ONE Spark job: scan → clean → validate-split → dedup (within-batch
-  * first-wins + anti-join vs warehouse) → three table projections + a
-  * reject frame. Stage boundaries only at the dedup shuffles; at 100 TB
-  * the anti-join's existing-keys side is key-pruned and broadcastable
-  * when the warehouse key set fits, otherwise a shuffled anti-join.
+  * (3 dup-probe SELECTs + 3 INSERTs, load_hhs.py:75-137). Here a load is
+  * scan → clean → validate-split → dedup (within-batch first-wins +
+  * anti-join vs warehouse) → three table projections + a reject frame.
+  *
+  * A warehouse load ([[loadInto]]) parses the CSV once: the cleaned frame
+  * is persisted for the load, and its one small query (the delta's
+  * weeks) and four writes (three tables, the rejects) all read it. The
+  * history read is bounded by the delta's weeks: the bed-table anti-join
+  * reads only the partitions of the weeks the delta holds. The hospitals and
+  * locations anti-joins read those key columns whole; at 100 TB their
+  * existing-keys side is broadcastable while the key set fits, otherwise
+  * a shuffled anti-join.
   */
 object HhsPipeline {
 
@@ -57,35 +63,67 @@ object HhsPipeline {
         Validation.Rule(s"${c}_null", Validation.notNull(col(c))))
 
   /** Full load. `existing*` are the current warehouse tables (empty
-    * DataFrames on first load). */
-  def load(spark: SparkSession, csvPath: String,
-           existingHospitals: DataFrame, existingBedInfo: DataFrame): Result = {
-    val (valid, rejects) = Validation.split(clean(readRaw(spark, csvPath)), validationRules)
-    val (hospitals, locations, bedInfo) = newRows(valid, existingHospitals, existingBedInfo)
+    * DataFrames on first load). Runs [[newRows]]'s one small query; the
+    * frames it returns are lazy. */
+  def load(spark: SparkSession, csvPath: String, existingHospitals: DataFrame,
+           existingLocations: DataFrame, existingBedInfo: DataFrame): Result =
+    fromCleaned(clean(readRaw(spark, csvPath)),
+      existingHospitals, existingLocations, existingBedInfo)
+
+  private def fromCleaned(cleaned: DataFrame, existingHospitals: DataFrame,
+                          existingLocations: DataFrame, existingBedInfo: DataFrame): Result = {
+    val (valid, rejects) = Validation.split(cleaned, validationRules)
+    val (hospitals, locations, bedInfo) =
+      newRows(valid, existingHospitals, existingLocations, existingBedInfo)
     Result(hospitals, locations, bedInfo, rejects.drop("__file_order"))
   }
 
+  /** [[load]] against the warehouse at `warehouseDir` and [[write]] into
+    * it, parsing the CSV once: the cleaned frame is persisted for the
+    * load and unpersisted after its last write. */
+  def loadInto(spark: SparkSession, csvPath: String,
+               warehouseDir: String, rejectDir: String): Result =
+    Warehouse.persistedFor(clean(readRaw(spark, csvPath))) { cleaned =>
+      val r = fromCleaned(cleaned,
+        Warehouse.read(spark, warehouseDir, Warehouse.Hospitals),
+        Warehouse.read(spark, warehouseDir, Warehouse.Locations),
+        Warehouse.read(spark, warehouseDir, Warehouse.BedInformation))
+      write(r, warehouseDir, rejectDir)
+      r
+    }
+
   /** (hospitals, locations, bed information) rows to append: first
-    * occurrence by `__file_order` wins per key, minus keys already in the
-    * warehouse. Keys: hospital_pk (load_hhs.py:75,89), (hospital_fk,
-    * collection_week) (load_hhs.py:103). */
-  def newRows(valid: DataFrame, existingHospitals: DataFrame,
+    * occurrence by `__file_order` wins per key, minus keys already in
+    * that table. Keys: hospital_pk (load_hhs.py:75,89), hospital_fk for
+    * locations, (hospital_fk, collection_week) (load_hhs.py:103). Each
+    * table's own key, so a replay after an interrupted load appends
+    * exactly what that load did not.
+    *
+    * Collects the delta's distinct weeks (one small query over `valid`)
+    * and reads the existing bed table at only those weeks: Spark's
+    * dynamic partition pruning does not apply to a left-anti join, so the
+    * filter is explicit, and the history read follows the delta, not the
+    * warehouse. */
+  def newRows(valid: DataFrame, existingHospitals: DataFrame, existingLocations: DataFrame,
               existingBedInfo: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val newHospitalRows = Dedup.antiJoinExisting(
-      Dedup.firstOccurrenceWins(valid, Seq("hospital_pk"), "__file_order"),
-      existingHospitals, Seq("hospital_pk"))
-    val hospitals = newHospitalRows.select(col("hospital_pk"), col("hospital_name"))
-    val locations = newHospitalRows.select(
-      col("hospital_pk").as("hospital_fk"),
-      col("state"), col("address"), col("city"), col("zip"),
-      col("fips_code"), col("geocoded_hospital_address"))
+    val firstPerHospital = Dedup.firstOccurrenceWins(valid, Seq("hospital_pk"), "__file_order")
+    val hospitals = Dedup.antiJoinExisting(firstPerHospital, existingHospitals, Seq("hospital_pk"))
+      .select(col("hospital_pk"), col("hospital_name"))
+    val locations = Dedup.antiJoinExisting(
+      firstPerHospital.select(
+        col("hospital_pk").as("hospital_fk"),
+        col("state"), col("address"), col("city"), col("zip"),
+        col("fips_code"), col("geocoded_hospital_address")),
+      existingLocations, Seq("hospital_fk"))
+    val weeks = valid.select("collection_week").distinct().collect().map(_.get(0))
     val firstPerWeek = Dedup.firstOccurrenceWins(
       valid, Seq("hospital_pk", "collection_week"), "__file_order")
     val bedInfo = Dedup.antiJoinExisting(
       firstPerWeek.select(
         (col("hospital_pk").as("hospital_fk") +: col("collection_week") +:
           Schemas.hhsMetricColumns.map(col)).toIndexedSeq: _*),
-      existingBedInfo, Seq("hospital_fk", "collection_week"))
+      existingBedInfo.filter(col("collection_week").isin(weeks.toIndexedSeq: _*)),
+      Seq("hospital_fk", "collection_week"))
     (hospitals, locations, bedInfo)
   }
 

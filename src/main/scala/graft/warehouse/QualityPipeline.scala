@@ -13,7 +13,8 @@ import org.apache.spark.sql.types._
   * date → anti-join dedup → validate → write. The engine binds insert
   * columns BY NAME — the reference's positional binding
   * (load_quality.py:127) is a latent bug, documented divergence
-  * (SURVEY §7.4.6).
+  * (SURVEY §7.4.6). A warehouse load ([[loadInto]]) parses the CSV once:
+  * the quality write and the reject write read one persisted frame.
   */
 object QualityPipeline {
 
@@ -50,8 +51,11 @@ object QualityPipeline {
       col("hospital_overall_rating").isNull || col("hospital_overall_rating") >= 0))
 
   def load(spark: SparkSession, csvPath: String, dataDate: String,
-           existingQuality: DataFrame): Result = {
-    val cleaned = clean(readRaw(spark, csvPath), dataDate)
+           existingQuality: DataFrame): Result =
+    fromCleaned(clean(readRaw(spark, csvPath), dataDate), dataDate, existingQuality)
+
+  private def fromCleaned(cleaned: DataFrame, dataDate: String,
+                          existingQuality: DataFrame): Result = {
     val (valid, invalid) = Validation.split(cleaned, validationRules)
     // D3 — set-based dedup vs same-date warehouse snapshot
     // (load_quality.py:122-126): existing side filtered to data_date then
@@ -65,6 +69,18 @@ object QualityPipeline {
       col("hospital_type"), col("hospital_ownership"), col("data_date"))
     Result(quality, invalid.unionByName(dups, allowMissingColumns = true))
   }
+
+  /** [[load]] against the warehouse at `warehouseDir` and [[write]] into
+    * it, parsing the CSV once: the cleaned frame is persisted for the
+    * load and unpersisted after its last write. */
+  def loadInto(spark: SparkSession, csvPath: String, dataDate: String,
+               warehouseDir: String, rejectDir: String): Result =
+    Warehouse.persistedFor(clean(readRaw(spark, csvPath), dataDate)) { cleaned =>
+      val r = fromCleaned(cleaned, dataDate,
+        Warehouse.read(spark, warehouseDir, Warehouse.QualityInformation))
+      write(r, warehouseDir, rejectDir)
+      r
+    }
 
   def write(r: Result, warehouseDir: String, rejectDir: String): Unit = {
     Warehouse.append(r.quality, warehouseDir, Warehouse.QualityInformation)

@@ -1,6 +1,6 @@
 package graft.warehouse
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** The reference dashboard's analytics queries (Reporting.py:27-263) as
@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
   * week, R3 bed sums for a week, R4 the same sums for the 4 latest weeks,
   * R6 cases per week) are one `GROUP BY collection_week` over the bed
   * table, [[weekSummary]]; R5 and R8 are one grouping-set aggregate over
-  * the quality ⨝ bed join, [[bedUse]]. R7 and R9 keep pipelines of their
-  * own.
+  * the quality ⨝ bed join, [[bedUse]]; R7 and R9 are one per-state
+  * aggregate over the quality ⨝ locations join at the page's data date,
+  * [[byState]].
   *
   * Scale notes: dimension joins (hospitals, locations) auto-broadcast;
   * fact-side filters on data_date hit parquet partition pruning because
@@ -81,26 +82,44 @@ object Reports {
         (sum(inUse) / when(sum(available) =!= 0d, sum(available))).as("fraction_in_use"))
   }
 
-  /** R7 — J2/A7/T3: emergency-service hospitals per state, top 20
-    * (Reporting.py:180-196). Dim joins broadcast. */
-  def emergencyHospitalsByState(quality: DataFrame, hospitals: DataFrame,
-                                locations: DataFrame, dataDate: String): DataFrame =
-    quality.filter(col("data_date") === lit(dataDate) && col("emergency_services"))
-      .join(hospitals, quality("facility_id") === hospitals("hospital_pk"))
-      .join(locations, hospitals("hospital_pk") === locations("hospital_fk"))
-      .groupBy("state").agg(count(lit(1)).as("n_hospitals"))
-      .orderBy(col("n_hospitals").desc, col("state")).limit(20)
+  /** R7 and R9 — J2/A7/T3 and A9/T4/V6: one row per state for the
+    * quality snapshot at `dataDate`, joined to locations (Reporting.py:
+    * 180-196, 240-263). `n_hospitals` counts the emergency-service
+    * facilities that have a hospitals row (R7's inner joins; hospital_pk
+    * is that table's key, so the outer join keeps rows one for one).
+    * `avg_rating` averages the non-NULL ratings of a non-NULL state (R9's
+    * `na.drop`); it is NULL for the NULL state and for a state with no
+    * rating. Unordered and display-sized; [[emergencyTop]] and
+    * [[ratingTopBottom]] slice the collected rows. */
+  def byState(quality: DataFrame, hospitals: DataFrame, locations: DataFrame,
+              dataDate: String): DataFrame =
+    quality.filter(col("data_date") === lit(dataDate))
+      .join(locations, col("facility_id") === col("hospital_fk"))
+      .join(hospitals.select("hospital_pk"), col("facility_id") === col("hospital_pk"), "left")
+      .groupBy("state").agg(
+        count(when(col("emergency_services") && col("hospital_pk").isNotNull, 1))
+          .as("n_hospitals"),
+        avg(when(col("state").isNotNull, col("hospital_overall_rating"))).as("avg_rating"))
 
-  /** R9 — A9/T4/V6: mean rating per state, top-10 + bottom-10
-    * (Reporting.py:240-263). */
-  def ratingByStateTopBottom(quality: DataFrame, locations: DataFrame,
-                             dataDate: String, k: Int = 10): DataFrame = {
-    val avgByState = quality.filter(col("data_date") === lit(dataDate))
-      .join(locations, quality("facility_id") === locations("hospital_fk"))
-      .na.drop(Seq("state", "hospital_overall_rating"))
-      .groupBy("state").agg(avg("hospital_overall_rating").as("avg_rating"))
-    val top = avgByState.orderBy(col("avg_rating").desc, col("state")).limit(k)
-    val bottom = avgByState.orderBy(col("avg_rating").asc, col("state")).limit(k)
-    top.unionByName(bottom).distinct().orderBy(col("avg_rating").desc, col("state"))
+  private def state(r: Row): String = r.getAs[String]("state")
+
+  /** R7 from [[byState]]'s rows: states with an emergency hospital, the
+    * `n` largest counts first, ties by state (SQL's ascending order: the
+    * NULL state first). */
+  def emergencyTop(rows: Seq[Row], n: Int = 20): Seq[Row] =
+    rows.filter(_.getAs[Long]("n_hospitals") > 0)
+      .sortBy(r => (r.getAs[Long]("n_hospitals"), Option(state(r))))(
+        Ordering.Tuple2(Ordering.Long.reverse, Ordering.Option(Ordering.String)))
+      .take(n)
+
+  /** R9 from [[byState]]'s rows: the `k` best and `k` worst mean ratings
+    * (ties by state), each state once, best first. */
+  def ratingTopBottom(rows: Seq[Row], k: Int = 10): Seq[Row] = {
+    val rated = rows.filterNot(r => r.isNullAt(r.fieldIndex("avg_rating")))
+    def key(r: Row) = (r.getAs[Double]("avg_rating"), state(r))
+    val worst = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.String)
+    val best = Ordering.Tuple2(Ordering.Double.TotalOrdering.reverse, Ordering.String)
+    (rated.sortBy(key)(best).take(k) ++ rated.sortBy(key)(worst).take(k))
+      .distinct.sortBy(key)(best)
   }
 }

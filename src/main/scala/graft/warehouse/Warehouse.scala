@@ -2,7 +2,9 @@ package graft.warehouse
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.graftbridge.GraftSqlBridge
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 /** The on-disk warehouse: the reference's four tables
   * (design_table_schema.ipynb cells 0-3) as parquet directories under one
@@ -28,11 +30,24 @@ object Warehouse {
   def read(spark: SparkSession, dir: String, table: Table): DataFrame =
     readOrEmpty(spark, path(dir, table), table.schema)
 
-  /** Job-atomic per directory — the Spark analogue of the reference's
-    * whole-load transaction (load_hhs.py:148). */
+  /** Atomic per directory only: one table's append commits as one job,
+    * but the appends of one load do not commit together, as the
+    * reference's whole-load transaction does (load_hhs.py:148). A load
+    * interrupted between appends leaves the earlier tables written; a
+    * replay converges because each table's delta anti-joins that table's
+    * own key. One commit per load is ROADMAP J step 2, still open. */
   def append(df: DataFrame, dir: String, table: Table): Unit = {
     val w = df.write.mode("append")
     table.partitionBy.fold(w)(w.partitionBy(_)).parquet(path(dir, table))
+  }
+
+  /** `load(input)` with `input` persisted for its duration, so every
+    * write of one load reads one parse of the load's input. Only a cache
+    * entry this call added is dropped afterwards; a caller's own cached
+    * frames stay. */
+  def persistedFor[A](input: DataFrame)(load: DataFrame => A): A = {
+    val added = GraftSqlBridge.persistIfAbsent(input, StorageLevel.MEMORY_AND_DISK)
+    try load(input) finally if (added) input.unpersist()
   }
 
   /** `<rejectDir>/hhs` or `<rejectDir>/quality`. */

@@ -114,17 +114,88 @@ class ReportSpec extends SparkSpec {
     jobsDuring(body).flatMap(js => Option(js.properties)
       .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))).distinct.size
 
-  test("one render runs 5 job-launching SQL executions") {
+  test("one render runs 4 job-launching SQL executions") {
     loaded
-    // the week summary, the quality defaults, bed use (R5 and R8), R7, R9
-    assert(executions(Report.render(spark, warehouseDir)) == 5)
+    // the week summary, the quality defaults, bed use (R5 and R8), and
+    // the per-state aggregate (R7 and R9)
+    assert(executions(Report.render(spark, warehouseDir)) == 4)
   }
 
-  test("a render given --data-date and --ownership runs 4 executions") {
+  test("a render given --data-date and --ownership runs 3 executions") {
     loaded
     // no quality defaults to compute
     assert(executions(Report.render(spark, warehouseDir,
-      dataDate = Some("2023-01-20"), ownership = Some("Government"))) == 4)
+      dataDate = Some("2023-01-20"), ownership = Some("Government"))) == 3)
+  }
+
+  /** R7 and R9 as the page ran them before they shared one aggregate,
+    * each its own pipeline: the reference the per-state slices must
+    * equal. */
+  private object Unfolded {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+
+    def emergencyHospitalsByState(quality: DataFrame, hospitals: DataFrame,
+                                  locations: DataFrame, dataDate: String): DataFrame =
+      quality.filter(col("data_date") === lit(dataDate) && col("emergency_services"))
+        .join(hospitals, quality("facility_id") === hospitals("hospital_pk"))
+        .join(locations, hospitals("hospital_pk") === locations("hospital_fk"))
+        .groupBy("state").agg(count(lit(1)).as("n_hospitals"))
+        .orderBy(col("n_hospitals").desc, col("state")).limit(20)
+
+    def ratingByStateTopBottom(quality: DataFrame, locations: DataFrame,
+                               dataDate: String, k: Int = 10): DataFrame = {
+      val avgByState = quality.filter(col("data_date") === lit(dataDate))
+        .join(locations, quality("facility_id") === locations("hospital_fk"))
+        .na.drop(Seq("state", "hospital_overall_rating"))
+        .groupBy("state").agg(avg("hospital_overall_rating").as("avg_rating"))
+      val top = avgByState.orderBy(col("avg_rating").desc, col("state")).limit(k)
+      val bottom = avgByState.orderBy(col("avg_rating").asc, col("state")).limit(k)
+      top.unionByName(bottom).distinct().orderBy(col("avg_rating").desc, col("state"))
+    }
+  }
+
+  test("R7 and R9 sliced from the per-state aggregate equal their own pipelines") {
+    import graft.warehouse.Reports
+    import spark.implicits._
+    // 25 states and a NULL one; state i has i % 4 + 1 facilities, so
+    // counts tie, and the ratings take 3 values, so averages tie
+    val facilities = for (i <- 0 until 26; j <- 0 to i % 4)
+      yield (s"F$i-$j", if (i == 25) None else Some(f"S$i%02d"), i, j)
+    val locations = facilities.map { case (id, st, _, _) => (id, st) }
+      .toDF("hospital_fk", "state")
+    // every third facility has no hospitals row: R7 skips it, R9 keeps it
+    val hospitals = facilities.collect { case (id, _, i, j) if (i + j) % 3 != 0 => id }
+      .toDF("hospital_pk")
+    // S24's ratings are all NULL; a second snapshot of 8 states makes
+    // R9's top and bottom overlap
+    val quality = Seq("2023-07-01" -> 26, "2023-10-01" -> 8).flatMap { case (date, n) =>
+      facilities.filter(_._3 < n).map { case (id, _, i, j) =>
+        (id, if (i == 24) None else Some(((i * 7 + j) % 3 + 2).toDouble),
+          if (j == 3) None else Some(j != 1), java.sql.Date.valueOf(date))
+      }
+    }.toDF("facility_id", "hospital_overall_rating", "emergency_services", "data_date")
+
+    // (state, value) in row order
+    def pairs(rows: Seq[org.apache.spark.sql.Row], value: String) =
+      rows.map(r => (Option(r.getAs[String]("state")), r.getAs[Any](value)))
+    Seq("2023-07-01", "2023-10-01").foreach { d =>
+      val states = Reports.byState(quality, hospitals, locations, d).collect().toSeq
+      val r7 = Unfolded.emergencyHospitalsByState(quality, hospitals, locations, d).collect().toSeq
+      val r9 = Unfolded.ratingByStateTopBottom(quality, locations, d).collect().toSeq
+      assert(pairs(Reports.emergencyTop(states), "n_hospitals") == pairs(r7, "n_hospitals"), d)
+      assert(pairs(Reports.ratingTopBottom(states), "avg_rating") == pairs(r9, "avg_rating"), d)
+      if (d == "2023-07-01") {
+        // the fixture reaches every case the slices decide: the top-20
+        // cut inside a tie, the NULL state in R7, no NULL state or
+        // unrated state in R9, and top and bottom 10 sharing the four
+        // states they both cut from the tie at 3.0
+        assert(r7.size == 20 && r7.exists(_.isNullAt(0)))
+        assert(r7.map(_.getLong(1)).distinct.size < r7.size)
+        assert(r9.size == 16 && r9.map(_.getDouble(1)).distinct.size < r9.size)
+        assert(!r9.exists(r => r.isNullAt(0) || r.getString(0) == "S24"))
+      } else assert(r9.size == 8)
+    }
   }
 
   test("two quality snapshots: R5 and R8 join every snapshot, NULL first") {

@@ -72,4 +72,21 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(rounds <= bound,
       s"chain of $n took $rounds alternations; O(log d) bound is $bound")
   }
+
+  test("star contraction launches the same jobs on every run") {
+    // 2,000 nodes over several partitions, edges i -> 7i mod 2000 and a
+    // chain through every 13th node: components of mixed size and depth
+    val ids = spark.range(0, 2000).toDF("id")
+    val edges = spark.range(0, 2000).select($"id".as("id1"), ($"id" * 7 % 2000).as("id2"))
+      .unionByName(spark.range(0, 1987, 13).select($"id".as("id1"), ($"id" + 13).as("id2")))
+    val runs = (1 to 3).map { _ =>
+      graft.Runner.reset(spark)
+      var rounds = 0
+      val jobs = jobsDuring {
+        rounds = ConnectedComponents.starContraction(ids, edges)._2
+      }.size
+      (jobs, rounds)
+    }
+    assert(runs.distinct.size == 1, s"(jobs, rounds) per run: $runs")
+  }
 }

@@ -205,7 +205,9 @@ class StreamingSpec extends SparkSpec {
       val emptyBeds = spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         Schemas.hospitalBedInformation)
-      HhsPipeline.write(HhsPipeline.load(spark, seedCsv, empty, emptyBeds),
+      val emptyLocations = spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitalLocations)
+      HhsPipeline.write(HhsPipeline.load(spark, seedCsv, empty, emptyLocations, emptyBeds),
         wh, s"$dir/seed_rejects")
     }
     val whStream = s"$dir/wh_stream"; val whBatch = s"$dir/wh_batch"
@@ -219,8 +221,9 @@ class StreamingSpec extends SparkSpec {
 
     // BATCH: same files in one load against the same seed state
     val bh = spark.read.parquet(s"$whBatch/hospitals")
+    val bl = spark.read.parquet(s"$whBatch/hospital_locations")
     val bb = spark.read.parquet(s"$whBatch/hospital_bed_information")
-    HhsPipeline.write(HhsPipeline.load(spark, srcDir, bh, bb),
+    HhsPipeline.write(HhsPipeline.load(spark, srcDir, bh, bl, bb),
       whBatch, s"$dir/rejects_batch")
 
     def tbl(wh: String, t: String) =

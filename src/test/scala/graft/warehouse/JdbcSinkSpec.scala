@@ -88,7 +88,9 @@ class JdbcSinkSpec extends SparkSpec {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitals)
     val emptyBeds = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitalBedInformation)
-    val r = HhsPipeline.load(spark, csvPath, empty, emptyBeds)
+    val emptyLocations = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitalLocations)
+    val r = HhsPipeline.load(spark, csvPath, empty, emptyLocations, emptyBeds)
     JdbcSink.writeHhs(r, url)
 
     assert(JdbcSink.read(spark, url, "hospitals").count() == 2)

@@ -1,8 +1,17 @@
 package graft.warehouse
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.graftbridge.GraftSqlBridge
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.storage.StorageLevel
+import scala.jdk.CollectionConverters._
 
 /** End-to-end ingest fixtures (FIXTURES.md §A): reference-shaped CSVs
   * through the HHS and Quality pipelines, exercising every fidelity trap
@@ -37,9 +46,11 @@ class PipelineSpec extends SparkSpec {
     ).mkString("\n"))
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitals)
+    val emptyLocations = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitalLocations)
     val emptyBeds = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitalBedInformation)
-    val r = HhsPipeline.load(spark, csv, empty, emptyBeds)
+    val r = HhsPipeline.load(spark, csv, empty, emptyLocations, emptyBeds)
     assert(r.hospitals.select("hospital_pk").as[String].collect().sorted.toSeq ==
       Seq("A", "B", "E"))
     assert(r.hospitals.filter($"hospital_pk" === "A")
@@ -51,7 +62,7 @@ class PipelineSpec extends SparkSpec {
     assert(reasons("C").startsWith("negative_"))
     assert(reasons("D") == "hospital_name_null")
     // cross-load dedup: re-loading the same file adds nothing
-    val r2 = HhsPipeline.load(spark, csv, r.hospitals, r.bedInfo)
+    val r2 = HhsPipeline.load(spark, csv, r.hospitals, r.locations, r.bedInfo)
     assert(r2.hospitals.count() == 0 && r2.bedInfo.count() == 0)
   }
 
@@ -115,9 +126,11 @@ class PipelineSpec extends SparkSpec {
     ).mkString("\n"))
     val emptyHospitals = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitals)
+    val emptyLocations = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitalLocations)
     val emptyBeds = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitalBedInformation)
-    val h = HhsPipeline.load(spark, csv, emptyHospitals, emptyBeds)
+    val h = HhsPipeline.load(spark, csv, emptyHospitals, emptyLocations, emptyBeds)
     assert(h.bedInfo.count() + h.rejects.count() == 7)
     assert(h.rejects.select("hospital_pk", "reject_reason").as[(String, String)]
       .collect().sorted.toSeq == Seq("B" -> "collection_week_null",
@@ -157,9 +170,10 @@ class PipelineSpec extends SparkSpec {
       """B,Acute Care,Proprietary,Yes,2"""
     ).mkString("\n"))
     val eH = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitals)
+    val eL = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitalLocations)
     val eB = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitalBedInformation)
     val eQ = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitalQualityInformation)
-    val h = HhsPipeline.load(spark, csv, eH, eB)
+    val h = HhsPipeline.load(spark, csv, eH, eL, eB)
     val q = QualityPipeline.load(spark, qcsv, "2023-07-01", eQ)
 
     val weeks = Reports.weekSummary(h.bedInfo)
@@ -169,9 +183,9 @@ class PipelineSpec extends SparkSpec {
     assert(week0106.select("sum_total_icu_beds_7_day_avg").as[Double].head() == 30.0)
     val bedUse = Reports.bedUse(q.quality, h.bedInfo)
     assert(bedUse.filter($"grouping_id" === Reports.ByRating).count() == 2) // ratings 4 and 2
-    assert(Reports.emergencyHospitalsByState(q.quality, h.hospitals, h.locations, "2023-07-01")
-      .select("n_hospitals").as[Long].head() == 2L)
-    assert(Reports.ratingByStateTopBottom(q.quality, h.locations, "2023-07-01").count() == 1)
+    val states = Reports.byState(q.quality, h.hospitals, h.locations, "2023-07-01").collect().toSeq
+    assert(Reports.emergencyTop(states).head.getAs[Long]("n_hospitals") == 2L)
+    assert(Reports.ratingTopBottom(states).size == 1)
     assert(weeks.filter($"collection_week" <= "2023-01-13")
       .select("all_cases", "covid_cases").count() == 2)
     assert(bedUse.filter($"grouping_id" === Reports.ByOwnershipWeek &&
@@ -216,5 +230,145 @@ class PipelineSpec extends SparkSpec {
     assert(spark.read.parquet(s"$uriWh/hospital_bed_information").count() == 1)
     assert(graft.cli.Report.render(spark, uriWh)
       .contains("Records loaded for week 2023-01-06"))
+  }
+
+  test("a load interrupted after any of its appends converges on replay") {
+    import graft.cli.Cli
+    val csv = writeCsv("replay.csv", Seq(
+      hhsHeader,
+      hhsRow("A", "Alpha", "2023-01-06", "10.0"),
+      hhsRow("B", "Beta", "2023-01-06", "20.0"),
+      hhsRow("A", "Alpha", "2023-01-13", "12.0")
+    ).mkString("\n"))
+    val tables = Seq(Warehouse.Hospitals, Warehouse.Locations, Warehouse.BedInformation)
+    def contents(wh: String) = tables.map(t =>
+      Warehouse.read(spark, wh, t).collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq)
+    val whole = s"$dir/replay_whole"
+    Cli.runHhs(spark, csv, whole, s"$dir/replay_rejects")
+    val expected = contents(whole)
+    assert(expected.map(_.size) == Seq(2, 2, 3))
+    for (k <- 1 to 3) {
+      // the first k of the load's three appends, as a load killed after
+      // its k-th write leaves the warehouse, then the whole load again
+      val wh = s"$dir/replay_after_$k"
+      val Seq(h, l, b) = tables.map(Warehouse.read(spark, wh, _))
+      val r = HhsPipeline.load(spark, csv, h, l, b)
+      Seq(r.hospitals, r.locations, r.bedInfo).zip(tables).take(k)
+        .foreach { case (df, t) => Warehouse.append(df, wh, t) }
+      Cli.runHhs(spark, csv, wh, s"$dir/replay_rejects")
+      assert(contents(wh) == expected, s"replay after $k append(s)")
+    }
+  }
+
+  /** The physical plans of the SQL executions `body` runs. */
+  private def plansDuring(body: => Unit): Seq[SparkPlan] = {
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    GraftSqlBridge.drainListenerBus(spark)
+    spark.listenerManager.register(listener)
+    try {
+      body
+      GraftSqlBridge.drainListenerBus(spark)
+    } finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq
+  }
+
+  /** The file scans of `plans` that read under `path`, through adaptive
+    * stages, cached relations and commands. A cached plan shared by
+    * several executions counts once, so a scan's metrics count each read
+    * of the files once. */
+  private def scansUnder(plans: Seq[SparkPlan], path: String): Seq[FileSourceScanExec] = {
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
+    def walk(p: SparkPlan): Unit = if (seen.add(p)) p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case r: ReusedExchangeExec => walk(r.child)
+      case m: InMemoryTableScanExec => walk(m.relation.cachedPlan)
+      case c: CommandResultExec => walk(c.commandPhysicalPlan)
+      case other => (other.children ++ other.subqueries).foreach(walk)
+    }
+    plans.foreach(walk)
+    val root = new java.io.File(path).getAbsolutePath
+    seen.asScala.toSeq.collect {
+      case s: FileSourceScanExec if s.relation.location.rootPaths.exists(
+        _.toUri.getPath.startsWith(root)) => s
+    }
+  }
+
+  private def metric(scans: Seq[FileSourceScanExec], name: String): Long =
+    scans.map(_.metrics(name).value).sum
+
+  test("one HHS load and one quality load each parse their CSV once") {
+    import graft.cli.Cli
+    val csv = writeCsv("once_hhs.csv", Seq(
+      hhsHeader,
+      hhsRow("A", "Alpha", "2023-01-06", "10.0"),
+      hhsRow("B", "", "2023-01-06", "5.0"),
+      hhsRow("C", "Gamma", "2023-01-13", "-2.0")
+    ).mkString("\n"))
+    val qcsv = writeCsv("once_quality.csv", Seq(
+      """Facility ID,Hospital Type,Hospital Ownership,Emergency Services,Hospital overall rating""",
+      """A,Acute Care,Proprietary,Yes,4""",
+      """,Acute Care,Proprietary,Yes,4"""
+    ).mkString("\n"))
+    val wh = s"$dir/once_warehouse"
+    val rej = s"$dir/once_rejects"
+    // CSV parses only: the quality reader's header lookup is a text scan
+    def parses(body: => Unit, path: String) = scansUnder(plansDuring(body), path)
+      .filter(_.relation.fileFormat.isInstanceOf[CSVFileFormat])
+    // the three rows reach four outputs (three tables and the rejects)
+    val hhs = parses(Cli.runHhs(spark, csv, wh, rej), csv)
+    assert(hhs.nonEmpty && metric(hhs, "numOutputRows") == 3L)
+    // the two rows reach the table and the rejects
+    val quality = parses(Cli.runQuality(spark, "2023-07-01", qcsv, wh, rej), qcsv)
+    assert(quality.nonEmpty && metric(quality, "numOutputRows") == 2L)
+  }
+
+  test("a load reads only the stored bed partitions of its own weeks") {
+    import graft.cli.Cli
+    val weeks = Seq("2023-01-06", "2023-01-13", "2023-01-20")
+    val history = writeCsv("pruned_history.csv", (hhsHeader +: (for {
+      w <- weeks; pk <- Seq("A", "B")
+    } yield hhsRow(pk, pk, w, "10.0"))).mkString("\n"))
+    val wh = s"$dir/pruned_warehouse"
+    val rej = s"$dir/pruned_rejects"
+    Cli.runHhs(spark, history, wh, rej)
+    // the new week, plus a replayed row of the latest stored one
+    val delta = writeCsv("pruned_delta.csv", Seq(
+      hhsHeader,
+      hhsRow("A", "A", "2023-01-27", "11.0"),
+      hhsRow("B", "B", "2023-01-27", "12.0"),
+      hhsRow("B", "B", "2023-01-20", "10.0")
+    ).mkString("\n"))
+    val beds = Warehouse.path(wh, Warehouse.BedInformation)
+    val scans = scansUnder(plansDuring(Cli.runHhs(spark, delta, wh, rej)), beds)
+    val latestFiles = Files.list(Paths.get(s"$beds/collection_week=2023-01-20")).iterator().asScala
+      .count(_.getFileName.toString.endsWith(".parquet"))
+    assert(scans.nonEmpty)
+    assert(metric(scans, "numPartitions") == 1L)
+    assert(metric(scans, "numFiles") == latestFiles.toLong)
+    assert(spark.read.parquet(beds).count() == 8L)
+  }
+
+  test("the CLI loaders leave none of their frames cached, and keep the caller's") {
+    import graft.cli.Cli
+    val csv = writeCsv("cache_hhs.csv", Seq(
+      hhsHeader, hhsRow("A", "Alpha", "2023-01-06", "10.0")).mkString("\n"))
+    val qcsv = writeCsv("cache_quality.csv", Seq(
+      """Facility ID,Hospital Type,Hospital Ownership,Emergency Services,Hospital overall rating""",
+      """A,Acute Care,Proprietary,Yes,4""").mkString("\n"))
+    val callers = spark.range(3).toDF("x").persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      callers.count()
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      Cli.runHhs(spark, csv, s"$dir/cache_warehouse", s"$dir/cache_rejects")
+      Cli.runQuality(spark, "2023-07-01", qcsv, s"$dir/cache_warehouse", s"$dir/cache_rejects")
+      assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+      assert(callers.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    } finally callers.unpersist()
   }
 }

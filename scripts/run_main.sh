@@ -9,6 +9,7 @@
 # share graft.Runner's SPARK_GRAFT_ITERS (min-of-N, default 2) and
 # SPARK_GRAFT_ONLY (query-name prefixes, Bench and Verify);
 # SPARK_GRAFT_SF_DIR for Bench/Prof; graft.Bench also SPARK_GRAFT_CPUS.
+# graft.Bench always calibrates and warms up; no variable turns either off.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 CP="target/scala-2.13/classes:/opt/spark/jars/*"

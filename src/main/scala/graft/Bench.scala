@@ -15,7 +15,8 @@ import org.apache.spark.sql.SparkSession
   *    compilation of each query's generated code (one-time costs that
   *    amortize to zero on a real cluster run). Warmup must use the same
   *    SF because AQE re-plans by runtime stats — a smaller SF compiles
-  *    different physical stages. Set SPARK_GRAFT_WARMUP=0 for cold runs.
+  *    different physical stages. Every run warms up, so every history
+  *    line times warm queries.
   *  - All persisted/cached data is dropped between warmup and the timed
   *    pass: queries that build internal indexes (LSH signatures, IVF
   *    cells) register them with the CacheManager, and an identical
@@ -109,7 +110,6 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.get("SPARK_GRAFT_CPUS")
       .fold(Runtime.getRuntime.availableProcessors())(_.toInt)
-    val warmup = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0"
     val skipProbes = sys.env.getOrElse("SPARK_GRAFT_SKIP_PROBES", "0") == "1"
     // A full-suite decade run keeps one JVM alive for hours across
     // ~550 query executions, and broadcast/shuffle state is only
@@ -124,51 +124,49 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
 
     // Host-mode stamp, taken BEFORE warmup so it reads the same ambient
-    // state the recorded passes will run under. SPARK_GRAFT_CALIB=0
-    // skips it (sub-minute targeted runs where 10 s of probe dominates).
-    val calibJson =
-      if (sys.env.getOrElse("SPARK_GRAFT_CALIB", "1") == "0") ""
-      else {
-        val (cpuS, shufS) = calibrate(spark)
-        val histPath = java.nio.file.Paths.get("bench/calib_history.jsonl")
-        // best-ever is only meaningful within one local[N] config: the
-        // kernels use fixed work sizes, so a local[4] line would read
-        // as "4x slow mode" against a local[32] best
-        def priorVals(key: String): Seq[Double] =
-          if (!java.nio.file.Files.exists(histPath)) Seq.empty
-          else {
-            val re = (s""""$key":([0-9.]+)""").r
-            scala.jdk.CollectionConverters
-              .ListHasAsScala(java.nio.file.Files.readAllLines(histPath)).asScala
-              .filter(_.contains(s""""cpus":$cpus"""))
-              .flatMap(l => re.findFirstMatchIn(l).map(_.group(1).toDouble))
-              .toSeq
-          }
-        def priorBest(key: String): Option[Double] = {
-          val vs = priorVals(key); if (vs.isEmpty) None else Some(vs.min)
+    // state the recorded passes will run under. Every run takes it, so
+    // every history line carries one.
+    val calibJson = {
+      val (cpuS, shufS) = calibrate(spark)
+      val histPath = java.nio.file.Paths.get("bench/calib_history.jsonl")
+      // best-ever is only meaningful within one local[N] config: the
+      // kernels use fixed work sizes, so a local[4] line would read
+      // as "4x slow mode" against a local[32] best
+      def priorVals(key: String): Seq[Double] =
+        if (!java.nio.file.Files.exists(histPath)) Seq.empty
+        else {
+          val re = (s""""$key":([0-9.]+)""").r
+          scala.jdk.CollectionConverters
+            .ListHasAsScala(java.nio.file.Files.readAllLines(histPath)).asScala
+            .filter(_.contains(s""""cpus":$cpus"""))
+            .flatMap(l => re.findFirstMatchIn(l).map(_.group(1).toDouble))
+            .toSeq
         }
-        def priorWorst(key: String): Option[Double] = {
-          val vs = priorVals(key); if (vs.isEmpty) None else Some(vs.max)
-        }
-        val cpuBest = priorBest("cpu_s").fold(cpuS)(math.min(_, cpuS))
-        val shufBest = priorBest("shuffle_s").fold(shufS)(math.min(_, shufS))
-        val uncalibrated = priorBest("cpu_s").isEmpty
-        val cpuR = cpuS / cpuBest
-        val shufR = shufS / shufBest
-        // Spread of the config's full calib history (incl. this line):
-        // max/min cpu_s. Until the history has SEEN both host modes at
-        // this local[N] (spread >= the 1.35x slow threshold), "near
-        // best-ever" is not evidence of fast mode — the best-ever line
-        // may itself be a slow-mode reading.
-        val cpuWorst = priorWorst("cpu_s").fold(cpuS)(math.max(_, cpuS))
-        val spread = cpuWorst / cpuBest
-        val mode = Bench.calibMode(cpuR, spread, uncalibrated)
-        Runner.appendLine(histPath.toString,
-          f"""{"cpu_s":$cpuS%.3f,"shuffle_s":$shufS%.3f,"cpus":$cpus,"ts":"${java.time.Instant.now()}"}""")
-        System.err.println(
-          f"[bench] calib cpu=$cpuS%.2fs (${cpuR}%.2fx best) shuffle=$shufS%.2fs (${shufR}%.2fx best) mode=$mode")
-        f""","calib":{"cpu_s":$cpuS%.3f,"shuffle_s":$shufS%.3f,"cpu_vs_best":$cpuR%.2f,"shuffle_vs_best":$shufR%.2f,"mode":"$mode"}"""
+      def priorBest(key: String): Option[Double] = {
+        val vs = priorVals(key); if (vs.isEmpty) None else Some(vs.min)
       }
+      def priorWorst(key: String): Option[Double] = {
+        val vs = priorVals(key); if (vs.isEmpty) None else Some(vs.max)
+      }
+      val cpuBest = priorBest("cpu_s").fold(cpuS)(math.min(_, cpuS))
+      val shufBest = priorBest("shuffle_s").fold(shufS)(math.min(_, shufS))
+      val uncalibrated = priorBest("cpu_s").isEmpty
+      val cpuR = cpuS / cpuBest
+      val shufR = shufS / shufBest
+      // Spread of the config's full calib history (incl. this line):
+      // max/min cpu_s. Until the history has SEEN both host modes at
+      // this local[N] (spread >= the 1.35x slow threshold), "near
+      // best-ever" is not evidence of fast mode — the best-ever line
+      // may itself be a slow-mode reading.
+      val cpuWorst = priorWorst("cpu_s").fold(cpuS)(math.max(_, cpuS))
+      val spread = cpuWorst / cpuBest
+      val mode = Bench.calibMode(cpuR, spread, uncalibrated)
+      Runner.appendLine(histPath.toString,
+        f"""{"cpu_s":$cpuS%.3f,"shuffle_s":$shufS%.3f,"cpus":$cpus,"ts":"${java.time.Instant.now()}"}""")
+      System.err.println(
+        f"[bench] calib cpu=$cpuS%.2fs (${cpuR}%.2fx best) shuffle=$shufS%.2fs (${shufR}%.2fx best) mode=$mode")
+      f""","calib":{"cpu_s":$cpuS%.3f,"shuffle_s":$shufS%.3f,"cpu_vs_best":$cpuR%.2f,"shuffle_vs_best":$shufR%.2f,"mode":"$mode"}"""
+    }
 
     // Corpus fingerprint (relative path + size of every file under
     // sfDir, sorted, md5'd): scale corpora are rebuilt artifacts shared
@@ -222,17 +220,15 @@ object Bench {
       }
       path.toString
     }
-    if (warmup) {
-      queries.foreach { case (name, fn) =>
-        val (secs, ok) = Runner.timed {
-          try { Runner.noop(fn(spark, sfDir)); true } catch {
-            case e: Throwable => logFailure("warmup", name, e); false
-          }
+    queries.foreach { case (name, fn) =>
+      val (secs, ok) = Runner.timed {
+        try { Runner.noop(fn(spark, sfDir)); true } catch {
+          case e: Throwable => logFailure("warmup", name, e); false
         }
-        progress("warmup", name, secs, ok)
       }
-      Runner.reset(spark)
+      progress("warmup", name, secs, ok)
     }
+    Runner.reset(spark)
     // PER-QUERY TASK/STAGE/JOB COUNTS: task counts are the parallelism
     // evidence wall-clock can't give at a scheduler-floor-bound sf — a
     // query whose stages carry N tasks at local[N] IS data-parallel and

@@ -64,12 +64,12 @@ object Cli {
       s"$flag must be a yyyy-MM-dd date, got '$value'"))
 
   def runHhs(spark: SparkSession, csvPath: String,
-             warehouseDir: String, rejectDir: String): HhsPipeline.Result =
-    HhsPipeline.loadInto(spark, csvPath, warehouseDir, rejectDir)
+             warehouseDir: String, rejectDir: String): Unit =
+    HhsPipeline.load(spark, csvPath, warehouseDir, rejectDir)
 
   def runQuality(spark: SparkSession, dataDate: String, csvPath: String,
-                 warehouseDir: String, rejectDir: String): QualityPipeline.Result =
-    QualityPipeline.loadInto(spark, csvPath, dataDate, warehouseDir, rejectDir)
+                 warehouseDir: String, rejectDir: String): Unit =
+    QualityPipeline.load(spark, csvPath, dataDate, warehouseDir, rejectDir)
 }
 
 /** `runMain graft.cli.LoadHhs <csv> [--warehouse dir] [--rejects dir]`

@@ -2,7 +2,7 @@ package graft.cli
 
 import graft.warehouse.{Reports, Warehouse}
 import java.time.LocalDate
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types.{NumericType, StructType}
 
 /** The reference dashboard's report page as a CLI (Reporting.py:275-281
@@ -28,16 +28,12 @@ import org.apache.spark.sql.types.{NumericType, StructType}
   */
 object Report {
 
-  /** Render one result frame as an aligned text table. `take(max+1)` so
-    * truncation is detected without a count() over the full result;
-    * numeric columns right-align. Display-sized collects only — every
-    * report aggregates to a bounded frame before this runs. */
-  def formatTable(df: DataFrame, maxRows: Int = 100): String =
-    formatRows(df.schema, df.take(maxRows + 1).toSeq, maxRows)
-
-  /** [[formatTable]] over rows already on the driver: the first `maxRows`
-    * of `rows` print, and a longer `rows` notes the truncation. */
-  private def formatRows(schema: StructType, rows: Seq[Row], maxRows: Int): String = {
+  /** `rows` under `schema` as an aligned text table: numeric columns
+    * right-align, NULL prints as `NULL`, the first `maxRows` of `rows`
+    * print, and a longer `rows` notes the truncation. The rows are
+    * already on the driver: every report aggregates to a display-sized
+    * result before it is collected. */
+  private[cli] def formatRows(schema: StructType, rows: Seq[Row], maxRows: Int): String = {
     val numeric = schema.fields.map(_.dataType.isInstanceOf[NumericType])
     def cell(v: Any): String = v match {
       case null => "NULL"

@@ -10,82 +10,30 @@ import org.apache.spark.sql.functions._
   * representative per component (cf. the union-find pass every
   * large-scale dedup pipeline ends with).
   *
-  * Algorithm: min-label propagation with pointer jumping. Every node
-  * starts labeled with its own id; each round (1) labels flow across
-  * edges (both directions) and every node keeps the minimum seen, then
-  * (2) every node jumps to its label's label — the classic
-  * pointer-doubling step, sound because label(v) is always a
-  * same-component node with a ≤ label. Propagation alone needs
-  * O(diameter) rounds; the jump contracts label chains geometrically,
-  * so long chains converge in O(log diameter) rounds.
+  * Algorithm: large-star/small-star contraction (Kiveris et al.,
+  * "Connected Components in MapReduce and Beyond"). Edges are kept
+  * canonical, (h, l) with h > l. A large-star round links every node's
+  * larger neighbors to the minimum of its neighborhood; a small-star
+  * round links every node's smaller neighbors to the minimum of those.
+  * Alternating the two reaches a fixpoint where every component is a
+  * star rooted at its minimum node, in O(log diameter) alternations, and
+  * every round shrinks the edge set toward one edge per non-root node.
   *
   * Scale notes:
-  *  - Each round is one equi-join (edges ⨝ labels, shuffle keyed by
-  *    node id) + one min-aggregate — all Catalyst-planned; no driver
-  *    state beyond the loop counter.
+  *  - Each round is a few equi-joins and min-aggregates keyed by node
+  *    id, all Catalyst-planned; the driver holds only the loop counter
+  *    and the convergence fingerprint.
   *  - `localCheckpoint` truncates lineage each round: without it the
   *    plan doubles per iteration and the optimizer re-walks it.
-  *  - For graphs with long chains at 100 TB, switch to the
-  *    large-star/small-star variant (Kiveris et al., "Connected
-  *    Components in MapReduce and Beyond"), which contracts diameter
-  *    logarithmically; the per-round plumbing here is unchanged.
-  *  - Convergence detection: labels only ever DECREASE, so the sum of
-  *    all labels is a monotone potential function — fixpoint iff the
-  *    sum is unchanged between rounds. That makes the probe a single
-  *    scan of the just-checkpointed labels (exact decimal sum, no
-  *    overflow at any id range) instead of a join against the previous
-  *    round.
+  *  - Per-round shuffle volume is bounded by the edge set, which only
+  *    shrinks, so long chains at 100 TB cost O(log diameter) rounds of
+  *    at most |edges| rows each.
+  *  - Convergence detection: a canonical-edge multiset fingerprint
+  *    (count + exact decimal sum of per-edge xxhash64), one scan of the
+  *    just-checkpointed edges, confirmed on the claiming round by an
+  *    exact set comparison.
   */
 object ConnectedComponents {
-
-  /** @param ids   one column `id` — every node (isolated nodes keep
-    *              their own id as cluster)
-    * @param edges columns `id1`, `id2` — undirected pairs
-    * @return (id, cluster_id) where cluster_id = min id in the component
-    */
-  def run(ids: DataFrame, edges: DataFrame, maxIter: Int = 20): DataFrame = {
-    val bi = edges.select(col("id1").as("a"), col("id2").as("b"))
-      .unionByName(edges.select(col("id2").as("a"), col("id1").as("b")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var labels = ids.select(col("id"), col("id").as("cluster_id"))
-        .localCheckpoint()
-      def labelSum(df: DataFrame): java.math.BigDecimal =
-        Option(df.agg(sum(int128(col("cluster_id")))).head()
-          .getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO)
-      var prevSum = labelSum(labels)
-      var iter = 0
-      var converged = false
-      while (!converged && iter < maxIter) {
-        val msgs = bi.join(labels, bi("a") === labels("id"))
-          .select(bi("b").as("id"), labels("cluster_id"))
-        val propagated = labels.unionByName(msgs)
-          .groupBy("id").agg(min("cluster_id").as("cluster_id"))
-        // pointer jump: follow cluster_id one more hop through the
-        // (pre-jump) label table — left join because a label may be a
-        // component-min node that only appears as its own id
-        val jumpTo = propagated
-          .select(col("id").as("jid"), col("cluster_id").as("jlabel"))
-        val updated = propagated
-          .join(jumpTo, propagated("cluster_id") === jumpTo("jid"), "left")
-          .select(propagated("id"),
-            least(propagated("cluster_id"), col("jlabel")).as("cluster_id"))
-          .localCheckpoint()
-        val newSum = labelSum(updated)
-        labels = updated
-        converged = newSum.compareTo(prevSum) == 0
-        prevSum = newSum
-        iter += 1
-      }
-      require(converged, s"connected components did not converge in $maxIter rounds")
-      labels
-    } finally bi.unpersist()
-  }
-
-  // =======================================================================
-  // Large-star / small-star contraction (Kiveris et al., "Connected
-  // Components in MapReduce and Beyond") — the long-chain scale path.
-  // =======================================================================
 
   /** One large-star round: every node u connects its STRICTLY LARGER
     * neighbors to m = min(Γ(u) ∪ {u}). Edges stay canonical (h > l).
@@ -125,15 +73,19 @@ object ConnectedComponents {
 
   /** Connected components by alternating large-star/small-star until the
     * edge set is a fixpoint (a min-rooted star per component). Converges
-    * in O(log diameter) alternations on paths/chains — vs the
-    * propagate+jump bound — and every round SHRINKS the edge set toward
-    * one edge per non-min node, so per-round shuffle volume is
-    * monotonically bounded: the property that makes this the 100 TB
-    * long-chain variant. Same contract as [[run]].
+    * in O(log diameter) alternations on paths/chains, and every round
+    * SHRINKS the edge set toward one edge per non-min node, so per-round
+    * shuffle volume is monotonically bounded: the property that makes
+    * this the 100 TB long-chain path.
     *
     * Convergence probe: canonical-edge multiset fingerprint
     * (count + exact decimal sum of per-edge xxhash64) — one scan of the
-    * just-checkpointed frame, no join against the previous round. */
+    * just-checkpointed frame, no join against the previous round.
+    *
+    * @param ids   one column `id` — every node (isolated nodes keep
+    *              their own id as cluster)
+    * @param edges columns `id1`, `id2` — undirected pairs
+    * @return (id, cluster_id) where cluster_id = min id in the component */
   def runStars(ids: DataFrame, edges: DataFrame, maxIter: Int = 30): DataFrame =
     starContraction(ids, edges, maxIter)._1
 
@@ -168,9 +120,8 @@ object ConnectedComponents {
       val cur = fp(next)
       // fingerprint match is necessary-but-probabilistic (a ~2^-64
       // per-round hash collision could accept a non-fixpoint and emit
-      // wrong labels — unlike run()'s monotone label-sum potential), so
-      // the one round that CLAIMS convergence is confirmed with an
-      // exact set-equality check. Runs once per call, on the final
+      // wrong labels), so the one round that CLAIMS convergence is
+      // confirmed with an exact set-equality check. Runs once per call, on the final
       // contracted edge set (≤ one edge per non-root node): the cost
       // is a single small anti-join, the payoff is a deterministic
       // correctness guarantee instead of an astronomically-likely one.

@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * category trees) expressed in Spark's iteration model, since Spark
   * has no recursive CTE.
   *
-  * Algorithm: POINTER DOUBLING (the same contraction as
-  * [[ConnectedComponents]]'s jump step, here carrying distance): state
+  * Algorithm: POINTER DOUBLING (the jump step of min-label connected
+  * components, here carrying distance): state
   * (id, anc, d) starts at the parent pointer; each round substitutes
   * anc := anc's ancestor and adds the distances, so the known-ancestor
   * horizon doubles per round — a depth-D forest resolves in ⌈log₂ D⌉
@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: each round is ONE equi-join of the state with itself
   * keyed by ancestor id (shuffle on node id) + localCheckpoint to
-  * truncate lineage. Convergence detection reuses the CC trick: the
-  * total of all distances is a monotone non-decreasing, bounded
+  * truncate lineage. Convergence detection: the total of all
+  * distances is a monotone non-decreasing, bounded
   * potential — fixpoint iff unchanged, probed with a single exact
   * decimal-sum scan (no join against the previous round).
   */

@@ -45,7 +45,19 @@ object VectorQueries {
   private def sqlDist2(a: String, b: String): String =
     s"""CAST(list_sum(list_transform(range(1, len($a) + 1),
        |        j -> ($a[j] - $b[j]) * ($a[j] - $b[j]))) AS BIGINT)""".stripMargin
-  /** nn09/nn11's exact side: CTE `ex(q_id, vec_id)`, the integer-L2
+  /** nn09/nn11's exact side: the integer-L2 top-5 (q_id, vec_id) of
+    * every quantized query `qz` (q_id, qv) over the quantized corpus `cz`
+    * (vec_id, q). The scored queries×corpus stream goes into the
+    * map-side min-heap, so it never touches a sort. */
+  private def exactL2Top5(cz: DataFrame, qz: DataFrame): DataFrame =
+    cz.crossJoin(broadcast(qz))
+      .select(col("q_id"), col("vec_id"),
+        QuantizedKMeans.dist2(col("q"), col("qv")).as("d2"))
+      .groupBy("q_id")
+      .agg(graft.topk.TopKAgg.min_k_long(col("d2"), col("vec_id"), 5).as("__top"))
+      .select(col("q_id"), explode(col("__top")).as("__pair"))
+      .select(col("q_id"), col("__pair.tag").as("vec_id"))
+  /** [[exactL2Top5]]'s SQL twin: CTE `ex(q_id, vec_id)`, the integer-L2
     * top-5 of every 100th vector over the `qf` micro-unit vectors. */
   private val sqlExactL2Top5 =
     s"""ex AS (SELECT q_id, vec_id FROM (
@@ -55,6 +67,29 @@ object VectorQueries {
        |      b.vec_id) AS rk
        |  FROM qf a JOIN qf b ON a.vec_id % 100 = 0) z
        |  WHERE rk <= 5)""".stripMargin
+  /** nn09/nn11's output: per q_id of `exact`, recall@5 of the
+    * approximate top-5 `hits` (q_id, vec_id), the hit counts as exact
+    * integers and the ratio last. */
+  private def recallAt5(exact: DataFrame, hits: DataFrame): DataFrame =
+    exact.join(hits.select(col("q_id"), col("vec_id"), lit(1).as("hit")),
+        Seq("q_id", "vec_id"), "left")
+      .groupBy("q_id")
+      .agg(count(lit(1)).as("n_exact"),
+        sum(coalesce(col("hit"), lit(0))).cast("long").as("n_hit"))
+      .withColumn("recall",
+        col("n_hit").cast("double") / col("n_exact"))
+      .orderBy("q_id")
+  /** [[recallAt5]]'s SQL twin over CTE `ex`, the approximate top-5
+    * `hits` (a relation, optionally with its alias) joined as `alias`. */
+  private def sqlRecallAt5(hits: String, alias: String): String =
+    s"""SELECT ex.q_id, CAST(COUNT(*) AS BIGINT) AS n_exact,
+       |  CAST(SUM(CASE WHEN $alias.vec_id IS NULL THEN 0 ELSE 1 END) AS BIGINT)
+       |    AS n_hit,
+       |  CAST(SUM(CASE WHEN $alias.vec_id IS NULL THEN 0 ELSE 1 END) AS DOUBLE)
+       |    / COUNT(*) AS recall
+       |FROM ex LEFT JOIN $hits
+       |  ON ex.q_id = $alias.q_id AND ex.vec_id = $alias.vec_id
+       |GROUP BY ex.q_id ORDER BY ex.q_id""".stripMargin
   /** semanticDedup's output over the closure of edge CTE `e` on nodes `s`. */
   private val sqlKeptAs =
     s"""${GraphQueries.sqlClosure("e", "s", "vec_id")}
@@ -543,28 +578,11 @@ object VectorQueries {
       val emb = Tables.embeddings(s, d)
       val qs = adcQueries(emb)
       val adc = ProductQuantizer.adcTopK(emb, qs, book, topK = 5)
-        .select(col("q_id"), col("vec_id"), lit(1).as("hit"))
+        .select("q_id", "vec_id")
       val corpus = QuantizedKMeans.quantize(emb, "vec_id", "embedding")
       val queries = QuantizedKMeans.quantize(qs, "q_id", "embedding")
         .withColumnRenamed("q", "qv")
-      // exact side: queries×corpus scored stream into the map-side
-      // min-heap (same selection/tie-break as the rank<=5 window it
-      // replaced — which sorted the whole queries×corpus stream and
-      // was the sf10 spill bomb alongside the old adcTopK join)
-      val exact = corpus.crossJoin(broadcast(queries))
-        .select(col("q_id"), col("vec_id"),
-          QuantizedKMeans.dist2(col("q"), col("qv")).as("d2"))
-        .groupBy("q_id")
-        .agg(graft.topk.TopKAgg.min_k_long(col("d2"), col("vec_id"), 5).as("__top"))
-        .select(col("q_id"), explode(col("__top")).as("__pair"))
-        .select(col("q_id"), col("__pair.tag").as("vec_id"))
-      exact.join(adc, Seq("q_id", "vec_id"), "left")
-        .groupBy("q_id")
-        .agg(count(lit(1)).as("n_exact"),
-          sum(coalesce(col("hit"), lit(0))).cast("long").as("n_hit"))
-        .withColumn("recall",
-          col("n_hit").cast("double") / col("n_exact"))
-        .orderBy("q_id")
+      recallAt5(exactL2Top5(corpus, queries), adc)
     },
     Some {
       s"""WITH ${(0 until 4).map(pqChain(_, m = 4, k = 4, iters = 2)).mkString(",\n")},
@@ -576,14 +594,7 @@ object VectorQueries {
          |adc_top AS (${sqlAdcCut("q_id, vec_id", "adc_all", 5)}),
          |${sqlQuantized("qf")},
          |$sqlExactL2Top5
-         |SELECT ex.q_id, CAST(COUNT(*) AS BIGINT) AS n_exact,
-         |  CAST(SUM(CASE WHEN t.vec_id IS NULL THEN 0 ELSE 1 END) AS BIGINT)
-         |    AS n_hit,
-         |  CAST(SUM(CASE WHEN t.vec_id IS NULL THEN 0 ELSE 1 END) AS DOUBLE)
-         |    / COUNT(*) AS recall
-         |FROM ex LEFT JOIN adc_top t
-         |  ON ex.q_id = t.q_id AND ex.vec_id = t.vec_id
-         |GROUP BY ex.q_id ORDER BY ex.q_id""".stripMargin
+         |${sqlRecallAt5("adc_top t", "t")}""".stripMargin
     })
 
   /** PORTABLE IVF TOP-K (nn04's oracle-exact companion — closing the
@@ -699,23 +710,8 @@ object VectorQueries {
           QuantizedKMeans.dist2(col("q"), col("qv")).as("d2"))
         .withColumn("__rk", row_number().over(wTop))
         .filter(col("__rk") <= 5)
-        .select(col("q_id"), col("vec_id"), lit(1).as("hit"))
-      // exact side via the map-side min-heap — the queries×corpus
-      // stream never touches a sort (nn09's shape)
-      val exact = cz.crossJoin(broadcast(qz))
-        .select(col("q_id"), col("vec_id"),
-          QuantizedKMeans.dist2(col("q"), col("qv")).as("d2"))
-        .groupBy("q_id")
-        .agg(graft.topk.TopKAgg.min_k_long(col("d2"), col("vec_id"), 5).as("__top"))
-        .select(col("q_id"), explode(col("__top")).as("__pair"))
-        .select(col("q_id"), col("__pair.tag").as("vec_id"))
-      exact.join(reranked, Seq("q_id", "vec_id"), "left")
-        .groupBy("q_id")
-        .agg(count(lit(1)).as("n_exact"),
-          sum(coalesce(col("hit"), lit(0))).cast("long").as("n_hit"))
-        .withColumn("recall",
-          col("n_hit").cast("double") / col("n_exact"))
-        .orderBy("q_id")
+        .select("q_id", "vec_id")
+      recallAt5(exactL2Top5(cz, qz), reranked)
     },
     Some {
       val m = 8
@@ -737,14 +733,7 @@ object VectorQueries {
          |    JOIN qf b ON b.vec_id = s.vec_id) z
          |  WHERE rk <= 5),
          |$sqlExactL2Top5
-         |SELECT ex.q_id, CAST(COUNT(*) AS BIGINT) AS n_exact,
-         |  CAST(SUM(CASE WHEN rr.vec_id IS NULL THEN 0 ELSE 1 END) AS BIGINT)
-         |    AS n_hit,
-         |  CAST(SUM(CASE WHEN rr.vec_id IS NULL THEN 0 ELSE 1 END) AS DOUBLE)
-         |    / COUNT(*) AS recall
-         |FROM ex LEFT JOIN rr
-         |  ON ex.q_id = rr.q_id AND ex.vec_id = rr.vec_id
-         |GROUP BY ex.q_id ORDER BY ex.q_id""".stripMargin
+         |${sqlRecallAt5("rr", "rr")}""".stripMargin
     })
 
   /** The one SQL Lloyd replay, shared by every k-means/PQ oracle

@@ -253,13 +253,14 @@ object StreamingIngest {
     *    without touching the warehouse. Streaming "first" is arrival
     *    order — equal to the batch file-order rule whenever files
     *    arrive in listing order (the file source's contract here).
-    *  - per micro-batch (foreachBatch), the batch table split
-    *    [[graft.warehouse.HhsPipeline.newRows]] runs against current
-    *    warehouse state: first-wins per key, anti-join vs existing keys
-    *    (covers pre-existing warehouse rows and dups beyond the
-    *    watermark horizon), three table appends. The per-week first-wins
-    *    is a no-op on the watermark-deduped batch. Batches are
-    *    sequential, so batch N's appends are batch N+1's existing side.
+    *  - per micro-batch (foreachBatch), the batch load's per-delta
+    *    step [[graft.warehouse.HhsPipeline.appendNew]] runs against
+    *    current warehouse state: first-wins per key, anti-join vs
+    *    existing keys (covers pre-existing warehouse rows and dups
+    *    beyond the watermark horizon), three table appends. The
+    *    per-week first-wins is a no-op on the watermark-deduped batch.
+    *    Batches are sequential, so batch N's appends are batch N+1's
+    *    existing side.
     * At scale the state store holds only keys within the watermark,
     * and every per-batch stage is the batch operator itself — the
     * proof obligation (stream == batch on the same files) is pinned
@@ -281,11 +282,8 @@ object StreamingIngest {
     val validQ = deduped.writeStream.trigger(Trigger.AvailableNow())
       .option("checkpointLocation", s"$warehouseDir/_checkpoints/hhs_valid")
       .foreachBatch { (b: DataFrame, _: Long) =>
-        def existing(t: Warehouse.Table) = Warehouse.read(b.sparkSession, warehouseDir, t)
-        HhsPipeline.append(HhsPipeline.newRows(
-          b.withColumn("__file_order", monotonically_increasing_id()),
-          existing(Warehouse.Hospitals), existing(Warehouse.Locations),
-          existing(Warehouse.BedInformation)), warehouseDir)
+        HhsPipeline.appendNew(b.withColumn("__file_order", monotonically_increasing_id()),
+          warehouseDir)
       }.start()
 
     val rejectQ = rejects.writeStream.trigger(Trigger.AvailableNow())

@@ -12,8 +12,11 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * Scale notes (100 TB): the writer's parallelism IS the DataFrame's
   * partitioning — `numPartitions` caps concurrent connections so a
   * 1000-executor job can't open 1000 sessions against one warehouse.
-  * Idempotence is the caller's job (the pipelines anti-join existing
-  * keys before appending, same as the reference's dup probes).
+  * An append is not idempotent: it inserts every row it is given. The
+  * warehouse loads dedup only against the parquet warehouse
+  * ([[HhsPipeline.load]], [[QualityPipeline.load]]), so a caller
+  * mirroring a load into a JDBC database must append only rows the
+  * database does not hold yet.
   */
 object JdbcSink {
 
@@ -74,17 +77,4 @@ object JdbcSink {
                       properties: java.util.Properties = new java.util.Properties()): DataFrame =
     spark.read.jdbc(url, table, partitionCol, lower, upper, numPartitions,
       properties)
-
-  /** Write a full HHS load result to a JDBC warehouse — the straight
-    * analogue of load_hhs.py's three INSERT loops in one call. */
-  def writeHhs(r: HhsPipeline.Result, url: String, batchsize: Int = 1000): Unit = {
-    append(r.hospitals, url, Warehouse.Hospitals.name, batchsize)
-    append(r.locations, url, Warehouse.Locations.name, batchsize)
-    append(r.bedInfo, url, Warehouse.BedInformation.name, batchsize)
-  }
-
-  /** Quality-load analogue of load_quality.py:129-136. */
-  def writeQuality(r: QualityPipeline.Result, url: String,
-                   batchsize: Int = 1000): Unit =
-    append(r.quality, url, Warehouse.QualityInformation.name, batchsize)
 }

@@ -13,12 +13,11 @@ import org.apache.spark.sql.types._
   * date → anti-join dedup → validate → write. The engine binds insert
   * columns BY NAME — the reference's positional binding
   * (load_quality.py:127) is a latent bug, documented divergence
-  * (SURVEY §7.4.6). A warehouse load ([[loadInto]]) parses the CSV once:
-  * the quality write and the reject write read one persisted frame.
+  * (SURVEY §7.4.6). One load per source: [[load]] is the only quality
+  * load. It parses the CSV once: the quality append and the reject
+  * write read one persisted frame.
   */
 object QualityPipeline {
-
-  final case class Result(quality: DataFrame, rejects: DataFrame)
 
   /** S2 — projected scan: only the 5 consumed columns reach the reader
     * (reference: load_quality.py:98-99 usecols). */
@@ -50,40 +49,29 @@ object QualityPipeline {
     Validation.Rule("rating_negative",
       col("hospital_overall_rating").isNull || col("hospital_overall_rating") >= 0))
 
+  /** Load the CSV at `csvPath` as the `dataDate` snapshot into the
+    * warehouse at `warehouseDir` and replace the quality rejects under
+    * `rejectDir`, parsing the CSV once: the cleaned frame is persisted
+    * for the load and unpersisted after its last write. */
   def load(spark: SparkSession, csvPath: String, dataDate: String,
-           existingQuality: DataFrame): Result =
-    fromCleaned(clean(readRaw(spark, csvPath), dataDate), dataDate, existingQuality)
-
-  private def fromCleaned(cleaned: DataFrame, dataDate: String,
-                          existingQuality: DataFrame): Result = {
-    val (valid, invalid) = Validation.split(cleaned, validationRules)
-    // D3 — set-based dedup vs same-date warehouse snapshot
-    // (load_quality.py:122-126): existing side filtered to data_date then
-    // key-pruned; Catalyst broadcasts it when small.
-    val sameDate = existingQuality.filter(col("data_date") === lit(dataDate).cast(DateType))
-    val fresh = Dedup.antiJoinExisting(valid, sameDate, Seq("facility_id"))
-    val dups = Dedup.duplicatesOfExisting(valid, sameDate, Seq("facility_id"))
-      .withColumn("reject_reason", lit("duplicate"))
-    val quality = fresh.select(
-      col("facility_id"), col("hospital_overall_rating"), col("emergency_services"),
-      col("hospital_type"), col("hospital_ownership"), col("data_date"))
-    Result(quality, invalid.unionByName(dups, allowMissingColumns = true))
-  }
-
-  /** [[load]] against the warehouse at `warehouseDir` and [[write]] into
-    * it, parsing the CSV once: the cleaned frame is persisted for the
-    * load and unpersisted after its last write. */
-  def loadInto(spark: SparkSession, csvPath: String, dataDate: String,
-               warehouseDir: String, rejectDir: String): Result =
+           warehouseDir: String, rejectDir: String): Unit =
     Warehouse.persistedFor(clean(readRaw(spark, csvPath), dataDate)) { cleaned =>
-      val r = fromCleaned(cleaned, dataDate,
-        Warehouse.read(spark, warehouseDir, Warehouse.QualityInformation))
-      write(r, warehouseDir, rejectDir)
-      r
+      val (valid, invalid) = Validation.split(cleaned, validationRules)
+      // D3 — set-based dedup vs same-date warehouse snapshot
+      // (load_quality.py:122-126): existing side filtered to data_date then
+      // key-pruned; Catalyst broadcasts it when small. Read before the
+      // append, so the duplicate rejects, written after it, see the table
+      // as it was before this load.
+      val sameDate = Warehouse.read(spark, warehouseDir, Warehouse.QualityInformation)
+        .filter(col("data_date") === lit(dataDate).cast(DateType))
+      val fresh = Dedup.antiJoinExisting(valid, sameDate, Seq("facility_id"))
+      val dups = Dedup.duplicatesOfExisting(valid, sameDate, Seq("facility_id"))
+        .withColumn("reject_reason", lit("duplicate"))
+      Warehouse.append(fresh.select(
+        col("facility_id"), col("hospital_overall_rating"), col("emergency_services"),
+        col("hospital_type"), col("hospital_ownership"), col("data_date")),
+        warehouseDir, Warehouse.QualityInformation)
+      Warehouse.writeRejects(invalid.unionByName(dups, allowMissingColumns = true),
+        rejectDir, "quality")
     }
-
-  def write(r: Result, warehouseDir: String, rejectDir: String): Unit = {
-    Warehouse.append(r.quality, warehouseDir, Warehouse.QualityInformation)
-    Warehouse.writeRejects(r.rejects, rejectDir, "quality")
-  }
 }

@@ -29,6 +29,11 @@ trait SparkSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
     starts.asScala.toSeq
   }
+
+  /** The job-launching SQL executions `body` runs. */
+  def executions(body: => Unit): Int =
+    jobsDuring(body).flatMap(js => Option(js.properties)
+      .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))).distinct.size
 }
 
 object SparkSpec {

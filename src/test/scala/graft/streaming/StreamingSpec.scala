@@ -199,17 +199,7 @@ class StreamingSpec extends SparkSpec {
       row("R2", "", "2023-01-13", "7.0")).mkString("\n"))
 
     // identical seed state in both warehouses, via the batch pipeline
-    def seed(wh: String): Unit = {
-      val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitals)
-      val emptyBeds = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        Schemas.hospitalBedInformation)
-      val emptyLocations = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitalLocations)
-      HhsPipeline.write(HhsPipeline.load(spark, seedCsv, empty, emptyLocations, emptyBeds),
-        wh, s"$dir/seed_rejects")
-    }
+    def seed(wh: String): Unit = HhsPipeline.load(spark, seedCsv, wh, s"$dir/seed_rejects")
     val whStream = s"$dir/wh_stream"; val whBatch = s"$dir/wh_batch"
     seed(whStream); seed(whBatch)
 
@@ -220,11 +210,7 @@ class StreamingSpec extends SparkSpec {
     validQ.awaitTermination(); rejectQ.awaitTermination()
 
     // BATCH: same files in one load against the same seed state
-    val bh = spark.read.parquet(s"$whBatch/hospitals")
-    val bl = spark.read.parquet(s"$whBatch/hospital_locations")
-    val bb = spark.read.parquet(s"$whBatch/hospital_bed_information")
-    HhsPipeline.write(HhsPipeline.load(spark, srcDir, bh, bl, bb),
-      whBatch, s"$dir/rejects_batch")
+    HhsPipeline.load(spark, srcDir, whBatch, s"$dir/rejects_batch")
 
     def tbl(wh: String, t: String) =
       spark.read.parquet(s"$wh/$t").collect().map(_.toSeq).toSet

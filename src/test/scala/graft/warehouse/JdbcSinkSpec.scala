@@ -84,14 +84,11 @@ class JdbcSinkSpec extends SparkSpec {
         Seq.fill(8)("10.0").mkString(",")
     Files.writeString(Paths.get(csvPath), Seq(header, row("A", "Alpha"), row("B", "Beta")).mkString("\n"))
 
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitals)
-    val emptyBeds = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitalBedInformation)
-    val emptyLocations = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitalLocations)
-    val r = HhsPipeline.load(spark, csvPath, empty, emptyLocations, emptyBeds)
-    JdbcSink.writeHhs(r, url)
+    // the parquet warehouse load, each of its tables then appended over JDBC
+    val wh = s"$dir/warehouse"
+    HhsPipeline.load(spark, csvPath, wh, s"$dir/rejects")
+    val tables = Seq(Warehouse.Hospitals, Warehouse.Locations, Warehouse.BedInformation)
+    tables.foreach(t => JdbcSink.append(Warehouse.read(spark, wh, t), url, t.name))
 
     assert(JdbcSink.read(spark, url, "hospitals").count() == 2)
     assert(JdbcSink.read(spark, url, "hospital_locations").count() == 2)
@@ -99,5 +96,11 @@ class JdbcSinkSpec extends SparkSpec {
     assert(beds.count() == 2)
     assert(beds.filter(col("hospital_fk") === "A")
       .select("total_icu_beds_7_day_avg").as[Double].head() == 10.0)
+    // the JDBC tables hold exactly the parquet tables' rows
+    tables.foreach { t =>
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select(t.schema.fieldNames.toIndexedSeq.map(col): _*).collect().map(_.toSeq).toSet
+      assert(rows(JdbcSink.read(spark, url, t.name)) == rows(Warehouse.read(spark, wh, t)), t.name)
+    }
   }
 }

@@ -34,6 +34,20 @@ class PipelineSpec extends SparkSpec {
     s"$pk,$name,PA,1 Main St,Pittsburgh,15213,42003,POINT (-79 40),$week," +
       (Seq.fill(8)(beds).mkString(","))
 
+  private def table(wh: String, t: Warehouse.Table) = Warehouse.read(spark, wh, t)
+
+  /** The reject CSV a load of `source` ("hhs" or "quality") left under `rej`. */
+  private def rejects(rej: String, source: String) =
+    spark.read.option("header", "true").csv(Warehouse.rejectPath(rej, source))
+
+  /** The rows `body` appends to each of `tables` of warehouse `wh`. */
+  private def appended(wh: String, tables: Warehouse.Table*)(body: => Unit): Seq[Long] = {
+    def counts = tables.map(table(wh, _).count())
+    val before = counts
+    body
+    counts.zip(before).map { case (after, b) => after - b }
+  }
+
   test("HHS load: clean, validate (truncation quirk), dedup, project 3 tables") {
     val csv = writeCsv("hhs.csv", Seq(
       hhsHeader,
@@ -44,26 +58,22 @@ class PipelineSpec extends SparkSpec {
       hhsRow("D", "", "2023-01-06", "5.0"),             // empty name → null → reject
       hhsRow("E", "Eps", "2023-01-06", "-999999")       // sentinel → null → valid
     ).mkString("\n"))
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitals)
-    val emptyLocations = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitalLocations)
-    val emptyBeds = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitalBedInformation)
-    val r = HhsPipeline.load(spark, csv, empty, emptyLocations, emptyBeds)
-    assert(r.hospitals.select("hospital_pk").as[String].collect().sorted.toSeq ==
+    val (wh, rej) = (s"$dir/hhs_warehouse", s"$dir/hhs_rejects")
+    HhsPipeline.load(spark, csv, wh, rej)
+    val hospitals = table(wh, Warehouse.Hospitals)
+    assert(hospitals.select("hospital_pk").as[String].collect().sorted.toSeq ==
       Seq("A", "B", "E"))
-    assert(r.hospitals.filter($"hospital_pk" === "A")
+    assert(hospitals.filter($"hospital_pk" === "A")
       .select("hospital_name").as[String].head() == "Alpha") // first occurrence won
-    assert(r.bedInfo.filter($"hospital_fk" === "E")
+    assert(table(wh, Warehouse.BedInformation).filter($"hospital_fk" === "E")
       .select("total_icu_beds_7_day_avg").as[Option[Double]].head().isEmpty) // sentinel→null
-    val reasons = r.rejects.select("hospital_pk", "reject_reason")
+    val reasons = rejects(rej, "hhs").select("hospital_pk", "reject_reason")
       .as[(String, String)].collect().toMap
     assert(reasons("C").startsWith("negative_"))
     assert(reasons("D") == "hospital_name_null")
     // cross-load dedup: re-loading the same file adds nothing
-    val r2 = HhsPipeline.load(spark, csv, r.hospitals, r.locations, r.bedInfo)
-    assert(r2.hospitals.count() == 0 && r2.bedInfo.count() == 0)
+    assert(appended(wh, Warehouse.Hospitals, Warehouse.BedInformation)(
+      HhsPipeline.load(spark, csv, wh, rej)) == Seq(0L, 0L))
   }
 
   test("Quality load: recode, booleans, literal date, same-date dedup") {
@@ -73,22 +83,22 @@ class PipelineSpec extends SparkSpec {
       """F2,Acute Care,Government - Federal,No,Not Available""",
       """F3,Critical Access,Voluntary,Yes,2"""
     ).mkString("\n"))
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitalQualityInformation)
-    val r = QualityPipeline.load(spark, csv, "2023-07-01", empty)
-    val byId = r.quality.collect().map(x => x.getString(0) -> x).toMap
-    assert(r.quality.count() == 3)
+    val (wh, rej) = (s"$dir/quality_warehouse", s"$dir/quality_rejects")
+    val quality = Warehouse.QualityInformation
+    assert(appended(wh, quality)(
+      QualityPipeline.load(spark, csv, "2023-07-01", wh, rej)) == Seq(3L))
+    val byId = table(wh, quality).collect().map(x => x.getString(0) -> x).toMap
     assert(byId("F2").getDouble(1) == 0.0)          // 'Not Available' → 0
     assert(byId("F1").getBoolean(2))                 // Yes → true
     assert(!byId("F2").getBoolean(2))                // No → false
     assert(byId("F3").getDate(5).toString == "2023-07-01")
     // same-date re-load: all duplicates
-    val r2 = QualityPipeline.load(spark, csv, "2023-07-01", r.quality)
-    assert(r2.quality.count() == 0)
-    assert(r2.rejects.filter($"reject_reason" === "duplicate").count() == 3)
+    assert(appended(wh, quality)(
+      QualityPipeline.load(spark, csv, "2023-07-01", wh, rej)) == Seq(0L))
+    assert(rejects(rej, "quality").filter($"reject_reason" === "duplicate").count() == 3)
     // different date: fresh snapshot accepted
-    val r3 = QualityPipeline.load(spark, csv, "2023-10-01", r.quality)
-    assert(r3.quality.count() == 3)
+    assert(appended(wh, quality)(
+      QualityPipeline.load(spark, csv, "2023-10-01", wh, rej)) == Seq(3L))
   }
 
   test("HHS rows with a NULL key are rejected, so a replay appends nothing") {
@@ -124,20 +134,17 @@ class PipelineSpec extends SparkSpec {
       hhsRow("F", "No Number", "2023-01-06", "NaN"),    // NaN → NULL, as pandas reads it
       hhsRow("G", "Minus One", "2023-01-06", "-1")      // truncates below zero: rejects
     ).mkString("\n"))
-    val emptyHospitals = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitals)
-    val emptyLocations = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitalLocations)
-    val emptyBeds = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitalBedInformation)
-    val h = HhsPipeline.load(spark, csv, emptyHospitals, emptyLocations, emptyBeds)
-    assert(h.bedInfo.count() + h.rejects.count() == 7)
-    assert(h.rejects.select("hospital_pk", "reject_reason").as[(String, String)]
+    val (wh, rej) = (s"$dir/malformed_warehouse", s"$dir/malformed_rejects")
+    HhsPipeline.load(spark, csv, wh, rej)
+    val bedInfo = table(wh, Warehouse.BedInformation)
+    val hhsRejects = rejects(rej, "hhs")
+    assert(bedInfo.count() + hhsRejects.count() == 7)
+    assert(hhsRejects.select("hospital_pk", "reject_reason").as[(String, String)]
       .collect().sorted.toSeq == Seq("B" -> "collection_week_null",
         "G" -> "negative_all_adult_hospital_beds_7_day_avg"))
-    assert(h.bedInfo.filter($"hospital_fk" === "C")
+    assert(bedInfo.filter($"hospital_fk" === "C")
       .select("total_icu_beds_7_day_avg").as[Option[Double]].head().isEmpty)
-    val icu = h.bedInfo.select("hospital_fk", "total_icu_beds_7_day_avg")
+    val icu = bedInfo.select("hospital_fk", "total_icu_beds_7_day_avg")
       .as[(String, Option[Double])].collect().toMap
     assert(icu("D") == Some(1e20) && icu("E") == Some(-0.5) && icu("F").isEmpty)
 
@@ -147,13 +154,12 @@ class PipelineSpec extends SparkSpec {
       """F2,Acute Care,Proprietary,Yes,4""",
       """F3,Acute Care,Proprietary,Yes,NaN"""
     ).mkString("\n"))
-    val emptyQuality = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitalQualityInformation)
-    val q = QualityPipeline.load(spark, qcsv, "2023-07-01", emptyQuality)
-    assert(q.quality.count() + q.rejects.count() == 3)
-    assert(q.quality.filter($"facility_id" === "F1")
+    QualityPipeline.load(spark, qcsv, "2023-07-01", wh, rej)
+    val quality = table(wh, Warehouse.QualityInformation)
+    assert(quality.count() + rejects(rej, "quality").count() == 3)
+    assert(quality.filter($"facility_id" === "F1")
       .select("hospital_overall_rating").as[Option[Double]].head().isEmpty)
-    assert(q.quality.filter($"facility_id" === "F3")
+    assert(quality.filter($"facility_id" === "F3")
       .select("hospital_overall_rating").as[Option[Double]].head().isEmpty)
   }
 
@@ -169,21 +175,21 @@ class PipelineSpec extends SparkSpec {
       """A,Acute Care,Proprietary,Yes,4""",
       """B,Acute Care,Proprietary,Yes,2"""
     ).mkString("\n"))
-    val eH = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitals)
-    val eL = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitalLocations)
-    val eB = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitalBedInformation)
-    val eQ = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.hospitalQualityInformation)
-    val h = HhsPipeline.load(spark, csv, eH, eL, eB)
-    val q = QualityPipeline.load(spark, qcsv, "2023-07-01", eQ)
+    val (wh, rej) = (s"$dir/reports_warehouse", s"$dir/reports_rejects")
+    HhsPipeline.load(spark, csv, wh, rej)
+    QualityPipeline.load(spark, qcsv, "2023-07-01", wh, rej)
+    val bedInfo = table(wh, Warehouse.BedInformation)
+    val quality = table(wh, Warehouse.QualityInformation)
 
-    val weeks = Reports.weekSummary(h.bedInfo)
+    val weeks = Reports.weekSummary(bedInfo)
     val week0106 = weeks.filter($"collection_week" === "2023-01-06")
     assert(week0106.select("n_records").as[Long].head() == 2L)
     assert(weeks.count() == 2)
     assert(week0106.select("sum_total_icu_beds_7_day_avg").as[Double].head() == 30.0)
-    val bedUse = Reports.bedUse(q.quality, h.bedInfo)
+    val bedUse = Reports.bedUse(quality, bedInfo)
     assert(bedUse.filter($"grouping_id" === Reports.ByRating).count() == 2) // ratings 4 and 2
-    val states = Reports.byState(q.quality, h.hospitals, h.locations, "2023-07-01").collect().toSeq
+    val states = Reports.byState(quality, table(wh, Warehouse.Hospitals),
+      table(wh, Warehouse.Locations), "2023-07-01").collect().toSeq
     assert(Reports.emergencyTop(states).head.getAs[Long]("n_hospitals") == 2L)
     assert(Reports.ratingTopBottom(states).size == 1)
     assert(weeks.filter($"collection_week" <= "2023-01-13")
@@ -242,19 +248,17 @@ class PipelineSpec extends SparkSpec {
     ).mkString("\n"))
     val tables = Seq(Warehouse.Hospitals, Warehouse.Locations, Warehouse.BedInformation)
     def contents(wh: String) = tables.map(t =>
-      Warehouse.read(spark, wh, t).collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq)
+      table(wh, t).collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq)
     val whole = s"$dir/replay_whole"
     Cli.runHhs(spark, csv, whole, s"$dir/replay_rejects")
     val expected = contents(whole)
     assert(expected.map(_.size) == Seq(2, 2, 3))
     for (k <- 1 to 3) {
-      // the first k of the load's three appends, as a load killed after
-      // its k-th write leaves the warehouse, then the whole load again
+      // the first k tables of the whole load, as a load into an empty
+      // warehouse killed after its k-th append leaves it, then the whole
+      // load again
       val wh = s"$dir/replay_after_$k"
-      val Seq(h, l, b) = tables.map(Warehouse.read(spark, wh, _))
-      val r = HhsPipeline.load(spark, csv, h, l, b)
-      Seq(r.hospitals, r.locations, r.bedInfo).zip(tables).take(k)
-        .foreach { case (df, t) => Warehouse.append(df, wh, t) }
+      tables.take(k).foreach(t => Warehouse.append(table(whole, t), wh, t))
       Cli.runHhs(spark, csv, wh, s"$dir/replay_rejects")
       assert(contents(wh) == expected, s"replay after $k append(s)")
     }
@@ -326,6 +330,33 @@ class PipelineSpec extends SparkSpec {
     // the two rows reach the table and the rejects
     val quality = parses(Cli.runQuality(spark, "2023-07-01", qcsv, wh, rej), qcsv)
     assert(quality.nonEmpty && metric(quality, "numOutputRows") == 2L)
+  }
+
+  test("a load onto stored rows runs a fixed set of SQL executions") {
+    import graft.cli.Cli
+    val qHeader = "Facility ID,Hospital Type,Hospital Ownership,Emergency Services,Hospital overall rating"
+    val wh = s"$dir/executions_warehouse"
+    val rej = s"$dir/executions_rejects"
+    Cli.runHhs(spark, writeCsv("executions_history.csv", Seq(hhsHeader,
+      hhsRow("A", "Alpha", "2023-01-06", "10.0"),
+      hhsRow("B", "Beta", "2023-01-06", "20.0")).mkString("\n")), wh, rej)
+    Cli.runQuality(spark, "2023-07-01", writeCsv("executions_quality.csv", Seq(qHeader,
+      "A,Acute Care,Proprietary,Yes,4").mkString("\n")), wh, rej)
+    // a new week, a replayed stored row and a reject
+    val hhs = executions(Cli.runHhs(spark, writeCsv("executions_delta.csv", Seq(hhsHeader,
+      hhsRow("A", "Alpha", "2023-01-13", "11.0"),
+      hhsRow("B", "Beta", "2023-01-06", "20.0"),
+      hhsRow("C", "", "2023-01-13", "5.0")).mkString("\n")), wh, rej))
+    // the same date again: a duplicate, a new facility and a reject
+    val quality = executions(Cli.runQuality(spark, "2023-07-01",
+      writeCsv("executions_replay.csv", Seq(qHeader,
+        "A,Acute Care,Proprietary,Yes,4",
+        "B,Acute Care,Proprietary,No,2",
+        ",Acute Care,Proprietary,Yes,3").mkString("\n")), wh, rej))
+    // the delta's weeks, the three appends and the rejects
+    assert(hhs == 5)
+    // the CSV header lookup that names the columns, the append and the rejects
+    assert(quality == 3)
   }
 
   test("a load reads only the stored bed partitions of its own weeks") {

@@ -578,7 +578,6 @@ object VectorQueries {
       val emb = Tables.embeddings(s, d)
       val qs = adcQueries(emb)
       val adc = ProductQuantizer.adcTopK(emb, qs, book, topK = 5)
-        .select("q_id", "vec_id")
       val corpus = QuantizedKMeans.quantize(emb, "vec_id", "embedding")
       val queries = QuantizedKMeans.quantize(qs, "q_id", "embedding")
         .withColumnRenamed("q", "qv")
@@ -710,7 +709,6 @@ object VectorQueries {
           QuantizedKMeans.dist2(col("q"), col("qv")).as("d2"))
         .withColumn("__rk", row_number().over(wTop))
         .filter(col("__rk") <= 5)
-        .select("q_id", "vec_id")
       recallAt5(exactL2Top5(cz, qz), reranked)
     },
     Some {

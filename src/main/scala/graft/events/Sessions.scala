@@ -3,17 +3,16 @@ package graft.events
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.util.Exact.moneySum
 
 /** Sessionization over the events stream table (gap-based sessions).
   *
-  * Two equivalent implementations:
   *  - `sessionize`: the window-function form (lag → boundary flag →
-  *    running sum). One shuffle keyed by user; per-user time sort inside
-  *    partitions. This is the batch form that also SQL-round-trips for
-  *    the DuckDB oracle.
-  *  - `sessionWindowAgg`: Spark's built-in `session_window` grouping —
-  *    the same operator Structured Streaming uses, so the batch query
-  *    and the streaming query (graft.streaming) share semantics.
+  *    running sum) behind s01. One shuffle keyed by user; per-user time
+  *    sort inside partitions.
+  *  - `sessionWindowAgg`: Spark's built-in `session_window` grouping,
+  *    s02's operator. Structured Streaming runs the same grouping, so a
+  *    watermarked event stream takes this function unchanged.
   *
   * Scale notes: both shuffle once on user_id. Skewed power-users are
   * handled by AQE skew-join/agg splitting; the window form never sorts
@@ -43,10 +42,11 @@ object Sessions {
     sessionize(events, gapSeconds)
       .groupBy("user_id").agg(max(col("session_id")).as("n_sessions"))
 
-  /** Per-session stats via the built-in session_window operator. */
+  /** Per-session stats via the built-in session_window operator;
+    * `total_value` is decimal-exact (`Exact.moneySum`). */
   def sessionWindowAgg(events: DataFrame, gapSeconds: Long): DataFrame =
     events.groupBy(col("user_id"), session_window(col("ts"), s"$gapSeconds seconds"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("total_value"))
+      .agg(count(lit(1)).as("n_events"), moneySum(col("value")).as("total_value"))
       .select(col("user_id"),
         col("session_window.start").as("session_start"),
         col("n_events"), col("total_value"))

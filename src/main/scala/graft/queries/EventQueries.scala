@@ -7,8 +7,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
-/** Sessionization and event-stream analytics (batch form; the streaming
-  * form shares operators via graft.streaming). Gap rule: 30 minutes. */
+/** Sessionization and event-stream analytics. Gap rule: 30 minutes.
+  * s02's operator, `Sessions.sessionWindowAgg`, also runs unchanged on
+  * a watermarked event stream. */
 object EventQueries {
 
   /** Per-user session counts (lag → boundary flag → running sum).
@@ -24,17 +25,12 @@ object EventQueries {
            |  CAST(SUM(CASE WHEN prev_us IS NULL OR us - prev_us > 1800000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions
            |FROM e GROUP BY user_id ORDER BY user_id""".stripMargin))
 
-  /** Per-session aggregates via Spark's session_window operator; the
-    * oracle reconstructs sessions with the equivalent lag/cumsum SQL.
-    * total_value aggregated in decimal for cross-engine exactness. */
+  /** Per-session aggregates via Spark's session_window operator
+    * (`Sessions.sessionWindowAgg`); the oracle reconstructs sessions
+    * with the equivalent lag/cumsum SQL. total_value aggregated in
+    * decimal for cross-engine exactness. */
   val s02SessionWindow = QueryDef("s02_session_window",
-    (s, d) => Tables.events(s, d)
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-      .agg(count(lit(1)).as("n_events"),
-        moneySum(col("value")).as("total_value"))
-      .select(col("user_id"),
-        col("session_window.start").as("session_start"),
-        col("n_events"), col("total_value"))
+    (s, d) => Sessions.sessionWindowAgg(Tables.events(s, d), gapSeconds = 1800)
       .orderBy("user_id", "session_start"),
     Some(s"""WITH e AS (
            |  SELECT user_id, ts, value,

@@ -429,20 +429,15 @@ object TextQueries {
     * and BROADCASTS the distinct benchmark grams — benchmark suites are
     * small by nature, so a 100 TB corpus scan joins against an
     * in-memory gram set with zero shuffle of corpus rows; only the
-    * matched (doc_id, gram) pairs reach the count-distinct aggregate.
+    * matched (doc_id, gram) pairs reach the per-doc count
+    * ([[graft.text.TextDedup.sharedGramCounts]]).
     * Oracle replays with string 3-grams (dd07 precedent: hashed ==
     * string modulo negligible 64-bit collisions). */
   val dc01Decontamination = QueryDef("dc01_decontamination",
     (s, d) => {
-      val grams = Tables.documents(s, d).select(col("doc_id"),
-        explode(graft.text.ShingleHashesExpr.shingleHashes(
-          TextFunctions.tokens(col("text")), 3)).as("g"))
-      val bench = grams.filter(col("doc_id") % 97 === 0).select("g").distinct()
-      grams.filter(col("doc_id") % 97 =!= 0)
-        .join(broadcast(bench), Seq("g"))
-        .groupBy("doc_id")
-        .agg(count_distinct(col("g")).as("n_shared"))
-        .orderBy("doc_id")
+      val docs = Tables.documents(s, d)
+      TextDedup.sharedGramCounts(docs.filter(col("doc_id") % 97 =!= 0),
+        docs.filter(col("doc_id") % 97 === 0), k = 3).orderBy("doc_id")
     },
     Some(s"""WITH ${sqlShingles("", "documents", k = 3, "sh")},
            |bench AS (SELECT DISTINCT s FROM sh WHERE doc_id % 97 = 0)
@@ -534,6 +529,14 @@ object TextQueries {
            |  AND d.doc_id NOT IN (SELECT doc_id FROM contaminated)
            |ORDER BY d.doc_id""".stripMargin))
 
+  /** pii01's input, (doc_id, text): every 10th document's text with a
+    * synthetic email appended. */
+  def piiInput(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+      when(col("doc_id") % 10 === 0,
+        concat(col("text"), lit(" contact user"), col("doc_id"),
+          lit("@example.com now"))).otherwise(col("text")).as("text"))
+
   /** PII REDACTION — the scrubbing pass every training pipeline runs
     * before release. The corpus carries no organic PII, so both engines
     * deterministically inject a synthetic email into every 10th
@@ -544,18 +547,9 @@ object TextQueries {
     * redacted text proves the replacement output matches byte-for-byte,
     * not just the match counts. */
   val pii01Redaction = QueryDef("pii01_redaction",
-    (s, d) => {
-      val re = "[a-z0-9]+@[a-z]+\\.[a-z]+"
-      Tables.documents(s, d)
-        .select(col("doc_id"),
-          when(col("doc_id") % 10 === 0,
-            concat(col("text"), lit(" contact user"), col("doc_id"),
-              lit("@example.com now"))).otherwise(col("text")).as("t"))
-        .select(col("doc_id"),
-          regexp_count(col("t"), lit(re)).cast(LongType).as("n_pii"),
-          md5(regexp_replace(col("t"), re, "[PII]")).as("redacted_fp"))
-        .orderBy("doc_id")
-    },
+    (s, d) => TextFunctions.redactPii(piiInput(Tables.documents(s, d)))
+      .select(col("doc_id"), col("n_pii"), md5(col("text")).as("redacted_fp"))
+      .orderBy("doc_id"),
     Some("""WITH t AS (SELECT doc_id,
            |  CASE WHEN doc_id % 10 = 0
            |       THEN text || ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com now'

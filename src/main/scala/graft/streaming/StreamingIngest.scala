@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
 import graft.etl.Validation
 import graft.warehouse.{HhsPipeline, Schemas, Warehouse}
 import org.apache.hadoop.fs.Path
@@ -13,43 +12,26 @@ final case class UserEvent(user_id: Long, value: Double)
 /** Accumulated per-user state/output. */
 final case class UserTotals(user_id: Long, n_events: Long, total_value: Double)
 
-/** Structured Streaming forms of the engine's ingest and sessionization
-  * (SURVEY §2.11 — the reference is weekly batch; this is the "if
-  * streaming is wanted later" path, built on the same operators).
+/** Structured Streaming state across micro-batches (SURVEY §2.11: the
+  * reference is weekly batch; this is the "if streaming is wanted
+  * later" path, built on the same operators).
+  *
+  * The rule: stateless work on a stream is the batch operator applied
+  * to a streaming frame, so nothing here re-spells it. A row-local or
+  * stream-static operator (`CurationPipeline.filterStage`,
+  * `TextFunctions.redactPii`, `TextDedup.sharedGramCounts`,
+  * `Sessions.sessionWindowAgg` over a watermark) runs on the stream
+  * unchanged, and a per-batch one (`Repetition.repetitionStats`,
+  * `TextDedup.boilerplateStripAgainst`) runs inside
+  * `writeStream.foreachBatch`. This object holds only what keeps state
+  * across micro-batches: keyed state, a watermarked stream-stream
+  * join, ingest against a growing sink, and generational state tables.
   *
   * Scale notes: file-source streaming scales by listing cost — at
-  * production scale use a notification-based source. Watermarked
-  * dropDuplicates bounds state; windowed aggs emit on watermark close.
+  * production scale use a notification-based source. Watermarks bound
+  * dedup and join state.
   */
 object StreamingIngest {
-
-  /** Streaming dedup-ingest: file source → watermark → key dedup within
-    * the watermark — the streaming analogue of the batch anti-join dedup
-    * (D1-D3). */
-  def dedupStream(spark: SparkSession, schema: StructType, srcDir: String,
-                  eventTimeCol: String, watermark: String,
-                  keys: Seq[String]): DataFrame =
-    spark.readStream.schema(schema).parquet(srcDir)
-      .withWatermark(eventTimeCol, watermark)
-      .dropDuplicatesWithinWatermark(keys)
-
-  /** Windowed per-type counts with watermarking — the streaming form of
-    * the weekly report aggregations (A2/A4). */
-  def windowedCounts(events: DataFrame, eventTimeCol: String,
-                     window_ : String, watermark: String): DataFrame =
-    events.withWatermark(eventTimeCol, watermark)
-      .groupBy(window(col(eventTimeCol), window_), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
-
-  /** Gap-based streaming sessionization via session_window — shares
-    * semantics with the batch graft.events.Sessions. */
-  def streamingSessions(events: DataFrame, eventTimeCol: String,
-                        gap: String, watermark: String): DataFrame =
-    events.withWatermark(eventTimeCol, watermark)
-      .groupBy(col("user_id"), session_window(col(eventTimeCol), gap))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"), col("session_window.start").as("session_start"),
-        col("n_events"))
 
   /** Custom keyed state via flatMapGroupsWithState: per-user running
     * totals that emit a record on every update — the shape that covers
@@ -79,9 +61,8 @@ object StreamingIngest {
     * 7 days of a signup), with both sides' state bounded by watermark +
     * interval — the Structured Streaming join shape where the engine
     * can actually EVICT state, unlike an unconstrained equi-join.
-    * Right columns come back prefixed `r_`. Works identically on batch
-    * frames (watermark is a no-op there), which is how the spec proves
-    * stream==batch. */
+    * Right columns come back prefixed `r_`. On batch frames it skips
+    * the watermarks and is the plain interval join. */
   def intervalJoin(left: DataFrame, right: DataFrame, key: String,
                    leftTs: String, rightTs: String,
                    watermark: String, window: String): DataFrame = {
@@ -96,89 +77,6 @@ object StreamingIngest {
       s"$key = r_$key AND r_$rightTs >= $leftTs" +
         s" AND r_$rightTs <= $leftTs + interval $window"))
   }
-
-  /** Streaming corpus curation: the filter stage of
-    * graft.text.CurationPipeline over a document stream, with running
-    * kept/reject counts per source. langId/qualityScore are pure column
-    * expressions, so they run in a stream UNCHANGED — the point of
-    * keeping scoring scan-side: a curation rule deployed on the batch
-    * corpus applies to the live feed with zero reimplementation. (The
-    * dedup stage is the one part that needs the watermarked form —
-    * `dedupStream` keyed on the content fingerprint — because it is a
-    * stateful shuffle, not a map.) */
-  def curationCounts(docs: DataFrame, keepLangs: Seq[String],
-                     minQuality: Double): DataFrame = {
-    import graft.text.TextFunctions
-    docs
-      .withColumn("lang_pred", TextFunctions.langId(col("text")))
-      .withColumn("quality", TextFunctions.qualityScore(col("text")))
-      .withColumn("bucket",
-        when(!col("lang_pred").isin(keepLangs: _*), lit("lang_filtered"))
-          .when(col("quality") < minQuality, lit("low_quality"))
-          .otherwise(lit("kept")))
-      .groupBy("source", "bucket").agg(count(lit(1)).as("n"))
-  }
-
-  /** Streaming PII scrub: the redaction pass (detect count + regex
-    * replace, matching pii01's batch semantics) over a live document
-    * feed. Stateless map — no watermark, no state store: the scrubbed
-    * stream is exactly the batch projection applied per micro-batch,
-    * which is what makes "redact before anything else touches the
-    * feed" a deployable invariant rather than a batch-only audit. */
-  def redactStream(docs: DataFrame, pattern: String,
-                   replacement: String = "[PII]"): DataFrame =
-    docs.select(col("doc_id"), col("source"),
-      regexp_count(col("text"), lit(pattern)).cast("long").as("n_pii"),
-      regexp_replace(col("text"), pattern, replacement).as("text"))
-
-  /** Streaming DECONTAMINATION: per-document count of benchmark grams
-    * present, over a live document feed. The benchmark gram set is the
-    * STATIC side of a stream-static left-semi join — small by nature,
-    * so Spark broadcasts it into every micro-batch and the stage stays
-    * stateless (no watermark, no state store; the per-doc count is the
-    * streaming aggregate). shingle_hashes emits DISTINCT grams per
-    * document, so count(*) after the semi-join equals the distinct
-    * shared-gram count without needing a (streaming-unsupported)
-    * count_distinct. Same hygiene rule as the batch dc01 pass, applied
-    * to the feed with zero reimplementation. */
-  def decontaminationCounts(docs: DataFrame, benchGrams: DataFrame,
-                            k: Int = 3): DataFrame =
-    docs.select(col("doc_id"),
-      explode(graft.text.ShingleHashesExpr.shingleHashes(
-        graft.text.TextFunctions.tokens(col("text")), k)).as("g"))
-      .join(benchGrams.select(col(benchGrams.columns.head).as("g")), Seq("g"), "left_semi")
-      .groupBy("doc_id").agg(count(lit(1)).as("n_shared"))
-
-  /** Streaming REPETITION SIGNALS (rp01's Gopher stats over a live
-    * feed): the stats are DOC-LOCAL — every output row derives from
-    * exactly one input row — so applying the batch operator per
-    * micro-batch via foreachBatch is EXACT, independent of how rows
-    * split across batches. No state store, no watermark; `sink`
-    * receives each micro-batch's finished stats (write to parquet,
-    * push to a topic, …). */
-  def repetitionStatsStream(docs: DataFrame)
-                           (sink: DataFrame => Unit): StreamingQuery =
-    docs.writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch((b: DataFrame, _: Long) =>
-        sink(graft.text.Repetition.repetitionStats(b)))
-      .start()
-
-  /** Streaming BOILERPLATE STRIP (bp01 over a live feed): the segment
-    * blocklist is derived ONCE from the batch corpus
-    * (`TextDedup.boilerplateSegments`) and becomes the static side —
-    * per micro-batch the strip is row-local segmentation + one
-    * broadcastable anti-join + doc-local rebuild, so the pass is
-    * stateless and stream==batch exact whenever the blocklist matches
-    * the batch run's. (Document frequency is a CORPUS property; a
-    * live feed deliberately applies the warehouse-derived rule rather
-    * than re-estimating df inside the stream.) */
-  def boilerplateStripStream(docs: DataFrame, blocklist: DataFrame,
-                             segTokens: Int)
-                            (sink: DataFrame => Unit): StreamingQuery =
-    docs.writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch((b: DataFrame, _: Long) =>
-        sink(graft.text.TextDedup.boilerplateStripAgainst(b, blocklist, segTokens)))
-      .start()
 
   /** STREAMING FIRST-WINS INGEST — the generic form of the HHS
     * pipeline's dedup stage, pinned stream==batch by StreamingSpec on
@@ -458,17 +356,5 @@ object StreamingIngest {
       .map(_.getPath.getName.stripPrefix("gen-").toLong)
       .filter(g => fs.exists(
         new Path(s"$stateDir/gen-$g/_SUCCESS")))
-  }
-
-
-  /** Run a streaming frame to completion against currently-available
-    * input via the memory sink; returns the materialized result. Batch
-    * test harness for streaming semantics. */
-  def runToMemory(df: DataFrame, name: String,
-                  mode: OutputMode = OutputMode.Append): DataFrame = {
-    val q = df.writeStream.outputMode(mode).format("memory")
-      .queryName(name).trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    df.sparkSession.table(name)
   }
 }

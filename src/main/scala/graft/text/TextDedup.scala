@@ -69,6 +69,22 @@ object TextDedup {
       explode(ShingleHashesExpr.shingleHashes(
         TextFunctions.tokens(col(textCol)), k)).as("s"))
 
+  /** Decontamination, dc01's operator: per document (`doc_id`,
+    * `text`), how many of its k-shingle hashes occur in `benchDocs`.
+    * The benchmark gram set is small by nature and broadcasts, so
+    * corpus rows never shuffle for the left-semi join.
+    * `shingle_hashes` emits distinct hashes per document, so count(*)
+    * after the join is the distinct shared-gram count without a
+    * count_distinct, which Structured Streaming lacks: a document
+    * stream runs this unchanged against static benchmark docs.
+    * Documents sharing no gram get no row. */
+  def sharedGramCounts(docs: DataFrame, benchDocs: DataFrame, k: Int): DataFrame = {
+    val bench = hashedShingleRows(benchDocs, k, "doc_id", "text").select("s").distinct()
+    hashedShingleRows(docs, k, "doc_id", "text")
+      .join(broadcast(bench), Seq("s"), "left_semi")
+      .groupBy(col("id").as("doc_id")).agg(count(lit(1)).as("n_shared"))
+  }
+
   /** Exact n-gram Jaccard pairs ≥ threshold. `maxShingleDf` drops
     * shingles appearing in more than that many documents before pair
     * generation (guards the quadratic blowup on degenerate content);
@@ -421,9 +437,10 @@ object TextDedup {
 
   /** The BLOCKLIST half of [[boilerplateStrip]]: segments whose
     * document frequency exceeds `maxDocFreq` (one column `s`).
-    * Computed over the batch corpus, it becomes the STATIC side of the
-    * streaming strip (`StreamingIngest.boilerplateStripStream`) — the
-    * rule derived once from the warehouse applies to the live feed. */
+    * Computed over the batch corpus, it is the static side a document
+    * stream strips against: [[boilerplateStripAgainst]] per
+    * micro-batch, so the rule derived once from the warehouse applies
+    * to the live feed. */
   def boilerplateSegments(docs: DataFrame, segTokens: Int, maxDocFreq: Int,
                           idCol: String = "doc_id",
                           textCol: String = "text"): DataFrame = {

@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StringType}
 
@@ -99,6 +99,16 @@ object TextFunctions {
 
   /** Content fingerprint = md5 of normalized text (exact-dup key). */
   def fingerprint(text: Column): Column = md5(normalize(text))
+
+  /** PII scrub, pii01's operator: `n_pii` counts the lowercase email
+    * addresses in `text`, and `text` comes back with each replaced by
+    * `[PII]`. Row-local codegen'd built-ins (no UDF, no state), so a
+    * document stream runs it unchanged. */
+  def redactPii(docs: DataFrame): DataFrame = {
+    val email = "[a-z0-9]+@[a-z]+\\.[a-z]+"
+    docs.withColumn("n_pii", regexp_count(col("text"), lit(email)).cast(LongType))
+      .withColumn("text", regexp_replace(col("text"), email, "[PII]"))
+  }
 
   /** Polynomial rolling hash (Karp-Rabin) over the normalized text
     * chars: h = Σ c_i · B^(n-1-i) mod M, B=131, M=1e9+7. M is kept in

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
 /** Degenerate-input robustness: EVERY registered query must execute
   * (plan + run to completion) against zero-row tables with the real
   * schemas. This is where empty-aggregate nulls, ANSI division, min/max
@@ -12,7 +10,7 @@ import java.nio.file.{Files, Paths}
 class EmptyInputSpec extends SparkSpec {
 
   private lazy val emptyDir: String = {
-    val d = Files.createTempDirectory(Paths.get("/root/repo/target"), "empty_sf").toString
+    val d = tempDir("empty_sf")
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { t =>
       // preserve the on-disk schema (incl. the events timestamp[ns]

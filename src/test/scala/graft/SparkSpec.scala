@@ -1,8 +1,10 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.graftbridge.GraftSqlBridge
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
@@ -34,6 +36,21 @@ trait SparkSpec extends AnyFunSuite {
   def executions(body: => Unit): Int =
     jobsDuring(body).flatMap(js => Option(js.properties)
       .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))).distinct.size
+
+  /** Run a streaming frame to completion against the input available
+    * now, through the memory sink; returns the materialized result. */
+  def runToMemory(df: DataFrame, name: String,
+                  mode: OutputMode = OutputMode.Append): DataFrame = {
+    df.writeStream.outputMode(mode).format("memory")
+      .queryName(name).trigger(Trigger.AvailableNow()).start().awaitTermination()
+    spark.table(name)
+  }
+
+  /** A fresh directory under the checkout's `target/` (tests fork with
+    * the project base as working directory), as an absolute path. */
+  def tempDir(prefix: String): String =
+    Files.createTempDirectory(Files.createDirectories(Paths.get("target")), prefix)
+      .toAbsolutePath.toString
 }
 
 object SparkSpec {

@@ -10,8 +10,7 @@ import java.nio.file.{Files, Paths}
   * text tables instead of Streamlit widgets). */
 class ReportSpec extends SparkSpec {
 
-  private lazy val dir = Files.createTempDirectory(
-    Paths.get("/root/repo/target"), "report").toString
+  private lazy val dir = tempDir("report")
   private lazy val warehouseDir = s"$dir/warehouse"
 
   /** An HHS CSV row with the eight metric cells `metrics`, in

@@ -30,8 +30,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("bucketed tables join without a shuffle (no Exchange in plan)") {
-    val wh = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "buckets").toString
+    val wh = tempDir("buckets")
     spark.sql("DROP TABLE IF EXISTS b_orders")
     spark.sql("DROP TABLE IF EXISTS b_lineitem")
     Scale.writeBucketed(Tables.orders(spark, sfDir), "b_orders",
@@ -55,8 +54,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("partitioned warehouse writes give partition pruning on week filters") {
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "prune").toString
+    val dir = tempDir("prune")
     // write events partitioned by day (the bedInfo-by-week layout, SURVEY §4)
     graft.Tables.events(spark, sfDir)
       .withColumn("day", col("ts").cast("date"))
@@ -71,8 +69,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("ORC round-trip preserves rows and types; predicate reaches the ORC scan") {
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "orc").toString
+    val dir = tempDir("orc")
     val li = graft.Tables.lineitem(spark, sfDir)
       .select("l_orderkey", "l_partkey", "l_quantity", "l_shipdate")
     li.write.mode("overwrite").orc(s"$dir/li")
@@ -88,8 +85,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("dynamic partition pruning: a dim-side filter prunes fact partitions at runtime") {
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dpp").toString
+    val dir = tempDir("dpp")
     val ev = graft.Tables.events(spark, sfDir)
       .withColumn("day", col("ts").cast("date"))
     ev.write.mode("overwrite").partitionBy("day").parquet(s"$dir/fact")
@@ -139,8 +135,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("clustered layout: selective key range touches <=2 files, not all") {
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "clustered").toString
+    val base = tempDir("clustered")
     val li = graft.Tables.lineitem(spark, sfDir).select("l_orderkey", "l_quantity")
     val maxKey = li.agg(max($"l_orderkey")).head().getLong(0)
     val cond = $"l_orderkey".between(maxKey / 2, maxKey / 2 + maxKey / 50)
@@ -159,8 +154,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("z-order layout: balanced pruning on BOTH dims; 1-D clustering prunes only its own") {
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "zorder").toString
+    val base = tempDir("zorder")
     val li = graft.Tables.lineitem(spark, sfDir)
       .select("l_partkey", "l_suppkey", "l_quantity")
     val dom = li.agg(min($"l_partkey"), max($"l_partkey"),
@@ -207,8 +201,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("compact: many small files -> few, same rows, old files gone") {
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "compact").toString + "/t"
+    val dir = tempDir("compact") + "/t"
     val df = (1 to 10000).map(i => (i.toLong, s"row$i")).toDF("id", "s")
     df.repartition(64).write.parquet(dir) // 64 tiny files
     val sum0 = spark.read.parquet(dir).agg(sum($"id")).head().getLong(0)
@@ -225,8 +218,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("compact: refuses to run over a leftover interrupted-swap dir") {
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "compactguard").toString + "/t"
+    val dir = tempDir("compactguard") + "/t"
     Seq((1L, "a"), (2L, "b")).toDF("id", "s").write.parquet(dir)
     // simulate a crash mid-compaction: the tmp dir may hold the only
     // complete copy, so a retry must fail loudly, not destroy it

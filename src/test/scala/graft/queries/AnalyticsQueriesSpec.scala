@@ -380,9 +380,7 @@ class AnalyticsQueriesSpec extends SparkSpec {
     val docs = counts.zipWithIndex.flatMap { case (c, i) =>
       (0L until c).map(r => (i * 1000L + r, s"t${i}a t${i}b"))
     }
-    val dir = java.nio.file.Files
-      .createTempDirectory(java.nio.file.Paths.get("/root/repo/target"), "gn_edge")
-      .toString
+    val dir = tempDir("gn_edge")
     try {
       docs.toDF("doc_id", "text")
         .withColumn("n_chars", length(col("text")))

@@ -46,6 +46,30 @@ class OracleFragmentsSpec extends AnyFunSuite {
       "scan found no generator in VectorQueries.scala")
   }
 
+  /** Guard: `pattern` matches only in the file ending `owner`, at most
+    * `max` times, and does match there. */
+  private def ownedBy(pattern: scala.util.matching.Regex, owner: String, max: Int = 1) = {
+    val over = SourceScan.overLimit(pattern, mains)(p => if (p.endsWith(owner)) max else 0)
+    assert(over.isEmpty, s"$pattern outside $owner: $over")
+    assert(pattern.findFirstIn(Files.readString(mains.find(_.endsWith(owner)).get)).nonEmpty,
+      s"scan found no $pattern in $owner")
+  }
+
+  test("session_window is spelled only in s02's operator, Sessions.sessionWindowAgg") {
+    // A stream runs the batch operator on a watermarked frame; a second
+    // session_window grouping would drift from the oracle-checked one.
+    ownedBy("""session_window\(""".r, "graft/events/Sessions.scala")
+  }
+
+  test("the [PII] replacement is spelled only in pii01's operator, TextFunctions.redactPii") {
+    // The oracle's single-quoted '[PII]' is SQL, not a Scala literal.
+    ownedBy("\"\\[PII\\]\"".r, "graft/text/TextFunctions.scala")
+  }
+
+  test("the curation reason precedence is spelled only in CurationPipeline.filterStage") {
+    ownedBy("""lit\("lang_filtered"\)""".r, "graft/text/CurationPipeline.scala")
+  }
+
   test("query-file comments state invariants, not review rounds") {
     // Provenance (which review round asked for what) lives in
     // CHANGES.md; a comment states what holds. Every file under

@@ -2,15 +2,18 @@ package graft.streaming
 
 import graft.{SparkSpec, Tables}
 import graft.events.Sessions
+import graft.queries.TextQueries
+import graft.text.{CurationPipeline, Repetition, TextDedup, TextFunctions}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import java.nio.file.{Files, Paths}
 
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val stagingDir = {
-    val d = Files.createTempDirectory(Paths.get("/root/repo/target"), "stream").toString
+    val d = tempDir("stream")
     // stage events (with proper µs timestamps) as the stream source
     Tables.events(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$d/events")
     d
@@ -18,11 +21,17 @@ class StreamingSpec extends SparkSpec {
 
   private def eventsSchema = Tables.events(spark, sfDir).schema
 
+  /** Run `op` on each micro-batch of `stream`, appending its output
+    * to `outDir`: how a per-batch batch operator runs on a stream. */
+  private def foreachBatchTo(stream: DataFrame, outDir: String)(op: DataFrame => DataFrame): Unit =
+    stream.writeStream.trigger(Trigger.AvailableNow())
+      .foreachBatch((b: DataFrame, _: Long) => op(b).write.mode("append").parquet(outDir))
+      .start().awaitTermination()
+
   test("streaming sessionization agrees with batch session counts") {
     val stream = spark.readStream.schema(eventsSchema).parquet(s"$stagingDir/events")
-    val sessions = StreamingIngest.streamingSessions(
-      stream, "ts", "30 minutes", "0 seconds")
-    val got = StreamingIngest.runToMemory(sessions, "stream_sessions", OutputMode.Complete())
+    val sessions = Sessions.sessionWindowAgg(stream.withWatermark("ts", "0 seconds"), 1800)
+    val got = runToMemory(sessions, "stream_sessions", OutputMode.Complete())
       .groupBy("user_id").agg(count(lit(1)).as("n_sessions"))
     val want = Sessions.sessionCounts(Tables.events(spark, sfDir), 1800)
     assert(got.join(want, Seq("user_id"))
@@ -30,22 +39,12 @@ class StreamingSpec extends SparkSpec {
     assert(got.count() == want.count())
   }
 
-  test("watermarked streaming dedup drops in-stream duplicate keys") {
-    val stream = StreamingIngest.dedupStream(spark, eventsSchema,
-      s"$stagingDir/events", "ts", "1 hour", Seq("user_id"))
-    val got = StreamingIngest.runToMemory(stream, "stream_dedup")
-    // one surviving row per user
-    assert(got.groupBy("user_id").count().filter(col("count") > 1).count() == 0)
-    assert(got.select("user_id").distinct().count() ==
-      Tables.events(spark, sfDir).select("user_id").distinct().count())
-  }
-
   test("stateful flatMapGroupsWithState: final per-user totals match batch") {
     import spark.implicits._
     val stream = spark.readStream.schema(eventsSchema).parquet(s"$stagingDir/events")
       .select(col("user_id"), col("value")).as[UserEvent]
     val totals = StreamingIngest.runningUserTotals(stream)
-    val got = StreamingIngest.runToMemory(totals.toDF(), "stream_totals")
+    val got = runToMemory(totals.toDF(), "stream_totals")
       // Append mode emits one row per state update; last per user is final
       .groupBy("user_id").agg(max(col("n_events")).as("n_events"))
     val want = Tables.events(spark, sfDir).groupBy("user_id")
@@ -57,12 +56,11 @@ class StreamingSpec extends SparkSpec {
     val docsDir = s"$stagingDir/documents"
     Tables.documents(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(docsDir)
     val schema = Tables.documents(spark, sfDir).schema
+    def counts(docs: DataFrame) = CurationPipeline.filterStage(docs)
+      .groupBy("source", "bucket").agg(count(lit(1)).as("n"))
     val stream = spark.readStream.schema(schema).parquet(docsDir)
-    val got = StreamingIngest.runToMemory(
-      StreamingIngest.curationCounts(stream, Seq("en"), 0.5),
-      "stream_curation", OutputMode.Complete())
-    val want = StreamingIngest.curationCounts(
-      Tables.documents(spark, sfDir), Seq("en"), 0.5)
+    val got = runToMemory(counts(stream), "stream_curation", OutputMode.Complete())
+    val want = counts(Tables.documents(spark, sfDir))
     assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0)
   }
 
@@ -70,11 +68,11 @@ class StreamingSpec extends SparkSpec {
     val docsDir = s"$stagingDir/documents"
     Tables.documents(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(docsDir)
     val schema = Tables.documents(spark, sfDir).schema
-    val re = "[a-z]+ [a-z]+ [a-z]+" // matches real content on this corpus
+    // pii01's operator on pii01's input
+    def scrub(docs: DataFrame) = TextFunctions.redactPii(TextQueries.piiInput(docs))
     val stream = spark.readStream.schema(schema).parquet(docsDir)
-    val got = StreamingIngest.runToMemory(
-      StreamingIngest.redactStream(stream, re), "stream_redact")
-    val want = StreamingIngest.redactStream(Tables.documents(spark, sfDir), re)
+    val got = runToMemory(scrub(stream), "stream_redact")
+    val want = scrub(Tables.documents(spark, sfDir))
     assert(got.agg(org.apache.spark.sql.functions.sum(col("n_pii")))
       .head().getLong(0) > 0, "pattern must actually match")
     assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0)
@@ -86,15 +84,10 @@ class StreamingSpec extends SparkSpec {
     val schema = Tables.documents(spark, sfDir).schema
     val batch = Tables.documents(spark, sfDir)
     val bench = batch.filter(col("doc_id") % 97 === 0)
-      .select(org.apache.spark.sql.functions.explode(
-        graft.text.ShingleHashesExpr.shingleHashes(
-          graft.text.TextFunctions.tokens(col("text")), 3)).as("g"))
-      .distinct()
     val stream = spark.readStream.schema(schema).parquet(docsDir)
-    val got = StreamingIngest.runToMemory(
-      StreamingIngest.decontaminationCounts(stream, bench),
+    val got = runToMemory(TextDedup.sharedGramCounts(stream, bench, k = 3),
       "stream_decontam", OutputMode.Complete())
-    val want = StreamingIngest.decontaminationCounts(batch, bench)
+    val want = TextDedup.sharedGramCounts(batch, bench, k = 3)
     assert(want.count() > 0, "benchmark grams must hit on this corpus")
     assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0)
   }
@@ -105,22 +98,18 @@ class StreamingSpec extends SparkSpec {
       df.filter(col("event_type") === "purchase").select("user_id", "ts", "event_id"))
     val stream = spark.readStream.schema(eventsSchema).parquet(s"$stagingDir/events")
     val (ss, sp) = sides(stream)
-    val got = StreamingIngest.runToMemory(
+    val got = runToMemory(
       StreamingIngest.intervalJoin(ss, sp, "user_id", "ts", "ts", "0 seconds", "7 days")
         .select("user_id", "event_id", "r_event_id"),
       "stream_interval_join")
+    // batch side: the plain interval join, spelled independently
     val (bs, bp) = sides(Tables.events(spark, sfDir))
-    val want = StreamingIngest.intervalJoin(bs, bp, "user_id", "ts", "ts", "0 seconds", "7 days")
+    val want = bs.join(bp.select(col("user_id"), col("ts").as("r_ts"),
+        col("event_id").as("r_event_id")), "user_id")
+      .filter(expr("r_ts BETWEEN ts AND ts + INTERVAL 7 days"))
       .select("user_id", "event_id", "r_event_id")
     assert(got.count() > 0, "join must produce matches on this corpus")
     assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0)
-  }
-
-  test("windowed counts total matches batch count") {
-    val stream = spark.readStream.schema(eventsSchema).parquet(s"$stagingDir/events")
-    val counts = StreamingIngest.windowedCounts(stream, "ts", "1 hour", "0 seconds")
-    val got = StreamingIngest.runToMemory(counts, "stream_counts", OutputMode.Complete())
-    assert(got.agg(sum("n")).head().getLong(0) == Tables.events(spark, sfDir).count())
   }
 
   test("streaming repetition signals equal the batch operator exactly") {
@@ -133,11 +122,9 @@ class StreamingSpec extends SparkSpec {
     val outDir = s"$stagingDir/out_rp"
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(docsDir)
-    val q = StreamingIngest.repetitionStatsStream(stream)(
-      b => b.write.mode("append").parquet(outDir))
-    q.awaitTermination()
+    foreachBatchTo(stream, outDir)(Repetition.repetitionStats)
     val got = spark.read.parquet(outDir)
-    val want = graft.text.Repetition.repetitionStats(Tables.documents(spark, sfDir))
+    val want = Repetition.repetitionStats(Tables.documents(spark, sfDir))
     assert(got.count() == want.count() && want.count() > 0)
     assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0)
   }
@@ -352,17 +339,15 @@ class StreamingSpec extends SparkSpec {
     val batch = Tables.documents(spark, sfDir)
     // the df>1 blocklist derives from the BATCH corpus; the stream
     // applies it statically — the deployable semantics
-    val blocklist = graft.text.TextDedup.boilerplateSegments(
+    val blocklist = TextDedup.boilerplateSegments(
       batch, segTokens = 5, maxDocFreq = 1)
     assert(blocklist.count() > 0, "corpus must contain cross-doc boilerplate")
     val outDir = s"$stagingDir/out_bp"
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(docsDir)
-    val q = StreamingIngest.boilerplateStripStream(stream, blocklist, segTokens = 5)(
-      b => b.write.mode("append").parquet(outDir))
-    q.awaitTermination()
+    foreachBatchTo(stream, outDir)(TextDedup.boilerplateStripAgainst(_, blocklist, segTokens = 5))
     val got = spark.read.parquet(outDir)
-    val want = graft.text.TextDedup.boilerplateStrip(batch, segTokens = 5, maxDocFreq = 1)
+    val want = TextDedup.boilerplateStrip(batch, segTokens = 5, maxDocFreq = 1)
     assert(got.count() == want.count())
     assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0)
   }

@@ -108,8 +108,7 @@ class SimilaritySpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, sfDir)
     val queries = emb.filter(org.apache.spark.sql.functions.col("vec_id") % 100 === 0)
     val idx = IvfIndex.build(emb, nList = 8)
-    val dir = java.nio.file.Files
-      .createTempDirectory(java.nio.file.Paths.get("/root/repo/target"), "ivf").toString
+    val dir = tempDir("ivf")
     IvfIndex.save(idx, dir)
     val loaded = IvfIndex.load(spark, dir)
     val a = IvfIndex.topK(idx, queries, 5, nProbe = 3)

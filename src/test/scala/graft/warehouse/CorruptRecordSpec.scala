@@ -12,8 +12,7 @@ class CorruptRecordSpec extends SparkSpec {
   import spark.implicits._
 
   test("PERMISSIVE csv scan captures malformed rows in _corrupt_record") {
-    val dir = Files.createTempDirectory(Paths.get("/root/repo/target"), "corrupt")
-    val p = dir.resolve("bad.csv")
+    val p = Paths.get(tempDir("corrupt"), "bad.csv")
     Files.writeString(p, Seq(
       "id,val,day",
       "1,2.5,2024-01-01",

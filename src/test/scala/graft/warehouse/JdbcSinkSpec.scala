@@ -12,8 +12,7 @@ import java.nio.file.{Files, Paths}
 class JdbcSinkSpec extends SparkSpec {
   import spark.implicits._
 
-  private lazy val dbDir = Files.createTempDirectory(
-    Paths.get("/root/repo/target"), "derby").toString
+  private lazy val dbDir = tempDir("derby")
   private lazy val url = s"jdbc:derby:$dbDir/wh;create=true"
 
   test("JDBC round trip: batched append, create-on-first-write, read-back equal") {
@@ -76,7 +75,7 @@ class JdbcSinkSpec extends SparkSpec {
   }
 
   test("JDBC pipeline write: HHS load lands in warehouse tables") {
-    val dir = Files.createTempDirectory(Paths.get("/root/repo/target"), "jdbccsv")
+    val dir = tempDir("jdbccsv")
     val csvPath = s"$dir/hhs.csv"
     val header = Schemas.hhsRawCsv.fieldNames.mkString(",")
     def row(pk: String, name: String) =

@@ -20,8 +20,7 @@ import scala.jdk.CollectionConverters._
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
-  private val dir = Files.createTempDirectory(
-    Paths.get("/root/repo/target"), "fixtures").toString
+  private val dir = tempDir("fixtures")
 
   private def writeCsv(name: String, content: String): String = {
     val p = s"$dir/$name"

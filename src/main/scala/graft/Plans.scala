@@ -203,14 +203,14 @@ object Plans {
     // unicode normalization is a scan-side codegen projection
     Check("f08_unicode_normalize", Seq("unicode_normalize", "Scan parquet"),
       wantNone = Seq("Join", "HashAggregate")),
-    // BPE training (driver-paced loop): each step's argmax is a
-    // TakeOrdered(1) COLLECT in the query's prepare step (the CC
-    // convergence-probe pattern), inlined as literals into the next
-    // rewrite — so the returned merge table is a LocalTableScan of
-    // already-computed rows with no per-step BroadcastNestedLoopJoin.
-    // The training work itself (pair-count aggregations over the
-    // persisted vocab) runs in the per-step collect jobs of prepare,
-    // inside the timed build.
+    // BPE training (driver-paced loop): each step's argmax is one
+    // reduceByKey + takeOrdered(1) job in the query's prepare step,
+    // inlined as literals into the next rewrite — so the returned merge
+    // table is a LocalTableScan of already-computed rows with no
+    // per-step BroadcastNestedLoopJoin. Prepare runs 2 + 2 per step
+    // jobs (the vocab's two shuffle stages, then per step the persisted
+    // vocab's cache build and the step's job): 14 for 6 steps, pinned
+    // in BpeTrainSpec.
     Check("bt01_bpe_train", Seq("LocalTableScan"),
       wantNone = Seq("Window", "BroadcastNestedLoopJoin", "CartesianProduct")),
     // BPE encode rides the trained merge table over the corpus scan;
@@ -453,7 +453,9 @@ object Plans {
       wantNone = Seq("Join")),
     // k-means assignment: centroids BROADCAST (k-bounded nested loop
     // per row, no shuffle); never a sort-merge join or an unguarded
-    // cartesian anywhere in the training chain
+    // cartesian. Training is not in this plan: prepare runs the init
+    // collect and one job per Lloyd round, 4 jobs for 3 rounds, pinned
+    // in QuantizedKMeansSpec.
     Check("km01_kmeans",
       Seq("BroadcastNestedLoopJoin", "BroadcastExchange"),
       wantNone = Seq("SortMergeJoin", "CartesianProduct")),

@@ -450,9 +450,10 @@ object VectorQueries {
     * order-sensitive reductions — unverifiable cross-engine); km01 is
     * the variant that PROVES the distributed assign/update math.
     *
-    * 100 TB: centroids are k×dim and broadcast; assignment is
-    * row-local (no shuffle); each update is one partial-agg shuffle
-    * keyed (cell, dim) emitting k×dim rows regardless of corpus size.
+    * 100 TB: centroids are k×dim and ride with the tasks; assignment
+    * is row-local (no shuffle); each round is one job whose partial
+    * sums tree-merge to k×dim longs regardless of corpus size. The
+    * prepare step runs 1 + iters jobs (QuantizedKMeansSpec pins 4).
     * See graft.vector.QuantizedKMeans. */
   val km01KMeans = QueryDef.prepared("km01_kmeans",
     (s, d) => QuantizedKMeans.centroids(Tables.embeddings(s, d), k = 8, iters = 3))(
@@ -472,8 +473,8 @@ object VectorQueries {
     * 2 updates → final argmin, [[pqChain]]) and joins them.
     *
     * 100 TB: all 4 subspaces train and encode in one long-format pass
-    * keyed by sub_id (broadcast codebooks, row-local argmin,
-    * (sub, cell, dim)-keyed updates); production trains on a capped
+    * keyed by sub_id (codebooks ride with the tasks, row-local
+    * argmin, one job per Lloyd round); production trains on a capped
     * sample and runs one full-corpus encode pass. */
   val vq02ProductQuant = QueryDef.prepared("vq02_product_quant",
     pqTrain(m = 4, k = 4, iters = 2))(

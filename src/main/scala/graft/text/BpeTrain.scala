@@ -1,8 +1,10 @@
 package graft.text
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Distributed BPE merge LEARNING (the training side of x15's
   * merge-applying tokenizer): iteratively find the most frequent
@@ -19,11 +21,11 @@ import org.apache.spark.sql.types.LongType
   * restricted to `[a-z]+` words so `|` can never collide with a symbol.
   *
   * Scale shape: the corpus collapses to (word, cnt) ONCE (the only
-  * scan of the raw text); per merge step there is one pair-count
-  * partial/final aggregation over the vocabulary (map-side combined,
-  * keys are tiny symbol pairs), one TakeOrdered(1) for the argmax, and
-  * one broadcast of the single winning pair back into a row-local
-  * `replace`. At 100 TB the text scan dominates and happens once; the
+  * scan of the raw text); each merge step is ONE job over the
+  * vocabulary: a map-side combined pair count (keys are tiny symbol
+  * pairs) and a `takeOrdered(1)` argmax, whose single winning pair
+  * returns as literals into a row-local `replace`. At 100 TB the text
+  * scan dominates and happens once; the
   * iterations touch only the vocabulary, which is orders of magnitude
   * smaller than the corpus (and is persisted per step — see
   * learnMerges). Exact integer counts + a total tie-break make every
@@ -41,7 +43,7 @@ object BpeTrain {
       .groupBy("w").agg(count(lit(1)).as("cnt"))
 
   /** `cat` → `|c||a||t|` (see class doc for why this layout). */
-  private def encode(w: org.apache.spark.sql.Column) =
+  private[text] def encode(w: org.apache.spark.sql.Column) =
     concat(lit("|"), array_join(
       transform(sequence(lit(1), length(w)), i => w.substr(i, lit(1))), "||"),
       lit("|"))
@@ -51,25 +53,33 @@ object BpeTrain {
   def learnMerges(docs: DataFrame, textCol: String, nMerges: Int): DataFrame =
     learnMergesAndVocab(docs, textCol, nMerges)._1
 
-  /** One merge step's argmax over an encoded vocabulary `(w, cnt,
-    * enc)`: the 1-row most-frequent adjacent pair, total (n desc, a, b)
-    * tie-break. Factored out so the TRAINING-side plan shape stays
-    * pinnable: this frame executes as a per-step collect in the
-    * prepare step and never appears in bt01/bt02's plan explain —
-    * BpeTrainSpec pins its plan here
-    * (row-local pair explode → partial-agg → TakeOrdered(1); no
-    * Window, no extra shuffle) so a shape regression in the argmax
-    * can't hide behind the LocalTableScan. */
-  private[graft] def stepArgmax(v: DataFrame): DataFrame = v
-    .select(col("cnt"),
-      split(trim(col("enc"), "|"), "\\|\\|").as("syms"))
-    .select(col("cnt"), explode(zip_with(
-      slice(col("syms"), lit(1), size(col("syms")) - 1),
-      slice(col("syms"), lit(2), size(col("syms")) - 1),
-      (x, y) => struct(x.as("a"), y.as("b")))).as("p"))
-    .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-    .agg(sum(col("cnt")).as("n"))
-    .orderBy(col("n").desc, col("a"), col("b")).limit(1)
+  /** One merge step's pair counts over an encoded vocabulary `(w, cnt,
+    * enc)`: every adjacent symbol pair with its exact count, summed by
+    * `reduceByKey` (map-side combined; `Math.addExact`, so an overflow
+    * throws as ANSI `sum` does). Symbols split as
+    * `split(trim(enc, '|'), '\\|\\|')` does in SQL. */
+  private[graft] def pairCounts(v: DataFrame): RDD[((String, String), Long)] =
+    v.select(col("cnt"), col("enc")).queryExecution.toRdd.mapPartitions { it =>
+      val bar = UTF8String.fromString("|")
+      it.flatMap { r =>
+        val syms = r.getUTF8String(1).trim(bar).toString.split("\\|\\|", -1)
+        val cnt = r.getLong(0)
+        (1 until syms.length).iterator.map(i => ((syms(i - 1), syms(i)), cnt))
+      }
+    }.reduceByKey(Math.addExact(_: Long, _: Long))
+
+  /** The merge order: count descending, then (a, b). Symbols compare
+    * as `String`s, which for the `[a-z]` alphabet is Spark's binary
+    * UTF-8 string order, so the oracle's `ORDER BY n DESC, a, b` picks
+    * the same pair. */
+  private val mergeOrder: Ordering[((String, String), Long)] =
+    Ordering.by { case ((a, b), n) => (-n, a, b) }
+
+  /** One merge step's argmax: the most frequent adjacent pair with its
+    * count, or None when no word has two symbols. ONE Spark job — the
+    * pair-count shuffle stage and a `takeOrdered(1)` result stage. */
+  private[graft] def stepArgmax(v: DataFrame): Option[((String, String), Long)] =
+    pairCounts(v).takeOrdered(1)(mergeOrder).headOption
 
   /** Learn merges AND return the post-merge encoded vocabulary
     * `(w, cnt, enc)` — the artifact an ENCODER consumes (bt02): the
@@ -80,21 +90,16 @@ object BpeTrain {
                           nMerges: Int): (DataFrame, DataFrame) = {
     var v = vocab(docs, textCol)
       .select(col("w"), col("cnt"), encode(col("w")).as("enc"))
-    // Driver-paced argmax loop: the winning pair is ONE row per step.
-    // Kept lazy, it would be paid for twice over — the 1-row frame
-    // would feed a per-step crossJoin(broadcast(best)) AND the
-    // returned merge table, two subtrees a BroadcastExchange never
-    // ReusedExchange-dedupes, so the whole vocab pair-count
-    // aggregation would execute twice per step, behind two scheduler
-    // barriers (cache build + broadcast build). Collecting the argmax
-    // to the driver (the CC convergence-probe pattern — a 1-row
-    // aggregate, legal at any corpus size) makes each step exactly ONE
-    // job: the TakeOrdered(1) collect, whose action also materializes
-    // that step's vocab cache. The rewrite then inlines the winner as
-    // string LITERALS — no per-step BroadcastNestedLoopJoin in the
-    // plan, and the merge table is a LocalTableScan of
-    // already-computed rows. Merge decisions equal the broadcast
-    // form's: same aggregation, same total (n desc, a, b) tie-break.
+    // Driver-paced argmax loop: the winning pair is one row per step,
+    // collected to the driver and inlined into the next rewrite as
+    // string LITERALS, so no per-step BroadcastNestedLoopJoin enters
+    // the plan and the merge table is a LocalTableScan of
+    // already-computed rows. Each step runs two jobs: adaptive
+    // execution builds the newly persisted vocab's cache as a
+    // table-cache query stage, its own job, before [[stepArgmax]]'s
+    // one job reads it. The first step adds the vocabulary
+    // aggregation's two shuffle-stage jobs, so a run of n steps runs
+    // 2 + 2n jobs (BpeTrainSpec pins bt01 and bt02 at 14).
     val found = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var exhausted = false
     // step k−1's cached vocab is dead once step k's collect completes
@@ -110,23 +115,21 @@ object BpeTrain {
         // step consumes the previous vocab for pair counting, and the
         // final vocab feeds bt02's encoder join)
         v = org.apache.spark.sql.graftbridge.GraftSqlBridge.sharedInPlan(v)
-        val top = stepArgmax(v).collect()
-        // this step's collect materialized v's cache; the previous
+        val top = stepArgmax(v)
+        // this step's job materialized v's cache; the previous
         // step's cached vocab can no longer be referenced by anything
         prevVocab.foreach(_.unpersist(false))
         prevVocab = Some(v)
-        if (top.isEmpty) {
-          // no adjacent pair anywhere (all words single-symbol): the
-          // old crossJoin-with-empty left an EMPTY vocab and no merge
-          // rows from this step on — preserve both
-          exhausted = true
-          v = v.limit(0)
-        } else {
-          val (a, b, n) =
-            (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-          found += ((step, a, b, n))
-          v = v.select(col("w"), col("cnt"),
-            replace(col("enc"), lit(s"|$a||$b|"), lit(s"|$a$b|")).as("enc"))
+        top match {
+          case None =>
+            // no adjacent pair anywhere (all words single-symbol): the
+            // vocab empties and no merge rows follow
+            exhausted = true
+            v = v.limit(0)
+          case Some(((a, b), n)) =>
+            found += ((step, a, b, n))
+            v = v.select(col("w"), col("cnt"),
+              replace(col("enc"), lit(s"|$a||$b|"), lit(s"|$a$b|")).as("enc"))
         }
       }
     }

@@ -41,12 +41,29 @@ case class IntL2Expr(left: Expression, right: Expression)
   override def dataType: DataType = LongType
   override def prettyName: String = "int_l2"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    IntL2Expr.sqDist(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val owner = IntL2Expr.getClass.getName.stripSuffix("$")
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $owner.sqDist($a, $b);")
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): IntL2Expr =
+    copy(left = newLeft, right = newRight)
+}
+
+object IntL2Expr {
+  /** Σ (xᵢ−yᵢ)² in 64-bit integer arithmetic — the one loop behind the
+    * interpreted and generated expression paths and the Lloyd round
+    * kernel ([[QuantizedKMeans]]). Throws on a length mismatch or a
+    * null element. */
+  def sqDist(x: ArrayData, y: ArrayData): Long = {
     val n = x.numElements()
-    require(y.numElements() == n,
-      s"int_l2: length mismatch ($n vs ${y.numElements()})")
+    if (y.numElements() != n)
+      throw new IllegalArgumentException(
+        s"int_l2: length mismatch ($n vs ${y.numElements()})")
     var acc = 0L
     var i = 0
     while (i < n) {
@@ -65,38 +82,6 @@ case class IntL2Expr(left: Expression, right: Expression)
     acc
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val d = ctx.freshName("d")
-      val acc = ctx.freshName("acc")
-      s"""
-         |final int $n = $a.numElements();
-         |if ($b.numElements() != $n) {
-         |  throw new IllegalArgumentException(
-         |    "int_l2: length mismatch (" + $n + " vs " + $b.numElements() + ")");
-         |}
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.isNullAt($i) || $b.isNullAt($i)) {
-         |    throw new IllegalArgumentException(
-         |      "int_l2: null element at index " + $i + " - inputs must be"
-         |        + " non-null-element bigint arrays");
-         |  }
-         |  final long $d = $a.getLong($i) - $b.getLong($i);
-         |  $acc += $d * $d;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): IntL2Expr =
-    copy(left = newLeft, right = newRight)
-}
-
-object IntL2Expr {
   /** Column wrapper. */
   def l2(a: Column, b: Column): Column =
     GraftSqlBridge.column(IntL2Expr(

@@ -23,11 +23,10 @@ import org.apache.spark.sql.functions._
   * vector explodes once into m (sub_id, subvector) rows, and every
   * stage keys by sub_id, so a Lloyd round or an encode scans the
   * corpus once whatever m is —
-  *  - TRAIN: per Lloyd round, ONE corpus scan; assignment is a
-  *    broadcast join against the m×k codebook rows (row-local argmin,
-  *    no corpus shuffle); the update is one partial-agg shuffle keyed
-  *    (sub_id, cell, dim) whose output is m×k×(dim/m) = k×dim rows
-  *    regardless of corpus size.
+  *  - TRAIN: per Lloyd round, ONE corpus scan in ONE job; the m×k
+  *    codebook rides with the tasks (row-local argmin, no corpus
+  *    shuffle) and the partial sums tree-merge to m×k×(dim/m) = k×dim
+  *    longs regardless of corpus size.
   *  - ENCODE: one scan, one broadcast argmin — m codes per vector.
   * At 100 TB you'd train codebooks on a capped sample and run ONE
   * full-corpus encode pass — that recipe is the `trainMod` parameter
@@ -80,9 +79,8 @@ object ProductQuantizer {
   /** All m codebooks, trained simultaneously by the
     * [[QuantizedKMeans]] Lloyd core keyed by sub_id. Every subspace
     * starts from the same k lowest-id vectors of the training slice,
-    * so the init slices them once. Each round is one corpus scan, one
-    * (sub, cell, dim)-keyed partial-agg shuffle and one collect of the
-    * m×k-row codebook. `dims` must be the vector length and divide
+    * so the init slices them once. Each round is one job: one corpus
+    * scan and a tree merge of the m×k cells' partial sums. `dims` must be the vector length and divide
     * evenly by `m` (slice would silently truncate otherwise — guarded
     * in-plan on every row).
     *
@@ -100,7 +98,7 @@ object ProductQuantizer {
     val slice = if (trainMod == 1) guarded
       else guarded.filter(pmod(col(idCol), lit(trainMod)) === 0)
     Codebooks(QuantizedKMeans.lloyd(subspaces(slice, dims, m, idCol, vecCol), Seq("sub_id"),
-      idCol, subspaces(slice.orderBy(col(idCol)).limit(k), dims, m, idCol, vecCol), iters),
+      subspaces(slice.orderBy(col(idCol)).limit(k), dims, m, idCol, vecCol), iters),
       dims, m, k)
   }
 

@@ -3,6 +3,9 @@ package graft.vector
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** Deterministic, integer-exact Lloyd's k-means over an embedding
@@ -21,16 +24,16 @@ import scala.jdk.CollectionConverters._
   *  - initial centroids are the k lowest-id vectors (no seed, no
   *    sampling) — the classic reproducible-baseline init;
   *  - argmin ties break by cell id, and centroid updates use exact
-  *    floor division ((s − pmod(s, n)) div n), so every assignment and
+  *    floor division (floorDiv(s, n)), so every assignment and
   *    every new coordinate is a total deterministic function of the
   *    input.
   *
   * Scale shape (the part ML KMeans also gets right, here made
-  * explicit): centroids are k×dim — broadcast; ASSIGNMENT is row-local
-  * (a broadcast nested loop over k per vector, no shuffle); UPDATE is
-  * one partial-agg shuffle keyed by (cell, dim) whose output is
-  * k×dim rows regardless of corpus size. Per round the corpus is
-  * scanned once.
+  * explicit): centroids are k×dim and ride with the tasks; a training
+  * round scans the corpus once in one job, assigning and summing
+  * row-locally with no shuffle, and merges k×dim partial sums per key
+  * by tree reduction regardless of corpus size. The final assignment
+  * ([[assignTo]]) is a broadcast nested loop over k per vector.
   *
   * One Lloyd core ([[lloyd]], [[nearest]], [[codebook]]) serves both
   * this trainer and [[ProductQuantizer]]: a codebook may carry key
@@ -59,7 +62,7 @@ object QuantizedKMeans {
     * codebook is k×dim longs per key at any corpus size (k ≤ 64
     * everywhere in graft), so holding it on the driver is bounded and
     * its broadcast builds with no job. */
-  private def codebook(spark: SparkSession, keys: Seq[String], rows: Seq[Row]): DataFrame = {
+  private[vector] def codebook(spark: SparkSession, keys: Seq[String], rows: Seq[Row]): DataFrame = {
     val schema = StructType((keys :+ "cell_id").map(StructField(_, LongType, nullable = false)) :+
       StructField("c", ArrayType(LongType, containsNull = true)))
     spark.createDataFrame(
@@ -87,41 +90,86 @@ object QuantizedKMeans {
       .select((by ++ keys).map(col) ++
         Seq(col("m.cell_id").as("cell_id"), col("m.d2").as("d2")): _*)
 
-  /** `iters` Lloyd rounds over `q` (idCol, keys…, q: array<bigint>)
-    * from the centroids `init`: per key, its rows in id order become
-    * cells 0..k−1 (a collect of an orderBy().limit(), and any row-local
-    * step after it, keeps that order). Each round assigns every row to
-    * its [[nearest]] cell and recomputes each non-empty cell as the
-    * exact floor-div mean per coordinate; a cell that loses every
-    * member disappears. Each round is one job — the collect of the
-    * new codebook, fed back through [[codebook]] — so every plan stays
-    * flat and nothing is persisted. Returns the final codebook. */
-  private[vector] def lloyd(q: DataFrame, keys: Seq[String], idCol: String,
-                            init: DataFrame, iters: Int): DataFrame = {
-    val cells = scala.collection.mutable.Map.empty[Seq[Long], Long]
-    val spark = q.sparkSession
-    var cents = codebook(spark, keys,
-      init.select((keys :+ "q").map(col): _*).collect().toSeq.map { r =>
-        val key = keys.indices.map(r.getLong)
-        val cell = cells.getOrElse(key, 0L)
-        cells(key) = cell + 1
-        Row.fromSeq(key ++ Seq(cell, r.getSeq[Long](keys.size)))
-      })
-    val ks = keys.map(col)
-    for (_ <- 1 to iters) {
-      cents = codebook(spark, keys, nearest(q, cents, keys, Seq(idCol, "q"))
-        .select(ks ++ Seq(col("cell_id"), posexplode(col("q")).as(Seq("i", "x"))): _*)
-        .groupBy(ks ++ Seq(col("cell_id"), col("i")): _*)
-        .agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
-        .select(ks ++ Seq(col("cell_id"), col("i"),
-          expr("(s - pmod(s, n)) div n").as("v")): _*)
-        .groupBy(ks :+ col("cell_id"): _*)
-        .agg(sort_array(collect_list(struct(col("i"), col("v")))).as("sv"))
-        .select(ks ++ Seq(col("cell_id"),
-          transform(col("sv"), s => s.getField("v")).as("c")): _*)
-        .collect().toSeq)
+  /** One Lloyd round's per-key partials: per cell position of the
+    * round's codebook, a member count and exact coordinate sums. */
+  private type Partials = mutable.HashMap[Seq[Long], (Array[Long], Array[Array[Long]])]
+
+  /** Adds `b` into `a`; every sum is `Math.addExact`, so an overflow
+    * throws as ANSI `sum` does. */
+  private def merge(a: Partials, b: Partials): Partials = {
+    b.foreach { case (key, (bn, bs)) =>
+      a.get(key) match {
+        case None => a(key) = (bn, bs)
+        case Some((an, as)) =>
+          for (p <- an.indices) {
+            an(p) = Math.addExact(an(p), bn(p))
+            for (i <- as(p).indices) as(p)(i) = Math.addExact(as(p)(i), bs(p)(i))
+          }
+      }
     }
-    cents
+    a
+  }
+
+  /** `iters` Lloyd rounds over `q` (keys…, q: array<bigint>), one row
+    * per vector and key, from the centroids `init`: per key, its rows
+    * in id order become cells 0..k−1 (a collect of an
+    * orderBy().limit(), and any row-local step after it, keeps that
+    * order). Each round is ONE Spark job, Spark ML's KMeans shape:
+    * every partition assigns its rows to their nearest cell of the
+    * codebook its tasks carry ([[IntL2Expr.sqDist]]; ties → lowest cell
+    * id; a row whose key has no codebook drops, as an inner join would)
+    * and sums a count and exact coordinates per (keys…, cell); a
+    * `treeAggregate` merges the partials, k×dim longs per key at any
+    * corpus size, and the driver takes each new coordinate as
+    * `Math.floorDiv(s, n)`. A cell that loses every member disappears.
+    * The row RDD is planned once and nothing is persisted. Returns the
+    * final codebook; the init collect plus the rounds run 1 + iters
+    * jobs when `q` plans without an exchange (km01, nn10). */
+  private[vector] def lloyd(q: DataFrame, keys: Seq[String],
+                            init: DataFrame, iters: Int): DataFrame = {
+    val nKeys = keys.size
+    val seeded = mutable.LinkedHashMap.empty[Seq[Long], mutable.ArrayBuffer[ArrayData]]
+    init.select((keys :+ "q").map(col): _*).collect().foreach { r =>
+      seeded.getOrElseUpdate((0 until nKeys).map(r.getLong), mutable.ArrayBuffer.empty) +=
+        new GenericArrayData(r.getSeq[Any](nKeys).toArray)
+    }
+    // per key: cell ids ascending, and their centroids
+    var book: Map[Seq[Long], (Array[Long], Array[ArrayData])] = seeded.map {
+      case (key, cs) => key -> (cs.indices.map(_.toLong).toArray, cs.toArray)
+    }.toMap
+    lazy val rows = q.select((keys :+ "q").map(col): _*).queryExecution.toRdd
+    for (_ <- 1 to iters) {
+      val cents = book.map { case (key, (_, cs)) => key -> cs }
+      val sums = rows.mapPartitions { it =>
+        val part: Partials = mutable.HashMap.empty
+        it.filterNot(r => (0 to nKeys).exists(r.isNullAt)).foreach { r =>
+          val key = (0 until nKeys).map(r.getLong)
+          cents.get(key).foreach { cs =>
+            val x = r.getArray(nKeys)
+            var best = 0
+            var bestD = IntL2Expr.sqDist(x, cs(0))
+            for (p <- 1 until cs.length) {
+              val d = IntL2Expr.sqDist(x, cs(p))
+              if (d < bestD) { best = p; bestD = d }
+            }
+            val (n, s) = part.getOrElseUpdate(key, (new Array[Long](cs.length),
+              cs.map(c => new Array[Long](c.numElements()))))
+            n(best) = Math.addExact(n(best), 1L)
+            for (i <- s(best).indices) s(best)(i) = Math.addExact(s(best)(i), x.getLong(i))
+          }
+        }
+        Iterator.single(part)
+      }.treeAggregate(mutable.HashMap.empty: Partials)(merge, merge)
+      book = sums.iterator.map { case (key, (n, s)) =>
+        val kept = n.indices.filter(n(_) > 0)
+        key -> (kept.map(book(key)._1).toArray, kept.map { p =>
+          UnsafeArrayData.fromPrimitiveArray(s(p).map(Math.floorDiv(_, n(p)))): ArrayData
+        }.toArray)
+      }.toMap
+    }
+    codebook(q.sparkSession, keys, book.toSeq.flatMap { case (key, (ids, cs)) =>
+      ids.indices.map(p => Row.fromSeq(key ++ Seq(ids(p), cs(p).toSeq[Any](LongType))))
+    })
   }
 
   /** Train the codebook alone: `iters` Lloyd rounds from the k
@@ -132,7 +180,7 @@ object QuantizedKMeans {
                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(k >= 1 && iters >= 0, s"need k >= 1, iters >= 0; got $k, $iters")
     val q = quantize(df, idCol, vecCol)
-    lloyd(q, Nil, idCol, q.orderBy(col(idCol)).limit(k), iters)
+    lloyd(q, Nil, q.orderBy(col(idCol)).limit(k), iters)
   }
 
   /** Exact quantized squared distance from every row of `df` to EVERY

@@ -1,6 +1,11 @@
 package graft.warehouse
 
+import com.univocity.parsers.csv.CsvParser
 import graft.etl.{Cleaning, Dedup, Validation}
+import java.io.{BufferedReader, InputStreamReader}
+import java.nio.charset.StandardCharsets
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.catalyst.csv.CSVOptions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -20,12 +25,38 @@ import org.apache.spark.sql.types._
 object QualityPipeline {
 
   /** S2 — projected scan: only the 5 consumed columns reach the reader
-    * (reference: load_quality.py:98-99 usecols). */
-  def readRaw(spark: SparkSession, csvPath: String): DataFrame =
+    * (reference: load_quality.py:98-99 usecols), selected by name. The
+    * header is read on the driver, so the reader gets an all-string
+    * schema and builds the frame with no Spark job; a file without one
+    * of the 5 columns fails here, naming it. */
+  def readRaw(spark: SparkSession, csvPath: String): DataFrame = {
+    val header = headerOf(spark, csvPath)
+    val missing = Schemas.qualityRawCsv.fieldNames.filterNot(header.contains)
+    require(missing.isEmpty, s"quality CSV $csvPath lacks column(s) " +
+      s"${missing.mkString("'", "', '", "'")}; its header is ${header.mkString(",")}")
     spark.read
       .option("header", "true")
+      .schema(StructType(header.map(StructField(_, StringType))))
       .csv(csvPath)
       .select(Schemas.qualityRawCsv.fieldNames.toIndexedSeq.map(col): _*)
+  }
+
+  /** The column names in the first line of the file at `csvPath`,
+    * parsed with the CSV reader's own default settings; an empty cell
+    * is named `_c<i>`, as the reader names it. */
+  private def headerOf(spark: SparkSession, csvPath: String): Seq[String] = {
+    val path = new Path(csvPath)
+    val in = new BufferedReader(new InputStreamReader(
+      path.getFileSystem(spark.sparkContext.hadoopConfiguration).open(path),
+      StandardCharsets.UTF_8))
+    val line = try in.readLine() finally in.close()
+    require(line != null, s"quality CSV $csvPath is empty")
+    val settings = new CSVOptions(Map.empty[String, String], columnPruning = true,
+      spark.conf.get("spark.sql.session.timeZone")).asParserSettings
+    new CsvParser(settings).parseLine(line).toSeq.zipWithIndex.map {
+      case (name, i) => if (name == null || name.isEmpty) s"_c$i" else name
+    }
+  }
 
   /** P2 rename, P6 'Not Available'→"0", P7 Yes/No→bool, P8 cast,
     * P3 literal data_date (reference: load_quality.py:102-107). */

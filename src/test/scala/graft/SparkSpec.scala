@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -32,6 +32,19 @@ trait SparkSpec extends AnyFunSuite {
     starts.asScala.toSeq
   }
 
+  /** The jobs `query`'s prepare step runs over the test corpus, in
+    * each of 3 warm runs from [[Runner.reset]]. One run goes first
+    * uncounted: the session's first read of a parquet table infers its
+    * schema in a job, once per table. */
+  def prepareJobs(query: QueryDef): Seq[Int] = {
+    Runner.reset(spark)
+    query.prepare(spark, sfDir)
+    (1 to 3).map { _ =>
+      Runner.reset(spark)
+      jobsDuring(query.prepare(spark, sfDir)).size
+    }
+  }
+
   /** The job-launching SQL executions `body` runs. */
   def executions(body: => Unit): Int =
     jobsDuring(body).flatMap(js => Option(js.properties)
@@ -47,13 +60,20 @@ trait SparkSpec extends AnyFunSuite {
   }
 
   /** A fresh directory under the checkout's `target/` (tests fork with
-    * the project base as working directory), as an absolute path. */
-  def tempDir(prefix: String): String =
-    Files.createTempDirectory(Files.createDirectories(Paths.get("target")), prefix)
-      .toAbsolutePath.toString
+    * the project base as working directory), as an absolute path. It is
+    * deleted when the JVM exits. */
+  def tempDir(prefix: String): String = {
+    val dir = Files.createTempDirectory(Files.createDirectories(Paths.get("target")), prefix)
+      .toAbsolutePath
+    SparkSpec.tempDirs.add(dir)
+    dir.toString
+  }
 }
 
 object SparkSpec {
+  private val tempDirs = new ConcurrentLinkedQueue[Path]()
+  sys.addShutdownHook(tempDirs.forEach(dir => scala.util.Try(Runner.deleteTree(dir))))
+
   lazy val session: SparkSession = {
     val s = GraftSession.local(4)
     s.sparkContext.setLogLevel("WARN")

@@ -1,7 +1,46 @@
 package graft.text
 
-import graft.SparkSpec
+import graft.{SparkSpec, Tables}
+import graft.queries.TextQueries
+import org.apache.spark.ShuffleDependency
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+/** The DataFrame merge step the one-job RDD step replaced, kept as the
+  * reference it is checked against: row-local pair explode →
+  * partial/final aggregate → TakeOrdered(1), collected per step. */
+object DataFrameBpe {
+  def stepArgmax(v: DataFrame): DataFrame = v
+    .select(col("cnt"),
+      split(trim(col("enc"), "|"), "\\|\\|").as("syms"))
+    .select(col("cnt"), explode(zip_with(
+      slice(col("syms"), lit(1), size(col("syms")) - 1),
+      slice(col("syms"), lit(2), size(col("syms")) - 1),
+      (x, y) => struct(x.as("a"), y.as("b")))).as("p"))
+    .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+    .agg(sum(col("cnt")).as("n"))
+    .orderBy(col("n").desc, col("a"), col("b")).limit(1)
+
+  /** The merge table (step, a, b, merged, n) of `nMerges` steps. */
+  def merges(docs: DataFrame, nMerges: Int): Seq[(Long, String, String, String, Long)] = {
+    var v = BpeTrain.vocab(docs, "text")
+      .select(col("w"), col("cnt"), BpeTrain.encode(col("w")).as("enc"))
+    val found = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, Long)]
+    var exhausted = false
+    for (step <- 1 to nMerges if !exhausted) {
+      stepArgmax(v).collect().headOption match {
+        case None => exhausted = true
+        case Some(r) =>
+          val (a, b) = (r.getString(0), r.getString(1))
+          found += ((step.toLong, a, b, a + b, r.getLong(2)))
+          v = v.select(col("w"), col("cnt"),
+            replace(col("enc"), lit(s"|$a||$b|"), lit(s"|$a$b|")).as("enc"))
+      }
+    }
+    found.toSeq
+  }
+}
 
 class BpeTrainSpec extends SparkSpec {
   import spark.implicits._
@@ -85,21 +124,51 @@ class BpeTrainSpec extends SparkSpec {
     assert(one == many)
   }
 
-  test("per-step argmax plan: pair explode + partial agg + TakeOrdered, no Window") {
-    // ADVICE r16: since the driver-paced rewrite the training subplan
-    // never appears in bt01/bt02's final explain, so its shape is
-    // pinned HERE, on the step frame itself — a Window or an extra
-    // global sort sneaking into the argmax would otherwise regress
-    // unaudited behind the LocalTableScan.
-    val docs = Seq((1L, "abab abc")).toDF("doc_id", "text")
-    val v = BpeTrain.vocab(docs, "text")
-      .select(col("w"), col("cnt"), lit("|a||b|").as("enc"))
-    val plan = BpeTrain.stepArgmax(v).queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    assert(plan.contains("TakeOrderedAndProject"),
-      s"argmax must stay a true top-1, not a global sort:\n$plan")
-    assert(plan.contains("HashAggregate"),
-      s"pair counts must partial-aggregate before the shuffle:\n$plan")
-    assert(!plan.contains("Window"), s"no window may enter the argmax:\n$plan")
+  test("one-job merge steps equal the DataFrame steps: ties, exhaustion, repartition(7)") {
+    val fixtures = Seq(
+      Seq((1L, "ba xc")) -> 1,                       // a count tie at step 1
+      Seq((1L, "abab abc"), (2L, "abab")) -> 3,
+      Seq((1L, "ab cd ef"), (2L, "cd ab")) -> 4,     // ties at every step
+      Seq((1L, "ab a")) -> 3)                        // runs out of pairs at step 2
+    fixtures.foreach { case (rows, n) =>
+      val docs = rows.toDF("doc_id", "text")
+      assert(merges(docs, n) == DataFrameBpe.merges(docs, n), rows)
+    }
+    val corpus = Tables.documents(spark, sfDir)
+    val want = DataFrameBpe.merges(corpus, 6)
+    assert(want.size == 6)
+    assert(merges(corpus, 6) == want && merges(corpus.repartition(7), 6) == want)
+  }
+
+  test("a merge step is a map-side combined pair count and a top-1 in ONE job") {
+    val v = Seq(("abab", 2L, "|a||b||a||b|"), ("abc", 1L, "|a||b||c|"), ("ba", 3L, "|b||a|"))
+      .toDF("w", "cnt", "enc")
+    // one shuffle in the lineage, combined map-side: no Window, sort or
+    // second exchange sits between the vocabulary and the argmax
+    def shuffles(rdd: RDD[_]): Seq[ShuffleDependency[_, _, _]] =
+      rdd.dependencies.flatMap {
+        case d: ShuffleDependency[_, _, _] => d +: shuffles(d.rdd)
+        case d => shuffles(d.rdd)
+      }
+    val deps = shuffles(BpeTrain.pairCounts(v))
+    assert(deps.size == 1 && deps.head.mapSideCombine && deps.head.aggregator.isDefined)
+    var top: Option[((String, String), Long)] = None
+    val jobs = jobsDuring { top = BpeTrain.stepArgmax(v) }
+    // a true top-1: one job of two stages, where a global sort would
+    // add a sampling job and a range-partition stage
+    assert(jobs.size == 1 && jobs.head.stageInfos.size == 2,
+      jobs.map(_.stageInfos.map(_.name)))
+    // (a,b) = 2·2 + 1 = 5 beats (b,a) = 2 + 3 = 5 on the (a, b) tie-break
+    val want = DataFrameBpe.stepArgmax(v).collect().head
+    assert(top == Some((("a", "b"), 5L)) &&
+      top == Some(((want.getString(0), want.getString(1)), want.getLong(2))))
+    assert(!v.select("cnt", "enc").queryExecution.executedPlan.toString.contains("Window"))
+  }
+
+  test("bt01 and bt02 prepare steps run 2 + 2 per step jobs") {
+    // the vocabulary aggregation's two shuffle stages, then per step the
+    // cache build of the newly persisted vocab and the merge step's job
+    assert(prepareJobs(TextQueries.bt01BpeTrain) == Seq(14, 14, 14))
+    assert(prepareJobs(TextQueries.bt02BpeEncode) == Seq(14, 14, 14))
   }
 }

@@ -320,7 +320,7 @@ class PipelineSpec extends SparkSpec {
     ).mkString("\n"))
     val wh = s"$dir/once_warehouse"
     val rej = s"$dir/once_rejects"
-    // CSV parses only: the quality reader's header lookup is a text scan
+    // CSV parses only
     def parses(body: => Unit, path: String) = scansUnder(plansDuring(body), path)
       .filter(_.relation.fileFormat.isInstanceOf[CSVFileFormat])
     // the three rows reach four outputs (three tables and the rejects)
@@ -331,7 +331,7 @@ class PipelineSpec extends SparkSpec {
     assert(quality.nonEmpty && metric(quality, "numOutputRows") == 2L)
   }
 
-  test("a load onto stored rows runs a fixed set of SQL executions") {
+  test("a load onto stored rows runs 5 SQL executions for HHS, 2 for quality") {
     import graft.cli.Cli
     val qHeader = "Facility ID,Hospital Type,Hospital Ownership,Emergency Services,Hospital overall rating"
     val wh = s"$dir/executions_warehouse"
@@ -354,8 +354,31 @@ class PipelineSpec extends SparkSpec {
         ",Acute Care,Proprietary,Yes,3").mkString("\n")), wh, rej))
     // the delta's weeks, the three appends and the rejects
     assert(hhs == 5)
-    // the CSV header lookup that names the columns, the append and the rejects
-    assert(quality == 3)
+    // the append and the rejects: the header is read on the driver
+    assert(quality == 2)
+  }
+
+  test("the quality reader selects its columns by name from a quoted header") {
+    // quoted names, an extra quoted column with a comma in its name and
+    // a reordered header: the 5 columns still bind by name, and reading
+    // the header runs no job
+    val csv = writeCsv("quoted_quality.csv", Seq(
+      "\"Hospital overall rating\",\"Address, Line 1\",Facility ID,\"Hospital Type\"," +
+        "Hospital Ownership,Emergency Services",
+      "4,\"1 Main St, Suite 2\",F1,Acute Care,Proprietary,Yes").mkString("\n"))
+    var raw: org.apache.spark.sql.DataFrame = null
+    assert(jobsDuring { raw = QualityPipeline.readRaw(spark, csv) }.isEmpty)
+    assert(raw.columns.toSeq == Schemas.qualityRawCsv.fieldNames.toSeq)
+    assert(raw.as[(String, String, String, String, String)].collect().toSeq ==
+      Seq(("F1", "Acute Care", "Proprietary", "Yes", "4")))
+  }
+
+  test("a quality CSV without one of the 5 columns fails, naming it") {
+    val csv = writeCsv("partial_quality.csv", Seq(
+      "Facility ID,Hospital Type,Hospital Ownership,Hospital overall rating",
+      "F1,Acute Care,Proprietary,4").mkString("\n"))
+    val e = intercept[IllegalArgumentException](QualityPipeline.readRaw(spark, csv))
+    assert(e.getMessage.contains("'Emergency Services'"), e.getMessage)
   }
 
   test("a load reads only the stored bed partitions of its own weeks") {

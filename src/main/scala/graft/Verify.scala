@@ -1,4 +1,5 @@
 package graft
+import graft.util.Branches
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -18,29 +19,24 @@ object Verify {
     * exactly these queries to `$outDir/oracle_sql.json`. A query that
     * throws is reported on stderr and leaves no `$outDir/<name>`, so a
     * dump from an earlier run can never be compared in its place.
-    * Queries dump on 4 threads (Spark schedules concurrent jobs fine;
-    * temp-view names are disjoint per query, so catalog writes don't
+    * Queries dump on 4 threads through [[graft.util.Branches]]
+    * (temp-view names are disjoint per query, so catalog writes don't
     * race). */
   def dump(spark: SparkSession, sfDir: String, outDir: String,
            queries: Seq[(String, (SparkSession, String) => DataFrame)]): Unit = {
     Files.createDirectories(Paths.get(outDir))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    val futures = queries.map { case (name, fn) =>
-      scala.concurrent.Future {
-        Runner.deleteTree(Paths.get(s"$outDir/$name"))
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    Branches.run(spark, threads = 4) { b =>
+      queries.foreach { case (name, fn) =>
+        b.fork {
+          Runner.deleteTree(Paths.get(s"$outDir/$name"))
+          try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          catch { case e: Throwable =>
+            System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          }
         }
       }
     }
-    try scala.concurrent.Await.result(
-      scala.concurrent.Future.sequence(futures),
-      scala.concurrent.duration.Duration.Inf)
-    finally pool.shutdown()
     Runner.reset(spark)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -1,5 +1,6 @@
 package graft.cli
 
+import graft.util.Branches
 import graft.warehouse.{Reports, Warehouse}
 import java.time.LocalDate
 import org.apache.spark.sql.{Row, SparkSession}
@@ -21,10 +22,18 @@ import org.apache.spark.sql.types.{NumericType, StructType}
   * R9; and, only when `dataDate` or `ownership` is not given, one
   * (data_date, ownership) count for both defaults. A default page is 4
   * SQL executions, 2 of them over the bed history; given both a data
-  * date and an ownership, 3. The driver
-  * collects only display-sized results (weeks, states, ratings — the
-  * reports aggregate before they return), so rendering cost is
-  * independent of warehouse size.
+  * date and an ownership, 3.
+  *
+  * The page is three independent chains, and they run concurrently
+  * (through [[graft.util.Branches]]): the week summary; bed use; and
+  * the quality chain, the defaults count and then the per-state
+  * aggregate at the resolved date. The driver joins all three before
+  * it slices any rows, so a page's time is its longest chain, not the
+  * sum of its executions; each is a few small jobs, and run one after
+  * another they left most task slots idle. The driver collects only
+  * display-sized results (weeks, states, ratings — the reports
+  * aggregate before they return), so rendering cost is independent of
+  * warehouse size.
   */
 object Report {
 
@@ -93,11 +102,40 @@ object Report {
       formatRows(StructType(idx.map(schema(_))), rows.map(r => Row.fromSeq(idx.map(r.get))), maxRows)
     }
 
-    // the per-week sections' summary, in week order
+    // three independent chains, run at once: the week summary (R1-R4,
+    // R6 and the week default), bed use (R5 and R8), and the quality
+    // chain, the selectbox defaults and then the per-state aggregate at
+    // the resolved date (R7 and R9)
     val summary = Reports.weekSummary(bedInfo)
-    val weeks = ascending(summary.collect().toSeq, 0)
-    val at = givenWeek.getOrElse(orHint(weeks.lastOption.flatMap(day),
-      "bed information", "HHS data", "--week"))
+    val bedUse = Reports.bedUse(quality, bedInfo)
+    val ((weeks, at), (dd, own, byState, states), bedUseRows) =
+      Branches.run(spark, threads = 3) { b =>
+        val weekChain = b.fork {
+          val weeks = ascending(summary.collect().toSeq, 0)
+          (weeks, givenWeek.getOrElse(orHint(weeks.lastOption.flatMap(day),
+            "bed information", "HHS data", "--week")))
+        }
+        val qualityChain = b.fork {
+          // the selectbox defaults: one (data_date, ownership) count, read
+          // only when a default is needed
+          lazy val owners =
+            quality.groupBy("data_date", "hospital_ownership").count().collect().toSeq
+          val dd = givenDate.getOrElse(orHint(owners.flatMap(day).maxByOption(_.toEpochDay),
+            "quality information", "quality data", "--data-date"))
+          val own = ownership.getOrElse(orHint(
+            owners.filter(r => day(r).contains(dd) && !r.isNullAt(1))
+              .sortBy(r => (-r.getLong(2), r.getString(1))).headOption.map(_.getString(1)),
+            s"quality information for $dd", "quality data for that date", "--ownership"))
+          val byState = Reports.byState(quality, hospitals, locations, dd.toString)
+          (dd, own, byState, byState.collect().toSeq)
+        }
+        val bedUseChain = b.fork(bedUse.collect().toSeq)
+        // joined in the order the chains began when they ran one after
+        // another: a failed chain throws what it threw then, unless bed
+        // use and the per-state aggregate both fail
+        (weekChain.join(), qualityChain.join(), bedUseChain.join())
+      }
+
     // a week with no rows reads like a global aggregate over none:
     // count 0, every sum NULL
     val ofWeek = weeks.find(day(_).contains(at)).getOrElse(Row.fromSeq(
@@ -105,25 +143,10 @@ object Report {
     val through = weeks.filter(day(_).exists(!_.isAfter(at)))
     val sums = summary.columns.toSeq.filter(_.startsWith("sum_"))
 
-    // the selectbox defaults: one (data_date, ownership) count, read only
-    // when a default is needed
-    lazy val owners = quality.groupBy("data_date", "hospital_ownership").count().collect().toSeq
-    val dd = givenDate.getOrElse(orHint(owners.flatMap(day).maxByOption(_.toEpochDay),
-      "quality information", "quality data", "--data-date"))
-    val own = ownership.getOrElse(orHint(
-      owners.filter(r => day(r).contains(dd) && !r.isNullAt(1))
-        .sortBy(r => (-r.getLong(2), r.getString(1))).headOption.map(_.getString(1)),
-      s"quality information for $dd", "quality data for that date", "--ownership"))
-
     // R5 and R8 from one bed-use aggregate: each section's grouping set
-    val bedUse = Reports.bedUse(quality, bedInfo)
-    val sets = bedUse.collect().toSeq.groupBy(_.getAs[Long]("grouping_id")).withDefaultValue(Nil)
+    val sets = bedUseRows.groupBy(_.getAs[Long]("grouping_id")).withDefaultValue(Nil)
     val byRating = ascending(sets(Reports.ByRating), 0)
     val byWeek = ascending(sets(Reports.ByOwnershipWeek).filter(_.getString(1) == own), 2)
-
-    // R7 and R9 from one per-state aggregate at the data date
-    val byState = Reports.byState(quality, hospitals, locations, dd.toString)
-    val states = byState.collect().toSeq
 
     val sections = Seq(
       s"Records loaded for week $at (Reporting.py:29-33)" ->

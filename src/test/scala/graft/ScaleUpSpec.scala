@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class ScaleUpSpec extends SparkSpec {
 
   private lazy val dest = {
-    val dir = java.nio.file.Files.createTempDirectory("scaleup_spec").toString
+    val dir = tempDir("scaleup_spec")
     ScaleUp.run(spark, sfDir, dir, factor = 70)
     dir
   }
@@ -136,7 +136,7 @@ class ScaleUpSpec extends SparkSpec {
     // row counts and span (constant density), identical event-type
     // histograms (translation touches nothing else). Default-off mode
     // is what every recorded corpus fingerprint was built with.
-    val dir = java.nio.file.Files.createTempDirectory("scaleup_stretch").toString
+    val dir = tempDir("scaleup_stretch")
     ScaleUp.run(spark, sfDir, dir, factor = 3, stretchTime = true)
     val ev = spark.read.parquet(s"$dir/events.parquet")
       .withColumn("rep", (col("event_id") / ScaleUp.E).cast("long"))
@@ -179,7 +179,7 @@ class ScaleUpSpec extends SparkSpec {
     // empty/all-null ts column and .getInt NPE'd mid-build, leaving a
     // half-written destDir. Now it must be an explicit require BEFORE
     // the first table is written.
-    val srcDir = java.nio.file.Files.createTempDirectory("scaleup_nullts").toString
+    val srcDir = tempDir("scaleup_nullts")
     for (tbl <- Seq("region", "nation", "customer", "supplier", "part",
                     "orders", "lineitem", "events", "documents", "embeddings")) {
       val df = spark.read.parquet(s"$sfDir/$tbl.parquet")
@@ -189,7 +189,7 @@ class ScaleUpSpec extends SparkSpec {
         else df
       out.write.parquet(s"$srcDir/$tbl.parquet")
     }
-    val destDir = java.nio.file.Files.createTempDirectory("scaleup_nullts_out").toString
+    val destDir = tempDir("scaleup_nullts_out")
     val e = intercept[IllegalArgumentException] {
       ScaleUp.run(spark, srcDir, destDir, factor = 2, stretchTime = true)
     }
@@ -208,7 +208,7 @@ class ScaleUpSpec extends SparkSpec {
     // translate by the SAME i·stride days, so every table's replica
     // windows are disjoint AND within-replica cross-column
     // relationships (ship lag) are preserved exactly.
-    val dir = java.nio.file.Files.createTempDirectory("scaleup_stretchall").toString
+    val dir = tempDir("scaleup_stretchall")
     ScaleUp.run(spark, sfDir, dir, factor = 3, stretchAll = true)
     val axes = Seq(
       ("events", "event_id", ScaleUp.E, "ts"),

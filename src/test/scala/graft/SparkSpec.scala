@@ -32,6 +32,11 @@ trait SparkSpec extends AnyFunSuite {
     starts.asScala.toSeq
   }
 
+  /** The live threads of [[graft.util.Branches]] pools. */
+  def branchThreads: Seq[Thread] =
+    Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(_.getName.startsWith(graft.util.Branches.ThreadPrefix))
+
   /** The jobs `query`'s prepare step runs over the test corpus, in
     * each of 3 warm runs from [[Runner.reset]]. One run goes first
     * uncounted: the session's first read of a parquet table infers its

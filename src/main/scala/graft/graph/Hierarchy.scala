@@ -1,6 +1,6 @@
 package graft.graph
 
-import graft.util.Exact.int128
+import graft.util.Rounds
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -18,11 +18,11 @@ import org.apache.spark.sql.functions._
   * the join's fixpoint rather than a special case.
   *
   * Scale shape: each round is ONE equi-join of the state with itself
-  * keyed by ancestor id (shuffle on node id) + localCheckpoint to
-  * truncate lineage. Convergence detection: the total of all
-  * distances is a monotone non-decreasing, bounded
-  * potential — fixpoint iff unchanged, probed with a single exact
-  * decimal-sum scan (no join against the previous round).
+  * keyed by ancestor id (shuffle on node id), and its state is a
+  * [[graft.util.Rounds]] round. Convergence detection: the total of all
+  * distances is a monotone non-decreasing, bounded potential — fixpoint
+  * iff unchanged — and it is the round's probe, so no round joins
+  * against the previous one.
   */
 object Hierarchy {
 
@@ -31,31 +31,24 @@ object Hierarchy {
     *   parent would drop its subtree at the first join)
     * @return (id, root, depth) for every node */
   def flatten(nodes: DataFrame, maxIter: Int = 25): DataFrame = {
-    var st = nodes.select(col("id"),
-        coalesce(col("parent"), col("id")).as("anc"),
-        when(col("parent").isNull, 0L).otherwise(1L).as("d"))
-      .localCheckpoint()
-    def dSum(df: DataFrame): java.math.BigDecimal =
-      Option(df.agg(sum(int128(col("d")))).head().getDecimal(0))
-        .getOrElse(java.math.BigDecimal.ZERO)
-    var prev = dSum(st)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val up = st.select(col("id").as("anc"), col("anc").as("anc2"),
-        col("d").as("d2"))
-      st = st.join(up, "anc")
-        .select(col("id"), col("anc2").as("anc"),
-          (col("d") + col("d2")).as("d"))
-        .localCheckpoint()
-      val cur = dSum(st)
-      converged = cur == prev
-      prev = cur
-      iter += 1
+    val start = nodes.select(col("id"),
+      coalesce(col("parent"), col("id")).as("anc"),
+      when(col("parent").isNull, 0L).otherwise(1L).as("d"))
+    // the distance total, exact: an overflow throws as ANSI `sum` does
+    val out = Rounds.iterate(start, maxIter)(
+      _.aggregate(0L)((s, r) => Math.addExact(s, r.getLong(2)), Math.addExact(_, _))) {
+      (prev, cur) =>
+        if (prev.exists(_.probe == cur.probe)) None
+        else {
+          val st = cur.rows
+          val up = st.select(col("id").as("anc"), col("anc").as("anc2"), col("d").as("d2"))
+          Some(st.join(up, "anc").select(col("id"), col("anc2").as("anc"),
+            (col("d") + col("d2")).as("d")))
+        }
     }
-    require(converged,
+    require(out.pending.isEmpty,
       s"hierarchy did not resolve within $maxIter doubling rounds — " +
         "depth exceeds 2^maxIter, or the parent graph has a cycle")
-    st.select(col("id"), col("anc").as("root"), col("d").as("depth"))
+    out.last.rows.select(col("id"), col("anc").as("root"), col("d").as("depth"))
   }
 }

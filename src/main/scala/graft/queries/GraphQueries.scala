@@ -43,9 +43,9 @@ object GraphQueries {
     * reused. That is the Pregel schedule expressed declaratively; at
     * 100 TB the edge table shuffles by src/dst exactly as any
     * iterative graph engine would, and AQE sizes each round's
-    * reducers. (For UNBOUNDED iteration counts use an imperative loop
-    * with localCheckpoint — the ConnectedComponents pattern; a fixed
-    * small count composes better as a single plan.) */
+    * reducers. (An UNBOUNDED iteration count runs its rounds through
+    * [[graft.util.Rounds]], as ConnectedComponents does; a fixed small
+    * count composes better as a single plan.) */
   val pr01PageRank = QueryDef("pr01_pagerank",
     (s, d) => {
       val Q = 1000000000000000L
@@ -203,8 +203,8 @@ object GraphQueries {
     * never exceeds |V| rows (min-dist collapses the frontier — no
     * path-count blowup on dense graphs); a fixed hop budget is the
     * production shape for "neighborhood within k" features, and an
-    * open-ended diameter sweep would switch to the imperative
-    * localCheckpoint loop ConnectedComponents uses. */
+    * open-ended diameter sweep would run its rounds through
+    * [[graft.util.Rounds]], as ConnectedComponents does. */
   val bf01BfsHops = QueryDef("bf01_bfs_hops",
     (s, d) => {
       val e0 = Tables.orders(s, d)

@@ -1,9 +1,11 @@
 package graft.text
 
+import graft.util.Rounds
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Distributed BPE merge LEARNING (the training side of x15's
@@ -27,8 +29,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * returns as literals into a row-local `replace`. At 100 TB the text
   * scan dominates and happens once; the
   * iterations touch only the vocabulary, which is orders of magnitude
-  * smaller than the corpus (and is persisted per step — see
-  * learnMerges). Exact integer counts + a total tie-break make every
+  * smaller than the corpus, and each step's vocabulary is a
+  * [[graft.util.Rounds]] round, so the plan never grows with the step
+  * count. Exact integer counts + a total tie-break make every
   * argmax decision engine-portable: the oracle replays all steps as
   * chained CTEs and value-matches the merge table row-for-row.
   */
@@ -53,17 +56,17 @@ object BpeTrain {
   def learnMerges(docs: DataFrame, textCol: String, nMerges: Int): DataFrame =
     learnMergesAndVocab(docs, textCol, nMerges)._1
 
-  /** One merge step's pair counts over an encoded vocabulary `(w, cnt,
-    * enc)`: every adjacent symbol pair with its exact count, summed by
-    * `reduceByKey` (map-side combined; `Math.addExact`, so an overflow
-    * throws as ANSI `sum` does). Symbols split as
+  /** One merge step's pair counts over an encoded vocabulary's rows
+    * `(w, cnt, enc)`: every adjacent symbol pair with its exact count,
+    * summed by `reduceByKey` (map-side combined; `Math.addExact`, so an
+    * overflow throws as ANSI `sum` does). Symbols split as
     * `split(trim(enc, '|'), '\\|\\|')` does in SQL. */
-  private[graft] def pairCounts(v: DataFrame): RDD[((String, String), Long)] =
-    v.select(col("cnt"), col("enc")).queryExecution.toRdd.mapPartitions { it =>
+  private[graft] def pairCounts(v: RDD[InternalRow]): RDD[((String, String), Long)] =
+    v.mapPartitions { it =>
       val bar = UTF8String.fromString("|")
       it.flatMap { r =>
-        val syms = r.getUTF8String(1).trim(bar).toString.split("\\|\\|", -1)
-        val cnt = r.getLong(0)
+        val syms = r.getUTF8String(2).trim(bar).toString.split("\\|\\|", -1)
+        val cnt = r.getLong(1)
         (1 until syms.length).iterator.map(i => ((syms(i - 1), syms(i)), cnt))
       }
     }.reduceByKey(Math.addExact(_: Long, _: Long))
@@ -78,72 +81,41 @@ object BpeTrain {
   /** One merge step's argmax: the most frequent adjacent pair with its
     * count, or None when no word has two symbols. ONE Spark job — the
     * pair-count shuffle stage and a `takeOrdered(1)` result stage. */
-  private[graft] def stepArgmax(v: DataFrame): Option[((String, String), Long)] =
+  private[graft] def stepArgmax(v: RDD[InternalRow]): Option[((String, String), Long)] =
     pairCounts(v).takeOrdered(1)(mergeOrder).headOption
 
   /** Learn merges AND return the post-merge encoded vocabulary
     * `(w, cnt, enc)` — the artifact an ENCODER consumes (bt02): the
     * training rewrite already applies each merge to every vocabulary
     * word, so the final `enc` IS the word's BPE segmentation under the
-    * learned table, at zero extra passes. */
+    * learned table, at zero extra passes.
+    *
+    * Driver-paced argmax loop: the winning pair is one row per step,
+    * collected to the driver and inlined into the next rewrite as
+    * string LITERALS, so no per-step BroadcastNestedLoopJoin enters the
+    * plan and the merge table is a LocalTableScan of already-computed
+    * rows. A step is one job, its [[stepArgmax]], which also writes the
+    * step's vocabulary round; the first step adds the vocabulary
+    * aggregation's shuffle-stage jobs. */
   def learnMergesAndVocab(docs: DataFrame, textCol: String,
                           nMerges: Int): (DataFrame, DataFrame) = {
-    var v = vocab(docs, textCol)
+    require(nMerges >= 1, s"nMerges must be at least 1, got $nMerges")
+    val found = scala.collection.mutable.ArrayBuffer.empty[Row]
+    val vocabulary = vocab(docs, textCol)
       .select(col("w"), col("cnt"), encode(col("w")).as("enc"))
-    // Driver-paced argmax loop: the winning pair is one row per step,
-    // collected to the driver and inlined into the next rewrite as
-    // string LITERALS, so no per-step BroadcastNestedLoopJoin enters
-    // the plan and the merge table is a LocalTableScan of
-    // already-computed rows. Each step runs two jobs: adaptive
-    // execution builds the newly persisted vocab's cache as a
-    // table-cache query stage, its own job, before [[stepArgmax]]'s
-    // one job reads it. The first step adds the vocabulary
-    // aggregation's two shuffle-stage jobs, so a run of n steps runs
-    // 2 + 2n jobs (BpeTrainSpec pins bt01 and bt02 at 14).
-    val found = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var exhausted = false
-    // step k−1's cached vocab is dead once step k's collect completes
-    // (only the latest vocab feeds the next rewrite, and only the FINAL
-    // one feeds bt02's encoder join) — unpersist it instead of leaving
-    // nMerges MEMORY_AND_DISK frames alive until releaseShared().
-    // Non-blocking: the drop races nothing, the next
-    // step's plan references only the newest cache entry.
-    var prevVocab: Option[DataFrame] = None
-    (1 to nMerges).foreach { step =>
-      if (!exhausted) {
-        // persisting the vocab keeps the plan linear in nMerges (each
-        // step consumes the previous vocab for pair counting, and the
-        // final vocab feeds bt02's encoder join)
-        v = org.apache.spark.sql.graftbridge.GraftSqlBridge.sharedInPlan(v)
-        val top = stepArgmax(v)
-        // this step's job materialized v's cache; the previous
-        // step's cached vocab can no longer be referenced by anything
-        prevVocab.foreach(_.unpersist(false))
-        prevVocab = Some(v)
-        top match {
-          case None =>
-            // no adjacent pair anywhere (all words single-symbol): the
-            // vocab empties and no merge rows follow
-            exhausted = true
-            v = v.limit(0)
-          case Some(((a, b), n)) =>
-            found += ((step, a, b, n))
-            v = v.select(col("w"), col("cnt"),
-              replace(col("enc"), lit(s"|$a||$b|"), lit(s"|$a$b|")).as("enc"))
-        }
+    val out = Rounds.iterate(vocabulary, nMerges - 1)(stepArgmax) { (_, cur) =>
+      // None: no adjacent pair anywhere (all words single-symbol), so
+      // no merge rows follow
+      cur.probe.map { case ((a, b), n) =>
+        found += Row(found.size + 1L, a, b, a + b, n)
+        cur.rows.select(col("w"), col("cnt"),
+          replace(col("enc"), lit(s"|$a||$b|"), lit(s"|$a$b|")).as("enc"))
       }
     }
-    val spark = docs.sparkSession
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("step", LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("a", org.apache.spark.sql.types.StringType, nullable = true),
-      org.apache.spark.sql.types.StructField("b", org.apache.spark.sql.types.StringType, nullable = true),
-      org.apache.spark.sql.types.StructField("merged", org.apache.spark.sql.types.StringType, nullable = true),
-      org.apache.spark.sql.types.StructField("n", LongType, nullable = true)))
-    val rows = found.map { case (step, a, b, n) =>
-      org.apache.spark.sql.Row(step.toLong, a, b, a + b, n)
-    }
+    // the last step's rewrite, or an empty vocab once pairs ran out
+    val v = out.pending.getOrElse(out.last.rows.limit(0))
     import scala.jdk.CollectionConverters._
-    (spark.createDataFrame(rows.toList.asJava, schema).orderBy("step"), v)
+    val schema = StructType.fromDDL("step BIGINT NOT NULL, a STRING, b STRING, merged STRING, n BIGINT")
+    (docs.sparkSession.createDataFrame(found.toList.asJava, schema).orderBy("step"), v)
   }
 }

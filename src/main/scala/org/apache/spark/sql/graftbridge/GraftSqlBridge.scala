@@ -32,35 +32,23 @@ object GraftSqlBridge {
     !cached
   }
 
-  /** Frames persisted by [[sharedInPlan]] since the last
-    * [[releaseShared]]. Build-time persists (PQ centroids, BPE merge
-    * vocabularies, LSH signature frames) are a measured optimization —
-    * one materialization for plans that reference a frame twice — but
-    * a long-lived session would accumulate cache entries across
-    * query builds. Bench/Verify release after materialization; frames
-    * never materialized unpersist as a no-op. */
-  private val shared = java.util.Collections.newSetFromMap(
-    new java.util.concurrent.ConcurrentHashMap[org.apache.spark.sql.DataFrame,
-      java.lang.Boolean]())
-
   /** [[persistIfAbsent]] at MEMORY_AND_DISK, returning the frame —
     * drop-in for build-time `.persist` on frames a plan references
-    * more than once. Execution hits the existing cache entry either
-    * way; this just avoids double-registering equal plans, and tracks
-    * new entries for [[releaseShared]]. */
+    * more than once (IVF cell assignments, LSH signature frames). Execution
+    * hits the existing cache entry either way; this just avoids
+    * double-registering equal plans. The entry lives until the cache
+    * is cleared ([[graft.Runner.reset]]). */
   def sharedInPlan(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    if (persistIfAbsent(df, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      shared.add(df)
+    persistIfAbsent(df, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     df
   }
 
-  /** Unpersist every frame cached by [[sharedInPlan]] since the last
-    * release. Safe at any time: dropping cache only costs recompute
-    * if the same plan re-executes. */
-  def releaseShared(): Unit = {
-    val it = shared.iterator()
-    while (it.hasNext) { it.next().unpersist(blocking = false); it.remove() }
-  }
+  /** Drops the blocks of a locally checkpointed RDD, as the context
+    * cleaner does for one no longer referenced. `RDD.unpersist` would do
+    * the same and warn that the lineage cannot be recomputed, which is
+    * what a released round means. */
+  def dropCheckpoint(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 
   /** Register a function into an EXISTING session's registry (the
     * extensions path only applies at session build time). */

@@ -148,4 +148,13 @@ class ConnectedComponentsSpec extends SparkSpec {
     }
     assert(runs.distinct.size == 1, s"(jobs, rounds) per run: $runs")
   }
+
+  test("dd06's prepare step runs 37 jobs") {
+    // the near-dup edge kernel's stage jobs, then per contraction round
+    // its plan's shuffle-stage jobs and one probe job. sm04 and dd13 are
+    // not pinned: their edge kernel's two cached frames are built by
+    // whichever nested adaptive stage reaches them first, so they run
+    // 40 or 41 jobs
+    assert(prepareJobs(graft.queries.VectorQueries.dd06DupClusters) == Seq(37, 37, 37))
+  }
 }

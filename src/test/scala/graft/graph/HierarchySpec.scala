@@ -37,4 +37,11 @@ class HierarchySpec extends SparkSpec {
       (1L, Some(2L)), (2L, Some(1L)), (3L, None))
     intercept[IllegalArgumentException] { flatten(cyclic, maxIter = 6) }
   }
+
+  test("hi01's prepare step runs 13 jobs") {
+    // round 0's probe, then 4 doubling rounds (depth 5 at sf0.001: 3
+    // to resolve, 1 to confirm) of 3 jobs each, the self-join's stages
+    // and the round's probe
+    assert(prepareJobs(graft.queries.GraphQueries.hi01HierarchyFlatten) == Seq(13, 13, 13))
+  }
 }

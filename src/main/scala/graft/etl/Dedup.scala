@@ -41,6 +41,13 @@ import org.apache.spark.sql.functions._
   *    shuffled sort-merge otherwise — Catalyst/AQE decides from stats.
   *    We deliberately project the existing side to just its key columns
   *    so the broadcast/shuffle payload is minimal.
+  *  - The existing side is not `distinct()`-ed: a left-anti or left-semi
+  *    join returns the same rows whether or not its right side repeats a
+  *    key, and the loads' existing sides rarely repeat one (the HHS
+  *    tables never do), so a distinct would only add an aggregate →
+  *    shuffle → aggregate stage before the broadcast. Where the existing
+  *    side does repeat keys (d03/d04's o_custkey), the join's build side
+  *    carries the repeats instead.
   */
 object Dedup {
 
@@ -109,12 +116,12 @@ object Dedup {
     * warehouse (reference: load_quality.py:122-126 set-based IN probe).
     * Existing side is pruned to key columns before the anti-join. */
   def antiJoinExisting(incoming: DataFrame, existing: DataFrame, keys: Seq[String]): DataFrame =
-    incoming.join(existing.select(keys.map(col).toIndexedSeq: _*).distinct(), keys, "left_anti")
+    incoming.join(existing.select(keys.map(col).toIndexedSeq: _*), keys, "left_anti")
 
   /** The rows REMOVED by cross-load dedup (the reference's reject channel
     * for duplicates, load_quality.py:124). Semi-join = set semantics; the
     * reference's duplicate-index quirk (same row emitted twice,
     * load_hhs.py:82-99) is a documented divergence (SURVEY.md §7.4.7). */
   def duplicatesOfExisting(incoming: DataFrame, existing: DataFrame, keys: Seq[String]): DataFrame =
-    incoming.join(existing.select(keys.map(col).toIndexedSeq: _*).distinct(), keys, "left_semi")
+    incoming.join(existing.select(keys.map(col).toIndexedSeq: _*), keys, "left_semi")
 }

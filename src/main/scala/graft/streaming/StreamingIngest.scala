@@ -155,7 +155,7 @@ object StreamingIngest {
     *    step [[graft.warehouse.HhsPipeline.appendNew]] runs against
     *    current warehouse state: first-wins per key, anti-join vs
     *    existing keys (covers pre-existing warehouse rows and dups
-    *    beyond the watermark horizon), three table appends. The
+    *    beyond the watermark horizon), three table appends at once. The
     *    per-week first-wins is a no-op on the watermark-deduped batch.
     *    Batches are sequential, so batch N's appends are batch N+1's
     *    existing side.

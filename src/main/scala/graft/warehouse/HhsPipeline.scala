@@ -13,9 +13,10 @@ import org.apache.spark.sql.functions._
   *
   * One load per source: [[load]] is the only batch HHS load, and it and
   * the streaming ingest share the per-delta step [[appendNew]]. A load
-  * parses the CSV once: the cleaned frame is persisted for the load, and
-  * its one small query (the delta's weeks) and four writes (three tables,
-  * the rejects) all read it. The history read is bounded by the delta's
+  * parses the CSV once: the cleaned frame is persisted and built for the
+  * load, and its one small query (the delta's weeks, which the bed
+  * anti-join needs) and then its four writes (three tables, the rejects,
+  * all at once) read it. The history read is bounded by the delta's
   * weeks: the bed-table anti-join reads only the partitions of the weeks
   * the delta holds. The hospitals and locations anti-joins read those key
   * columns whole; at 100 TB their existing-keys side is broadcastable
@@ -58,31 +59,34 @@ object HhsPipeline {
         Validation.Rule(s"${c}_null", Validation.notNull(col(c))))
 
   /** Load the CSV at `csvPath` into the warehouse at `warehouseDir`
-    * ([[appendNew]]) and replace the HHS rejects under `rejectDir`,
-    * parsing the CSV once: the cleaned frame is persisted for the load
-    * and unpersisted after its last write. */
+    * ([[appendNew]]) and replace the HHS rejects under `rejectDir`, the
+    * rejects written beside the three appends. The CSV is parsed once:
+    * the cleaned frame is persisted for the load and unpersisted after
+    * every write has ended. */
   def load(spark: SparkSession, csvPath: String, warehouseDir: String, rejectDir: String): Unit =
     Warehouse.persistedFor(clean(readRaw(spark, csvPath))) { cleaned =>
       val (valid, rejects) = Validation.split(cleaned, validationRules)
-      appendNew(valid, warehouseDir)
-      Warehouse.writeRejects(rejects.drop("__file_order"), rejectDir, "hhs")
+      appendNew(valid, warehouseDir,
+        () => Warehouse.writeRejects(rejects.drop("__file_order"), rejectDir, "hhs"))
     }
 
   /** Append the rows of `valid` that the warehouse at `warehouseDir`
-    * lacks to hospitals, locations and bed information, in that order:
-    * first occurrence by `__file_order` wins per key, minus keys already
-    * in that table. Keys: hospital_pk (load_hhs.py:75,89), hospital_fk
-    * for locations, (hospital_fk, collection_week) (load_hhs.py:103).
-    * Each table's own key, so a replay after an interrupted load appends
-    * exactly what that load did not. The three tables are read before
-    * the first append.
+    * lacks to hospitals, locations and bed information, the three
+    * appends and `alongside` all at once ([[Warehouse.writeAll]]): first
+    * occurrence by `__file_order` wins per key, minus keys already in
+    * that table. Keys: hospital_pk (load_hhs.py:75,89), hospital_fk for
+    * locations, (hospital_fk, collection_week) (load_hhs.py:103). Each
+    * table's own key, so a replay after an interrupted load, whichever of
+    * the tables it wrote, appends exactly what that load did not. Each
+    * table's file listing is taken when its frame is built, before any
+    * write starts, so no anti-join sees a concurrent append.
     *
-    * Collects the delta's distinct weeks (one small query over `valid`)
-    * and reads the existing bed table at only those weeks: Spark's
-    * dynamic partition pruning does not apply to a left-anti join, so the
-    * filter is explicit, and the history read follows the delta, not the
-    * warehouse. */
-  def appendNew(valid: DataFrame, warehouseDir: String): Unit = {
+    * Collects the delta's distinct weeks first (one small query over
+    * `valid`) and reads the existing bed table at only those weeks:
+    * Spark's dynamic partition pruning does not apply to a left-anti
+    * join, so the filter is explicit, and the history read follows the
+    * delta, not the warehouse. */
+  def appendNew(valid: DataFrame, warehouseDir: String, alongside: (() => Unit)*): Unit = {
     def existing(t: Warehouse.Table) = Warehouse.read(valid.sparkSession, warehouseDir, t)
     val existingHospitals = existing(Warehouse.Hospitals)
     val existingLocations = existing(Warehouse.Locations)
@@ -105,8 +109,10 @@ object HhsPipeline {
           Schemas.hhsMetricColumns.map(col)).toIndexedSeq: _*),
       existingBedInfo.filter(col("collection_week").isin(weeks.toIndexedSeq: _*)),
       Seq("hospital_fk", "collection_week"))
-    Warehouse.append(hospitals, warehouseDir, Warehouse.Hospitals)
-    Warehouse.append(locations, warehouseDir, Warehouse.Locations)
-    Warehouse.append(bedInfo, warehouseDir, Warehouse.BedInformation)
+    val appends = Seq(hospitals -> Warehouse.Hospitals, locations -> Warehouse.Locations,
+      bedInfo -> Warehouse.BedInformation).map { case (delta, t) =>
+        () => Warehouse.append(delta, warehouseDir, t)
+      }
+    Warehouse.writeAll(valid.sparkSession, appends ++ alongside)
   }
 }

@@ -20,7 +20,7 @@ import org.apache.spark.sql.types._
   * (load_quality.py:127) is a latent bug, documented divergence
   * (SURVEY §7.4.6). One load per source: [[load]] is the only quality
   * load. It parses the CSV once: the quality append and the reject
-  * write read one persisted frame.
+  * write read one persisted frame, and they run at once.
   */
 object QualityPipeline {
 
@@ -82,27 +82,30 @@ object QualityPipeline {
 
   /** Load the CSV at `csvPath` as the `dataDate` snapshot into the
     * warehouse at `warehouseDir` and replace the quality rejects under
-    * `rejectDir`, parsing the CSV once: the cleaned frame is persisted
-    * for the load and unpersisted after its last write. */
+    * `rejectDir`, the two writes at once. The CSV is parsed once: the
+    * cleaned frame is persisted for the load and unpersisted after both
+    * writes have ended. */
   def load(spark: SparkSession, csvPath: String, dataDate: String,
            warehouseDir: String, rejectDir: String): Unit =
     Warehouse.persistedFor(clean(readRaw(spark, csvPath), dataDate)) { cleaned =>
       val (valid, invalid) = Validation.split(cleaned, validationRules)
       // D3 — set-based dedup vs same-date warehouse snapshot
       // (load_quality.py:122-126): existing side filtered to data_date then
-      // key-pruned; Catalyst broadcasts it when small. Read before the
-      // append, so the duplicate rejects, written after it, see the table
-      // as it was before this load.
+      // key-pruned; Catalyst broadcasts it when small. Its file listing is
+      // taken here, before either write starts, so the duplicate rejects,
+      // written beside the append, see the table as it was before this
+      // load.
       val sameDate = Warehouse.read(spark, warehouseDir, Warehouse.QualityInformation)
         .filter(col("data_date") === lit(dataDate).cast(DateType))
       val fresh = Dedup.antiJoinExisting(valid, sameDate, Seq("facility_id"))
       val dups = Dedup.duplicatesOfExisting(valid, sameDate, Seq("facility_id"))
         .withColumn("reject_reason", lit("duplicate"))
-      Warehouse.append(fresh.select(
-        col("facility_id"), col("hospital_overall_rating"), col("emergency_services"),
-        col("hospital_type"), col("hospital_ownership"), col("data_date")),
-        warehouseDir, Warehouse.QualityInformation)
-      Warehouse.writeRejects(invalid.unionByName(dups, allowMissingColumns = true),
-        rejectDir, "quality")
+      Warehouse.writeAll(spark, Seq(
+        () => Warehouse.append(fresh.select(
+          col("facility_id"), col("hospital_overall_rating"), col("emergency_services"),
+          col("hospital_type"), col("hospital_ownership"), col("data_date")),
+          warehouseDir, Warehouse.QualityInformation),
+        () => Warehouse.writeRejects(invalid.unionByName(dups, allowMissingColumns = true),
+          rejectDir, "quality")))
     }
 }

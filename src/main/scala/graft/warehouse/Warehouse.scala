@@ -1,5 +1,6 @@
 package graft.warehouse
 
+import graft.util.Branches
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.graftbridge.GraftSqlBridge
@@ -32,22 +33,38 @@ object Warehouse {
 
   /** Atomic per directory only: one table's append commits as one job,
     * but the appends of one load do not commit together, as the
-    * reference's whole-load transaction does (load_hhs.py:148). A load
-    * interrupted between appends leaves the earlier tables written; a
-    * replay converges because each table's delta anti-joins that table's
-    * own key. One commit per load is ROADMAP J step 2, still open. */
+    * reference's whole-load transaction does (load_hhs.py:148). A load's
+    * writes run at once ([[writeAll]]), so its tables publish in no fixed
+    * order, each directory atomically, and a load interrupted mid-way
+    * leaves any subset of its tables written. A replay converges from
+    * any such subset, because each table's delta anti-joins that table's
+    * own key. One commit per load is ROADMAP J step 1, still open. */
   def append(df: DataFrame, dir: String, table: Table): Unit = {
     val w = df.write.mode("append")
     table.partitionBy.fold(w)(w.partitionBy(_)).parquet(path(dir, table))
   }
 
+  /** Runs `writes` at once, one [[graft.util.Branches]] thread each,
+    * with the caller's job group. Returns once every write has ended; a
+    * failed write does not stop the others, and the first failure in
+    * `writes` order is rethrown, after all of them have ended. */
+  def writeAll(spark: SparkSession, writes: Seq[() => Unit]): Unit =
+    Branches.run(spark, threads = writes.size) { b =>
+      writes.map(w => b.fork(w())).foreach(_.join())
+    }
+
   /** `load(input)` with `input` persisted for its duration, so every
-    * write of one load reads one parse of the load's input. Only a cache
-    * entry this call added is dropped afterwards; a caller's own cached
-    * frames stay. */
+    * write of one load reads one parse of the load's input. The cache is
+    * built in one job before `load` runs, so writes that start together
+    * find it built instead of each launching a job to build it. Only a
+    * cache entry this call added is dropped afterwards, once `load` has
+    * returned; a caller's own cached frames stay. */
   def persistedFor[A](input: DataFrame)(load: DataFrame => A): A = {
     val added = GraftSqlBridge.persistIfAbsent(input, StorageLevel.MEMORY_AND_DISK)
-    try load(input) finally if (added) input.unpersist()
+    try {
+      GraftSqlBridge.buildCache(input)
+      load(input)
+    } finally if (added) input.unpersist()
   }
 
   /** `<rejectDir>/hhs` or `<rejectDir>/quality`. */

@@ -32,6 +32,18 @@ object GraftSqlBridge {
     !cached
   }
 
+  /** Builds `df`'s cache entry in one job, unless it has none or it is
+    * built already. Queries that start together over an unbuilt entry
+    * each launch a job to build it, unless one finds it built by the
+    * time it plans; one build before them fixes their job count. */
+  def buildCache(df: org.apache.spark.sql.DataFrame): Unit = {
+    val classic = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    classic.sparkSession.sharedState.cacheManager.lookupCachedData(classic)
+      .map(_.cachedRepresentation.cacheBuilder)
+      .filterNot(_.isCachedColumnBuffersLoaded)
+      .foreach(_.cachedColumnBuffers.foreachPartition(_ => ()))
+  }
+
   /** [[persistIfAbsent]] at MEMORY_AND_DISK, returning the frame —
     * drop-in for build-time `.persist` on frames a plan references
     * more than once (IVF cell assignments, LSH signature frames). Execution

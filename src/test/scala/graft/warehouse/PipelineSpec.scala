@@ -252,15 +252,121 @@ class PipelineSpec extends SparkSpec {
     Cli.runHhs(spark, csv, whole, s"$dir/replay_rejects")
     val expected = contents(whole)
     assert(expected.map(_.size) == Seq(2, 2, 3))
-    for (k <- 1 to 3) {
-      // the first k tables of the whole load, as a load into an empty
-      // warehouse killed after its k-th append leaves it, then the whole
+    // the appends run at once, so a killed load can leave any subset of
+    // the three tables written, not only a prefix
+    for (written <- (1 to 3).flatMap(tables.combinations)) {
+      // those tables of the whole load, as a load into an empty
+      // warehouse killed after their appends leaves them, then the whole
       // load again
+      val k = written.map(_.name).mkString("+")
       val wh = s"$dir/replay_after_$k"
-      tables.take(k).foreach(t => Warehouse.append(table(whole, t), wh, t))
+      written.foreach(t => Warehouse.append(table(whole, t), wh, t))
       Cli.runHhs(spark, csv, wh, s"$dir/replay_rejects")
       assert(contents(wh) == expected, s"replay after $k append(s)")
     }
+  }
+
+  /** The three HHS tables of `wh`, each as sorted rows. */
+  private def hhsContents(wh: String) =
+    Seq(Warehouse.Hospitals, Warehouse.Locations, Warehouse.BedInformation).map(t =>
+      table(wh, t).collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq)
+
+  /** What `load` threw; it must throw. Checks that the failed load left
+    * no job running, no write thread alive and no cache entry of its
+    * own: the persisted parse is dropped only after every write ended. */
+  private def failedLoad(load: => Unit): Throwable = {
+    val sc = spark.sparkContext
+    val cached = sc.getPersistentRDDs.keySet
+    val e = intercept[Throwable](load)
+    GraftSqlBridge.drainListenerBus(spark)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty, "a job of the failed load still runs")
+    assert(branchThreads.isEmpty, "a write thread outlived its load")
+    assert(sc.getPersistentRDDs.keySet == cached, "the failed load left its parse cached")
+    e
+  }
+
+  /** `e` and its causes. */
+  private def chain(e: Throwable): Seq[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+
+  test("an HHS load with one failing write rethrows its error after the others end") {
+    import graft.cli.Cli
+    val csv = writeCsv("failing_hhs.csv", Seq(
+      hhsHeader,
+      hhsRow("A", "Alpha", "2023-01-06", "10.0"),
+      hhsRow("B", "Beta", "2023-01-06", "20.0"),
+      hhsRow("C", "", "2023-01-06", "5.0")
+    ).mkString("\n"))
+    val whole = s"$dir/failing_hhs_whole"
+    Cli.runHhs(spark, csv, whole, s"$dir/failing_hhs_whole_rejects")
+    val (wh, rej) = (s"$dir/failing_hhs_warehouse", s"$dir/failing_hhs_rejects")
+    // a plain file where the locations table goes: that append fails
+    val obstacle = Paths.get(Warehouse.path(wh, Warehouse.Locations))
+    Files.createDirectories(obstacle.getParent)
+    Files.writeString(obstacle, "not a table")
+    val e = failedLoad(Cli.runHhs(spark, csv, wh, rej))
+    // the locations write's own exception, not a wrapper of the pool's
+    assert(!e.isInstanceOf[java.util.concurrent.CompletionException], e)
+    assert(chain(e).exists(c => String.valueOf(c.getMessage).contains(Warehouse.Locations.name)), e)
+    // the other three writes ran to their end
+    assert(table(wh, Warehouse.Hospitals).count() == 2L)
+    assert(table(wh, Warehouse.BedInformation).count() == 2L)
+    assert(rejects(rej, "hhs").count() == 1L)
+    Files.delete(obstacle)
+    Cli.runHhs(spark, csv, wh, rej)
+    assert(hhsContents(wh) == hhsContents(whole))
+  }
+
+  private val qualityHeader =
+    "Facility ID,Hospital Type,Hospital Ownership,Emergency Services,Hospital overall rating"
+
+  /** Sorted rows of the quality table of `wh`. */
+  private def qualityContents(wh: String) =
+    table(wh, Warehouse.QualityInformation).collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+
+  test("a quality load whose reject write fails rethrows its error after the append ends") {
+    import graft.cli.Cli
+    val csv = writeCsv("failing_quality.csv", Seq(qualityHeader,
+      "A,Acute Care,Proprietary,Yes,4",
+      "B,Acute Care,Proprietary,No,2",
+      ",Acute Care,Proprietary,Yes,3").mkString("\n"))
+    val whole = s"$dir/failing_quality_whole"
+    Cli.runQuality(spark, "2023-07-01", csv, whole, s"$dir/failing_quality_whole_rejects")
+    val (wh, rej) = (s"$dir/failing_quality_warehouse", s"$dir/failing_quality_rejects")
+    // a plain file where the reject directory goes: the reject write
+    // cannot make `<rejects>/quality` under it
+    val obstacle = Paths.get(rej)
+    Files.writeString(obstacle, "not a directory")
+    val e = failedLoad(Cli.runQuality(spark, "2023-07-01", csv, wh, rej))
+    assert(!e.isInstanceOf[java.util.concurrent.CompletionException], e)
+    assert(chain(e).exists(c => String.valueOf(c.getMessage).contains(rej)), e)
+    // the append ran to its end
+    assert(qualityContents(wh) == qualityContents(whole))
+    Files.delete(obstacle)
+    Cli.runQuality(spark, "2023-07-01", csv, wh, rej)
+    assert(qualityContents(wh) == qualityContents(whole))
+  }
+
+  test("the quality rejects read the table as it was before the load") {
+    // the duplicate rejects run beside the append into the same table;
+    // they see only the files listed when the load began
+    val stored = (1 to 40).map(i => s"F$i,Acute Care,Proprietary,Yes,${i % 5}")
+    val (wh, rej) = (s"$dir/snapshot_warehouse", s"$dir/snapshot_rejects")
+    def duplicates = rejects(rej, "quality").filter($"reject_reason" === "duplicate")
+      .select("facility_id").as[String].collect().sorted.toSeq
+    def ids = table(wh, Warehouse.QualityInformation).select("facility_id").as[String]
+      .collect().sorted.toSeq
+    QualityPipeline.load(spark, writeCsv("snapshot_first.csv",
+      (qualityHeader +: stored).mkString("\n")), "2023-07-01", wh, rej)
+    assert(duplicates.isEmpty)
+    val first = ids
+    assert(first.size == 40)
+    // the same date again, with ten new facilities
+    val fresh = (41 to 50).map(i => s"F$i,Acute Care,Voluntary,No,3")
+    QualityPipeline.load(spark, writeCsv("snapshot_replay.csv",
+      (qualityHeader +: (stored ++ fresh)).mkString("\n")), "2023-07-01", wh, rej)
+    assert(duplicates == first)
+    assert(ids == (first ++ (41 to 50).map(i => s"F$i")).sorted)
   }
 
   /** The physical plans of the SQL executions `body` runs. */
@@ -331,31 +437,57 @@ class PipelineSpec extends SparkSpec {
     assert(quality.nonEmpty && metric(quality, "numOutputRows") == 2L)
   }
 
-  test("a load onto stored rows runs 5 SQL executions for HHS, 2 for quality") {
+  /** A warehouse under `name` holding two hospitals' week and a quality
+    * snapshot, then the two loads the pins below count: an HHS delta (a
+    * new week, a replayed stored row and a reject) and a same-date
+    * quality replay (a duplicate, a new facility and a reject). */
+  private def onStoredRows[A](name: String)(loads: (=> Unit, => Unit) => A): A = {
     import graft.cli.Cli
-    val qHeader = "Facility ID,Hospital Type,Hospital Ownership,Emergency Services,Hospital overall rating"
-    val wh = s"$dir/executions_warehouse"
-    val rej = s"$dir/executions_rejects"
-    Cli.runHhs(spark, writeCsv("executions_history.csv", Seq(hhsHeader,
+    val wh = s"$dir/${name}_warehouse"
+    val rej = s"$dir/${name}_rejects"
+    Cli.runHhs(spark, writeCsv(s"${name}_history.csv", Seq(hhsHeader,
       hhsRow("A", "Alpha", "2023-01-06", "10.0"),
       hhsRow("B", "Beta", "2023-01-06", "20.0")).mkString("\n")), wh, rej)
-    Cli.runQuality(spark, "2023-07-01", writeCsv("executions_quality.csv", Seq(qHeader,
+    Cli.runQuality(spark, "2023-07-01", writeCsv(s"${name}_quality.csv", Seq(qualityHeader,
       "A,Acute Care,Proprietary,Yes,4").mkString("\n")), wh, rej)
-    // a new week, a replayed stored row and a reject
-    val hhs = executions(Cli.runHhs(spark, writeCsv("executions_delta.csv", Seq(hhsHeader,
+    val delta = writeCsv(s"${name}_delta.csv", Seq(hhsHeader,
       hhsRow("A", "Alpha", "2023-01-13", "11.0"),
       hhsRow("B", "Beta", "2023-01-06", "20.0"),
-      hhsRow("C", "", "2023-01-13", "5.0")).mkString("\n")), wh, rej))
-    // the same date again: a duplicate, a new facility and a reject
-    val quality = executions(Cli.runQuality(spark, "2023-07-01",
-      writeCsv("executions_replay.csv", Seq(qHeader,
-        "A,Acute Care,Proprietary,Yes,4",
-        "B,Acute Care,Proprietary,No,2",
-        ",Acute Care,Proprietary,Yes,3").mkString("\n")), wh, rej))
-    // the delta's weeks, the three appends and the rejects
-    assert(hhs == 5)
-    // the append and the rejects: the header is read on the driver
-    assert(quality == 2)
+      hhsRow("C", "", "2023-01-13", "5.0")).mkString("\n"))
+    val replay = writeCsv(s"${name}_replay.csv", Seq(qualityHeader,
+      "A,Acute Care,Proprietary,Yes,4",
+      "B,Acute Care,Proprietary,No,2",
+      ",Acute Care,Proprietary,Yes,3").mkString("\n"))
+    loads(Cli.runHhs(spark, delta, wh, rej), Cli.runQuality(spark, "2023-07-01", replay, wh, rej))
+  }
+
+  test("a load onto stored rows runs 5 SQL executions for HHS, 2 for quality") {
+    onStoredRows("executions") { (hhsLoad, qualityLoad) =>
+      val hhs = executions(hhsLoad)
+      val quality = executions(qualityLoad)
+      // the delta's weeks, the three appends and the rejects
+      assert(hhs == 5)
+      // the append and the rejects: the header is read on the driver
+      assert(quality == 2)
+    }
+  }
+
+  test("a warm load runs 13 jobs for HHS, 5 for quality, all in the caller's job group") {
+    val sc = spark.sparkContext
+    // one uncounted run first, then 3 counted
+    val counts = (0 to 3).map { i =>
+      onStoredRows(s"jobs_$i") { (hhsLoad, qualityLoad) =>
+        sc.setJobGroup("pipeline-spec", "a load")
+        val (hhs, quality) =
+          try (jobsDuring(hhsLoad), jobsDuring(qualityLoad)) finally sc.clearJobGroup()
+        assert((hhs ++ quality).forall(
+          _.properties.getProperty("spark.jobGroup.id") == "pipeline-spec"))
+        (hhs.size, quality.size)
+      }
+    }.tail
+    // the parse cache's build, then the jobs of the executions pinned
+    // above
+    assert(counts == Seq.fill(3)((13, 5)), counts)
   }
 
   test("the quality reader selects its columns by name from a quoted header") {
